@@ -1,17 +1,14 @@
 """Partitioned replacements for global (unpartitioned) window operations.
 
 An unpartitioned ``Window.orderBy(...)`` funnels the whole frame through ONE
-task (Spark warns "No Partition Defined for Window operation"). On the
-post-aggregation frames this engine lags over (months / quarters of a sales
-fact) the cardinality is bounded, so the single task is *correct* — but it
-is still a serialization point the plan does not need, and at 100 TB the
+task (Spark warns "No Partition Defined for Window operation"). The callers
+here lag or roll over post-aggregation frames — months or days of a sales
+fact — whose cardinality is bounded, so the single task would be correct,
+but it is a serialization point the plan does not need, and at 100 TB the
 same code path may be handed an unbounded frame by mistake. These helpers
 keep every window partitioned.
 
-Both helpers share ONE construction (round 6 collapse — VERDICT r5 item 2;
-the r4/r5 forms patched per-bucket boundaries with extra window passes,
-aggregates and joins, which cost ~0.3-0.5 s of fixed stage overhead per
-call on tiny frames):
+Both helpers share ONE construction:
 
 1. aggregate each coarse bucket of the order key (default: calendar year)
    to its k-tail — the k rows with the largest order keys (``max_by`` for
@@ -49,36 +46,24 @@ data size — bucket size is bounded by the calendar, not by the data. Pass
 a coarser ``bucket`` only with that bound in mind.
 
 Both helpers persist the bucketed input (MEMORY_AND_DISK) before the tail
-aggregate and the union re-read it — without materialization each branch
-re-evaluates the upstream subtree (for the call sites here, a full
-re-aggregation of the fact table; measured 2.1× on
-``mom_growth_top_month``, VERDICT r4). The frames are post-aggregation
-(months / quarters / days — bounded cardinality), so the pinned footprint
-is KBs. Frames are registered in ``_PERSISTED``; ``reset_caches()``
-(called by bench reps and test teardowns) unpersists them. Pass
+aggregate and the union re-read it, so neither branch re-evaluates the
+upstream subtree (for the call sites here, a full re-aggregation of the
+fact table). The frames are post-aggregation, so the pinned footprint is
+KBs. Frames are registered in ``_PERSISTED``; ``reset_caches()`` (called
+by bench reps and test teardowns) unpersists them. Pass
 ``materialize=False`` to opt out (e.g. when the caller already persists).
 
 This is the same bucket-and-stitch construction as the skew-immune as-of
-join (operators/temporal.py:95-130), applied to LAG / rolling frames.
+join (operators/temporal.py), applied to LAG / rolling frames.
 
-Measured fixed-overhead floor (round 6, ``tools/stitch_floor.py`` →
-``STITCH_FLOOR.json``; local[32], 9-rep medians): running the stitched
-helpers on a LITERAL in-memory frame — no file scan, no upstream
-aggregation, microseconds of actual row work — costs 736 ms (LAG, 36
-rows) / 706 ms (rolling, 365 rows) vs 364 / 332 ms for the plain
-unpartitioned window on the same literal frames: a ~370 ms machinery
-floor with ZERO data. The stitched-vs-plain gap measured at sf0.001 /
-sf0.01 / sf0.1 is 403 / 331 / 338 ms (LAG) and 283 / 383 / 289 ms
-(rolling) — statistically CONSTANT across a 100× data range and equal to
-the no-data floor. Decomposition: ~140 ms Py4J + Catalyst plan
-construction (``executedPlan()`` forced with no job), the rest persist
-fill + the two extra AQE stage schedulings + the broadcast build —
-per-query driver/scheduler costs that do not grow with source data. The
-row-processing delta is unmeasurable. At production scale the shared
-upstream (fact scan + aggregate) dominates both forms and the floor is
-noise; at bench scale (sub-second queries) it reads as a 1.5-2×
-"regression" vs the r3 unpartitioned-window form, which is the price of
-removing the single-task serialization point.
+Fixed cost: on a literal in-memory frame (no scan, no upstream aggregate)
+the stitched helpers measured ~370 ms more than a plain unpartitioned
+window (``tools/stitch_floor.py`` → ``STITCH_FLOOR.json``; local[32]),
+and the gap stayed constant from sf0.001 to sf0.1: Py4J and Catalyst plan
+construction, the persist fill, two extra AQE stages and the broadcast
+build — per-query driver and scheduler costs that do not grow with the
+data. Interactive paths that only need the latest rows use a top-k
+(``last_k_by``) instead.
 """
 
 from __future__ import annotations

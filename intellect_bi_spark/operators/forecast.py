@@ -11,12 +11,16 @@ three models:
 - T3 ``drift``:       slope = (yT − y0)/(w−1); ŷ(t+i) = yT + slope·i
   (requires ≥2 points)
 
-Spark-first design: the daily aggregation is distributed (exact decimal
-sums); only the *seed scalars* (last date, yT, y0, window mean, last-7
-values) cross to the driver — tiny post-aggregation state at any source
-scale, exactly as the reference's collected series is. Forecast rows are
-generated with pure IEEE double arithmetic that the DuckDB oracle mirrors
-term by term, so results are engine-identical.
+Spark-first design: ``forecast_payload`` is one lazy plan and no Spark job
+runs before the caller's action; no seed scalar crosses to the driver. The
+daily series is one exact aggregate (long partials, ``grouped_exact``),
+computed once and gathered into one date-sorted array — one element per
+day, so its size is bounded by the calendar at any source scale. The
+seeds (last date, yT, y0, last-7 values) are positions in that array, the
+window mean is an exact aggregate over its last points, and the horizon
+is a ``sequence``; the guards fail the action with ``raise_error``.
+Forecast values are the same IEEE double operations the DuckDB oracle
+performs, so results are engine-identical.
 
 T5 payload: history ∪ forecast tagged by a ``series`` column
 (reference api/main.py:927-961).
@@ -30,115 +34,19 @@ from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import DataFrame, Row, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..catalog import sales, sales_cte
-from ..functions.numeric import dsum_sql, intercept_sql, slope_sql
-from ..functions.windows import last_k_by
-
-_FORECAST_SCHEMA = T.StructType(
-    [
-        T.StructField("series", T.StringType(), False),
-        T.StructField("date", T.DateType(), False),
-        T.StructField("value", T.DoubleType(), True),
-    ]
-)
+from ..functions.numeric import dsum_sql, grouped_exact, intercept_sql, slope_sql
 
 
 def daily_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(date, value) daily SUM(sales), the forecaster input
     (reference api/main.py:917-924)."""
-    return (
-        sales(spark, sf_dir)
-        .groupBy("date")
-        .agg(F.expr(dsum_sql("sales")).alias("value"))
+    return grouped_exact(
+        sales(spark, sf_dir), ["date"], [("sum", "sales", 2, "value")]
     )
-
-
-def _clamp(h: int, window: int, n: int) -> tuple[int, int]:
-    """Reference clamps (api/main.py:877-878)."""
-    return max(1, min(int(h), 365)), max(1, min(int(window), n))
-
-
-def _forecast_rows(
-    spark: SparkSession, sf_dir: str, h: int, algo: str, window: int
-) -> list[Row]:
-    """Compute forecast rows from distributed seed statistics.
-
-    Seed selection is "the last k daily points", expressed as
-    ``orderBy(desc(date)).limit(k)`` → Catalyst TakeOrderedAndProject
-    (per-partition top-k heap, k ≤ 365 rows to the driver merge) — no
-    global sort and no unpartitioned row_number window.
-    """
-    daily = daily_series(spark, sf_dir)
-
-    n = daily.count()
-    if n == 0:
-        return []
-    h, window = _clamp(h, window, n)
-    last_date = daily.agg(F.max("date")).first()[0]
-
-    out: list[Row] = []
-    if algo == "seasonal7":
-        if n < 7:
-            raise ValueError("Need >= 7 history points for seasonal7")
-        # last 7 values in date order; forecast cycles them
-        last7 = [
-            r["value"]
-            for r in last_k_by(daily, "date", 7).orderBy("date").collect()
-        ]
-        for i in range(1, h + 1):
-            out.append(
-                Row(
-                    series="forecast",
-                    date=last_date + datetime.timedelta(days=i),
-                    value=float(last7[(i - 1) % 7]),
-                )
-            )
-    elif algo == "drift":
-        if n < 2:
-            raise ValueError("Need >= 2 history points for drift")
-        # y0 = oldest, yT = newest of the last-`window` points
-        seed = (
-            last_k_by(daily, "date", window)
-            .agg(
-                F.min_by("value", "date").alias("y0"),
-                F.max_by("value", "date").alias("y_t"),
-            )
-            .first()
-        )
-        y0, y_t = seed["y0"], seed["y_t"]
-        t_div = window - 1 if window > 1 else 1
-        slope = (y_t - y0) / t_div
-        for i in range(1, h + 1):
-            out.append(
-                Row(
-                    series="forecast",
-                    date=last_date + datetime.timedelta(days=i),
-                    value=y_t + slope * i,
-                )
-            )
-    else:  # ma7_baseline: flat mean of last `window` points
-        base = (
-            last_k_by(daily, "date", window)
-            .agg(
-                (
-                    F.expr(dsum_sql("value")) / F.count(F.lit(1))
-                ).alias("base")
-            )
-            .first()["base"]
-        )
-        for i in range(1, h + 1):
-            out.append(
-                Row(
-                    series="forecast",
-                    date=last_date + datetime.timedelta(days=i),
-                    value=float(base),
-                )
-            )
-    return out
 
 
 def forecast_payload(
@@ -149,12 +57,62 @@ def forecast_payload(
     window: int = 7,
 ) -> DataFrame:
     """History ∪ forecast payload (T5, reference api/main.py:927-961)."""
-    hist = daily_series(spark, sf_dir).select(
-        F.lit("history").alias("series"), F.col("date"), F.col("value")
+    return _payload_from_daily(daily_series(spark, sf_dir), h, algo, window)
+
+
+def _payload_from_daily(
+    daily: DataFrame, h: int, algo: str, window: int
+) -> DataFrame:
+    """History ∪ forecast over a (date, value) daily frame.
+
+    Reference clamps (api/main.py:877-878): h to [1, 365]; window to
+    [1, len]. An empty series has no forecast rows; seasonal7 with < 7
+    points and drift with < 2 fail the action with the reference's
+    messages."""
+    h = max(1, min(int(h), 365))
+    window = max(1, int(window))
+    need = {"seasonal7": 7, "drift": 2}.get(algo, 1)
+    pts, n = F.col("pts"), F.size("pts")
+    w = F.least(F.lit(window), n)
+    series = daily.agg(
+        F.sort_array(F.collect_list(F.struct("date", "value"))).alias("pts")
     )
-    rows = _forecast_rows(spark, sf_dir, h, algo, window)
-    fc = spark.createDataFrame(rows, schema=_FORECAST_SCHEMA)
-    return hist.unionAll(fc)
+    # exact sum of the last w points (the window mean's numerator)
+    seeds = series.select(
+        pts, F.explode_outer(F.slice(pts, n - w + 1, w)).alias("p")
+    ).agg(
+        F.any_value("pts").alias("pts"),
+        F.expr(dsum_sql("p.value")).alias("tail_sum"),
+    )
+    y_t = F.element_at(pts, -1)["value"]
+
+    def value(i):
+        if algo == "seasonal7":  # forecast[i] = last7[(i-1) mod 7]
+            v = F.element_at(pts, n - 6 + (i - 1) % 7)["value"]
+        elif algo == "drift":  # y0 = oldest, yT = newest of the last w
+            y0 = F.element_at(pts, n - w + 1)["value"]
+            v = y_t + (y_t - y0) / F.greatest(w - 1, F.lit(1)) * i
+        else:  # ma7_baseline: flat mean of the last w points
+            v = F.col("tail_sum") / w
+        if need > 1:
+            v = F.when(n >= need, v).otherwise(
+                F.raise_error(F.lit(f"Need >= {need} history points for {algo}"))
+            )
+        return v.cast("double")
+
+    def row(tag, date, v):
+        return F.struct(
+            F.lit(tag).alias("series"), date.alias("date"), v.alias("value")
+        )
+
+    hist = F.transform(pts, lambda p: row("history", p["date"], p["value"]))
+    last_date = F.element_at(pts, -1)["date"]
+    fc = F.transform(
+        F.sequence(F.lit(1), F.lit(h)),
+        lambda i: row("forecast", F.date_add(last_date, i), value(i)),
+    )
+    rows = F.when(n > 0, F.concat(hist, fc)).otherwise(hist)
+    return seeds.select(F.explode(rows).alias("r")).select("r.*")
 
 
 def forecast_ma(spark: SparkSession, sf_dir: str) -> DataFrame:

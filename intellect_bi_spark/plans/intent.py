@@ -21,12 +21,12 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import sales
-from ..functions.numeric import corr_sql, davg_sql, dsum_sql
-from ..functions.windows import lag_stitched
+from ..catalog import _CATALOG_LOCK, sales
+from ..functions.numeric import corr_sql, grouped_exact
+from ..functions.windows import last_k_by
 
 METRIC_SAT = ("satisfaction", "csat")
 METRIC_SALES = ("sales", "revenue", "transaction value", "transaction_value", "amount")
@@ -79,9 +79,9 @@ class Intent:
 
 
 # Per-(session, sf_dir) distinct-value dictionaries (reference
-# api/main.py:345-360). Small maps; computed once, held driver-side —
-# the Spark analogue of an lru_cache'd DISTINCT, usable for literal binding
-# without touching executors again.
+# api/main.py:345-360). Small maps; computed once by one aggregate, held
+# driver-side — the Spark analogue of an lru_cache'd DISTINCT, usable for
+# literal binding without touching executors again.
 _DISTINCT_CACHE: dict[tuple[int, str], dict[str, list[str]]] = {}
 
 
@@ -90,17 +90,21 @@ def distinct_values(spark: SparkSession, sf_dir: str) -> dict[str, list[str]]:
     cached = _DISTINCT_CACHE.get(key)
     if cached is not None:
         return cached
-    df = sales(spark, sf_dir)
-    out: dict[str, list[str]] = {}
-    for d in DIM_CANDIDATES:
-        if d == "age":  # numeric dim: no value dictionary (reference skips too)
-            continue
-        rows = (
-            df.select(d).where(F.col(d).isNotNull()).distinct().collect()
-        )
-        out[d] = sorted({str(r[0]).strip() for r in rows}, key=str.lower)
-    _DISTINCT_CACHE[key] = out
-    return out
+    with _CATALOG_LOCK:
+        cached = _DISTINCT_CACHE.get(key)
+        if cached is not None:
+            return cached
+        # age is a numeric dim: no value dictionary (reference skips too)
+        dims = [d for d in DIM_CANDIDATES if d != "age"]
+        row = sales(spark, sf_dir).agg(
+            *[F.collect_set(d).alias(d) for d in dims]
+        ).first()
+        out = {
+            d: sorted({str(v).strip() for v in row[d]}, key=str.lower)
+            for d in dims
+        }
+        _DISTINCT_CACHE[key] = out
+        return out
 
 
 def parse_intent(
@@ -178,15 +182,40 @@ def resolve_metric_column(columns: list[str], metric: str) -> str:
     return metric
 
 
-def _metric_sum_expr(it: Intent, columns: list[str]) -> str:
-    """Exact-decimal aggregate expression for the intent's metric, resolved
-    against the active view's schema. transaction_value is a product of
-    two 2-decimal inputs ⇒ exact at scale 4 (functions/numeric.py)."""
+def _metric_agg(
+    df: DataFrame, keys: list[str], it: Intent, columns: list[str], alias: str
+) -> DataFrame:
+    """``keys`` + the intent's exact metric aggregate as ``alias``, resolved
+    against the active view's schema. transaction_value is a product of two
+    2-decimal inputs ⇒ exact at scale 4 (functions/numeric.py). AVG is the
+    exact sum divided by the non-null count, the double division
+    ``davg_sql`` performs."""
     col = resolve_metric_column(columns, it.metric)
     scale = 4 if col == "transaction_value" else 2
+    specs = [("sum", col, scale, "_sum")]
+    value = F.col("_sum")
     if it.agg == "AVG":
-        return davg_sql(col, scale)
-    return dsum_sql(col, scale)
+        specs.append(("count", col, None, "_n"))
+        value = value / F.col("_n")
+    return grouped_exact(df, keys, specs).select(*keys, value.alias(alias))
+
+
+def _qoq_from_quarters(per_q: DataFrame) -> DataFrame:
+    """Latest quarter's ``val`` against the one before it, from a
+    (qtr, val) frame with one row per quarter: the top 2 quarters, one
+    aggregate. No quarters ⇒ no row; one quarter ⇒ NULL previous value
+    and delta (the reference's LAG over quarters, api/main.py:461-496)."""
+    top2 = last_k_by(per_q, "qtr", 2).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.max_by("val", "qtr").alias("cur"),
+        F.min_by("val", "qtr").alias("first"),
+    )
+    prev = F.when(F.col("n") == 2, F.col("first"))
+    return top2.filter(F.col("n") > 0).select(
+        F.col("cur").alias("current_qtr_value"),
+        prev.alias("prev_qtr_value"),
+        (F.col("cur") - prev).alias("delta"),
+    )
 
 
 def compile_intent(
@@ -195,8 +224,9 @@ def compile_intent(
     it: Intent,
     view: DataFrame | None = None,
 ) -> tuple[DataFrame, str]:
-    """Compile an Intent into a DataFrame plan (reference api/main.py:425-532
-    emits SQL text; we emit plans). Returns (df, template_name).
+    """Compile an Intent into a lazy DataFrame plan (reference
+    api/main.py:425-532 emits SQL text; we emit plans). Returns (df,
+    template_name); no Spark job runs before the caller's action.
 
     ``view`` overrides the canonical ``sales`` view — the reference runs
     against whatever dataset is active, so templates must follow the
@@ -208,8 +238,6 @@ def compile_intent(
         df = df.filter(F.col(d) == F.lit(v))  # literal binding, no splicing
 
     grain = it.timegrain or "month"
-    period = F.date_trunc(grain, F.col("date")).cast("date").alias("period")
-    agg_col = F.expr(_metric_sum_expr(it, cols)).alias("value")
     dims = [d for d in it.dims if d != "age"]  # age is a filter dim only
 
     if it.is_correlation:
@@ -223,42 +251,26 @@ def compile_intent(
 
     cg, ck = it.compare
     if cg == "quarter" and ck == "last2":
-        qtr = F.date_trunc("quarter", F.col("date")).cast("date").alias("qtr")
+        qtr = F.trunc("date", "quarter")
         # The last-2-quarter SET comes from the UNFILTERED view — the
         # reference selects quarters globally (api/main.py:452-459) and
         # applies dim filters only inside the aggregate, so a filter that
         # has no rows in the latest quarter must yield an empty group, not
         # silently shift the window to older quarters.
-        last2 = (
-            base.select(qtr)
-            .distinct()
-            .orderBy(F.desc("qtr"))
-            .limit(2)
+        periods = base.select(qtr.alias("period")).distinct()
+        last2 = last_k_by(periods, "period", 2)
+        qdf = df.withColumn("period", qtr).join(
+            F.broadcast(last2), "period", "left_semi"
         )
-        qdf = df.withColumn("qtr", qtr)
-        out = (
-            qdf.join(F.broadcast(last2), "qtr", "left_semi")
-            .groupBy(F.col("qtr").alias("period"), *[F.col(d) for d in dims])
-            .agg(agg_col)
-        )
+        out = _metric_agg(qdf, ["period", *dims], it, cols, "value")
         return out, "last2_quarters"
 
     if cg == "quarter" and ck in ("last", "previous"):
-        qtr = F.date_trunc("quarter", F.col("date")).cast("date").alias("qtr")
-        per_q = df.groupBy(qtr).agg(
-            F.expr(_metric_sum_expr(it, cols)).alias("val")
+        per_q = _metric_agg(
+            df.withColumn("qtr", F.trunc("date", "quarter")),
+            ["qtr"], it, cols, "val",
         )
-        out = (
-            lag_stitched(per_q, "qtr", "val", "prev_qtr_value")
-            .orderBy(F.desc("qtr"))
-            .limit(1)
-            .select(
-                F.col("val").alias("current_qtr_value"),
-                F.col("prev_qtr_value"),
-                (F.col("val") - F.col("prev_qtr_value")).alias("delta"),
-            )
-        )
-        return out, "qoq_delta"
+        return _qoq_from_quarters(per_q), "qoq_delta"
 
     # YoY fires only when the question names quarters — the reference gates
     # its YoY template on 'quarter' (api/main.py:500-505) and otherwise
@@ -266,24 +278,29 @@ def compile_intent(
     # the YoY aggregation (api/main.py:506-520), so the unfiltered view is
     # aggregated here even when the question bound a dimension value.
     if cg == "year" and ck == "yoy" and it.mentions_quarter:
-        q = base.groupBy(
-            F.year("date").alias("year"), F.quarter("date").alias("quarter")
-        ).agg(F.expr(_metric_sum_expr(it, cols)).alias("total"))
-        a, b = q.alias("a"), q.alias("b")
-        out = a.join(
-            b,
-            (F.col("b.quarter") == F.col("a.quarter"))
-            & (F.col("b.year") == F.col("a.year") - 1),
-            "left",
-        ).select(
-            F.col("a.year").alias("year"),
-            F.col("a.quarter").alias("quarter"),
-            F.col("a.total").alias("total"),
-            (F.col("a.total") - F.col("b.total")).alias("yoy_delta"),
+        q = _metric_agg(
+            base.withColumn("year", F.year("date")).withColumn(
+                "quarter", F.quarter("date")
+            ),
+            ["year", "quarter"], it, cols, "total",
+        )
+        # the same quarter one year earlier: a RANGE frame of exactly
+        # year - 1 within the quarter (empty ⇒ NULL), over one aggregate
+        prev_year = (
+            Window.partitionBy("quarter").orderBy("year").rangeBetween(-1, -1)
+        )
+        out = q.select(
+            "year",
+            "quarter",
+            "total",
+            (F.col("total") - F.max("total").over(prev_year)).alias("yoy_delta"),
         )
         return out, "yoy_by_quarter"
 
-    out = df.groupBy(period, *[F.col(d) for d in dims]).agg(agg_col)
+    out = _metric_agg(
+        df.withColumn("period", F.trunc("date", grain)),
+        ["period", *dims], it, cols, "value",
+    )
     return out, "grain_groupby"
 
 

@@ -3,20 +3,64 @@
 
 from __future__ import annotations
 
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
 from intellect_bi_spark.operators.forecast import (
-    _clamp,
+    _payload_from_daily,
     daily_series,
     forecast_payload,
 )
 
+D0 = datetime.date(2024, 1, 1)
 
-def test_clamps():
-    assert _clamp(1000, 7, 100) == (365, 7)
-    assert _clamp(0, 0, 100) == (1, 1)
-    assert _clamp(30, 99, 10) == (30, 10)
+
+def _daily(spark, values):
+    rows = [(D0 + datetime.timedelta(days=i), v) for i, v in enumerate(values)]
+    return spark.createDataFrame(rows, "date date, value double")
+
+
+def _forecast(spark, values, h, algo, window):
+    df = _payload_from_daily(_daily(spark, values), h, algo, window)
+    return [
+        (r["date"], r["value"])
+        for r in df.filter(F.col("series") == "forecast").orderBy("date").collect()
+    ]
+
+
+def test_clamps(spark):
+    """Reference clamps (api/main.py:877-878): h to [1, 365], window to
+    [1, len(series)]."""
+    vals = [float(3 * i + 1) for i in range(10)]  # 1, 4, ..., 28
+    assert len(_forecast(spark, vals, 1000, "ma7_baseline", 7)) == 365
+    assert len(_forecast(spark, vals, 0, "ma7_baseline", 7)) == 1
+    # a window longer than the series clamps to it
+    fc = _forecast(spark, vals, 2, "ma7_baseline", 99)
+    assert [v for _, v in fc] == [sum(vals) / 10] * 2
+    assert fc[0][0] == D0 + datetime.timedelta(days=10)
+    fc = _forecast(spark, vals, 2, "drift", 99)
+    slope = (vals[-1] - vals[0]) / 9
+    assert [v for _, v in fc] == [vals[-1] + slope * i for i in (1, 2)]
+    # window 0 clamps to 1: a flat drift at the last value
+    assert [v for _, v in _forecast(spark, vals, 2, "drift", 0)] == [28.0] * 2
+    assert [v for _, v in _forecast(spark, vals, 1, "ma7_baseline", 0)] == [28.0]
+
+
+def test_short_series_guards(spark):
+    with pytest.raises(Exception, match="Need >= 7 history points for seasonal7"):
+        _forecast(spark, [1.0, 2.0, 3.0, 4.0, 5.0, 6.0], 3, "seasonal7", 7)
+    with pytest.raises(Exception, match="Need >= 2 history points for drift"):
+        _forecast(spark, [5.0], 3, "drift", 14)
+    assert len(_forecast(spark, [5.0], 3, "ma7_baseline", 7)) == 3
+    assert len(_forecast(spark, [5.0, 6.0], 3, "drift", 14)) == 3
+
+
+def test_empty_series_forecasts_nothing(spark):
+    empty = _daily(spark, [1.0]).filter("false")
+    for algo in ("ma7_baseline", "seasonal7", "drift"):
+        assert _payload_from_daily(empty, 5, algo, 7).count() == 0
 
 
 def test_payload_shape(spark, sf_dir):

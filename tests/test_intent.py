@@ -89,3 +89,78 @@ def test_txn_view_answers_transaction_value_questions(spark, sf_dir):
     base = {r["period"]: r["value"] for r in base_df.collect()}
     assert set(txn) == set(base)  # same periods
     assert any(abs(txn[p] - base[p]) > 1e-6 for p in txn)  # different metric
+
+
+def _quarters(spark, rows):
+    import datetime as dt
+
+    return spark.createDataFrame(
+        [(dt.date(y, m, 1), v) for y, m, v in rows], "qtr date, val double"
+    )
+
+
+def test_qoq_takes_latest_two_quarters(spark):
+    """The QoQ template equals LAG(val) OVER (ORDER BY qtr) on the latest
+    quarter, gaps included: the previous value is the latest quarter
+    before it, whatever its distance."""
+    from intellect_bi_spark.plans.intent import _qoq_from_quarters
+
+    per_q = _quarters(
+        spark, [(2023, 4, 5.0), (2024, 1, 7.5), (2023, 7, 1.0), (2024, 7, 2.25)]
+    )
+    rows = _qoq_from_quarters(per_q.repartition(3)).collect()
+    assert [tuple(r) for r in rows] == [(2.25, 7.5, 2.25 - 7.5)]
+
+
+def test_qoq_single_quarter_has_null_previous(spark):
+    from intellect_bi_spark.plans.intent import _qoq_from_quarters
+
+    rows = _qoq_from_quarters(_quarters(spark, [(2024, 1, 3.5)])).collect()
+    assert [tuple(r) for r in rows] == [(3.5, None, None)]
+
+
+def test_qoq_over_no_rows_returns_no_rows(spark, sf_dir):
+    """A filter that matches nothing yields zero rows — as the reference's
+    ``ORDER BY qtr DESC LIMIT 1`` does — not one row of NULLs."""
+    from intellect_bi_spark.plans.intent import _qoq_from_quarters, compile_intent
+
+    empty = _quarters(spark, [(2024, 1, 1.0)]).filter("false")
+    assert _qoq_from_quarters(empty).collect() == []
+    it = Intent(compare=("quarter", "last"), filters={"region": "Nowhere"})
+    df, template = compile_intent(spark, sf_dir, it)
+    assert template == "qoq_delta"
+    assert df.collect() == []
+
+
+def test_distinct_values_builds_once_under_concurrency(spark, sf_dir):
+    """Racing first callers share ONE build: every thread gets the same
+    dictionary object, and it holds each value dimension."""
+    import sys
+    import threading
+
+    from intellect_bi_spark.plans import intent
+
+    intent._DISTINCT_CACHE.pop((id(spark), sf_dir), None)
+    results, errors = [], []
+
+    def call():
+        try:
+            results.append(intent.distinct_values(spark, sf_dir))
+        except Exception as ex:  # surfaced by the assertion below
+            errors.append(ex)
+
+    threads = [threading.Thread(target=call) for _ in range(8)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(results) == 8 and all(r is results[0] for r in results)
+    assert set(results[0]) == {"region", "product", "gender"}
+    assert results[0]["region"] == sorted(results[0]["region"], key=str.lower)

@@ -155,41 +155,47 @@ def test_grouped_exact_rejects_bad_scale(spark):
 
 
 def test_grouped_exact_property_random_frames(spark):
-    """Property check: for arbitrary signed 2-decimal frames with NULLs
-    and arbitrary group shapes, the two-stage long-partial form equals the
-    one-stage DECIMAL(38) sums bit-for-bit. Deterministic seed sweep (a
-    hypothesis @given over a SparkSession fixture re-enters Spark per
-    example, which is prohibitively slow; the seeded sweep covers the
-    same space reproducibly)."""
+    """Property check: for arbitrary signed frames with NULLs and arbitrary
+    group shapes, at every supported scale, the two-stage long-partial form
+    equals the one-stage DECIMAL(38) sums bit-for-bit — including values at
+    the grid's magnitude bound, |v| · 10^s = 10^15 − 1, the largest scaled
+    integer every double on the 10^-s grid carries exactly. Deterministic
+    seed sweep (a hypothesis @given over a SparkSession fixture re-enters
+    Spark per example, which is prohibitively slow; the seeded sweep covers
+    the same space reproducibly)."""
     import random
 
-    for seed in range(8):
-        rng = random.Random(seed)
-        n = rng.randint(1, 400)
-        n_groups = rng.randint(1, 6)
-        rows = []
-        for i in range(n):
-            g = f"g{rng.randrange(n_groups)}"
-            v = (
-                None
-                if rng.random() < 0.15
-                else rng.randint(-10**9, 10**9) / 100.0
+    bound = 10**15 - 1
+    for scale in (2, 4, 6):
+        for seed in range(8):
+            rng = random.Random(seed)
+            n = rng.randint(1, 400)
+            n_groups = rng.randint(1, 6)
+            rows = []
+            for i in range(n):
+                g = f"g{rng.randrange(n_groups)}"
+                r = rng.random()
+                if r < 0.15:
+                    v = None
+                elif r < 0.25:
+                    v = rng.choice((bound, -bound)) / 10**scale
+                else:
+                    v = rng.randint(-(10**9), 10**9) / 10**scale
+                rows.append((g, v))
+            df = spark.createDataFrame(rows, "g string, v double").repartition(
+                rng.choice([1, 3, 8])
             )
-            rows.append((g, v))
-        df = spark.createDataFrame(rows, "g string, v double").repartition(
-            rng.choice([1, 3, 8])
-        )
-        slow = {
-            r["g"]: (r["s"], r["c"])
-            for r in df.groupBy("g")
-            .agg(dsum("v").alias("s"), F.expr("COUNT(v)").alias("c"))
-            .collect()
-        }
-        fast = {
-            r["g"]: (r["s"], r["c"])
-            for r in grouped_exact(
-                df, ["g"],
-                [("sum", "v", 2, "s"), ("count", "v", None, "c")],
-            ).collect()
-        }
-        assert slow == fast, f"seed {seed}: {slow} != {fast}"
+            slow = {
+                r["g"]: (r["s"], r["c"])
+                for r in df.groupBy("g")
+                .agg(dsum("v", scale).alias("s"), F.expr("COUNT(v)").alias("c"))
+                .collect()
+            }
+            fast = {
+                r["g"]: (r["s"], r["c"])
+                for r in grouped_exact(
+                    df, ["g"],
+                    [("sum", "v", scale, "s"), ("count", "v", None, "c")],
+                ).collect()
+            }
+            assert slow == fast, f"scale {scale} seed {seed}: {slow} != {fast}"

@@ -634,3 +634,68 @@ def test_dsir_token_relation_reused_not_recomputed(spark, sf_dir):
     assert plan.count("InMemoryTableScan") >= 2
     for p in pins:
         p.unpersist()
+
+
+def test_forecast_payload_aggregates_daily_series_once(spark, sf_dir):
+    """History and forecast both come from ONE daily aggregate — no union
+    of two daily branches (AQE does not reuse an exchange over a cached
+    relation, so a second branch would aggregate the fact view again) —
+    with no window and no cartesian product."""
+    from intellect_bi_spark.operators.forecast import forecast_payload
+
+    for algo in ("ma7_baseline", "seasonal7", "drift"):
+        plan = plan_of(forecast_payload(spark, sf_dir, h=30, algo=algo, window=14))
+        assert plan.count("partial_sum(cast(rint(") == 1, (algo, plan)
+        assert "Window" not in plan, (algo, plan)
+        assert "CartesianProduct" not in plan, (algo, plan)
+
+
+def _group_jobs(spark, group: str) -> list[int]:
+    """Jobs the status store holds for ``group``, after the listener bus
+    has delivered every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def test_forecast_and_intent_plans_submit_no_job(spark, sf_dir):
+    """Building a forecast payload (every algorithm) or an intent plan
+    (every template) runs no Spark job: the caller's action is the
+    first. Jobs are counted in this thread's own job group, so work
+    other threads left running cannot touch the count."""
+    from intellect_bi_spark.operators.forecast import forecast_payload
+    from intellect_bi_spark.plans.intent import (
+        compile_intent,
+        distinct_values,
+        parse_intent,
+    )
+
+    distincts = distinct_values(spark, sf_dir)  # set-up: one job, by design
+    questions = {
+        "correlation": "What is the correlation between transaction value"
+        " and customer satisfaction?",
+        "last2_quarters": "Show average satisfaction for the two most recent"
+        " quarters by region",
+        "qoq_delta": "How did sales change compared to last quarter for"
+        " Male customers?",
+        "yoy_by_quarter": "Compare year-over-year sales performance by quarter.",
+        "grain_groupby": "What is the quarterly satisfaction trend in the"
+        " North region?",
+    }
+    sc = spark.sparkContext
+    group = "test_plans_submit_no_job"
+    sc.setJobGroup(group, "plan construction")
+    try:
+        frames = [
+            forecast_payload(spark, sf_dir, h=30, algo=algo, window=14)
+            for algo in ("ma7_baseline", "seasonal7", "drift")
+        ]
+        for template, q in questions.items():
+            df, got = compile_intent(spark, sf_dir, parse_intent(q, distincts))
+            assert got == template, (q, got)
+            frames.append(df)
+        assert _group_jobs(spark, group) == []
+        frames[0].collect()
+        assert _group_jobs(spark, group)  # the probe sees real jobs
+    finally:
+        for prop in ("jobGroup.id", "job.description", "job.interruptOnCancel"):
+            sc.setLocalProperty(f"spark.{prop}", None)
