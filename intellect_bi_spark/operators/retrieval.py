@@ -566,11 +566,9 @@ def _stats2_of(toks: DataFrame) -> DataFrame:
 
 
 def _fs_of(spark: SparkSession, path: str):
-    """(Hadoop FileSystem, Path) for ``path`` — resolves through the
-    session's Hadoop configuration, so version discovery and existence
-    checks work on ANY supported filesystem (HDFS, S3A, local), not
-    just driver-local POSIX (ADVICE r12: the earlier ``os.listdir``
-    form silently assumed the store lived on the driver's disk)."""
+    """(Hadoop FileSystem, Path) for ``path``, resolved through the
+    session's Hadoop configuration, so every store metadata op works
+    on any supported filesystem (HDFS, S3A, local)."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(
@@ -585,10 +583,10 @@ def _store_dir_exists(spark: SparkSession, path: str) -> bool:
 
 
 def _versions_in(spark: SparkSession, path: str) -> list[int]:
-    """Distinct version numbers present under ``path`` — accepts both
-    the bare marker form ``v=N`` and the attempt-suffixed data-dir form
-    ``v=N-<att>`` (r15: version data dirs are staged attempt-unique,
-    so one version number can transiently have several dirs)."""
+    """Distinct version numbers present under ``path``, from both the
+    bare marker form ``v=N`` and the attempt-suffixed data-dir form
+    ``v=N-<att>`` (one version can transiently have several attempt
+    dirs)."""
     fs, hpath = _fs_of(spark, path)
     if not fs.exists(hpath):
         return []
@@ -617,28 +615,16 @@ def _version_dirs(spark: SparkSession, path: str) -> list[tuple[int, str]]:
 
 
 def _run_staged(*thunks) -> None:
-    """Run independent STAGED-WRITE thunks as concurrent driver-side
-    jobs (optimization r15, guide §2.6 "overlap independent jobs"): a
-    mutation leg stages 2-3 physically independent artifacts (posting
-    segment, lexicon version, stats version) into attempt-unique
-    directories no other writer can name, and the version publish
-    happens only after ALL of them are fully staged — so the writes
-    have no ordering dependency and running them sequentially leaves
-    most of the cluster idle during each job's tail.  Spark's FIFO
-    scheduler back-fills executors freed by one job's stragglers with
-    the next job's tasks.  The first exception propagates (the leg
-    fails before its publish, leaving only unpublished debris vacuum
-    sweeps — the same contract as a crashed writer).  With a single
-    thunk this degrades to a plain call, so low-core drivers lose
-    nothing but the overlap.
+    """Run independent staged-write thunks as concurrent jobs.
 
-    Each thunk's jobs run in their own scheduler pool (r16, guide
-    §2.6 full form): under the engine session's FAIR mode the 2-3
-    staged jobs share executors equally, so a large segment write
-    cannot head-of-line block the small lexicon/stats writes on a
-    busy cluster.  The pool tag is a thread-local no-op under a FIFO
-    session (external callers), where the r15 back-fill behavior is
-    unchanged."""
+    A mutation stages its artifacts (segment, lexicon and stats
+    versions) into attempt-unique directories and publishes only after
+    all of them are staged, so the writes have no ordering dependency.
+    The first exception propagates before the publish, leaving only
+    unpublished debris that vacuum sweeps.  One thunk runs as a plain
+    call.  Each thunk's jobs run in their own scheduler pool, so under
+    FAIR scheduling a large segment write cannot head-of-line block the
+    small lexicon/stats writes; under FIFO the pool tag is a no-op."""
     if len(thunks) == 1:
         thunks[0]()
         return
@@ -670,8 +656,8 @@ def _run_staged(*thunks) -> None:
 
 class VersionConflict(RuntimeError):
     """Raised when a writer tries to publish a version number another
-    writer already published — the optimistic-concurrency signal
-    (VERDICT r13 #4).  Callers retry: re-read the new latest, re-merge,
+    writer already published — the optimistic-concurrency signal.
+    Callers retry: re-read the new latest, re-merge,
     publish the next number."""
 
 
@@ -679,9 +665,9 @@ PUBLISH_RETRIES = 3  # optimistic-concurrency retry budget per mutation
 
 
 def _new_seg_id() -> str:
-    """A fresh immutable-segment id.  The 's' prefix keeps partition-
-    value type inference at STRING (an all-digit hex id would infer
-    numeric and conflict across segments)."""
+    """A fresh immutable-segment id.  The 's' prefix keeps it
+    non-numeric, so partition inference over a store reads ``seg`` as
+    a string."""
     import uuid
 
     return "s" + uuid.uuid4().hex[:12]
@@ -690,17 +676,16 @@ def _new_seg_id() -> str:
 def _write_segment(
     df: DataFrame, root: str, seg: str, pcol: str = "tb"
 ) -> None:
-    """Write one immutable posting SEGMENT: ``{root}/seg={seg}/{pcol}=N``.
-    Segments are the unit of the manifest's file pinning — once a
-    manifest references (seg, bucket), those files are never rewritten;
-    mutations write NEW segments and new manifests.  Overwrite mode is
-    the retry-safety half: a re-attempt of the same segment id replaces
-    only its own partial debris, never another segment's files.
-    ``pcol`` is the store's partition axis (term bucket ``tb`` for the
-    lexical/positional stores, IVF ``cell`` for the ANN store — r15,
-    VERDICT r14 #2)."""
+    """Write one immutable segment ``{root}/seg={seg}/{pcol}=N``.
+
+    Invariants: every partition directory holds exactly one file (the
+    hash repartition by ``pcol`` puts each value in one task; AQE
+    coalesces the tasks to the data's size), and a segment's files are
+    never rewritten once a manifest pins them.  Overwrite mode confines
+    a retry of the same segment id to its own partial debris."""
     (
-        df.write.mode("overwrite")
+        df.repartition(pcol)
+        .write.mode("overwrite")
         .partitionBy(pcol)
         .parquet(f"{root}/seg={seg}")
     )
@@ -709,21 +694,37 @@ def _write_segment(
 def _read_segments(
     spark: SparkSession,
     root: str,
-    entries: list[tuple[str, int]],
+    entries: list[tuple],
     schema: str,
     pcol: str = "tb",
 ) -> DataFrame:
-    """Read exactly the (seg, bucket) directories a manifest pins —
-    ``basePath`` keeps seg/bucket as partition columns — normalized to
-    the logical posting ``schema`` (seg dropped).  An empty pin list
-    yields an empty frame of the same schema, so serving a store with
-    no matching buckets degrades to zero rows, not an error."""
+    """Exactly the (seg, value) pairs ``entries`` pins, as the logical
+    ``schema`` (seg dropped).
+
+    Invariants: the read opens the distinct pinned segment roots with a
+    declared schema, so it infers nothing and submits no job until the
+    caller's action; ``{pcol}`` is typed the way the manifest stores it
+    (int buckets and cells, string days); and a partition filter prunes
+    the scan to the pinned pairs before any file is opened.  No pins
+    yield an empty frame of the same schema."""
     cols = [c.split()[0] for c in schema.split(",")]
-    dirs = sorted({f"{root}/seg={s}/{pcol}={t}" for s, t in entries})
-    if not dirs:
+    if not entries:
         return spark.createDataFrame([], schema)
+    pinned: dict[str, list] = {}
+    for s, t in sorted(entries):
+        pinned.setdefault(s, []).append(t)
+    ptype = "string" if isinstance(entries[0][1], str) else "int"
+    data = ", ".join(c for c in schema.split(",") if c.split()[0] != pcol)
+    keep = None
+    for s, ts in pinned.items():
+        cond = (F.col("seg") == s) & F.col(pcol).isin(ts)
+        keep = cond if keep is None else keep | cond
     return (
-        spark.read.option("basePath", root).parquet(*dirs).select(*cols)
+        spark.read.schema(f"{data}, seg string, {pcol} {ptype}")
+        .option("basePath", root)
+        .parquet(*(f"{root}/seg={s}" for s in pinned))
+        .filter(keep)
+        .select(*cols)
     )
 
 
@@ -756,18 +757,12 @@ def _write_manifest(
     att: str,
 ) -> None:
     """Stage version ``v``'s file manifest under attempt ``att``: the
-    exact (segment, bucket) directories that ARE the version's postings
-    (the Iceberg/Delta-class pinning, VERDICT r13 #3).  The manifest is
-    a single JSON FILE written driver-side through the Hadoop
-    FileSystem — metadata of metadata-size must never cost a Spark job
-    (r15: the earlier 16-row createDataFrame→parquet write launched a
-    full job per mutation, which at fixture scale tripled every ANN
-    mutation leg and was pure overhead at any scale; Iceberg's
-    manifests are files for the same reason).  The attempt-unique path
-    means no other writer can touch it (ADVICE r14 #2), and overwrite
-    covers a same-attempt crash retry.  Partition values keep their
-    native type through the JSON round-trip (int for tb/cell axes,
-    str for the sketch store's day axis — r15)."""
+    exact (segment, partition value) directories that are the
+    version's data.  It is one JSON file written driver-side through
+    the Hadoop FileSystem, so it costs no Spark job.  No other writer
+    can name the attempt-unique path, and overwrite covers a
+    same-attempt retry.  Values keep their type through JSON: int for
+    the tb/cell axes, str for the sketch store's day axis."""
     import json as _json
 
     fs, hp = _fs_of(spark, _stage_path(store, "manifests", v, att))
@@ -787,12 +782,9 @@ def _write_manifest(
 def _manifest_entries(
     spark: SparkSession, store: str, v: int
 ) -> list[tuple]:
-    """Version ``v``'s pinned (seg, partition-value) list — a
-    driver-side metadata file read (no Spark job), resolved through
-    the published attempt.  Values come back with the type the writer
-    stored (JSON round-trips int and str faithfully), so one reader
-    serves the int-bucketed postings stores and the day-keyed sketch
-    store alike (r15)."""
+    """Version ``v``'s pinned (seg, partition-value) list: a driver-side
+    file read (no Spark job) through the published attempt, with values
+    typed as the writer stored them."""
     import json as _json
 
     fs, hp = _fs_of(spark, _table_dir(spark, store, "manifests", v))
@@ -808,12 +800,10 @@ def _manifest_entries(
 
 
 def _new_att() -> str:
-    """A fresh ATTEMPT id: every publish attempt stages its version
+    """A fresh attempt id: every publish attempt stages its version
     data dirs under ``v={v}-{att}`` paths no other writer can name, so
-    two writers racing the same version number can never clobber each
-    other's staged data (ADVICE r14 #2 — the r14 layout staged
-    directly into ``v={v+1}`` and a losing racer could overwrite the
-    winner's dirs even after the winner published)."""
+    two writers racing the same version number never clobber each
+    other's staged data."""
     import uuid
 
     return uuid.uuid4().hex[:8]
@@ -911,6 +901,33 @@ def _table_dir(spark: SparkSession, store: str, table: str, v: int) -> str:
     return _stage_path(store, table, v, _version_meta(spark, store, v)["att"])
 
 
+_VERSION_SCHEMAS = {
+    "lexicon": "term string, df bigint",
+    "stats": "n_docs bigint, sum_len bigint",
+}
+
+
+def _read_version(
+    spark: SparkSession, store: str, table: str, v: int
+) -> DataFrame:
+    """Version ``v`` of the BM25 store's ``lexicon`` or ``stats`` table,
+    read with its declared schema: no inference job before the
+    caller's action."""
+    return spark.read.schema(_VERSION_SCHEMAS[table]).parquet(
+        _table_dir(spark, store, table, v)
+    )
+
+
+def _avgdl_stats(spark: SparkSession, store: str, v: int) -> DataFrame:
+    """Version ``v``'s 1-row (avgdl, n_docs) scoring statistics."""
+    return _read_version(spark, store, "stats", v).select(
+        (
+            F.col("sum_len").cast("double") / F.col("n_docs").cast("double")
+        ).alias("avgdl"),
+        "n_docs",
+    )
+
+
 def _published_bids(spark: SparkSession, store: str) -> set:
     """Every ingest batch id any PUBLISHED version carries — the
     exactly-once ledger a stream sink consults before applying a
@@ -969,17 +986,9 @@ def _init_bm25_store(
     bucket-partitioned posting SEGMENT, v=1 lexicon (derived from the
     STORED segment, the drift-proofing discipline), v=1 stats, and the
     v=1 manifest pinning exactly that segment's buckets — all staged
-    attempt-unique, committed by the v=1 publish.
-
-    Optimization (r15, guide §2.6 + §5): the tokenized frame is pinned
-    for the leg — the segment write and the stats write both consume it
-    and previously each re-ran the corpus scan + tokenize; the writes
-    are independent staged artifacts and run concurrently
-    (:func:`_run_staged`).  r16 refinement: the lexicon derive (which
-    must follow the segment write — drift-proofing derives df from the
-    STORED files) is CHAINED inside the segment thunk, so it overlaps
-    the stats write instead of serializing after the whole stage
-    (guide §2.6 — the r15 form ran seg ∥ stats, then lexicon alone)."""
+    attempt-unique, committed by the v=1 publish.  The tokenized frame
+    is pinned for the leg; the lexicon derive follows the segment write
+    inside one thunk, concurrent with the stats write."""
     from pyspark import StorageLevel
 
     spark = docs.sparkSession
@@ -991,9 +1000,7 @@ def _init_bm25_store(
     try:
 
         def _stage_seg_then_lexicon() -> None:
-            _write_segment(
-                _postings_of(toks).repartition(N_TB, "tb"), root, seg
-            )
+            _write_segment(_postings_of(toks), root, seg)
             buckets = _seg_buckets(spark, root, seg)
             seg_info["buckets"] = buckets
             stored = _read_segments(
@@ -1032,7 +1039,7 @@ def upsert_bm25_index(
     path: str,
     batch_docs: DataFrame,
     bid: int | None = None,
-) -> None:
+) -> list[int]:
     """Merge a new document batch into the stored index: write the
     batch's postings as one NEW immutable segment (pre-existing posting
     files are never touched — tests prove the file-level claim), then
@@ -1049,27 +1056,13 @@ def upsert_bm25_index(
     v+1 first) the merge retries against the new latest with a FRESH
     attempt id — the batch segment is version-independent and written
     once, and the losing attempt's staged dirs are unreferenced debris
-    vacuum sweeps, never a hazard to the winner's published data
-    (ADVICE r14 #2 closed: writers can no longer name each other's
-    paths).
-    The batch frame fully determines the merge — the store is not
-    corpus-bound (ADVICE r12: the earlier unused ``sf_dir`` parameter
-    invited exactly that misreading).
+    vacuum sweeps, never a hazard to the winner's published data.
+    The batch frame fully determines the merge.
 
-    Returns the new segment's bucket list (r15): the CRUD chain's
-    post-upsert compaction targets exactly these buckets, and deriving
-    them from the upsert's own ``_seg_buckets`` read-back saves the
-    caller a full re-tokenize of the batch.
-
-    Optimization (r15, guide §2.6 + §5): the leg's three staged writes
-    (posting segment, lexicon v+1, stats v+1) are physically
-    independent attempt-unique artifacts gated by one publish, so they
-    run as concurrent jobs; the batch's tokenized/posting frames are
-    pinned for the leg — previously the segment write, the df
-    aggregate and the stats aggregate EACH re-ran the batch scan +
-    tokenize + posting shuffle (three passes per mutation).  A retry
-    after :class:`VersionConflict` re-stages only the version tables
-    (the segment is version-independent and written once)."""
+    Returns the new segment's bucket list, read back from the stored
+    files (the CRUD chain compacts exactly these buckets).  The three
+    staged writes run as concurrent jobs over the pinned batch
+    postings; a retry re-stages only the version tables."""
     from pyspark import StorageLevel
 
     toks = _toks_of(batch_docs).persist(StorageLevel.MEMORY_AND_DISK)
@@ -1086,12 +1079,10 @@ def upsert_bm25_index(
             att = _new_att()
 
             def _stage_seg() -> None:
-                _write_segment(bp.repartition(N_TB, "tb"), root, seg)
+                _write_segment(bp, root, seg)
 
             def _stage_lexicon(v=v, att=att) -> None:
-                old_lex = spark.read.parquet(
-                    _table_dir(spark, path, "lexicon", v)
-                )
+                old_lex = _read_version(spark, path, "lexicon", v)
                 (
                     old_lex.join(batch_df, "term", "full_outer")
                     .select(
@@ -1106,9 +1097,7 @@ def upsert_bm25_index(
                 )
 
             def _stage_stats(v=v, att=att) -> None:
-                old_stats = spark.read.parquet(
-                    _table_dir(spark, path, "stats", v)
-                )
+                old_stats = _read_version(spark, path, "stats", v)
                 (
                     old_stats.select(
                         F.col("n_docs").alias("n0"),
@@ -1175,13 +1164,8 @@ def serve_bm25_v2_at(
     postings = _read_segments(
         spark, f"{path}/postings", entries, _BM25_POSTING_SCHEMA
     ).filter(F.col("tb").isin(buckets))
-    lexicon = spark.read.parquet(_table_dir(spark, path, "lexicon", v))
-    stats = spark.read.parquet(_table_dir(spark, path, "stats", v)).select(
-        (
-            F.col("sum_len").cast("double") / F.col("n_docs").cast("double")
-        ).alias("avgdl"),
-        "n_docs",
-    )
+    lexicon = _read_version(spark, path, "lexicon", v)
+    stats = _avgdl_stats(spark, path, v)
     return topk_from_bm25_index(postings, lexicon, stats)
 
 
@@ -1246,7 +1230,7 @@ def bm25_stream_upsert_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         _run_bm25_upsert_stream(spark, sf_dir, tmp)
         store = f"{tmp}/store"
         v = _latest_version(spark, store)
-        nd = spark.read.parquet(_table_dir(spark, store, "stats", v)).select(
+        nd = _read_version(spark, store, "stats", v).select(
             F.col("n_docs").alias("n_docs_indexed")
         )
         out = (
@@ -1466,7 +1450,7 @@ def bm25_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         upsert_bm25_index(spark, tmp, b2)
         purged = vacuum_bm25_store(spark, tmp, keep_last=RETAIN_VERSIONS)
         v = _latest_version(spark, tmp)
-        nd = spark.read.parquet(_table_dir(spark, tmp, "stats", v)).select(
+        nd = _read_version(spark, tmp, "stats", v).select(
             F.col("n_docs").alias("n_docs_indexed")
         )
         out = (
@@ -1520,15 +1504,8 @@ def delete_from_bm25_index(
     the Iceberg/Delta erasure contract.  Returns the affected bucket
     list (≤ N_TB ints).  Cost is proportional to the affected buckets'
     postings + the vocabulary-bounded lexicon merge — never a corpus
-    rescan.
-
-    Optimization (r15, guide §2.6 + §5): the deleted docs' tokenized /
-    posting frames are pinned for the leg (the bucket-discovery
-    collect, the df-decrement aggregate and the stats decrement each
-    re-derived them before — three tokenize passes per erasure), and
-    the three independent staged writes (surviving-postings segment,
-    lexicon v+1, stats v+1) run as concurrent jobs gated by the one
-    publish."""
+    rescan.  The deleted docs' postings are pinned for the leg, and
+    its three staged writes run as concurrent jobs."""
     from pyspark import StorageLevel
 
     toks = _toks_of(del_docs).persist(StorageLevel.MEMORY_AND_DISK)
@@ -1547,9 +1524,7 @@ def delete_from_bm25_index(
             att = _new_att()
 
             def _stage_lexicon(v=v, att=att) -> None:
-                old_lex = spark.read.parquet(
-                    _table_dir(spark, path, "lexicon", v)
-                )
+                old_lex = _read_version(spark, path, "lexicon", v)
                 (
                     old_lex.join(ddf, "term", "left")
                     .select(
@@ -1564,9 +1539,7 @@ def delete_from_bm25_index(
                 )
 
             def _stage_stats(v=v, att=att) -> None:
-                old_stats = spark.read.parquet(
-                    _table_dir(spark, path, "stats", v)
-                )
+                old_stats = _read_version(spark, path, "stats", v)
                 (
                     old_stats.select(
                         F.col("n_docs").alias("n0"),
@@ -1600,10 +1573,7 @@ def delete_from_bm25_index(
                         spark, root, affected, _BM25_POSTING_SCHEMA
                     ).join(del_ids, "doc_id", "left_anti")
                     seg = _new_seg_id()
-                    n_out = max(1, len(buckets))
-                    _write_segment(
-                        kept.repartition(n_out, "tb"), root, seg
-                    )
+                    _write_segment(kept, root, seg)
                     seg_result["seg"] = seg
                     seg_result["survivors"] = _seg_buckets(spark, root, seg)
 
@@ -2051,9 +2021,7 @@ def _init_pos_store(
     spark = docs.sparkSession
     root = f"{path}/{_POS_ROOT}"
     seg = _new_seg_id()
-    _write_segment(
-        _pos_postings_of(docs).repartition(N_TB, "tb"), root, seg
-    )
+    _write_segment(_pos_postings_of(docs), root, seg)
     buckets = _seg_buckets(spark, root, seg)
     att = _new_att()
     _write_manifest(spark, path, 1, [(seg, b) for b in buckets], att)
@@ -2080,9 +2048,7 @@ def upsert_phrase_index(
     (r15)."""
     root = f"{path}/{_POS_ROOT}"
     seg = _new_seg_id()
-    _write_segment(
-        _pos_postings_of(batch_docs).repartition(N_TB, "tb"), root, seg
-    )
+    _write_segment(_pos_postings_of(batch_docs), root, seg)
     seg_buckets = _seg_buckets(spark, root, seg)
     last: VersionConflict | None = None
     for _ in range(PUBLISH_RETRIES):
@@ -2129,9 +2095,7 @@ def delete_from_phrase_index(
                 spark, root, affected, _POS_POSTING_SCHEMA
             ).join(del_ids, "doc_id", "left_anti")
             seg = _new_seg_id()
-            _write_segment(
-                kept.repartition(max(1, len(buckets)), "tb"), root, seg
-            )
+            _write_segment(kept, root, seg)
             survivors = _seg_buckets(spark, root, seg)
             new_entries = [e for e in entries if e[1] not in hit] + [
                 (seg, b) for b in survivors
@@ -2282,31 +2246,15 @@ def compact_bm25_buckets(spark: SparkSession, path: str, buckets) -> None:
         rows = _read_segments(spark, root, affected, _BM25_POSTING_SCHEMA)
         seg = _new_seg_id()
         att = _new_att()
-
-        # the three staged writes are physically independent artifacts
-        # (coalesced segment from v's pinned files; lexicon and stats
-        # carried forward content-identical) gated by the one publish,
-        # so they run as concurrent jobs (optimization r16, guide §2.6
-        # — the r15 form ran them sequentially, leaving the cluster
-        # idle through each job's tail)
-        def _stage_seg(rows=rows, seg=seg) -> None:
-            _write_segment(rows.repartition(len(buckets), "tb"), root, seg)
-
-        def _stage_lexicon(v=v, att=att) -> None:
-            spark.read.parquet(
-                _table_dir(spark, path, "lexicon", v)
-            ).write.mode("overwrite").parquet(
-                _stage_path(path, "lexicon", v + 1, att)
-            )
-
-        def _stage_stats(v=v, att=att) -> None:
-            spark.read.parquet(
-                _table_dir(spark, path, "stats", v)
-            ).write.mode("overwrite").parquet(
-                _stage_path(path, "stats", v + 1, att)
-            )
-
-        _run_staged(_stage_seg, _stage_lexicon, _stage_stats)
+        _run_staged(
+            lambda: _write_segment(rows, root, seg),
+            *(
+                lambda t=t: _read_version(spark, path, t, v)
+                .write.mode("overwrite")
+                .parquet(_stage_path(path, t, v + 1, att))
+                for t in ("lexicon", "stats")
+            ),
+        )
         survivors = _seg_buckets(spark, root, seg)
         new_entries = [e for e in entries if e[1] not in hit] + [
             (seg, b) for b in survivors
@@ -2518,9 +2466,9 @@ def bm25_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = _latest_version(spark, tmp)
         with ThreadPoolExecutor(max_workers=1) as _pool:
             _vac = _pool.submit(vacuum_bm25_store, spark, tmp, keep_last=1)
-            nd = spark.read.parquet(
-                _table_dir(spark, tmp, "stats", v)
-            ).select(F.col("n_docs").alias("n_docs_indexed"))
+            nd = _read_version(spark, tmp, "stats", v).select(
+                F.col("n_docs").alias("n_docs_indexed")
+            )
             out = (
                 serve_bm25_v2_at(spark, tmp, v)
                 .crossJoin(F.broadcast(nd))
@@ -3252,15 +3200,10 @@ def serve_bm25_batch_from_store(
         [(qid, t) for qid, ts in BM25_BATCH for t in ts],
         "qid int, term string",
     )
-    lex = spark.read.parquet(
-        _table_dir(spark, path, "lexicon", v)
-    ).filter(F.col("term").isin(all_terms))
-    stats = spark.read.parquet(_table_dir(spark, path, "stats", v)).select(
-        (
-            F.col("sum_len").cast("double") / F.col("n_docs").cast("double")
-        ).alias("avgdl"),
-        "n_docs",
+    lex = _read_version(spark, path, "lexicon", v).filter(
+        F.col("term").isin(all_terms)
     )
+    stats = _avgdl_stats(spark, path, v)
     scored = (
         postings.join(F.broadcast(q), "term")
         .join(F.broadcast(lex), "term")
@@ -3398,15 +3341,10 @@ def serve_bm25_filtered_from_store(
         "doc_id"
     )
     hit = postings.join(keep_ids, "doc_id", "left_semi")
-    lex = spark.read.parquet(
-        _table_dir(spark, path, "lexicon", v)
-    ).filter(F.col("term").isin(*QUERY_TERMS))
-    stats = spark.read.parquet(_table_dir(spark, path, "stats", v)).select(
-        (
-            F.col("sum_len").cast("double") / F.col("n_docs").cast("double")
-        ).alias("avgdl"),
-        "n_docs",
+    lex = _read_version(spark, path, "lexicon", v).filter(
+        F.col("term").isin(*QUERY_TERMS)
     )
+    stats = _avgdl_stats(spark, path, v)
     scored = (
         hit.join(F.broadcast(lex), "term")
         .crossJoin(F.broadcast(stats))

@@ -1183,9 +1183,7 @@ def delete_users_from_sketch_store(
         & ~del_pred
     )
     seg, survivor_days = _write_sketch_segment(
-        spark,
-        path,
-        _rollup_cells(surv).repartition(len(affected), "day_part"),
+        spark, path, _rollup_cells(surv)
     )
     hit = set(affected)
     last: VersionConflict | None = None

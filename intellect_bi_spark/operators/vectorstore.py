@@ -68,10 +68,28 @@ CAND_K = 40  # ADC candidates entering the exact rerank (4× the final k)
 
 def _centroids(emb: DataFrame) -> DataFrame:
     """The IVF coarse quantizer (similarity.py:421 deterministic seed:
-    centroids are the embeddings of vec_id 1..N_CELLS)."""
+    centroids are the embeddings of vec_id 1..N_CELLS).  ``c_emb`` is
+    widened to doubles, exactly, so the stored table has one schema
+    whatever the fixture's float width (every scoring expression casts
+    elements to double anyway)."""
     return emb.filter(F.col("vec_id").between(1, N_CELLS)).select(
         (F.col("vec_id") - 1).cast("int").alias("cell"),
-        F.col("embedding").alias("c_emb"),
+        F.col("embedding").cast("array<double>").alias("c_emb"),
+    )
+
+
+_ANN_MODEL_SCHEMAS = {
+    "centroids": "cell int, c_emb array<double>",
+    "codebook": "m bigint, cid bigint, carr array<double>",
+}
+
+
+def _read_model(spark: SparkSession, path: str, table: str) -> DataFrame:
+    """The frozen ``centroids`` or ``codebook`` table of an ANN store,
+    read with its declared schema: no inference job before the
+    caller's action."""
+    return spark.read.schema(_ANN_MODEL_SCHEMAS[table]).parquet(
+        f"{path}/{table}"
     )
 
 
@@ -83,18 +101,20 @@ def build_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     ``cell IN (...)`` filter prunes to the probed directories before
     any byte is read.
 
-    Staged-rename commit (r16, ADVICE r15): this is the one UNVERSIONED
-    build path — unlike the manifest-pinned stores there is no publish
-    gate, so under committer v2 a mid-job failure writing straight into
-    ``{path}/centroids`` etc. could leave a partially-written table a
-    later reader consumes silently.  The three tables therefore stage
-    into a build-unique temp dir and are RENAMED into place only after
-    all three jobs complete: a failed build leaves only ``_build-*``
-    debris (never a readable partial table), and the rename is a cheap
-    driver-side metadata op.  Rebuilding over an existing store keeps a
-    delete-then-rename window per table — still strictly smaller than
-    v2's task-level partial-write exposure, and no current caller
-    rebuilds in place (all build into fresh temp dirs)."""
+    Staged-rename commit: this is the one UNVERSIONED build path —
+    unlike the manifest-pinned stores there is no publish gate, so a
+    mid-job failure writing straight into ``{path}/centroids`` etc.
+    could leave a partially-written table a later reader consumes
+    silently.  The three tables therefore stage into a build-unique
+    ``_build-*`` dir and are renamed into place only after all three
+    jobs complete.  An existing table is first renamed aside into the
+    stage; if any rename fails, every swapped table is restored and
+    the stage is kept, so a failed build destroys neither the old
+    store nor the new one.  The stage is deleted only after every
+    rename has succeeded.  A directory rename is an atomic metadata op
+    on HDFS and local disk, but on S3A it is an O(data) copy, so there
+    the swap leaves a window proportional to the index size in which
+    a table is missing or partial."""
     emb = _emb(spark, sf_dir)
     codes, cb = _pq_codes(spark, sf_dir)
     from .retrieval import _fs_of, _new_att, _run_staged
@@ -122,18 +142,32 @@ def build_index(spark: SparkSession, sf_dir: str, path: str) -> None:
         ),
     )
     fs, _ = _fs_of(spark, path)
+
+    def _move(src, dst) -> None:
+        if not fs.rename(src, dst):
+            raise IOError(f"rename {src} -> {dst} failed")
+
+    swapped = []  # (live, staged, aside) of every table swapped so far
     try:
         for table in ("centroids", "codebook", "codes"):
-            _, dst = _fs_of(spark, f"{path}/{table}")
-            if fs.exists(dst):
-                fs.delete(dst, True)
-            _, src = _fs_of(spark, f"{stage}/{table}")
-            if not fs.rename(src, dst):
-                raise IOError(f"rename {src} -> {dst} failed")
-    finally:
-        _, sp = _fs_of(spark, stage)
-        if fs.exists(sp):
-            fs.delete(sp, True)
+            _, live = _fs_of(spark, f"{path}/{table}")
+            _, staged = _fs_of(spark, f"{stage}/{table}")
+            _, aside = _fs_of(spark, f"{stage}/old-{table}")
+            swapped.append((live, staged, aside))
+            if fs.exists(live):
+                _move(live, aside)
+            _move(staged, live)
+    except BaseException:
+        # back to the pre-build state; the new tables return to the
+        # stage, which stays behind as debris holding both
+        for live, staged, aside in reversed(swapped):
+            if fs.exists(live) and not fs.exists(staged):
+                _move(live, staged)
+            if fs.exists(aside):
+                _move(aside, live)
+        raise
+    _, sp = _fs_of(spark, stage)
+    fs.delete(sp, True)
     # the PQ training artifacts are the session-lifetime memoized model
     # (clustering._pq_model) shared by every PQ consumer — the serving
     # path's query-subvector derivation reuses them via CacheManager
@@ -295,8 +329,8 @@ def read_index(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     return (
-        spark.read.parquet(f"{path}/centroids"),
-        spark.read.parquet(f"{path}/codebook"),
+        _read_model(spark, path, "centroids"),
+        _read_model(spark, path, "codebook"),
         spark.read.parquet(f"{path}/codes"),
     )
 
@@ -458,7 +492,7 @@ def _ann_write_codes_segment(
             F.col("m").cast("int").alias("m"),
             F.col("cid").cast("bigint").alias("cid"),
             F.col("cell").cast("int").alias("cell"),
-        ).repartition(N_CELLS, "cell"),
+        ),
         root,
         seg,
         pcol="cell",
@@ -494,8 +528,8 @@ def read_index_versioned(
     build-once store keeps its flat layout; it has no mutations to
     isolate)."""
     return (
-        spark.read.parquet(f"{path}/centroids"),
-        spark.read.parquet(f"{path}/codebook"),
+        _read_model(spark, path, "centroids"),
+        _read_model(spark, path, "codebook"),
         _ann_pinned_codes(spark, path, v),
     )
 
@@ -582,8 +616,8 @@ def upsert_index(
         _write_manifest,
     )
 
-    centroids = spark.read.parquet(f"{path}/centroids")
-    cb = spark.read.parquet(f"{path}/codebook")
+    centroids = _read_model(spark, path, "centroids")
+    cb = _read_model(spark, path, "codebook")
     seg, cells = _ann_write_codes_segment(
         spark, _encode_codes(batch, cb, centroids), path
     )
@@ -686,9 +720,7 @@ def compact_index_cells(spark: SparkSession, path: str, cells) -> None:
         )
         seg = _new_seg_id()
         att = _new_att()
-        _write_segment(
-            rows.repartition(len(cells), "cell"), root, seg, pcol="cell"
-        )
+        _write_segment(rows, root, seg, pcol="cell")
         survivors = _seg_buckets(spark, root, seg, pcol="cell")
         new_entries = [e for e in entries if e[1] not in hit] + [
             (seg, c) for c in survivors
@@ -720,7 +752,7 @@ def ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         build_index_frozen(spark, sf_dir, tmp)
         upsert_index(spark, sf_dir, tmp, batch)
-        centroids = spark.read.parquet(f"{tmp}/centroids")
+        centroids = _read_model(spark, tmp, "centroids")
         touched_rows = _assign_cells(batch, centroids)
         # bounded driver-side scalar list (≤ N_CELLS ints — the
         # sinks.upsert_embeddings model-boundary collect class)
@@ -840,9 +872,7 @@ def delete_from_index(
         ).join(delete_ids, "vec_id", "left_anti")
         seg = _new_seg_id()
         att = _new_att()
-        _write_segment(
-            kept.repartition(len(affected), "cell"), root, seg, pcol="cell"
-        )
+        _write_segment(kept, root, seg, pcol="cell")
         survivors = _seg_buckets(spark, root, seg, pcol="cell")
         new_entries = [e for e in entries if e[1] not in hit] + [
             (seg, c) for c in survivors
@@ -1330,7 +1360,7 @@ def ann_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_index_frozen(spark, sf_dir, tmp)
         upsert_index(spark, sf_dir, tmp, batch)
         affected_del = delete_from_index(spark, tmp, dels)
-        centroids = spark.read.parquet(f"{tmp}/centroids")
+        centroids = _read_model(spark, tmp, "centroids")
         batch_cells = [
             r["cell"]
             for r in _assign_cells(batch, centroids)

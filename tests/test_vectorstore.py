@@ -12,6 +12,7 @@ from __future__ import annotations
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from intellect_bi_spark.operators import vectorstore as vs
@@ -65,6 +66,67 @@ def test_store_roundtrip_preserves_index_tables(spark, sf_dir):
         )
         assert r_cent.count() == centroids.count() == vs.N_CELLS
         assert r_cb.count() == codebook.count()
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_build_index_failed_rename_keeps_old_and_new_tables(
+    spark, sf_dir, monkeypatch
+):
+    """A rebuild whose rename into place fails mid-swap restores every
+    old table and keeps the complete staged replacement under
+    ``_build-*``: the failure destroys neither store."""
+    import os
+
+    from intellect_bi_spark.operators import retrieval as rt
+
+    tables = ("centroids", "codebook", "codes")
+
+    def files(root):
+        return sorted(
+            os.path.relpath(os.path.join(d, f), root)
+            for d, _, fs in os.walk(root)
+            for f in fs
+        )
+
+    class FailingRename:
+        """Delegates to the real FileSystem, but refuses to move the
+        staged codebook into place."""
+
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def rename(self, src, dst):
+            if src.getName() == "codebook" and "_build-" in src.toString():
+                return False
+            return self._fs.rename(src, dst)
+
+    real_fs_of = rt._fs_of
+
+    def failing_fs_of(spark, path):
+        fs, hpath = real_fs_of(spark, path)
+        return FailingRename(fs), hpath
+
+    tmp = tempfile.mkdtemp(prefix="sgraft_vsrename_")
+    try:
+        vs.build_index(spark, sf_dir, tmp)
+        old = {t: files(f"{tmp}/{t}") for t in tables}
+        monkeypatch.setattr(rt, "_fs_of", failing_fs_of)
+        with pytest.raises(IOError):
+            vs.build_index(spark, sf_dir, tmp)
+        monkeypatch.undo()
+        assert {t: files(f"{tmp}/{t}") for t in tables} == old
+        stages = [d for d in os.listdir(tmp) if d.startswith("_build-")]
+        assert len(stages) == 1
+        stage = f"{tmp}/{stages[0]}"
+        assert sorted(os.listdir(stage)) == sorted(tables)
+        for root in (tmp, stage):
+            cent, cb, codes = vs.read_index(spark, root)
+            assert cent.count() == vs.N_CELLS
+            assert cb.count() > 0 and codes.count() > 0
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
