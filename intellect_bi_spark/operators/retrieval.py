@@ -614,35 +614,39 @@ def _version_dirs(spark: SparkSession, path: str) -> list[tuple[int, str]]:
     return sorted(out)
 
 
-def _run_staged(*thunks) -> None:
-    """Run independent staged-write thunks as concurrent jobs.
+def _run_staged(*thunks) -> list:
+    """Run independent staged-write thunks as concurrent jobs and
+    return their results in argument order.
 
     A mutation stages its artifacts (segment, lexicon and stats
     versions) into attempt-unique directories and publishes only after
     all of them are staged, so the writes have no ordering dependency.
     The first exception propagates before the publish, leaving only
     unpublished debris that vacuum sweeps.  One thunk runs as a plain
-    call.  Each thunk's jobs run in their own scheduler pool, so under
-    FAIR scheduling a large segment write cannot head-of-line block the
-    small lexicon/stats writes; under FIFO the pool tag is a no-op."""
+    call.  Each thunk's jobs run in their own scheduler pool, named
+    uniquely per call, so under FAIR scheduling a large segment write
+    cannot head-of-line block the small lexicon/stats writes, nor can
+    one mutation's thunks share a pool with a concurrent mutation's;
+    under FIFO the pool tag is a no-op."""
     if len(thunks) == 1:
-        thunks[0]()
-        return
+        return [thunks[0]()]
     from concurrent.futures import ThreadPoolExecutor
 
+    call = _new_att()
+
     def _pooled(i: int, t):
-        def run() -> None:
+        def run():
             from pyspark import SparkContext
 
             sc = SparkContext._active_spark_context
             if sc is not None:
                 try:
                     sc.setLocalProperty(
-                        "spark.scheduler.pool", f"sgraft-staged-{i}"
+                        "spark.scheduler.pool", f"sgraft-staged-{call}-{i}"
                     )
                 except Exception:  # pragma: no cover - exotic contexts
                     pass
-            t()
+            return t()
 
         return run
 
@@ -650,8 +654,7 @@ def _run_staged(*thunks) -> None:
         futures = [
             pool.submit(_pooled(i, t)) for i, t in enumerate(thunks)
         ]
-        for f in futures:
-            f.result()
+        return [f.result() for f in futures]
 
 
 class VersionConflict(RuntimeError):
@@ -675,20 +678,31 @@ def _new_seg_id() -> str:
 
 def _write_segment(
     df: DataFrame, root: str, seg: str, pcol: str = "tb"
-) -> None:
-    """Write one immutable segment ``{root}/seg={seg}/{pcol}=N``.
+) -> list:
+    """Write one immutable segment ``{root}/seg={seg}/`` and return the
+    sorted distinct ``pcol`` values it holds.
 
-    Invariants: every partition directory holds exactly one file (the
-    hash repartition by ``pcol`` puts each value in one task; AQE
-    coalesces the tasks to the data's size), and a segment's files are
-    never rewritten once a manifest pins them.  Overwrite mode confines
-    a retry of the same segment id to its own partial debris."""
+    Invariants: the segment is one directory of parquet files in which
+    ``pcol`` is an ordinary stored column; each value lies in exactly
+    one file (the hash repartition puts each value in one task, AQE
+    sizes the task count), and within that file its rows are
+    contiguous, so row-group statistics prune a ``pcol IN (...)``
+    filter.  The value list is observed during the write job itself,
+    typed as stored, so the manifest pins exactly what is on disk at
+    no extra job.  A segment's files are never rewritten once a
+    manifest pins them; overwrite mode confines a retry of the same
+    segment id to its own partial debris."""
+    from pyspark.sql import Observation
+
+    seen = Observation()
     (
         df.repartition(pcol)
+        .sortWithinPartitions(pcol)
+        .observe(seen, F.collect_set(pcol).alias("values"))
         .write.mode("overwrite")
-        .partitionBy(pcol)
         .parquet(f"{root}/seg={seg}")
     )
+    return sorted(seen.get["values"])
 
 
 def _read_segments(
@@ -698,55 +712,33 @@ def _read_segments(
     schema: str,
     pcol: str = "tb",
 ) -> DataFrame:
-    """Exactly the (seg, value) pairs ``entries`` pins, as the logical
-    ``schema`` (seg dropped).
+    """Exactly the rows of the (seg, value) pairs ``entries`` pins, as
+    ``schema``.
 
-    Invariants: the read opens the distinct pinned segment roots with a
-    declared schema, so it infers nothing and submits no job until the
-    caller's action; ``{pcol}`` is typed the way the manifest stores it
-    (int buckets and cells, string days); and a partition filter prunes
-    the scan to the pinned pairs before any file is opened.  No pins
-    yield an empty frame of the same schema."""
+    Invariants: ``schema`` declares every stored column, ``pcol``
+    included, so the read infers nothing and submits no job until the
+    caller's action; ``seg`` is the only directory partition, so the
+    filter prunes the scan to the pinned segment directories, and its
+    ``pcol IN (...)`` part is pushed into the parquet scan, where the
+    value-sorted files' row-group statistics skip unpinned values.  No
+    pins yield an empty frame of the same schema."""
     cols = [c.split()[0] for c in schema.split(",")]
     if not entries:
         return spark.createDataFrame([], schema)
     pinned: dict[str, list] = {}
     for s, t in sorted(entries):
         pinned.setdefault(s, []).append(t)
-    ptype = "string" if isinstance(entries[0][1], str) else "int"
-    data = ", ".join(c for c in schema.split(",") if c.split()[0] != pcol)
     keep = None
     for s, ts in pinned.items():
         cond = (F.col("seg") == s) & F.col(pcol).isin(ts)
         keep = cond if keep is None else keep | cond
     return (
-        spark.read.schema(f"{data}, seg string, {pcol} {ptype}")
+        spark.read.schema(f"{schema}, seg string")
         .option("basePath", root)
         .parquet(*(f"{root}/seg={s}" for s in pinned))
         .filter(keep)
         .select(*cols)
     )
-
-
-def _seg_buckets(
-    spark: SparkSession, root: str, seg: str, pcol: str = "tb",
-    coerce=int,
-) -> list:
-    """The bucket list a just-written segment actually produced —
-    read back from the STORED files (drift-proofing: the manifest pins
-    what is on disk, not what the writer intended).  Metadata-bounded
-    (≤ N_TB / N_CELLS / calendar-days distinct values).  ``coerce``
-    maps the directory-name suffix to the manifest's value type —
-    ``int`` for the numeric bucket axes (tb / cell), ``str`` for the
-    sketch store's day axis (r15)."""
-    fs, hp = _fs_of(spark, f"{root}/seg={seg}")
-    out = []
-    if fs.exists(hp):
-        for st in fs.listStatus(hp):
-            name = st.getPath().getName()
-            if name.startswith(f"{pcol}="):
-                out.append(coerce(name.split("=", 1)[1]))
-    return sorted(out)
 
 
 def _write_manifest(
@@ -757,12 +749,12 @@ def _write_manifest(
     att: str,
 ) -> None:
     """Stage version ``v``'s file manifest under attempt ``att``: the
-    exact (segment, partition value) directories that are the
-    version's data.  It is one JSON file written driver-side through
-    the Hadoop FileSystem, so it costs no Spark job.  No other writer
-    can name the attempt-unique path, and overwrite covers a
-    same-attempt retry.  Values keep their type through JSON: int for
-    the tb/cell axes, str for the sketch store's day axis."""
+    exact (segment, value) pairs that are the version's data.  It is
+    one JSON file written driver-side through the Hadoop FileSystem,
+    so it costs no Spark job.  No other writer can name the
+    attempt-unique path, and overwrite covers a same-attempt retry.
+    Values keep their type through JSON: int for the tb/cell axes, str
+    for the sketch store's day axis."""
     import json as _json
 
     fs, hp = _fs_of(spark, _stage_path(store, "manifests", v, att))
@@ -983,7 +975,7 @@ def _init_bm25_store(
     docs: DataFrame, path: str, bid: int | None = None
 ) -> None:
     """First write of an upsertable store from a document frame: one
-    bucket-partitioned posting SEGMENT, v=1 lexicon (derived from the
+    bucket-sorted posting SEGMENT, v=1 lexicon (derived from the
     STORED segment, the drift-proofing discipline), v=1 stats, and the
     v=1 manifest pinning exactly that segment's buckets — all staged
     attempt-unique, committed by the v=1 publish.  The tokenized frame
@@ -996,13 +988,10 @@ def _init_bm25_store(
     seg = _new_seg_id()
     att = _new_att()
     root = f"{path}/postings"
-    seg_info: dict = {}
     try:
 
-        def _stage_seg_then_lexicon() -> None:
-            _write_segment(_postings_of(toks), root, seg)
-            buckets = _seg_buckets(spark, root, seg)
-            seg_info["buckets"] = buckets
+        def _stage_seg_then_lexicon() -> list:
+            buckets = _write_segment(_postings_of(toks), root, seg)
             stored = _read_segments(
                 spark, root, [(seg, b) for b in buckets],
                 _BM25_POSTING_SCHEMA,
@@ -1012,14 +1001,14 @@ def _init_bm25_store(
             ).write.mode("overwrite").parquet(
                 _stage_path(path, "lexicon", 1, att)
             )
+            return buckets
 
-        _run_staged(
+        buckets, _ = _run_staged(
             _stage_seg_then_lexicon,
             lambda: _stats2_of(toks).write.mode("overwrite").parquet(
                 _stage_path(path, "stats", 1, att)
             ),
         )
-        buckets = seg_info["buckets"]
         _write_manifest(spark, path, 1, [(seg, b) for b in buckets], att)
         _publish_version(spark, path, 1, att, bid)
     finally:
@@ -1071,15 +1060,15 @@ def upsert_bm25_index(
     seg = _new_seg_id()
     batch_df = bp.groupBy("term").agg(F.count(F.lit(1)).alias("bdf"))
     bs = _stats2_of(toks)
-    seg_staged = False
+    seg_buckets = None  # the batch segment's values, from its one write
     try:
         last: VersionConflict | None = None
         for _ in range(PUBLISH_RETRIES):
             v = _latest_version(spark, path)
             att = _new_att()
 
-            def _stage_seg() -> None:
-                _write_segment(bp, root, seg)
+            def _stage_seg() -> list:
+                return _write_segment(bp, root, seg)
 
             def _stage_lexicon(v=v, att=att) -> None:
                 old_lex = _read_version(spark, path, "lexicon", v)
@@ -1120,11 +1109,11 @@ def upsert_bm25_index(
                 )
 
             thunks = [_stage_lexicon, _stage_stats]
-            if not seg_staged:
+            if seg_buckets is None:
                 thunks.append(_stage_seg)
-            _run_staged(*thunks)
-            seg_staged = True
-            seg_buckets = _seg_buckets(spark, root, seg)
+                seg_buckets = _run_staged(*thunks)[-1]
+            else:
+                _run_staged(*thunks)
             entries = _manifest_entries(spark, path, v) + [
                 (seg, b) for b in seg_buckets
             ]
@@ -1144,10 +1133,10 @@ def serve_bm25_v2_at(
     spark: SparkSession, path: str, v: int
 ) -> DataFrame:
     """Answer the fixed query from a PINNED store version: the postings
-    read touches only the manifest-pinned (seg, tb) directories whose
-    bucket matches a query term (manifest-level directory pruning — the
-    lexical analogue of the IVF cell filter), still carries the tb
-    partition filter and the pushed term IN-filter, and avgdl derives
+    read touches only the manifest-pinned segments holding a bucket a
+    query term hashes into (manifest-level pruning — the lexical
+    analogue of the IVF cell filter), pushes the tb and term
+    IN-filters into the parquet scan, and avgdl derives
     from version ``v``'s exact (n_docs, sum_len).  Because every file
     the read touches is pinned by ``v``'s manifest and segments are
     immutable, a reader of ``v`` is FULLY isolated from concurrent
@@ -1562,31 +1551,25 @@ def delete_from_bm25_index(
                 )
 
             entries = _manifest_entries(spark, path, v)
-            seg_result: dict = {}
             thunks = [_stage_lexicon, _stage_stats]
             if buckets:
                 hit = set(buckets)
                 affected = [e for e in entries if e[1] in hit]
+                seg = _new_seg_id()
 
-                def _stage_survivors(affected=affected) -> None:
+                def _stage_survivors(affected=affected, seg=seg) -> list:
                     kept = _read_segments(
                         spark, root, affected, _BM25_POSTING_SCHEMA
                     ).join(del_ids, "doc_id", "left_anti")
-                    seg = _new_seg_id()
-                    _write_segment(kept, root, seg)
-                    seg_result["seg"] = seg
-                    seg_result["survivors"] = _seg_buckets(spark, root, seg)
+                    return _write_segment(kept, root, seg)
 
                 thunks.append(_stage_survivors)
-            _run_staged(*thunks)
+            staged = _run_staged(*thunks)
+            new_entries = entries
             if buckets:
-                new_entries = [
-                    e for e in entries if e[1] not in set(buckets)
-                ] + [
-                    (seg_result["seg"], b) for b in seg_result["survivors"]
+                new_entries = [e for e in entries if e[1] not in hit] + [
+                    (seg, b) for b in staged[-1]
                 ]
-            else:
-                new_entries = entries
             _write_manifest(spark, path, v + 1, new_entries, att)
             try:
                 _publish_version(spark, path, v + 1, att)
@@ -2021,8 +2004,7 @@ def _init_pos_store(
     spark = docs.sparkSession
     root = f"{path}/{_POS_ROOT}"
     seg = _new_seg_id()
-    _write_segment(_pos_postings_of(docs), root, seg)
-    buckets = _seg_buckets(spark, root, seg)
+    buckets = _write_segment(_pos_postings_of(docs), root, seg)
     att = _new_att()
     _write_manifest(spark, path, 1, [(seg, b) for b in buckets], att)
     _publish_version(spark, path, 1, att, bid)
@@ -2048,8 +2030,7 @@ def upsert_phrase_index(
     (r15)."""
     root = f"{path}/{_POS_ROOT}"
     seg = _new_seg_id()
-    _write_segment(_pos_postings_of(batch_docs), root, seg)
-    seg_buckets = _seg_buckets(spark, root, seg)
+    seg_buckets = _write_segment(_pos_postings_of(batch_docs), root, seg)
     last: VersionConflict | None = None
     for _ in range(PUBLISH_RETRIES):
         v = _latest_version(spark, path)
@@ -2095,8 +2076,7 @@ def delete_from_phrase_index(
                 spark, root, affected, _POS_POSTING_SCHEMA
             ).join(del_ids, "doc_id", "left_anti")
             seg = _new_seg_id()
-            _write_segment(kept, root, seg)
-            survivors = _seg_buckets(spark, root, seg)
+            survivors = _write_segment(kept, root, seg)
             new_entries = [e for e in entries if e[1] not in hit] + [
                 (seg, b) for b in survivors
             ]
@@ -2126,8 +2106,8 @@ def _pos_store_postings(
 ) -> DataFrame:
     """The pinned positional-posting scan for a term set: resolve the
     (or a pinned) version, select only manifest entries whose bucket
-    can hold one of ``terms``, read exactly those directories (with
-    the tb partition filter kept on the scan for the plan audit)."""
+    can hold one of ``terms``, read exactly those pairs (with the tb
+    IN-filter pushed into the scan for the plan audit)."""
     import zlib
 
     if v is None:
@@ -2147,7 +2127,7 @@ def serve_phrase_from_store(
     spark: SparkSession, path: str, v: int | None = None
 ) -> DataFrame:
     """Answer the fixed phrase query from the stored positional index:
-    manifest-level directory pruning to the phrase words' buckets, and
+    manifest-level pruning to the phrase words' buckets, and
     each adjacency branch pushes its term equality into the parquet
     scan — the phrase never re-tokenizes the corpus."""
     return _phrase_topk(_pos_store_postings(spark, path, PHRASE, v))
@@ -2246,7 +2226,7 @@ def compact_bm25_buckets(spark: SparkSession, path: str, buckets) -> None:
         rows = _read_segments(spark, root, affected, _BM25_POSTING_SCHEMA)
         seg = _new_seg_id()
         att = _new_att()
-        _run_staged(
+        survivors, *_ = _run_staged(
             lambda: _write_segment(rows, root, seg),
             *(
                 lambda t=t: _read_version(spark, path, t, v)
@@ -2255,7 +2235,6 @@ def compact_bm25_buckets(spark: SparkSession, path: str, buckets) -> None:
                 for t in ("lexicon", "stats")
             ),
         )
-        survivors = _seg_buckets(spark, root, seg)
         new_entries = [e for e in entries if e[1] not in hit] + [
             (seg, b) for b in survivors
         ]
@@ -2528,7 +2507,7 @@ def serve_near_from_store(
 
 def near_index_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Proximity search served from the persisted positional index:
-    build once, serve the fixed NEAR query with directory pruning and
+    build once, serve the fixed NEAR query with bucket pruning and
     pushed term predicates, teardown.  Same oracle as the direct row —
     the store roundtrip and the banded join are both proven."""
     import shutil
@@ -3172,7 +3151,7 @@ def serve_bm25_batch_from_store(
     spark: SparkSession, path: str, v: int | None = None
 ) -> DataFrame:
     """Top-k per query for a BATCH of BM25 term-set queries in ONE
-    pinned postings scan: manifest-level directory pruning to the
+    pinned postings scan: manifest-level pruning to the
     union of the batch's term buckets, the pushed term IN-filter on
     the scan, lexicon/stats of the pinned version broadcast, per-
     (qid, doc) term-ordered fold, per-query window top-k."""

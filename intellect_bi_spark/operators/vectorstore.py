@@ -462,51 +462,51 @@ def _encode_codes(vecs: DataFrame, cb: DataFrame, centroids: DataFrame) -> DataF
 # The upsertable ("frozen-model") store is MANIFEST-PINNED (r15,
 # VERDICT r14 #2 — the r14 upgrade covered BM25 + positional only;
 # this closes the ANN twin): code rows live in immutable segments
-# ``codes/seg={seg}/cell=N``, each published version's manifest pins
-# its exact (segment, cell) file set, and every mutation (upsert,
+# ``codes/seg={seg}/`` whose files are sorted by the stored ``cell``
+# column, each published version's manifest pins its exact
+# (segment, cell) pairs, and every mutation (upsert,
 # delete, compact, stream batch) is pure copy-on-write — a reader
 # pinned at version v is fully isolated from concurrent mutations
 # (previously delete/compact rewrote cell partitions in place via
 # dynamic partition overwrite and a mid-delete reader saw mixed
 # cells).  The machinery is retrieval.py's (segments, attempt-staged
-# manifests, conditional publish, vacuum GC) with the partition axis
-# ``cell`` instead of the term bucket.
+# manifests, conditional publish, vacuum GC) with ``cell`` as the
+# segment's value column instead of the term bucket.
 
 _ANN_CODES_SCHEMA = "vec_id bigint, m int, cid bigint, cell int"
 _ANN_CODES_ROOT = "codes"
 
 
 def _ann_write_codes_segment(
-    spark: SparkSession, codes_df: DataFrame, path: str
+    codes_df: DataFrame, path: str
 ) -> tuple[str, list[int]]:
-    """Write one immutable code segment and return (seg, cells) — the
-    cells read back from the stored files (the manifest pins what is
-    on disk)."""
-    from .retrieval import _new_seg_id, _seg_buckets, _write_segment
+    """Write one immutable code segment and return (seg, the cells it
+    holds)."""
+    from .retrieval import _new_seg_id, _write_segment
 
-    root = f"{path}/{_ANN_CODES_ROOT}"
     seg = _new_seg_id()
-    _write_segment(
+    cells = _write_segment(
         codes_df.select(
             "vec_id",
             F.col("m").cast("int").alias("m"),
             F.col("cid").cast("bigint").alias("cid"),
             F.col("cell").cast("int").alias("cell"),
         ),
-        root,
+        f"{path}/{_ANN_CODES_ROOT}",
         seg,
         pcol="cell",
     )
-    return seg, _seg_buckets(spark, root, seg, pcol="cell")
+    return seg, cells
 
 
 def _ann_pinned_codes(
     spark: SparkSession, path: str, v: int | None = None
 ) -> DataFrame:
-    """The code relation of a PINNED store version: read exactly the
-    manifest's (segment, cell) directories — cell stays a partition
-    column, so the probe's ``cell IN (...)`` filter still prunes
-    directories before any byte is read."""
+    """The code relation of a PINNED store version: exactly the
+    manifest's (segment, cell) pairs.  ``cell`` is a stored column of
+    value-sorted segment files, so the probe's ``cell IN (...)``
+    filter is pushed into the parquet scan and skips the row groups of
+    unprobed cells."""
     from .retrieval import _latest_version, _manifest_entries, _read_segments
 
     if v is None:
@@ -561,19 +561,13 @@ def _init_ann_versioned(
 
     cents = _centroids(_emb(spark, sf_dir))
     cb = _reservoir_codebook(spark, sf_dir)
-    seg_cells: dict = {}
-
-    def _stage_codes() -> None:
-        seg_cells["sc"] = _ann_write_codes_segment(
-            spark, _encode_codes(vecs, cb, cents), path
-        )
-
-    _run_staged(
+    *_, (seg, cells) = _run_staged(
         lambda: cents.write.mode("overwrite").parquet(f"{path}/centroids"),
         lambda: cb.write.mode("overwrite").parquet(f"{path}/codebook"),
-        _stage_codes,
+        lambda: _ann_write_codes_segment(
+            _encode_codes(vecs, cb, cents), path
+        ),
     )
-    seg, cells = seg_cells["sc"]
     att = _new_att()
     _write_manifest(spark, path, 1, [(seg, c) for c in cells], att)
     _publish_version(spark, path, 1, att, bid)
@@ -582,7 +576,7 @@ def _init_ann_versioned(
 def build_index_frozen(spark: SparkSession, sf_dir: str, path: str) -> None:
     """Initial build of the upsertable store: BASE corpus only (the
     upsert batch is held out), reservoir-trained codebook, manifest-
-    pinned cell-partitioned code segment."""
+    pinned cell-sorted code segment."""
     emb = _emb(spark, sf_dir)
     _init_ann_versioned(
         spark, sf_dir, path, emb.filter(~_upsert_batch_pred())
@@ -619,7 +613,7 @@ def upsert_index(
     centroids = _read_model(spark, path, "centroids")
     cb = _read_model(spark, path, "codebook")
     seg, cells = _ann_write_codes_segment(
-        spark, _encode_codes(batch, cb, centroids), path
+        _encode_codes(batch, cb, centroids), path
     )
     last: VersionConflict | None = None
     for _ in range(PUBLISH_RETRIES):
@@ -680,7 +674,7 @@ def ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 def compact_index_cells(spark: SparkSession, path: str, cells) -> None:
     """Post-upsert maintenance: every upsert pins one more segment into
     each affected cell; compaction coalesces the given cells' pinned
-    rows into ONE fresh segment (one file per cell) and publishes a
+    rows into ONE fresh segment (each cell in one file) and publishes a
     snapshot whose manifest pins the new segment instead of every
     prior pin of those cells.  Readers of v keep their exact
     pre-compaction file set — no in-place rewrite, no lineage hazard
@@ -698,7 +692,6 @@ def compact_index_cells(spark: SparkSession, path: str, cells) -> None:
         _new_seg_id,
         _publish_version,
         _read_segments,
-        _seg_buckets,
         _write_manifest,
         _write_segment,
     )
@@ -720,8 +713,7 @@ def compact_index_cells(spark: SparkSession, path: str, cells) -> None:
         )
         seg = _new_seg_id()
         att = _new_att()
-        _write_segment(rows, root, seg, pcol="cell")
-        survivors = _seg_buckets(spark, root, seg, pcol="cell")
+        survivors = _write_segment(rows, root, seg, pcol="cell")
         new_entries = [e for e in entries if e[1] not in hit] + [
             (seg, c) for c in survivors
         ]
@@ -741,7 +733,7 @@ def ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed top-k from the compacted store.  The oracle is the identical
     full-rebuild restatement the upsert row uses — a green row proves
     compaction is a pure physical rewrite (served results unchanged);
-    the file-level claims (one file per compacted cell, unaffected
+    the file-level claims (each compacted cell in one file, unaffected
     cells byte-untouched) are locked by tests/test_vectorstore.py."""
     import shutil
     import tempfile
@@ -842,7 +834,6 @@ def delete_from_index(
         _new_seg_id,
         _publish_version,
         _read_segments,
-        _seg_buckets,
         _write_manifest,
         _write_segment,
     )
@@ -872,8 +863,7 @@ def delete_from_index(
         ).join(delete_ids, "vec_id", "left_anti")
         seg = _new_seg_id()
         att = _new_att()
-        _write_segment(kept, root, seg, pcol="cell")
-        survivors = _seg_buckets(spark, root, seg, pcol="cell")
+        survivors = _write_segment(kept, root, seg, pcol="cell")
         new_entries = [e for e in entries if e[1] not in hit] + [
             (seg, c) for c in survivors
         ]

@@ -159,7 +159,8 @@ for _mod in _MODULES:
 #     the positional stream/CRUD chains landed;
 # (b) re-certs whose GENERATED PLAN changed this round: the r15
 #     ANN-STORE MANIFEST PINNING (VERDICT r14 #2 — codes now live in
-#     immutable ``codes/seg={seg}/cell=N`` segments pinned by
+#     immutable ``codes/seg={seg}/`` segments (``cell`` a stored
+#     column the files are sorted by) pinned by
 #     per-version manifests with published markers; upsert/delete/
 #     compact/stream-append are pure copy-on-write; delete/compact no
 #     longer rewrite cell partitions in place) changes the versioned

@@ -43,10 +43,11 @@ ONE_SHOT_CONVERTED = (
 
 @pytest.mark.parametrize("name", ONE_SHOT_CONVERTED)
 def test_one_shot_pin_released_after_action(name, spark, sf_dir):
-    # first invocation may register documented SESSION-LIFETIME shared
-    # relations (the LSH band pin) — the leak check is the steady-state
-    # delta across a repeat invocation, which must be exactly zero
-    QUERIES[name](spark, sf_dir).collect()
+    # corpus_prep_funnel's first invocation may register the documented
+    # session-lifetime LSH band pin, so it alone is measured on a
+    # repeat; every other query must leave no pin from its first call
+    if name == "corpus_prep_funnel":
+        QUERIES[name](spark, sf_dir).collect()
     before = len(windows._PERSISTED)
     rows = QUERIES[name](spark, sf_dir).collect()
     assert rows  # the eager action really ran and produced output

@@ -49,3 +49,33 @@ def test_run_staged_single_thunk_runs_inline():
     tid = []
     _run_staged(lambda: tid.append(threading.get_ident()))
     assert tid == [threading.get_ident()]
+
+
+def test_run_staged_returns_results_in_argument_order():
+    assert _run_staged(lambda: 1, lambda: 2, lambda: 3) == [1, 2, 3]
+    assert _run_staged(lambda: "only") == ["only"]
+
+
+def test_concurrent_run_staged_calls_use_distinct_pools(spark):
+    """Two mutations staging at once (the concurrent chains of one
+    query) must not share FAIR pools: every thunk of both calls runs
+    in a pool of its own."""
+    sc = spark.sparkContext
+    all_running = threading.Barrier(4, timeout=30)
+    pools = []
+    lock = threading.Lock()
+
+    def thunk():
+        all_running.wait()
+        with lock:
+            pools.append(sc.getLocalProperty("spark.scheduler.pool"))
+
+    callers = [
+        threading.Thread(target=_run_staged, args=(thunk, thunk))
+        for _ in range(2)
+    ]
+    for t in callers:
+        t.start()
+    for t in callers:
+        t.join(60)
+    assert len(pools) == 4 and len(set(pools)) == 4, pools

@@ -5,16 +5,20 @@ IVF-PQ codes, HLL sketch rollup), checked across all four families:
   (declared read schemas, no inference or parallel-listing job);
 - the declared read schemas equal what the writers put on disk, after a
   build → upsert → delete → compact lifecycle;
-- every segment a lifecycle step writes holds one file per partition
-  directory.
+- every segment a lifecycle step writes is one directory of files in
+  which each value of the segment's value column lies in exactly one
+  file, sorted, and the value list the write returns (what manifests
+  pin) is exactly the set of values stored.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import tempfile
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, _parse_datatype_string
@@ -44,7 +48,22 @@ def _segments(root: str) -> set[str]:
     return {d for d in os.listdir(root) if d.startswith("seg=")}
 
 
-# family → (segment root under the store, partition column, logical
+def _value_files(seg_dir: str, pcol: str) -> dict:
+    """Value → the data files of one segment directory holding it, read
+    with pyarrow; asserts each file stores its values sorted."""
+    out: dict = {}
+    for f in sorted(os.listdir(seg_dir)):
+        if not f.endswith(".parquet") or f.startswith((".", "_")):
+            continue
+        col = pq.read_table(f"{seg_dir}/{f}", columns=[pcol])[pcol]
+        values = col.to_pylist()
+        assert values == sorted(values), (seg_dir, f, "not sorted")
+        for v in set(values):
+            out.setdefault(v, []).append(f)
+    return out
+
+
+# family → (segment root under the store, value column, logical
 # schema, version tables with their declared schemas)
 _LAYOUT = {
     "bm25": ("postings", "tb", rt._BM25_POSTING_SCHEMA, rt._VERSION_SCHEMAS),
@@ -115,17 +134,39 @@ def _lifecycle(spark, sf_dir, family: str, path: str) -> dict[str, set]:
     return written
 
 
+@contextlib.contextmanager
+def _recorded_writes():
+    """Record the value list every segment write returns, by segment
+    directory."""
+    write, returned = rt._write_segment, {}
+
+    def recording(df, root, seg, pcol="tb"):
+        returned[f"{root}/seg={seg}"] = values = write(df, root, seg, pcol)
+        return values
+
+    rt._write_segment = recording
+    try:
+        yield returned
+    finally:
+        rt._write_segment = write
+
+
 @pytest.fixture(scope="module")
 def lifecycles(spark, sf_dir):
+    """family → (store path, segments per step, the value list each
+    segment's write returned, by segment directory)."""
     tmp = tempfile.mkdtemp(prefix="sgraft_store_protocol_")
     try:
-        yield {
-            family: (
-                f"{tmp}/{family}",
-                _lifecycle(spark, sf_dir, family, f"{tmp}/{family}"),
-            )
-            for family in FAMILIES
-        }
+        with _recorded_writes() as returned:
+            runs = {
+                family: (
+                    f"{tmp}/{family}",
+                    _lifecycle(spark, sf_dir, family, f"{tmp}/{family}"),
+                    returned,
+                )
+                for family in FAMILIES
+            }
+        yield runs
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -139,20 +180,17 @@ def _fields(schema) -> dict[str, str]:
 
 @pytest.mark.parametrize("family", FAMILIES)
 def test_declared_schemas_match_stored_files(spark, lifecycles, family):
-    """Inference over every stored segment and version table gives the
-    schema the reads declare, so declaring it loses nothing. The one
-    exception is the sketch's ``day_part`` partition column, which
-    inference reads as DATE and the manifest stores as a string."""
-    path, written = lifecycles[family]
-    seg_root, pcol, schema, tables = _LAYOUT[family]
+    """Inference over every stored segment and version table gives
+    exactly the schema the reads declare, value column included, so
+    declaring it loses nothing."""
+    path, written, _ = lifecycles[family]
+    seg_root, _, schema, tables = _LAYOUT[family]
     declared = _fields(_parse_datatype_string(schema))
-    data = {c: t for c, t in declared.items() if c != pcol}
     segs = set().union(*written.values())
     assert segs == _segments(f"{path}/{seg_root}")
     for seg in segs:
         got = _fields(spark.read.parquet(f"{path}/{seg_root}/{seg}").schema)
-        want = "date" if pcol == "day_part" else declared[pcol]
-        assert got == {**data, pcol: want}, (seg, got)
+        assert got == declared, (seg, got)
     for table, ddl in tables.items():
         dirs = [f"{path}/{table}"]
         if family == "bm25":
@@ -166,14 +204,14 @@ def test_declared_schemas_match_stored_files(spark, lifecycles, family):
 
 
 def test_sketch_day_partition_reads_as_manifest_string(spark, lifecycles):
-    path, _ = lifecycles["sketch"]
+    path, _, _ = lifecycles["sketch"]
     v = rt._latest_version(spark, path)
     entries = rt._manifest_entries(spark, path, v)
     cells = rt._read_segments(
         spark,
         f"{path}/{sk._SK_ROOT}",
         entries,
-        sk._SK_CELL_SCHEMA + ", day_part string",
+        sk._SK_CELL_SCHEMA,
         pcol="day_part",
     )
     assert isinstance(cells.schema["day_part"].dataType, StringType)
@@ -184,23 +222,81 @@ def test_sketch_day_partition_reads_as_manifest_string(spark, lifecycles):
 
 @pytest.mark.parametrize("family", FAMILIES)
 def test_every_segment_write_has_one_file_per_partition(lifecycles, family):
-    path, written = lifecycles[family]
+    """A segment is one flat directory; each value of its value column
+    lies in exactly one of its files, and every file is sorted by it."""
+    path, written, _ = lifecycles[family]
     seg_root, pcol, _, _ = _LAYOUT[family]
     for step, segs in written.items():
         assert segs, f"{step} wrote no segment"
         for seg in segs:
             seg_dir = f"{path}/{seg_root}/{seg}"
-            parts = [
-                d for d in os.listdir(seg_dir) if d.startswith(f"{pcol}=")
-            ]
-            assert parts, (step, seg)
-            for part in parts:
-                files = [
-                    f
-                    for f in os.listdir(f"{seg_dir}/{part}")
-                    if f.endswith(".parquet")
-                ]
-                assert len(files) == 1, (step, seg, part, files)
+            assert not [
+                d for d in os.listdir(seg_dir)
+                if os.path.isdir(f"{seg_dir}/{d}")
+            ], (step, seg, "partition directories")
+            files = _value_files(seg_dir, pcol)
+            assert files, (step, seg)
+            for value, holders in files.items():
+                assert len(holders) == 1, (step, seg, value, holders)
+
+
+@pytest.mark.parametrize("family", FAMILIES)
+def test_write_returns_the_stored_values(spark, lifecycles, family):
+    """The value list a segment write returns, which the manifest
+    pins, is exactly the set of values stored in the segment's files,
+    and every pin of the latest version names a stored value."""
+    path, written, returned = lifecycles[family]
+    seg_root, pcol, _, _ = _LAYOUT[family]
+    for step, segs in written.items():
+        for seg in segs:
+            seg_dir = f"{path}/{seg_root}/{seg}"
+            stored = sorted(_value_files(seg_dir, pcol))
+            assert returned[seg_dir] == stored, (step, seg)
+    v = rt._latest_version(spark, path)
+    for seg, value in rt._manifest_entries(spark, path, v):
+        assert value in returned[f"{path}/{seg_root}/seg={seg}"], (seg, value)
+
+
+def test_erasure_that_empties_a_day_pins_nothing_for_it(spark, sf_dir):
+    """Erasing every event of one day writes a survivor segment that
+    holds no value: the write returns none, the next manifest pins
+    nothing for that day, and the serve equals a fresh build over the
+    surviving events and the exact event counts."""
+    ev = _events(spark, sf_dir)
+    day = F.expr("CAST(ts AS DATE)").cast("string")
+    gone = sorted(r[0] for r in ev.select(day).distinct().collect())[0]
+    erased = day == gone
+    tmp = tempfile.mkdtemp(prefix="sgraft_store_empty_day_")
+    try:
+        sk._init_sketch_store(ev, f"{tmp}/store")
+        with _recorded_writes() as returned:
+            affected = sk.delete_users_from_sketch_store(
+                spark, f"{tmp}/store", ev, erased
+            )
+        assert affected == [gone] and list(returned.values()) == [[]]
+        v = rt._latest_version(spark, f"{tmp}/store")
+        assert v == 2
+        pinned = {d for _, d in rt._manifest_entries(spark, f"{tmp}/store", v)}
+        assert gone not in pinned and pinned
+        sk._init_sketch_store(ev.filter(~erased), f"{tmp}/rebuild")
+        got = sorted(
+            tuple(r)
+            for r in sk.serve_sketch_rollup_from_store(spark, f"{tmp}/store")
+            .collect()
+        )
+        want = sorted(
+            tuple(r)
+            for r in sk.serve_sketch_rollup_from_store(spark, f"{tmp}/rebuild")
+            .collect()
+        )
+        assert got == want
+        exact = {
+            r["event_type"]: r["count"]
+            for r in ev.filter(~erased).groupBy("event_type").count().collect()
+        }
+        assert {r[0]: r[2] for r in got} == exact
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _serve(spark, sf_dir, family: str, path: str):

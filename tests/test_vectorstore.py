@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from intellect_bi_spark.operators import vectorstore as vs
 from intellect_bi_spark.operators.clustering import _pq_codes
 from intellect_bi_spark.operators.similarity import _emb, ivf_assignments
+from tests.test_store_protocol import _value_files
 
 
 def _in_memory_index(spark, sf_dir):
@@ -453,8 +454,9 @@ def test_bm25_upsert_appends_only_batch_term_buckets(spark, sf_dir):
 
 
 def test_bm25_v2_serve_prunes_term_buckets(spark, sf_dir):
-    """The v2 serving scan must carry BOTH the tb partition filter
-    (directory pruning) and the pushed term IN-filter."""
+    """The v2 serving scan must push BOTH the tb IN-filter (row-group
+    pruning of the bucket-sorted segment files) and the term
+    IN-filter into the parquet scan."""
     from intellect_bi_spark.operators import retrieval as rt
 
     tmp = tempfile.mkdtemp(prefix="sgraft_bm25upplan_")
@@ -468,8 +470,7 @@ def test_bm25_v2_serve_prunes_term_buckets(spark, sf_dir):
         )
         pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
         assert any("In(term" in ln for ln in pushed), plan[:2000]
-        part = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-        assert any("tb" in ln for ln in part), plan[:2000]
+        assert any("In(tb," in ln for ln in pushed), plan[:2000]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -540,11 +541,11 @@ def test_bm25_stream_upsert_version_chain(spark, sf_dir):
 def test_compact_rewrites_only_affected_cells_to_one_file(spark, sf_dir):
     """After upsert, affected cells are pinned across 2 segments;
     compaction must (a) publish a snapshot whose manifest pins each
-    affected cell in exactly ONE new segment with one file per cell
-    and identical code content, (b) leave every pre-existing file
-    byte-untouched and every unaffected pin unchanged (copy-on-write —
-    a reader of v=2 keeps its exact file set), and (c) leave the
-    served ranking unchanged."""
+    affected cell in exactly ONE new segment, each cell held by one
+    file of it, and identical code content, (b) leave every
+    pre-existing file byte-untouched and every unaffected pin
+    unchanged (copy-on-write — a reader of v=2 keeps its exact file
+    set), and (c) leave the served ranking unchanged."""
     from collections import Counter
 
     from intellect_bi_spark.operators import retrieval as rt
@@ -591,13 +592,9 @@ def test_compact_rewrites_only_affected_cells_to_one_file(spark, sf_dir):
         new_segs = {seg for seg, _ in new_pins}
         assert len(new_segs) == 1  # ONE coalesced segment
         seg = new_segs.pop()
+        holders = _value_files(f"{tmp}/codes/seg={seg}", "cell")
         for c in affected:
-            files = [
-                path
-                for path in after
-                if path.startswith(f"seg={seg}/cell={c}/")
-            ]
-            assert len(files) == 1, f"cell {c}: not coalesced to one file"
+            assert len(holders[c]) == 1, f"cell {c}: not coalesced to one file"
         codes_after = sorted(
             (r["vec_id"], r["m"], r["cid"], r["cell"])
             for r in vs.read_index_versioned(spark, tmp)[2].collect()
@@ -665,9 +662,8 @@ def test_ann_delete_rewrites_only_affected_cells(spark, sf_dir):
         # pins, byte-identical files, identical served ranking — even
         # after the delete fully committed v=2
         assert rt._manifest_entries(spark, tmp, 1) == m1
-        for seg, c in m1:
-            rel_prefix = f"seg={seg}/cell={c}"
-            pinned = {path for path in before if path.startswith(rel_prefix)}
+        for seg in {s for s, _ in m1}:
+            pinned = {path for path in before if path.startswith(f"seg={seg}/")}
             assert pinned
             for path in pinned:
                 assert after.get(path) == before[path], f"{path}: v1 file changed"
@@ -988,9 +984,8 @@ def test_bm25_mid_delete_reader_sees_full_pre_delete_store(spark, sf_dir):
         # same answer
         assert rt._manifest_entries(spark, tmp, 1) == m1
         after = _tree_files(f"{tmp}/postings")
-        for s, t in m1:
-            rel_prefix = f"seg={s}/tb={t}"
-            pinned = {p for p in before if p.startswith(rel_prefix)}
+        for s in {s for s, _ in m1}:
+            pinned = {p for p in before if p.startswith(f"seg={s}/")}
             assert pinned
             for p in pinned:
                 assert after.get(p) == before[p], f"{p}: v1 file changed"
@@ -1191,10 +1186,10 @@ def test_phrase_stored_equals_direct_ranking(spark, sf_dir):
 
 
 def test_phrase_serve_scan_prunes_and_pushes(spark, sf_dir):
-    """The stored phrase serve must carry BOTH the term-bucket
-    partition filter (directory pruning) and pushed term predicates —
-    the properties that keep a phrase query from reading the whole
-    positional index at 100 TB."""
+    """The stored phrase serve must push BOTH the term-bucket IN-filter
+    (row-group pruning of the bucket-sorted segment files) and the
+    term predicates into every scan — the properties that keep a
+    phrase query from reading the whole positional index at 100 TB."""
     from intellect_bi_spark.operators import retrieval as rt
 
     tmp = tempfile.mkdtemp(prefix="sgraft_phraseplan_")
@@ -1206,9 +1201,8 @@ def test_phrase_serve_scan_prunes_and_pushes(spark, sf_dir):
             .executedPlan()
             .toString()
         )
-        part = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-        assert part and all("tb" in ln for ln in part), plan[:2000]
         pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
+        assert pushed and all("In(tb," in ln for ln in pushed), plan[:2000]
         assert any("term" in ln for ln in pushed), plan[:2000]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -1246,13 +1240,11 @@ def test_bm25_compact_rewrites_only_affected_buckets_to_one_file(
 ):
     """After upsert, the batch's term buckets are pinned across 2
     segments; compaction must (a) re-pin each affected bucket to ONE
-    new segment holding exactly one file with identical posting rows,
-    (b) keep every untouched bucket's pins unchanged and every
-    pre-existing file byte-identical (pure copy-on-write — the v=2
-    reader is undisturbed), and (c) leave the served ranking
+    new segment in which exactly one file holds it, with identical
+    posting rows, (b) keep every untouched bucket's pins unchanged and
+    every pre-existing file byte-identical (pure copy-on-write — the
+    v=2 reader is undisturbed), and (c) leave the served ranking
     unchanged across the new snapshot."""
-    import os
-
     from intellect_bi_spark.operators import retrieval as rt
 
     tmp = tempfile.mkdtemp(prefix="sgraft_bm25compact_")
@@ -1297,13 +1289,8 @@ def test_bm25_compact_rewrites_only_affected_buckets_to_one_file(
         for b in affected:
             pins = [(s, t) for s, t in m3 if t == b]
             assert len(pins) == 1, f"tb={b}: not re-pinned to one segment"
-            s = pins[0][0]
-            files = [
-                f
-                for f in os.listdir(f"{tmp}/postings/seg={s}/tb={b}")
-                if f.endswith(".parquet")
-            ]
-            assert len(files) == 1, f"tb={b}: not coalesced to one file"
+            holders = _value_files(f"{tmp}/postings/seg={pins[0][0]}", "tb")
+            assert len(holders[b]) == 1, f"tb={b}: not coalesced to one file"
         rows_after = sorted(
             (r["term"], r["doc_id"], r["dl"], r["tf"])
             for r in rt._read_segments(
@@ -1357,8 +1344,8 @@ def test_near_search_semantics_and_plan(spark):
 
 def test_near_stored_equals_direct_and_prunes(spark, sf_dir):
     """One positional store serves both query shapes: the stored NEAR
-    serve equals the direct ranking bit for bit, and its scan carries
-    the bucket partition filter + pushed term predicates."""
+    serve equals the direct ranking bit for bit, and its scan pushes
+    the bucket IN-filter + term predicates."""
     from intellect_bi_spark.operators import retrieval as rt
 
     want = [
@@ -1371,9 +1358,12 @@ def test_near_stored_equals_direct_and_prunes(spark, sf_dir):
         served = rt.serve_near_from_store(spark, tmp)
         got = [tuple(r) for r in served.collect()]
         plan = served._jdf.queryExecution().executedPlan().toString()
-        part = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-        assert part and all("tb" in ln for ln in part), plan[:2000]
         pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
+        # both NEAR terms hash into one bucket, which Spark pushes as
+        # an equality rather than a one-value IN
+        assert pushed and all(
+            "In(tb," in ln or "EqualTo(tb," in ln for ln in pushed
+        ), plan[:2000]
         assert any("term" in ln for ln in pushed), plan[:2000]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

@@ -50,7 +50,7 @@ def main() -> None:
             v = R._latest_version(spark, base)
             att = R._new_att()
             t0 = time.perf_counter()
-            R._write_segment(bp.repartition(R.N_TB, "tb"), root, seg)
+            seg_buckets = R._write_segment(bp, root, seg)
             rows["seg_write"].append(time.perf_counter() - t0)
             batch_df = bp.groupBy("term").agg(F.count(F.lit(1)).alias("bdf"))
             t0 = time.perf_counter()
@@ -77,7 +77,6 @@ def main() -> None:
             )
             rows["stats_write"].append(time.perf_counter() - t0)
             t0 = time.perf_counter()
-            seg_buckets = R._seg_buckets(spark, root, seg)
             entries = R._manifest_entries(spark, base, v) + [(seg, b) for b in seg_buckets]
             R._write_manifest(spark, base, v + 1, entries, att)
             R._publish_version(spark, base, v + 1, att)
