@@ -138,6 +138,74 @@ def intercept_sql(x: str, y: str, scale: int = 6) -> str:
 # stage 2 stays tiny.
 
 
+def _exact_sum(expr: str, scale: int | None, alias: str, p: str) -> tuple[str, str]:
+    """(stage-1 partial over the input, stage-2 final over the partial
+    column ``p``) of one exact sum."""
+    if scale is None or scale < 1:
+        # scale 0 would build a malformed '0.1' rescale literal
+        # (silently dividing every sum by 10); integer-grid data
+        # should pass scale=1 (exact, one spare digit)
+        raise ValueError(
+            f"grouped_exact sum spec {alias!r} needs scale >= 1,"
+            f" got {scale!r}"
+        )
+    if scale > 6:
+        # the stage-2 rescale DECIMAL(38,0) * DECIMAL(scale+1,scale)
+        # needs result precision 38+scale+1 > 38 for scale >= 7; under
+        # spark.sql.decimalOperations.allowPrecisionLoss=true the
+        # result scale is then clamped to min(scale, 6), silently
+        # ROUNDING the 7th+ decimal digit while this function still
+        # claims bit-exactness. Fail loudly instead; the engine's
+        # exact-decimal contract tops out at scale 6 (money² * money
+        # products) everywhere else too (dsum_sql call sites)
+        raise ValueError(
+            f"grouped_exact sum spec {alias!r}: scale {scale} > 6"
+            " would overflow DECIMAL(38) in the rescale multiply"
+            " and silently lose exactness"
+        )
+    frac = "0." + "0" * (scale - 1) + "1"
+    s = (
+        f"(SUM(CAST({p} AS DECIMAL(38,0)))"
+        f" * CAST({frac} AS DECIMAL({scale + 1},{scale})))"
+    )
+    return (
+        f"SUM(CAST(rint(({expr}) * {10 ** scale}) AS BIGINT))",
+        f"(CAST(FLOOR({s}) AS DOUBLE) + CAST({s} - FLOOR({s}) AS DOUBLE))",
+    )
+
+
+def _exact_stages(
+    specs: list[tuple[str, str | None, int | None, str]],
+) -> tuple[list[tuple[str, str]], list[tuple[str, str]]]:
+    """The two stages of the exact kernel as SQL text: ``(expr, alias)``
+    pairs of the stage-1 partials (aliases ``_gx{i}…``) and of the stage-2
+    finals over them. The one definition both forms of ``grouped_exact``
+    use."""
+    partials = []
+    finals = []
+    for i, (kind, expr, scale, alias) in enumerate(specs):
+        p = f"_gx{i}"
+        if kind == "sum":
+            part, final = _exact_sum(expr, scale, alias, p)
+            partials.append((part, p))
+            finals.append((final, alias))
+        elif kind == "avg":
+            # exact sum / non-null count: the double division davg_sql does
+            part, final = _exact_sum(expr, scale, alias, p)
+            partials += [(part, p), (f"COUNT({expr})", f"{p}n")]
+            finals.append((f"{final} / COALESCE(SUM({p}n), 0)", alias))
+        elif kind in ("count", "countstar"):
+            # COALESCE: a keys=[] global aggregate over an EMPTY input has
+            # zero stage-1 partial rows, and SUM(<nothing>) is NULL — but
+            # the COUNT contract this replaces returns 0
+            arg = expr if kind == "count" else "1"
+            partials.append((f"COUNT({arg})", p))
+            finals.append((f"COALESCE(SUM({p}), 0)", alias))
+        else:  # pragma: no cover - programming error
+            raise ValueError(f"unknown grouped_exact kind: {kind}")
+    return partials, finals
+
+
 def grouped_exact(
     df,
     keys: list[str],
@@ -147,67 +215,35 @@ def grouped_exact(
 
     ``specs`` entries are ``(kind, expr, scale, alias)`` with kind one of
     ``"sum"`` (exact decimal-grade sum of a ≤scale-decimal double expr,
-    returned as DOUBLE), ``"count"`` (COUNT(expr), non-null count) or
-    ``"countstar"``. Compose averages afterwards as sum / count — the
-    same double division ``davg_sql`` performs."""
-    partials = []
-    finals = []
-    for i, (kind, expr, scale, alias) in enumerate(specs):
-        p = f"_gx{i}"
-        if kind == "sum":
-            if scale is None or scale < 1:
-                # scale 0 would build a malformed '0.1' rescale literal
-                # (silently dividing every sum by 10); integer-grid data
-                # should pass scale=1 (exact, one spare digit)
-                raise ValueError(
-                    f"grouped_exact sum spec {alias!r} needs scale >= 1,"
-                    f" got {scale!r}"
-                )
-            if scale > 6:
-                # the stage-2 rescale DECIMAL(38,0) * DECIMAL(scale+1,scale)
-                # needs result precision 38+scale+1 > 38 for scale >= 7; under
-                # spark.sql.decimalOperations.allowPrecisionLoss=true the
-                # result scale is then clamped to min(scale, 6), silently
-                # ROUNDING the 7th+ decimal digit while this function still
-                # claims bit-exactness. Fail loudly instead; the engine's
-                # exact-decimal contract tops out at scale 6 (money² * money
-                # products) everywhere else too (dsum_sql call sites)
-                raise ValueError(
-                    f"grouped_exact sum spec {alias!r}: scale {scale} > 6"
-                    " would overflow DECIMAL(38) in the rescale multiply"
-                    " and silently lose exactness"
-                )
-            partials.append(
-                F.expr(
-                    f"SUM(CAST(rint(({expr}) * {10 ** scale}) AS BIGINT))"
-                ).alias(p)
-            )
-            frac = "0." + "0" * (scale - 1) + "1"
-            s = (
-                f"(SUM(CAST({p} AS DECIMAL(38,0)))"
-                f" * CAST({frac} AS DECIMAL({scale + 1},{scale})))"
-            )
-            finals.append(
-                F.expr(
-                    f"(CAST(FLOOR({s}) AS DOUBLE)"
-                    f" + CAST({s} - FLOOR({s}) AS DOUBLE))"
-                ).alias(alias)
-            )
-        elif kind == "count":
-            # COALESCE: a keys=[] global aggregate over an EMPTY input has
-            # zero stage-1 partial rows, and SUM(<nothing>) is NULL — but
-            # the COUNT contract this replaces returns 0
-            partials.append(F.expr(f"COUNT({expr})").alias(p))
-            finals.append(F.expr(f"COALESCE(SUM({p}), 0)").alias(alias))
-        elif kind == "countstar":
-            partials.append(F.count(F.lit(1)).alias(p))
-            finals.append(F.expr(f"COALESCE(SUM({p}), 0)").alias(alias))
-        else:  # pragma: no cover - programming error
-            raise ValueError(f"unknown grouped_exact kind: {kind}")
+    returned as DOUBLE), ``"avg"`` (that sum divided by the non-null
+    count — the same double division ``davg_sql`` performs), ``"count"``
+    (COUNT(expr), non-null count) or ``"countstar"``."""
+    partials, finals = _exact_stages(specs)
     part = df.withColumn("_gx_pid", F.spark_partition_id()).groupBy(
         *keys, "_gx_pid"
-    ).agg(*partials)
-    return part.groupBy(*keys).agg(*finals)
+    ).agg(*[F.expr(e).alias(a) for e, a in partials])
+    return part.groupBy(*keys).agg(*[F.expr(e).alias(a) for e, a in finals])
+
+
+def grouped_exact_sql(
+    src: str,
+    keys: dict[str, str],
+    specs: list[tuple[str, str | None, int | None, str]],
+) -> str:
+    """:func:`grouped_exact` as one SQL query, for statements analysed
+    once. ``src`` is the body of the stage-1 FROM clause (a relation, and
+    optionally joins and a WHERE); ``keys`` maps each output key to its
+    expression over ``src``."""
+    partials, finals = _exact_stages(specs)
+    stage1 = [f"{e} AS {k}" for k, e in keys.items()]
+    stage1 += [f"{e} AS {a}" for e, a in partials]
+    stage2 = [*keys, *(f"{e} AS {a}" for e, a in finals)]
+    group1 = [*keys.values(), "spark_partition_id()"]
+    by = f" GROUP BY {', '.join(keys)}" if keys else ""
+    return (
+        f"SELECT {', '.join(stage2)} FROM (SELECT {', '.join(stage1)}"
+        f" FROM {src} GROUP BY {', '.join(group1)}){by}"
+    )
 
 
 # ---- Spark Column variants (same expression text via F.expr) ----------------

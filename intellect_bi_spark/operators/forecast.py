@@ -11,14 +11,22 @@ three models:
 - T3 ``drift``:       slope = (yT − y0)/(w−1); ŷ(t+i) = yT + slope·i
   (requires ≥2 points)
 
-Spark-first design: ``forecast_payload`` is one lazy plan and no Spark job
-runs before the caller's action; no seed scalar crosses to the driver. The
-daily series is one exact aggregate (long partials, ``grouped_exact``),
-computed once and gathered into one date-sorted array — one element per
-day, so its size is bounded by the calendar at any source scale. The
-seeds (last date, yT, y0, last-7 values) are positions in that array, the
-window mean is an exact aggregate over its last points, and the horizon
-is a ``sequence``; the guards fail the action with ``raise_error``.
+Invariants of ``forecast_payload``:
+
+- one analysis per request: the payload is ONE ``spark.sql`` statement,
+  analysed once; no Spark job runs before the caller's action and no seed
+  scalar crosses to the driver;
+- user values are parameters: the horizon and window are named
+  parameters (``args=``); the algorithm only picks which of three fixed
+  model texts is used;
+- the daily series is one exact aggregate (the SQL form of
+  ``grouped_exact``), computed once and gathered into one date-sorted
+  array — one element per day, so its size is bounded by the calendar at
+  any source scale. The seeds (last date, yT, y0, last-7 values) are
+  positions in that array, the window mean is an exact sum over its last
+  points, the forecast rows are built by a SQL lambda over a ``sequence``
+  horizon, and the guards fail the action with ``raise_error``.
+
 Forecast values are the same IEEE double operations the DuckDB oracle
 performs, so results are engine-identical.
 
@@ -37,8 +45,14 @@ import datetime
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import sales, sales_cte
-from ..functions.numeric import dsum_sql, grouped_exact, intercept_sql, slope_sql
+from ..catalog import sales, sales_cte, sql_over
+from ..functions.numeric import (
+    dsum_sql,
+    grouped_exact,
+    grouped_exact_sql,
+    intercept_sql,
+    slope_sql,
+)
 
 
 def daily_series(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -57,62 +71,69 @@ def forecast_payload(
     window: int = 7,
 ) -> DataFrame:
     """History ∪ forecast payload (T5, reference api/main.py:927-961)."""
-    return _payload_from_daily(daily_series(spark, sf_dir), h, algo, window)
+    daily = grouped_exact_sql(
+        "{base}", {"date": "date"}, [("sum", "sales", 2, "value")]
+    )
+    sql, args = _payload_sql(f"({daily})", h, algo, window)
+    return sql_over(spark, sql, args, base=sales(spark, sf_dir))
 
 
 def _payload_from_daily(
     daily: DataFrame, h: int, algo: str, window: int
 ) -> DataFrame:
-    """History ∪ forecast over a (date, value) daily frame.
+    """History ∪ forecast over a (date, value) daily frame."""
+    sql, args = _payload_sql("{daily}", h, algo, window)
+    return sql_over(daily.sparkSession, sql, args, daily=daily)
+
+
+def _payload_sql(daily: str, h: int, algo: str, window: int) -> tuple[str, dict]:
+    """(statement, parameters) of the payload over the (date, value)
+    relation ``daily`` (a name or a parenthesised query); ``algo`` picks
+    the model's text, ``h`` and ``window`` are parameters.
 
     Reference clamps (api/main.py:877-878): h to [1, 365]; window to
     [1, len]. An empty series has no forecast rows; seasonal7 with < 7
     points and drift with < 2 fail the action with the reference's
     messages."""
-    h = max(1, min(int(h), 365))
-    window = max(1, int(window))
+    args = {"h": max(1, min(int(h), 365)), "window": max(1, int(window))}
     need = {"seasonal7": 7, "drift": 2}.get(algo, 1)
-    pts, n = F.col("pts"), F.size("pts")
-    w = F.least(F.lit(window), n)
-    series = daily.agg(
-        F.sort_array(F.collect_list(F.struct("date", "value"))).alias("pts")
-    )
-    # exact sum of the last w points (the window mean's numerator)
-    seeds = series.select(
-        pts, F.explode_outer(F.slice(pts, n - w + 1, w)).alias("p")
-    ).agg(
-        F.any_value("pts").alias("pts"),
-        F.expr(dsum_sql("p.value")).alias("tail_sum"),
-    )
-    y_t = F.element_at(pts, -1)["value"]
+    n, w = "size(pts)", "least(:window, size(pts))"
+    y_t = "element_at(pts, -1).value"
 
-    def value(i):
-        if algo == "seasonal7":  # forecast[i] = last7[(i-1) mod 7]
-            v = F.element_at(pts, n - 6 + (i - 1) % 7)["value"]
-        elif algo == "drift":  # y0 = oldest, yT = newest of the last w
-            y0 = F.element_at(pts, n - w + 1)["value"]
-            v = y_t + (y_t - y0) / F.greatest(w - 1, F.lit(1)) * i
-        else:  # ma7_baseline: flat mean of the last w points
-            v = F.col("tail_sum") / w
-        if need > 1:
-            v = F.when(n >= need, v).otherwise(
-                F.raise_error(F.lit(f"Need >= {need} history points for {algo}"))
-            )
-        return v.cast("double")
+    def row(tag: str, date: str, value: str) -> str:
+        return f"named_struct('series', '{tag}', 'date', {date}, 'value', {value})"
 
-    def row(tag, date, v):
-        return F.struct(
-            F.lit(tag).alias("series"), date.alias("date"), v.alias("value")
+    # the history rows, date-sorted: the series every seed is a position in
+    series = (
+        f"SELECT sort_array(collect_list({row('history', 'date', 'value')}))"
+        f" AS pts FROM {daily}"
+    )
+    if algo == "seasonal7":  # forecast[i] = last7[(i-1) mod 7]
+        v = f"element_at(pts, {n} - 6 + (i - 1) % 7).value"
+    elif algo == "drift":  # y0 = oldest, yT = newest of the last w
+        y0 = f"element_at(pts, {n} - {w} + 1).value"
+        v = f"{y_t} + ({y_t} - {y0}) / greatest({w} - 1, 1) * i"
+    else:  # ma7_baseline: flat mean of the last w points, an exact sum
+        v = f"tail_sum / {w}"
+        series = (
+            f"SELECT any_value(pts) AS pts, {dsum_sql('p.value')} AS tail_sum"
+            f" FROM (SELECT pts, explode_outer(slice(pts, {n} - {w} + 1, {w}))"
+            f" AS p FROM ({series}))"
         )
-
-    hist = F.transform(pts, lambda p: row("history", p["date"], p["value"]))
-    last_date = F.element_at(pts, -1)["date"]
-    fc = F.transform(
-        F.sequence(F.lit(1), F.lit(h)),
-        lambda i: row("forecast", F.date_add(last_date, i), value(i)),
+    if need > 1:
+        v = (
+            f"CASE WHEN {n} >= {need} THEN {v} ELSE"
+            f" raise_error('Need >= {need} history points for {algo}') END"
+        )
+    fc_row = row(
+        "forecast", "date_add(element_at(pts, -1).date, i)", f"CAST({v} AS DOUBLE)"
     )
-    rows = F.when(n > 0, F.concat(hist, fc)).otherwise(hist)
-    return seeds.select(F.explode(rows).alias("r")).select("r.*")
+    fc = f"transform(sequence(1, :h), i -> {fc_row})"
+    return (
+        f"SELECT inline(CASE WHEN {n} > 0 THEN concat(pts, {fc}) ELSE pts END)"
+        f" FROM ({series})",
+        args,
+    )
 
 
 def forecast_ma(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,32 +1,37 @@
-"""Deterministic NL-intent → DataFrame plan compiler.
+"""Deterministic NL-intent → Spark SQL plan compiler.
 
 The reference compiles keyword-matched English into SQL f-strings
-(reference api/main.py:345-532). This engine compiles the same intent
-struct into **declarative DataFrame plans** instead of SQL text — plans are
-composable, injection-free (filter values bound as literal Columns, never
-spliced into strings — fixing the reference's quoting at api/main.py:466),
-and Catalyst-optimizable.
+(reference api/main.py:345-532), splicing filter values into the text
+(its quoting bug at api/main.py:466). Invariants here:
+
+- one analysis per request: each template is ONE ``spark.sql`` statement
+  over the active view, so Catalyst analyses the plan once instead of once
+  per DataFrame call; no Spark job runs before the caller's action;
+- user values are parameters: filter values are bound as named
+  parameters (``args=``), never spliced into the text; the only
+  identifiers in the text come from DIM_CANDIDATES, TIME_GRAINS and the
+  metric columns, and anything else raises ``ValueError``;
+- every metric aggregate is the exact kernel of
+  ``functions.numeric.grouped_exact``, in its SQL form.
 
 Intent model (reference api/main.py:362-423):
 - metric: satisfaction → AVG | sales → SUM (trend-words default to sales)
 - timegrain: month | quarter | year (phrase table; default month)
 - compare: last/previous quarter, last-2 quarters, YoY
 - dimensions + filters: dims mentioned in text; values bound against
-  distinct-value dictionaries computed once per dataset and broadcast
+  distinct-value dictionaries computed once per dataset
   (reference lru_cache at api/main.py:345-360).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import _CATALOG_LOCK, sales
-from ..functions.numeric import corr_sql, grouped_exact
-from ..functions.windows import last_k_by
+from ..catalog import _CATALOG_LOCK, sales, sql_over
+from ..functions.numeric import corr_sql, grouped_exact_sql
 
 METRIC_SAT = ("satisfaction", "csat")
 METRIC_SALES = ("sales", "revenue", "transaction value", "transaction_value", "amount")
@@ -182,40 +187,120 @@ def resolve_metric_column(columns: list[str], metric: str) -> str:
     return metric
 
 
-def _metric_agg(
-    df: DataFrame, keys: list[str], it: Intent, columns: list[str], alias: str
-) -> DataFrame:
-    """``keys`` + the intent's exact metric aggregate as ``alias``, resolved
-    against the active view's schema. transaction_value is a product of two
-    2-decimal inputs ⇒ exact at scale 4 (functions/numeric.py). AVG is the
-    exact sum divided by the non-null count, the double division
-    ``davg_sql`` performs."""
+# the view a statement reads (see catalog.sql_over)
+_BASE = "{base}"
+_METRIC_COLS = (*METRIC_SALES_COLS, "satisfaction")
+_QTR = "trunc(date, 'quarter')"
+
+
+def _metric_agg_sql(
+    src: str, keys: dict[str, str], it: Intent, columns: list[str], alias: str
+) -> str:
+    """``keys`` + the intent's exact metric aggregate as ``alias`` over the
+    FROM body ``src``, resolved against the active view's schema.
+    transaction_value is a product of two 2-decimal inputs ⇒ exact at
+    scale 4 (functions/numeric.py). AVG is the exact sum divided by the
+    non-null count, the double division ``davg_sql`` performs."""
     col = resolve_metric_column(columns, it.metric)
+    if col not in _METRIC_COLS:
+        raise ValueError(f"unknown metric column {col!r}")
+    kind = "avg" if it.agg == "AVG" else "sum"
     scale = 4 if col == "transaction_value" else 2
-    specs = [("sum", col, scale, "_sum")]
-    value = F.col("_sum")
-    if it.agg == "AVG":
-        specs.append(("count", col, None, "_n"))
-        value = value / F.col("_n")
-    return grouped_exact(df, keys, specs).select(*keys, value.alias(alias))
+    return grouped_exact_sql(src, keys, [(kind, col, scale, alias)])
+
+
+def _qoq_sql(per_q: str) -> str:
+    """Latest quarter's ``val`` against the one before it, over the query
+    ``per_q`` with one (qtr, val) row per quarter: the top 2 quarters, one
+    aggregate. No quarters ⇒ no row; one quarter ⇒ NULL previous value and
+    delta (the reference's LAG over quarters, api/main.py:461-496)."""
+    cur = "max_by(val, qtr)"
+    prev = "CASE WHEN count(1) = 2 THEN min_by(val, qtr) END"
+    return (
+        f"SELECT {cur} AS current_qtr_value, {prev} AS prev_qtr_value,"
+        f" {cur} - {prev} AS delta FROM ({per_q} ORDER BY qtr DESC LIMIT 2)"
+        " HAVING count(1) > 0"
+    )
 
 
 def _qoq_from_quarters(per_q: DataFrame) -> DataFrame:
-    """Latest quarter's ``val`` against the one before it, from a
-    (qtr, val) frame with one row per quarter: the top 2 quarters, one
-    aggregate. No quarters ⇒ no row; one quarter ⇒ NULL previous value
-    and delta (the reference's LAG over quarters, api/main.py:461-496)."""
-    top2 = last_k_by(per_q, "qtr", 2).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max_by("val", "qtr").alias("cur"),
-        F.min_by("val", "qtr").alias("first"),
+    """:func:`_qoq_sql` over a (qtr, val) frame."""
+    sql = _qoq_sql("SELECT * FROM {per_q}")
+    return sql_over(per_q.sparkSession, sql, {}, per_q=per_q)
+
+
+def intent_sql(it: Intent, columns: list[str]) -> tuple[str, dict, str]:
+    """(statement, parameters, template name) of an Intent over a view
+    with ``columns``, read as ``{base}``. Filter values are named
+    parameters; identifiers come only from DIM_CANDIDATES, TIME_GRAINS and
+    the metric columns."""
+    for d in (*it.dims, *it.filters):
+        if d not in DIM_CANDIDATES:
+            raise ValueError(f"unknown dimension {d!r}")
+    grain = it.timegrain or "month"
+    if grain not in TIME_GRAINS.values():
+        raise ValueError(f"unknown time grain {grain!r}")
+    dims = {d: d for d in it.dims if d != "age"}  # age is a filter dim only
+    args = {f"f{i}": v for i, v in enumerate(it.filters.values())}
+    conds = [f"{d} = :f{i}" for i, d in enumerate(it.filters)]
+
+    def filtered(*extra: str) -> str:
+        where = " AND ".join([*conds, *extra])
+        return f"{_BASE} WHERE {where}" if where else _BASE
+
+    if it.is_correlation:
+        # reference api/main.py:445: corr(_col("transaction_value","sales",
+        # ...), satisfaction) — the txn column wins when the view has it
+        txn_col = resolve_metric_column(columns, "sales")
+        if txn_col not in METRIC_SALES_COLS:
+            raise ValueError(f"unknown metric column {txn_col!r}")
+        corr = corr_sql(txn_col, "satisfaction")
+        return f"SELECT {corr} AS corr_coef FROM {_BASE}", {}, "correlation"
+
+    cg, ck = it.compare
+    if cg == "quarter" and ck == "last2":
+        # The last-2-quarter SET comes from the UNFILTERED view — the
+        # reference selects quarters globally (api/main.py:452-459) and
+        # applies dim filters only inside the aggregate, so a filter that
+        # has no rows in the latest quarter must yield an empty group, not
+        # silently shift the window to older quarters.
+        last2 = (
+            f"{_QTR} IN (SELECT DISTINCT {_QTR} AS period FROM {_BASE}"
+            " ORDER BY period DESC LIMIT 2)"
+        )
+        sql = _metric_agg_sql(
+            filtered(last2), {"period": _QTR, **dims}, it, columns, "value"
+        )
+        return sql, args, "last2_quarters"
+
+    if cg == "quarter" and ck in ("last", "previous"):
+        per_q = _metric_agg_sql(filtered(), {"qtr": _QTR}, it, columns, "val")
+        return _qoq_sql(per_q), args, "qoq_delta"
+
+    # YoY fires only when the question names quarters — the reference gates
+    # its YoY template on 'quarter' (api/main.py:500-505) and otherwise
+    # falls through to generic grouping; it also applies NO dim filters in
+    # the YoY aggregation (api/main.py:506-520), so the unfiltered view is
+    # aggregated here even when the question bound a dimension value.
+    if cg == "year" and ck == "yoy" and it.mentions_quarter:
+        q = _metric_agg_sql(
+            _BASE, {"year": "year(date)", "quarter": "quarter(date)"}, it,
+            columns, "total",
+        )
+        # the same quarter one year earlier: a RANGE frame of exactly
+        # year - 1 within the quarter (empty ⇒ NULL), over one aggregate
+        sql = (
+            "SELECT year, quarter, total, total - max(total) OVER ("
+            "PARTITION BY quarter ORDER BY year"
+            f" RANGE BETWEEN 1 PRECEDING AND 1 PRECEDING) AS yoy_delta FROM ({q})"
+        )
+        return sql, {}, "yoy_by_quarter"
+
+    sql = _metric_agg_sql(
+        filtered(), {"period": f"trunc(date, '{grain}')", **dims}, it,
+        columns, "value",
     )
-    prev = F.when(F.col("n") == 2, F.col("first"))
-    return top2.filter(F.col("n") > 0).select(
-        F.col("cur").alias("current_qtr_value"),
-        prev.alias("prev_qtr_value"),
-        (F.col("cur") - prev).alias("delta"),
-    )
+    return sql, args, "grain_groupby"
 
 
 def compile_intent(
@@ -225,83 +310,16 @@ def compile_intent(
     view: DataFrame | None = None,
 ) -> tuple[DataFrame, str]:
     """Compile an Intent into a lazy DataFrame plan (reference
-    api/main.py:425-532 emits SQL text; we emit plans). Returns (df,
-    template_name); no Spark job runs before the caller's action.
+    api/main.py:425-532 emits SQL text). Returns (df, template_name).
 
-    ``view`` overrides the canonical ``sales`` view — the reference runs
-    against whatever dataset is active, so templates must follow the
-    schema (see resolve_metric_column)."""
+    One ``spark.sql`` statement per request, so the plan is analysed once;
+    filter values reach it only as named parameters. No Spark job runs
+    before the caller's action. ``view`` overrides the canonical ``sales``
+    view — the reference runs against whatever dataset is active, so
+    templates follow the schema (see resolve_metric_column)."""
     base = view if view is not None else sales(spark, sf_dir)
-    cols = base.columns
-    df = base
-    for d, v in it.filters.items():
-        df = df.filter(F.col(d) == F.lit(v))  # literal binding, no splicing
-
-    grain = it.timegrain or "month"
-    dims = [d for d in it.dims if d != "age"]  # age is a filter dim only
-
-    if it.is_correlation:
-        # reference api/main.py:445: corr(_col("transaction_value","sales",
-        # ...), satisfaction) — the txn column wins when the view has it
-        txn_col = resolve_metric_column(cols, "sales")
-        out = base.agg(
-            F.expr(corr_sql(txn_col, "satisfaction")).alias("corr_coef")
-        )
-        return out, "correlation"
-
-    cg, ck = it.compare
-    if cg == "quarter" and ck == "last2":
-        qtr = F.trunc("date", "quarter")
-        # The last-2-quarter SET comes from the UNFILTERED view — the
-        # reference selects quarters globally (api/main.py:452-459) and
-        # applies dim filters only inside the aggregate, so a filter that
-        # has no rows in the latest quarter must yield an empty group, not
-        # silently shift the window to older quarters.
-        periods = base.select(qtr.alias("period")).distinct()
-        last2 = last_k_by(periods, "period", 2)
-        qdf = df.withColumn("period", qtr).join(
-            F.broadcast(last2), "period", "left_semi"
-        )
-        out = _metric_agg(qdf, ["period", *dims], it, cols, "value")
-        return out, "last2_quarters"
-
-    if cg == "quarter" and ck in ("last", "previous"):
-        per_q = _metric_agg(
-            df.withColumn("qtr", F.trunc("date", "quarter")),
-            ["qtr"], it, cols, "val",
-        )
-        return _qoq_from_quarters(per_q), "qoq_delta"
-
-    # YoY fires only when the question names quarters — the reference gates
-    # its YoY template on 'quarter' (api/main.py:500-505) and otherwise
-    # falls through to generic grouping; it also applies NO dim filters in
-    # the YoY aggregation (api/main.py:506-520), so the unfiltered view is
-    # aggregated here even when the question bound a dimension value.
-    if cg == "year" and ck == "yoy" and it.mentions_quarter:
-        q = _metric_agg(
-            base.withColumn("year", F.year("date")).withColumn(
-                "quarter", F.quarter("date")
-            ),
-            ["year", "quarter"], it, cols, "total",
-        )
-        # the same quarter one year earlier: a RANGE frame of exactly
-        # year - 1 within the quarter (empty ⇒ NULL), over one aggregate
-        prev_year = (
-            Window.partitionBy("quarter").orderBy("year").rangeBetween(-1, -1)
-        )
-        out = q.select(
-            "year",
-            "quarter",
-            "total",
-            (F.col("total") - F.max("total").over(prev_year)).alias("yoy_delta"),
-        )
-        return out, "yoy_by_quarter"
-
-    out = _metric_agg(
-        df.withColumn("period", F.trunc("date", grain)),
-        ["period", *dims], it, cols, "value",
-    )
-    return out, "grain_groupby"
+    sql, args, template = intent_sql(it, base.columns)
+    return sql_over(spark, sql, args, base=base), template
 
 
 def answer_question(

@@ -12,7 +12,7 @@ Spark SQL:
 - safety gate: must start with SELECT/WITH, no DML/DDL tokens — plus a
   plan-level check that parses with Spark and rejects any non-query command
   node (defense in depth the reference couldn't do)
-- row-limit injection (LIMIT 200 unless present)
+- row-limit injection (LIMIT 200 unless the outermost operator is a LIMIT)
 - execute with one retry
 
 Unlike the reference we do NOT strip backticks: Spark SQL uses backticks as
@@ -144,11 +144,38 @@ def plan_is_query(spark: SparkSession, sql: str) -> bool:
     return not any(b in name for b in bad)
 
 
+# string literals, quoted identifiers and comments: text in which a
+# LIMIT keyword is not the statement's own clause
+_OPAQUE_RE = re.compile(
+    r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"|`[^`]*`|--[^\n]*|/\*.*?\*/", re.S
+)
+
+
+def _has_outer_limit(sql: str) -> bool:
+    """Whether the outermost operator is a LIMIT: a ``LIMIT n`` outside
+    every parenthesis (subquery, CTE body, set-operation branch), string
+    literal, quoted identifier and comment. Spark's grammar admits such a
+    clause only at the end of the outermost query."""
+    depth = 0
+    for m in re.finditer(r"[()]|\blimit\s+\d+\b", _OPAQUE_RE.sub(" ", sql), re.I):
+        if m.group() == "(":
+            depth += 1
+        elif m.group() == ")":
+            depth -= 1
+        elif depth == 0:
+            return True
+    return False
+
+
 def ensure_limit(sql: str, limit: int = DEFAULT_ROW_LIMIT) -> str:
-    """O6: inject LIMIT unless present (reference api/main.py:296-300)."""
-    if re.search(r"(?i)\blimit\s+\d+\b", sql):
+    """O6: cap the result at ``limit`` rows unless the outermost operator
+    is already a LIMIT (reference api/main.py:296-300)."""
+    if _has_outer_limit(sql):
         return sql
-    return f"{sql.rstrip().rstrip(';')} LIMIT {limit}"
+    body = sql.rstrip().rstrip(";")
+    # a line comment on the last line would swallow a LIMIT on that line
+    sep = "\n" if "--" in body.rsplit("\n", 1)[-1] else " "
+    return f"{body}{sep}LIMIT {limit}"
 
 
 def run_safe_sql(

@@ -88,6 +88,17 @@ def get_spark(app_name: str = "intellect_bi_spark") -> SparkSession:
         # an externally-built FIFO session still runs the same code
         # (the pool tag is a no-op under FIFO).
         .config("spark.scheduler.mode", "FAIR")
+        # Generated-code cache: Spark's default holds 100 classes, fewer
+        # than one interactive request mix uses, so every request
+        # recompiled its classes (Janino, tens of ms each). Measured
+        # working set with an unbounded cache (CodegenMetrics compile
+        # count): 138-142 distinct classes per bi_ask block and 179 per
+        # whole bi_ask process, 98 per store_churn cycle and 147 per whole
+        # store_churn process; 1000 holds both with room for Guava's
+        # per-segment LRU. Static conf — applies to sessions this factory
+        # builds; an externally-built session runs the same code with
+        # Spark's default cache.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # Arrow batch size, BYTE-bounded (optimization r16, guide §4.2):
         # the multimodal codecs ship multi-KB binary payload cells
         # through two pipelined Python stages; a byte cap bounds worker

@@ -164,3 +164,56 @@ def test_distinct_values_builds_once_under_concurrency(spark, sf_dir):
     assert len(results) == 8 and all(r is results[0] for r in results)
     assert set(results[0]) == {"region", "product", "gender"}
     assert results[0]["region"] == sorted(results[0]["region"], key=str.lower)
+
+
+def test_intent_sql_admits_only_whitelisted_identifiers():
+    """Values become parameters; names outside DIM_CANDIDATES, TIME_GRAINS
+    and the metric columns are refused before any SQL is built."""
+    import pytest
+
+    from intellect_bi_spark.plans.intent import intent_sql
+
+    cols = ["date", "product", "region", "sales", "satisfaction"]
+    value = "North' OR '1'='1"
+    sql, args, _ = intent_sql(Intent(dims=["region"], filters={"region": value}), cols)
+    assert value not in sql and list(args.values()) == [value]
+    for bad in (
+        Intent(filters={"region = region OR 1": "x"}),
+        Intent(dims=["sales); DROP TABLE sales; --"]),
+        Intent(timegrain="month') --"),
+        Intent(metric="satisfaction) FROM x --"),
+    ):
+        with pytest.raises(ValueError):
+            intent_sql(bad, cols)
+
+
+def test_filter_values_are_bound_literals(spark, sf_dir):
+    """A filter value is bound as a literal, never read as SQL: a value
+    carrying a quote and SQL text matches nothing and raises nothing in
+    every template that filters, a real value matches, and a value with a
+    quote in it round-trips."""
+    from pyspark.sql import functions as F
+
+    from intellect_bi_spark.catalog import sales
+    from intellect_bi_spark.plans.intent import compile_intent
+
+    def run(value, dim="region", view=None, compare=("", "")):
+        it = Intent(
+            timegrain="year", compare=compare, dims=[dim], filters={dim: value}
+        )
+        return compile_intent(spark, sf_dir, it, view=view)[0].collect()
+
+    for compare in (("", ""), ("quarter", "last"), ("quarter", "last2")):
+        assert run("North' OR '1'='1", compare=compare) == [], compare
+        assert run("North", compare=compare), compare
+    north = {r["period"]: r["value"] for r in run("North")}
+    assert north
+    view = sales(spark, sf_dir).withColumn(
+        "product",
+        F.when(F.col("region") == "North", F.lit("O'Brien")).otherwise(
+            F.col("product")
+        ),
+    )
+    rows = run("O'Brien", dim="product", view=view)
+    assert {r["product"] for r in rows} == {"O'Brien"}
+    assert {r["period"]: r["value"] for r in rows} == north

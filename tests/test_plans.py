@@ -657,11 +657,40 @@ def _group_jobs(spark, group: str) -> list[int]:
     return list(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
 
 
+@contextlib.contextmanager
+def _py4j_commands():
+    """The Py4J commands this thread sends while the block runs."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    sent: list[str] = []
+    me = threading.get_ident()
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *a, **k):
+        if threading.get_ident() == me:
+            sent.append(command)
+        return send(self, command, *a, **k)
+
+    ClientServerConnection.send_command = counting
+    try:
+        yield sent
+    finally:
+        ClientServerConnection.send_command = send
+
+
+# Py4J commands one request's plan construction may send: one statement
+# with its parameters and frame argument takes 2-12
+MAX_BUILD_COMMANDS = 60
+
+
 def test_forecast_and_intent_plans_submit_no_job(spark, sf_dir):
     """Building a forecast payload (every algorithm) or an intent plan
     (every template) runs no Spark job: the caller's action is the
     first. Jobs are counted in this thread's own job group, so work
-    other threads left running cannot touch the count."""
+    other threads left running cannot touch the count. Each build sends
+    at most MAX_BUILD_COMMANDS Py4J commands."""
     from intellect_bi_spark.operators.forecast import forecast_payload
     from intellect_bi_spark.plans.intent import (
         compile_intent,
@@ -685,17 +714,70 @@ def test_forecast_and_intent_plans_submit_no_job(spark, sf_dir):
     group = "test_plans_submit_no_job"
     sc.setJobGroup(group, "plan construction")
     try:
-        frames = [
-            forecast_payload(spark, sf_dir, h=30, algo=algo, window=14)
-            for algo in ("ma7_baseline", "seasonal7", "drift")
-        ]
-        for template, q in questions.items():
-            df, got = compile_intent(spark, sf_dir, parse_intent(q, distincts))
-            assert got == template, (q, got)
-            frames.append(df)
+        frames, commands = [], {}
+        with _py4j_commands() as sent:
+            for algo in ("ma7_baseline", "seasonal7", "drift"):
+                n0 = len(sent)
+                frames.append(
+                    forecast_payload(spark, sf_dir, h=30, algo=algo, window=14)
+                )
+                commands[algo] = len(sent) - n0
+            for template, q in questions.items():
+                it = parse_intent(q, distincts)
+                n0 = len(sent)
+                df, got = compile_intent(spark, sf_dir, it)
+                commands[template] = len(sent) - n0
+                assert got == template, (q, got)
+                frames.append(df)
+        assert all(0 < n <= MAX_BUILD_COMMANDS for n in commands.values()), (
+            commands
+        )
         assert _group_jobs(spark, group) == []
         frames[0].collect()
         assert _group_jobs(spark, group)  # the probe sees real jobs
     finally:
         for prop in ("jobGroup.id", "job.description", "job.interruptOnCancel"):
             sc.setLocalProperty(f"spark.{prop}", None)
+
+
+def test_repeated_requests_compile_no_new_class(spark, sf_dir):
+    """A second pass over the interactive request kinds, with the same
+    literals, compiles no new class: the session's generated-code cache
+    holds their working set. The kinds: one question per NL template, a
+    forecast, both dialect SQL shapes and two dashboard rows."""
+    from intellect_bi_spark.operators.forecast import forecast_payload
+    from intellect_bi_spark.plans.intent import answer_question
+    from intellect_bi_spark.plans.sanitizer import run_safe_sql
+    from intellect_bi_spark.registry import QUERIES
+
+    questions = (
+        "What is the correlation between transaction value and customer"
+        " satisfaction?",
+        "Show average satisfaction for the two most recent quarters by region",
+        "How did sales change compared to last quarter for Male customers?",
+        "Compare year-over-year sales performance by quarter.",
+        "What is the monthly sales trend in the North region?",
+    )
+    dialect_sql = (
+        "SELECT TOP 5 product, COUNT(*) AS n_sales, NVL(MAX(satisfaction), 0)"
+        " AS max_sat FROM sales WHERE region == 'East' AND date <= GETDATE()"
+        " GROUP BY product ORDER BY n_sales DESC, product",
+        "SELECT gender, ISNULL(SUM(CAST(sales AS DECIMAL(18,2))), 0) AS total,"
+        " SUM(IIF(satisfaction >= 2.5, 1, 0)) AS happy FROM sales"
+        " WHERE age BETWEEN 25 AND 35 GROUP BY gender",
+    )
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def one_pass() -> None:
+        for q in questions:
+            answer_question(spark, sf_dir, q)[0].collect()
+        forecast_payload(spark, sf_dir, h=14, algo="drift", window=7).collect()
+        for sql in dialect_sql:
+            run_safe_sql(spark, sql).collect()
+        for name in ("kpi_overview", "region_trends_monthly"):
+            QUERIES[name](spark, sf_dir).collect()
+
+    one_pass()
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    one_pass()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() == before

@@ -103,6 +103,44 @@ def test_o6_limit_injection():
     assert ensure_limit("SELECT 1;") == "SELECT 1 LIMIT 200"
 
 
+# a LIMIT that is not the statement's outermost operator
+LIMIT_IN_SUBQUERY = (
+    "SELECT region, total FROM (SELECT region, SUM(sales) AS total FROM sales"
+    " GROUP BY region ORDER BY total DESC LIMIT 3) t"
+    " UNION ALL SELECT region, sales FROM sales"
+)
+LIMIT_IN_LITERAL = "SELECT * FROM sales WHERE product = 'limit 5'"
+
+
+def test_limit_not_outermost_keeps_the_cap(spark, sf_dir):
+    """A LIMIT inside a subquery, a string literal or a comment does not
+    lift the row cap; a trailing line comment cannot swallow it."""
+    from intellect_bi_spark.catalog import sales
+
+    assert ensure_limit(LIMIT_IN_SUBQUERY) == LIMIT_IN_SUBQUERY + " LIMIT 200"
+    assert ensure_limit(LIMIT_IN_LITERAL) == LIMIT_IN_LITERAL + " LIMIT 200"
+    assert ensure_limit("SELECT 1 /* limit 5 */") == "SELECT 1 /* limit 5 */ LIMIT 200"
+    assert ensure_limit("SELECT 1 -- limit 5") == "SELECT 1 -- limit 5\nLIMIT 200"
+    quoted = "SELECT 'x' AS `limit 5`"
+    assert ensure_limit(quoted) == quoted + " LIMIT 200"
+    # the outermost LIMIT of a statement with a CTE or a subquery stays
+    for sql in (
+        "WITH t AS (SELECT 1 AS a LIMIT 9) SELECT a FROM t LIMIT 4",
+        "SELECT * FROM (SELECT 1 AS a LIMIT 9) LIMIT 4",
+        "SELECT 'it''s (' AS a LIMIT 4",
+    ):
+        assert ensure_limit(sql) == sql
+
+    sales(spark, sf_dir)  # registers the view
+    for sql in (
+        LIMIT_IN_SUBQUERY,
+        "SELECT * FROM sales WHERE product <> 'limit 5'",
+        "SELECT * FROM sales -- every row",
+    ):
+        assert len(run_safe_sql(spark, sql).collect()) == 200, sql
+    assert run_safe_sql(spark, LIMIT_IN_LITERAL).collect() == []
+
+
 def test_run_safe_sql_end_to_end(spark, sf_dir):
     from intellect_bi_spark.catalog import sales
 

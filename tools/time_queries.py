@@ -7,6 +7,12 @@ clustering + graph, the r15 discipline), printing per-query medians over
 REPS steady reps after discarding WARM warmup reps.  Optional session
 confs can be set before timing (runtime-mutable only) via --conf k=v.
 
+Beside the total, each rep reports per query the plan-construction time
+(the registry call, before the action), the collect time, and the
+generated classes compiled and an estimate of their Janino milliseconds
+(Spark's ``CodegenMetrics``), so one A/B shows both the planning and the codegen
+lever; the BUILD_MS and COMPILES lines give their medians.
+
 Usage:
   python tools/time_queries.py [--reps 7] [--warm 2] [--conf k=v ...] q1 q2 ...
 """
@@ -53,24 +59,51 @@ def main() -> None:
         if n not in QUERIES:
             raise SystemExit(f"unknown query: {n}")
 
-    all_reps: list[dict[str, float]] = []
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compile_time = metrics.METRIC_COMPILATION_TIME()
+
+    def compiled() -> tuple[int, float]:
+        """(classes compiled, Janino ms) since the JVM started. The ms are
+        count × the histogram's mean, and that mean is decay-weighted, so
+        a difference of two readings is an estimate."""
+        n = compile_time.getCount()
+        return n, compile_time.getSnapshot().getMean() * n
+
+    all_reps: list[dict[str, dict[str, float]]] = []
     for rep in range(args.reps):
         _reset()
-        t: dict[str, float] = {}
+        t: dict[str, dict[str, float]] = {}
         for n in names:
             spark.sparkContext.setJobDescription(f"time_queries:{n}")
+            c0, ms0 = compiled()
             t0 = time.perf_counter()
-            QUERIES[n](spark, sf_dir).collect()
-            t[n] = round(time.perf_counter() - t0, 4)
+            df = QUERIES[n](spark, sf_dir)
+            t1 = time.perf_counter()
+            df.collect()
+            t2 = time.perf_counter()
+            c1, ms1 = compiled()
+            t[n] = {
+                "s": round(t2 - t0, 4),
+                "build_ms": round((t1 - t0) * 1000, 1),
+                "collect_s": round(t2 - t1, 4),
+                "compiles": c1 - c0,
+                "compile_ms": round(ms1 - ms0, 1),
+            }
             spark.sparkContext.setJobDescription(None)
         all_reps.append(t)
         spark.streams.resetTerminated()
         print(f"rep {rep}: " + json.dumps(t), flush=True)
     steady = all_reps[min(args.warm, len(all_reps) - 1):]
-    med = {
-        n: round(statistics.median(r[n] for r in steady), 4) for n in names
-    }
-    print("MEDIANS " + json.dumps(med))
+
+    def medians(key: str) -> dict[str, float]:
+        return {
+            n: round(statistics.median(r[n][key] for r in steady), 4)
+            for n in names
+        }
+
+    print("MEDIANS " + json.dumps(medians("s")))
+    print("BUILD_MS " + json.dumps(medians("build_ms")))
+    print("COMPILES " + json.dumps(medians("compiles")))
 
 
 if __name__ == "__main__":
