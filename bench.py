@@ -115,7 +115,7 @@ HEADLINE = [
     "ann_stream_upsert_store",  # availableNow cell-append ingest chain (r13)
     "ann_crud_chain",  # interleaved build/upsert/delete/compact (r13)
     "bm25_index_store",  # parquet-persisted inverted-index serving (r10)
-    "bm25_index_upsert",  # posting append + versioned lexicon merge (r12)
+    "bm25_index_upsert",  # posting append + manifest stats merge (r12)
     "bm25_stream_upsert_store",  # availableNow micro-batch upsert chain (r12)
     "bm25_store_vacuum",  # keep-latest version retention (r13)
     "bm25_index_delete",  # erasure: bucket rewrite + stat decrement (r13)

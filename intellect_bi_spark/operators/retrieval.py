@@ -62,7 +62,9 @@ def _terms_in() -> str:
     return ", ".join(f"'{t}'" for t in QUERY_TERMS)
 
 
-def _bm25_term_score(tf: str, df: str, dl: str, n_docs: str) -> str:
+def _bm25_term_score(
+    tf: str, df: str, dl: str, n_docs: str, avgdl: str = "avgdl"
+) -> str:
     """One query-term's BM25 contribution — IDENTICAL SQL text in Spark
     and DuckDB (Lucene's non-negative idf: ln((N - df + .5)/(df + .5)
     + 1)).  The only engine-varying op is ``ln`` (see module docstring);
@@ -74,8 +76,17 @@ def _bm25_term_score(tf: str, df: str, dl: str, n_docs: str) -> str:
     return (
         f"({idf} * ((CAST({tf} AS DOUBLE) * {K1P1_LIT})"
         f" / (CAST({tf} AS DOUBLE) + {K1_LIT} * ({ONE_MINUS_B_LIT}"
-        f" + {B_LIT} * (CAST({dl} AS DOUBLE) / avgdl)))))"
+        f" + {B_LIT} * (CAST({dl} AS DOUBLE) / {avgdl})))))"
     )
+
+
+# the term-ordered per-document fold of the (term, s) structs ``ts``,
+# quantized: every scoring path (direct, v1 store, versioned store)
+# ranks on this one text
+_SCORE_Q_SQL = (
+    "CAST(FLOOR(aggregate(ts, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.s)"
+    f" * {SCORE_QUANT}.0 + 0.5) AS BIGINT)"
+)
 
 
 def _bm25_scored_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -129,11 +140,7 @@ def _bm25_scored_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_doc.select(
         "doc_id",
         "n_hit_terms",
-        F.expr(
-            "CAST(FLOOR(aggregate(ts, CAST(0.0 AS DOUBLE),"
-            f" (acc, x) -> acc + x.s) * {SCORE_QUANT}.0 + 0.5)"
-            " AS BIGINT)"
-        ).alias("score_q"),
+        F.expr(_SCORE_Q_SQL).alias("score_q"),
     )
 
 
@@ -455,11 +462,7 @@ def topk_from_bm25_index(
         per_doc.select(
             "doc_id",
             "n_hit_terms",
-            F.expr(
-                "CAST(FLOOR(aggregate(ts, CAST(0.0 AS DOUBLE),"
-                f" (acc, x) -> acc + x.s) * {SCORE_QUANT}.0 + 0.5)"
-                " AS BIGINT)"
-            ).alias("score_q"),
+            F.expr(_SCORE_Q_SQL).alias("score_q"),
         )
         .orderBy(F.desc("score_q"), "doc_id")
         .limit(TOP_K)
@@ -497,29 +500,32 @@ def bm25_index_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# --- incremental index maintenance (r12, VERDICT r11 #2) --------------------
+# --- incremental index maintenance ------------------------------------------
 #
-# The lexical twin of vectorstore.upsert_index: at 100 TB the inverted
-# index never full-rebuilds for an ingest batch — new docs' postings
-# land as a fresh immutable SEGMENT (corpus-scale, batch-proportional
-# cost), while the vocabulary-bounded lexicon (term → df), the 1-row
-# corpus stats AND the file MANIFEST merge copy-on-write into a new
-# VERSION (r14, VERDICT r13 #3: the manifest pins the version's exact
-# (segment, bucket) file set, so snapshot isolation covers the
-# postings too — readers of v=N are never disturbed by upserts,
-# deletes or compactions; at production scale per-bucket posting
-# compaction runs beside this — the compaction_plan operator's job).
-# Reference analogue: the reference ingests incrementally (Chroma
-# upsert, api/ingest_docs.py:97-102) but its retrieval index had no
-# incremental path here either.
+# The versioned BM25 store is posting SEGMENTS plus one driver-written
+# JSON MANIFEST per version; nothing else is versioned.  Invariants:
 #
-# upsert ≡ rebuild holds EXACTLY because every merged quantity is an
-# integer: postings are per (term, doc) — a doc lives entirely in one
-# side of the split, so union IS the full posting set; df merges by
-# addition; stats store (n_docs, sum_len) as BIGINTs so the serve-time
-# avgdl = sum_len/n_docs is the IDENTICAL division the direct scoring
-# pass performs.  (The v1 store kept avgdl itself, which cannot be
-# merged exactly — the v2 layout stores the numerator/denominator.)
+# - A segment is immutable once a manifest pins it.  A version is the
+#   exact (segment, bucket) file set its manifest pins, so a reader of
+#   version v is isolated from every later upsert, delete, compaction
+#   and vacuum.
+# - Postings hold one row per (term, doc), and every doc lives in
+#   exactly one pinned file per term bucket.  A term's df is therefore
+#   the length of its posting list over the pinned files, which is what
+#   every serve counts; no df is stored, so none can drift.
+# - The manifest carries the corpus statistics (n_docs, sum_len) as
+#   exact BIGINTs, merged by integer addition and subtraction, so the
+#   serve-time avgdl = sum_len / n_docs is the identical division the
+#   direct scoring pass performs and upsert/delete ≡ rebuild holds
+#   bit-exactly.  Each delta is counted exactly once: an upsert's at
+#   its segment write (a result stage, whose task metric updates Spark
+#   applies once), a delete's by a collected aggregate; no delta comes
+#   from a metric observed in a shuffle-map stage, which a re-run map
+#   task would count again.
+# - A mutation writes only the files it changes: an upsert one new
+#   segment, a delete only the (segment, bucket) files that hold an
+#   erased doc, a compaction only buckets pinned in more than one file;
+#   a compaction with no such bucket publishes nothing.
 
 N_TB = 16  # term-hash buckets: crc32(term) % 16 partitions the postings
 DOC_UPSERT_MOD = 10
@@ -530,8 +536,10 @@ def _doc_batch_pred():
     return F.col("doc_id") % DOC_UPSERT_MOD == DOC_UPSERT_RES
 
 
-def _term_bucket(col):
-    return (F.crc32(F.encode(col, "UTF-8")) % N_TB).cast("int")
+def _bucket_sql(term: str) -> str:
+    """SQL text of ``term``'s bucket: crc32 of its UTF-8 bytes mod N_TB
+    (the serve's ``zlib.crc32`` computes the same)."""
+    return f"CAST(crc32(encode({term}, 'UTF-8')) % {N_TB} AS INT)"
 
 
 def _toks_of(docs: DataFrame) -> DataFrame:
@@ -543,26 +551,66 @@ def _toks_of(docs: DataFrame) -> DataFrame:
     )
 
 
-def _postings_of(toks: DataFrame) -> DataFrame:
-    return (
-        toks.select(
-            "doc_id",
-            F.size("toks").alias("dl"),
-            F.explode("toks").alias("term"),
-        )
-        .groupBy("term", "doc_id", "dl")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .withColumn("tb", _term_bucket(F.col("term")))
+def _postings_of(toks: DataFrame, lead: bool = False) -> DataFrame:
+    """(term, doc_id, dl, tf, tb): one posting per (term, doc).  With
+    ``lead`` each row also carries a boolean ``lead``, TRUE on exactly
+    one row per doc: the posting of its first token or, for a doc with
+    no tokens, one row whose term is NULL (no posting: the segment
+    write drops it), so aggregates over the lead rows count every doc
+    once."""
+    rows = toks.select(
+        "doc_id",
+        F.size("toks").alias("dl"),
+        F.get("toks", 0).alias("t0"),
+        (F.explode_outer if lead else F.explode)("toks").alias("term"),
     )
+    keys = [F.col("term"), F.col("doc_id"), F.col("dl")]
+    if lead:
+        first = F.coalesce(F.col("term") == F.col("t0"), F.lit(True))
+        keys.append(first.alias("lead"))
+    return (
+        rows.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .withColumn("tb", F.expr(_bucket_sql("term")))
+    )
+
+
+def _stats_aggs() -> list:
+    """(n_docs, sum_len) of a tokenized frame — exact BIGINTs, mergeable
+    by addition (unlike the derived avgdl double)."""
+    return [
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(F.size("toks")).alias("sum_len"),
+    ]
 
 
 def _stats2_of(toks: DataFrame) -> DataFrame:
-    """(n_docs, sum_len) — exact BIGINTs, mergeable by addition (unlike
-    the derived avgdl double)."""
-    return toks.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size("toks")).alias("sum_len"),
+    return toks.agg(*_stats_aggs())
+
+
+def _write_postings(
+    docs: DataFrame, root: str, seg: str
+) -> tuple[list, tuple[int, int]]:
+    """Write ``docs``' postings as segment ``seg``; return its buckets
+    and the docs' (n_docs, sum_len), the same numbers as
+    :func:`_stats2_of`.
+
+    The stats are aggregates over the lead rows (:func:`_postings_of`),
+    observed in the segment write's own job at the write itself, i.e.
+    in its result stage: Spark applies a result task's metric updates
+    once, while a shuffle-map task that is re-run (fetch failure, lost
+    executor) would add its rows again.  So the counts are exact, at no
+    extra job."""
+    got = _write_observed(
+        _postings_of(_toks_of(docs), lead=True),
+        root,
+        seg,
+        "tb",
+        F.count(F.when(F.col("lead"), F.lit(1))).alias("n_docs"),
+        F.sum(F.when(F.col("lead"), F.col("dl"))).alias("sum_len"),
+        keep=lambda rows: rows.filter("term IS NOT NULL").drop("lead"),
     )
+    return got["values"], (int(got["n_docs"]), int(got["sum_len"] or 0))
 
 
 def _fs_of(spark: SparkSession, path: str):
@@ -618,15 +666,14 @@ def _run_staged(*thunks) -> list:
     """Run independent staged-write thunks as concurrent jobs and
     return their results in argument order.
 
-    A mutation stages its artifacts (segment, lexicon and stats
-    versions) into attempt-unique directories and publishes only after
-    all of them are staged, so the writes have no ordering dependency.
-    The first exception propagates before the publish, leaving only
-    unpublished debris that vacuum sweeps.  One thunk runs as a plain
-    call.  Each thunk's jobs run in their own scheduler pool, named
-    uniquely per call, so under FAIR scheduling a large segment write
-    cannot head-of-line block the small lexicon/stats writes, nor can
-    one mutation's thunks share a pool with a concurrent mutation's;
+    A build stages its artifacts (e.g. the ANN model tables and code
+    segment) before one publish, so the writes have no ordering
+    dependency.  The first exception propagates before the publish,
+    leaving only unpublished debris that vacuum sweeps.  One thunk runs
+    as a plain call.  Each thunk's jobs run in their own scheduler
+    pool, named uniquely per call, so under FAIR scheduling a large
+    segment write cannot head-of-line block the small model writes,
+    nor can one build's thunks share a pool with a concurrent one's;
     under FIFO the pool tag is a no-op."""
     if len(thunks) == 1:
         return [thunks[0]()]
@@ -692,17 +739,28 @@ def _write_segment(
     no extra job.  A segment's files are never rewritten once a
     manifest pins them; overwrite mode confines a retry of the same
     segment id to its own partial debris."""
+    return _write_observed(df, root, seg, pcol)["values"]
+
+
+def _write_observed(
+    df: DataFrame, root: str, seg: str, pcol: str, *metrics, keep=None
+) -> dict:
+    """:func:`_write_segment` that also observes the aggregate columns
+    ``metrics`` over the rows reaching the write, and then writes
+    ``keep(rows)``; returns the metrics by name and the sorted ``pcol``
+    values as ``"values"``."""
     from pyspark.sql import Observation
 
     seen = Observation()
-    (
+    rows = (
         df.repartition(pcol)
         .sortWithinPartitions(pcol)
-        .observe(seen, F.collect_set(pcol).alias("values"))
-        .write.mode("overwrite")
-        .parquet(f"{root}/seg={seg}")
+        .observe(seen, F.collect_set(pcol).alias("values"), *metrics)
     )
-    return sorted(seen.get["values"])
+    if keep is not None:
+        rows = keep(rows)
+    rows.write.mode("overwrite").parquet(f"{root}/seg={seg}")
+    return {**seen.get, "values": sorted(seen.get["values"])}
 
 
 def _read_segments(
@@ -711,9 +769,10 @@ def _read_segments(
     entries: list[tuple],
     schema: str,
     pcol: str = "tb",
+    with_seg: bool = False,
 ) -> DataFrame:
     """Exactly the rows of the (seg, value) pairs ``entries`` pins, as
-    ``schema``.
+    ``schema`` (plus the ``seg`` string column when ``with_seg``).
 
     Invariants: ``schema`` declares every stored column, ``pcol``
     included, so the read infers nothing and submits no job until the
@@ -722,9 +781,11 @@ def _read_segments(
     ``pcol IN (...)`` part is pushed into the parquet scan, where the
     value-sorted files' row-group statistics skip unpinned values.  No
     pins yield an empty frame of the same schema."""
-    cols = [c.split()[0] for c in schema.split(",")]
+    stored = f"{schema}, seg string"
+    out = stored if with_seg else schema
+    cols = [c.split()[0] for c in out.split(",")]
     if not entries:
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame([], out)
     pinned: dict[str, list] = {}
     for s, t in sorted(entries):
         pinned.setdefault(s, []).append(t)
@@ -733,7 +794,7 @@ def _read_segments(
         cond = (F.col("seg") == s) & F.col(pcol).isin(ts)
         keep = cond if keep is None else keep | cond
     return (
-        spark.read.schema(f"{schema}, seg string")
+        spark.read.schema(stored)
         .option("basePath", root)
         .parquet(*(f"{root}/seg={s}" for s in pinned))
         .filter(keep)
@@ -745,38 +806,37 @@ def _write_manifest(
     spark: SparkSession,
     store: str,
     v: int,
-    entries: list[tuple[str, int]],
+    entries: list[tuple],
     att: str,
+    stats: tuple[int, int] | None = None,
 ) -> None:
-    """Stage version ``v``'s file manifest under attempt ``att``: the
-    exact (segment, value) pairs that are the version's data.  It is
-    one JSON file written driver-side through the Hadoop FileSystem,
-    so it costs no Spark job.  No other writer can name the
-    attempt-unique path, and overwrite covers a same-attempt retry.
-    Values keep their type through JSON: int for the tb/cell axes, str
-    for the sketch store's day axis."""
+    """Stage version ``v``'s manifest under attempt ``att``: one JSON
+    file ``{"pins": [[seg, value], ...]}``, the exact (segment, value)
+    pairs that are the version's data, plus ``"stats": {"n_docs",
+    "sum_len"}`` for a BM25 store.  Written driver-side through the
+    Hadoop FileSystem, so it costs no Spark job.  No other writer can
+    name the attempt-unique path, and overwrite covers a same-attempt
+    retry.  Values keep their type through JSON: int for the tb/cell
+    axes, str for the sketch store's day axis; the stats are exact
+    integers."""
     import json as _json
 
+    body: dict = {"pins": [[s, t] for s, t in sorted(entries)]}
+    if stats is not None:
+        body["stats"] = {"n_docs": stats[0], "sum_len": stats[1]}
     fs, hp = _fs_of(spark, _stage_path(store, "manifests", v, att))
     out = fs.create(hp, True)
     try:
-        out.write(
-            bytearray(
-                _json.dumps(
-                    [[s, t] for s, t in sorted(entries)]
-                ).encode()
-            )
-        )
+        out.write(bytearray(_json.dumps(body).encode()))
     finally:
         out.close()
 
 
-def _manifest_entries(
-    spark: SparkSession, store: str, v: int
-) -> list[tuple]:
-    """Version ``v``'s pinned (seg, partition-value) list: a driver-side
-    file read (no Spark job) through the published attempt, with values
-    typed as the writer stored them."""
+def _read_manifest(spark: SparkSession, store: str, v: int) -> dict:
+    """Version ``v``'s manifest, read driver-side (no Spark job) through
+    the published attempt: ``{"pins": sorted [(seg, value)], "stats":
+    (n_docs, sum_len) or None}``, values typed as the writer stored
+    them.  Every store family reads its manifests through here."""
     import json as _json
 
     fs, hp = _fs_of(spark, _table_dir(spark, store, "manifests", v))
@@ -785,10 +845,23 @@ def _manifest_entries(
     try:
         bos = jvm.java.io.ByteArrayOutputStream()
         jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, bos, 4096, False)
-        entries = _json.loads(bytes(bos.toByteArray()).decode())
+        body = _json.loads(bytes(bos.toByteArray()).decode())
     finally:
         stream.close()
-    return sorted((s, t) for s, t in entries)
+    stats = body.get("stats")
+    return {
+        "pins": sorted((s, t) for s, t in body["pins"]),
+        "stats": None
+        if stats is None
+        else (stats["n_docs"], stats["sum_len"]),
+    }
+
+
+def _manifest_entries(
+    spark: SparkSession, store: str, v: int
+) -> list[tuple]:
+    """Version ``v``'s pinned (seg, value) list."""
+    return _read_manifest(spark, store, v)["pins"]
 
 
 def _new_att() -> str:
@@ -893,33 +966,6 @@ def _table_dir(spark: SparkSession, store: str, table: str, v: int) -> str:
     return _stage_path(store, table, v, _version_meta(spark, store, v)["att"])
 
 
-_VERSION_SCHEMAS = {
-    "lexicon": "term string, df bigint",
-    "stats": "n_docs bigint, sum_len bigint",
-}
-
-
-def _read_version(
-    spark: SparkSession, store: str, table: str, v: int
-) -> DataFrame:
-    """Version ``v`` of the BM25 store's ``lexicon`` or ``stats`` table,
-    read with its declared schema: no inference job before the
-    caller's action."""
-    return spark.read.schema(_VERSION_SCHEMAS[table]).parquet(
-        _table_dir(spark, store, table, v)
-    )
-
-
-def _avgdl_stats(spark: SparkSession, store: str, v: int) -> DataFrame:
-    """Version ``v``'s 1-row (avgdl, n_docs) scoring statistics."""
-    return _read_version(spark, store, "stats", v).select(
-        (
-            F.col("sum_len").cast("double") / F.col("n_docs").cast("double")
-        ).alias("avgdl"),
-        "n_docs",
-    )
-
-
 def _published_bids(spark: SparkSession, store: str) -> set:
     """Every ingest batch id any PUBLISHED version carries — the
     exactly-once ledger a stream sink consults before applying a
@@ -971,48 +1017,46 @@ def _base_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BM25_POSTING_SCHEMA = "term string, doc_id bigint, dl int, tf bigint, tb int"
 
 
+def _commit(
+    spark: SparkSession, path: str, stage, bid: int | None = None
+) -> None:
+    """Publish the next version of a manifest-pinned store.
+
+    ``stage(v)`` writes whatever data version v+1 needs on top of the
+    latest published version v and returns its ``(pins, stats)``, or
+    None to publish nothing.  On :class:`VersionConflict` (another
+    writer published v+1 first) ``stage`` runs again against the new
+    latest under a fresh attempt id; the loser's staged files are
+    unreferenced debris that vacuum sweeps."""
+    last: VersionConflict | None = None
+    for _ in range(PUBLISH_RETRIES):
+        v = _latest_version(spark, path)
+        staged = stage(v)
+        if staged is None:
+            return
+        pins, stats = staged
+        att = _new_att()
+        _write_manifest(spark, path, v + 1, pins, att, stats)
+        try:
+            _publish_version(spark, path, v + 1, att, bid)
+            return
+        except VersionConflict as e:
+            last = e
+    raise last if last is not None else RuntimeError("unreachable")
+
+
 def _init_bm25_store(
     docs: DataFrame, path: str, bid: int | None = None
 ) -> None:
     """First write of an upsertable store from a document frame: one
-    bucket-sorted posting SEGMENT, v=1 lexicon (derived from the
-    STORED segment, the drift-proofing discipline), v=1 stats, and the
-    v=1 manifest pinning exactly that segment's buckets — all staged
-    attempt-unique, committed by the v=1 publish.  The tokenized frame
-    is pinned for the leg; the lexicon derive follows the segment write
-    inside one thunk, concurrent with the stats write."""
-    from pyspark import StorageLevel
-
+    bucket-sorted posting segment, whose write job also observes the
+    corpus (n_docs, sum_len), and the v=1 manifest pinning exactly that
+    segment's buckets with those stats, committed by the v=1 publish."""
     spark = docs.sparkSession
-    toks = _toks_of(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    seg = _new_seg_id()
-    att = _new_att()
-    root = f"{path}/postings"
-    try:
-
-        def _stage_seg_then_lexicon() -> list:
-            buckets = _write_segment(_postings_of(toks), root, seg)
-            stored = _read_segments(
-                spark, root, [(seg, b) for b in buckets],
-                _BM25_POSTING_SCHEMA,
-            )
-            stored.groupBy("term").agg(
-                F.count(F.lit(1)).alias("df")
-            ).write.mode("overwrite").parquet(
-                _stage_path(path, "lexicon", 1, att)
-            )
-            return buckets
-
-        buckets, _ = _run_staged(
-            _stage_seg_then_lexicon,
-            lambda: _stats2_of(toks).write.mode("overwrite").parquet(
-                _stage_path(path, "stats", 1, att)
-            ),
-        )
-        _write_manifest(spark, path, 1, [(seg, b) for b in buckets], att)
-        _publish_version(spark, path, 1, att, bid)
-    finally:
-        toks.unpersist()
+    seg, att = _new_seg_id(), _new_att()
+    buckets, stats = _write_postings(docs, f"{path}/postings", seg)
+    _write_manifest(spark, path, 1, [(seg, b) for b in buckets], att, stats)
+    _publish_version(spark, path, 1, att, bid)
 
 
 def build_bm25_index_v2(spark: SparkSession, sf_dir: str, path: str) -> None:
@@ -1029,133 +1073,105 @@ def upsert_bm25_index(
     batch_docs: DataFrame,
     bid: int | None = None,
 ) -> list[int]:
-    """Merge a new document batch into the stored index: write the
-    batch's postings as one NEW immutable segment (pre-existing posting
-    files are never touched — tests prove the file-level claim), then
-    write the NEXT VERSION of the lexicon (old df + batch df,
-    full-outer integer merge), stats (component-wise BIGINT add) and
-    manifest (old pin list + the new segment's buckets), and finally
-    PUBLISH v+1.  Readers resolve only published versions and read only
-    manifest-pinned files, so a crash anywhere before the publish
-    leaves EVERY reader of the live version fully undisturbed — and a
-    retried attempt (stream redelivery, a crashed writer) re-applies
-    exactly-once: it pins a fresh segment and stages fresh
-    attempt-unique version dirs; the crashed attempt's segment is in
-    no manifest.  On :class:`VersionConflict` (another writer published
-    v+1 first) the merge retries against the new latest with a FRESH
-    attempt id — the batch segment is version-independent and written
-    once, and the losing attempt's staged dirs are unreferenced debris
-    vacuum sweeps, never a hazard to the winner's published data.
-    The batch frame fully determines the merge.
+    """Merge a document batch into the stored index and publish v+1.
 
-    Returns the new segment's bucket list, read back from the stored
-    files (the CRUD chain compacts exactly these buckets).  The three
-    staged writes run as concurrent jobs over the pinned batch
-    postings; a retry re-stages only the version tables."""
-    from pyspark import StorageLevel
-
-    toks = _toks_of(batch_docs).persist(StorageLevel.MEMORY_AND_DISK)
-    bp = _postings_of(toks).persist(StorageLevel.MEMORY_AND_DISK)
-    root = f"{path}/postings"
+    Invariants: the batch's postings land as ONE new immutable segment,
+    written once by one job that also observes the batch's (n_docs,
+    sum_len); no pre-existing file is touched.  The v+1 manifest pins
+    v's entries plus the new segment's buckets, with v's stats plus the
+    batch's.  A crash before the publish leaves every reader of the
+    live version undisturbed, and the crashed attempt's segment is in
+    no manifest; a publish conflict re-merges the manifest onto the new
+    latest without rewriting the segment.  Returns the new segment's
+    buckets."""
     seg = _new_seg_id()
-    batch_df = bp.groupBy("term").agg(F.count(F.lit(1)).alias("bdf"))
-    bs = _stats2_of(toks)
-    seg_buckets = None  # the batch segment's values, from its one write
-    try:
-        last: VersionConflict | None = None
-        for _ in range(PUBLISH_RETRIES):
-            v = _latest_version(spark, path)
-            att = _new_att()
+    buckets, (dn, ds) = _write_postings(batch_docs, f"{path}/postings", seg)
 
-            def _stage_seg() -> list:
-                return _write_segment(bp, root, seg)
+    def stage(v: int):
+        m = _read_manifest(spark, path, v)
+        n, s = m["stats"]
+        return m["pins"] + [(seg, b) for b in buckets], (n + dn, s + ds)
 
-            def _stage_lexicon(v=v, att=att) -> None:
-                old_lex = _read_version(spark, path, "lexicon", v)
-                (
-                    old_lex.join(batch_df, "term", "full_outer")
-                    .select(
-                        "term",
-                        (
-                            F.coalesce("df", F.lit(0))
-                            + F.coalesce("bdf", F.lit(0))
-                        ).alias("df"),
-                    )
-                    .write.mode("overwrite")
-                    .parquet(_stage_path(path, "lexicon", v + 1, att))
-                )
+    _commit(spark, path, stage, bid)
+    return buckets
 
-            def _stage_stats(v=v, att=att) -> None:
-                old_stats = _read_version(spark, path, "stats", v)
-                (
-                    old_stats.select(
-                        F.col("n_docs").alias("n0"),
-                        F.col("sum_len").alias("s0"),
-                    )
-                    .crossJoin(
-                        F.broadcast(
-                            bs.select(
-                                F.col("n_docs").alias("n1"),
-                                F.col("sum_len").alias("s1"),
-                            )
-                        )
-                    )
-                    .select(
-                        (F.col("n0") + F.col("n1")).alias("n_docs"),
-                        (F.col("s0") + F.col("s1")).alias("sum_len"),
-                    )
-                    .write.mode("overwrite")
-                    .parquet(_stage_path(path, "stats", v + 1, att))
-                )
 
-            thunks = [_stage_lexicon, _stage_stats]
-            if seg_buckets is None:
-                thunks.append(_stage_seg)
-                seg_buckets = _run_staged(*thunks)[-1]
-            else:
-                _run_staged(*thunks)
-            entries = _manifest_entries(spark, path, v) + [
-                (seg, b) for b in seg_buckets
-            ]
-            _write_manifest(spark, path, v + 1, entries, att)
-            try:
-                _publish_version(spark, path, v + 1, att, bid)
-                return seg_buckets
-            except VersionConflict as e:
-                last = e  # loser of the race: re-merge onto the new latest
-        raise last if last is not None else RuntimeError("unreachable")
-    finally:
-        bp.unpersist()
-        toks.unpersist()
+def _query_buckets(terms) -> list[int]:
+    import zlib
+
+    return sorted({zlib.crc32(t.encode("utf-8")) % N_TB for t in terms})
+
+
+def _serve_args(spark: SparkSession, path: str, terms, v: int | None):
+    """(args, postings) of a serve at version ``v`` (default: latest):
+    the version's exact (n_docs, sum_len) as SQL parameters, and the
+    pinned postings of the buckets ``terms`` hash into."""
+    if v is None:
+        v = _latest_version(spark, path)
+    m = _read_manifest(spark, path, v)
+    buckets = _query_buckets(terms)
+    postings = _read_segments(
+        spark,
+        f"{path}/postings",
+        [e for e in m["pins"] if e[1] in buckets],
+        _BM25_POSTING_SCHEMA,
+    )
+    n_docs, sum_len = m["stats"]
+    return {"n_docs": n_docs, "sum_len": sum_len}, postings
+
+
+def _hit_sql(terms) -> str:
+    """CTE ``hit``: the pinned postings of ``terms``, each with its
+    term's df, the length of its posting list (one row per (term,
+    doc))."""
+    terms = sorted(terms)
+    return (
+        "hit AS (SELECT term, doc_id, dl, tf,"
+        " COUNT(*) OVER (PARTITION BY term) AS df FROM {postings}"
+        f" WHERE tb IN ({', '.join(map(str, _query_buckets(terms)))})"
+        f" AND term IN ({', '.join(repr(t) for t in terms)}))"
+    )
+
+
+_STORE_SCORE_SQL = (
+    "struct(term, "
+    + _bm25_term_score(
+        "tf",
+        "df",
+        "dl",
+        ":n_docs",
+        "try_divide(CAST(:sum_len AS DOUBLE), CAST(:n_docs AS DOUBLE))",
+    )
+    + " AS s)"
+)
+
+
+def _topk_sql(where: str = "") -> str:
+    """The fixed query's top-k over ``hit``, restricted by ``where``
+    after df is counted (filters narrow candidates, not statistics)."""
+    return (
+        f"WITH {_hit_sql(QUERY_TERMS)},"
+        " per AS (SELECT doc_id, COUNT(*) AS n_hit_terms,"
+        f" array_sort(collect_list({_STORE_SCORE_SQL})) AS ts"
+        f" FROM hit{where} GROUP BY doc_id)"
+        f" SELECT doc_id, n_hit_terms, {_SCORE_Q_SQL} AS score_q FROM per"
+        f" ORDER BY score_q DESC, doc_id LIMIT {TOP_K}"
+    )
 
 
 def serve_bm25_v2_at(
     spark: SparkSession, path: str, v: int
 ) -> DataFrame:
-    """Answer the fixed query from a PINNED store version: the postings
-    read touches only the manifest-pinned segments holding a bucket a
-    query term hashes into (manifest-level pruning — the lexical
-    analogue of the IVF cell filter), pushes the tb and term
-    IN-filters into the parquet scan, and avgdl derives
-    from version ``v``'s exact (n_docs, sum_len).  Because every file
-    the read touches is pinned by ``v``'s manifest and segments are
-    immutable, a reader of ``v`` is FULLY isolated from concurrent
-    upserts, deletes and compactions (VERDICT r13 #3 — the unit proves
-    a mid-delete reader of v sees the complete pre-delete store)."""
-    import zlib
-
-    buckets = sorted(
-        {zlib.crc32(t.encode("utf-8")) % N_TB for t in QUERY_TERMS}
-    )
-    entries = [
-        e for e in _manifest_entries(spark, path, v) if e[1] in set(buckets)
-    ]
-    postings = _read_segments(
-        spark, f"{path}/postings", entries, _BM25_POSTING_SCHEMA
-    ).filter(F.col("tb").isin(buckets))
-    lexicon = _read_version(spark, path, "lexicon", v)
-    stats = _avgdl_stats(spark, path, v)
-    return topk_from_bm25_index(postings, lexicon, stats)
+    """Answer the fixed query from a PINNED store version as one SQL
+    statement: the postings read touches only the manifest-pinned files
+    of the buckets a query term hashes into, with the tb and term
+    IN-filters pushed into the parquet scan; df is counted over those
+    postings and (n_docs, sum_len) come from ``v``'s manifest.  Every
+    file the read touches is pinned by ``v`` and immutable, so a reader
+    of ``v`` is isolated from concurrent upserts, deletes and
+    compactions."""
+    args, postings = _serve_args(spark, path, QUERY_TERMS, v)
+    return spark.sql(_topk_sql(), args=args, postings=postings)
 
 
 def serve_bm25_v2(spark: SparkSession, path: str) -> DataFrame:
@@ -1163,10 +1179,15 @@ def serve_bm25_v2(spark: SparkSession, path: str) -> DataFrame:
     return serve_bm25_v2_at(spark, path, _latest_version(spark, path))
 
 
+def _n_docs(spark: SparkSession, path: str, v: int) -> int:
+    """Version ``v``'s indexed document count, from its manifest."""
+    return _read_manifest(spark, path, v)["stats"][0]
+
+
 def bm25_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental lexical index maintenance, end to end: build the
     versioned store on the base corpus (batch held out), upsert the
-    batch (posting append + lexicon/stats version merge), and answer
+    batch (posting append + manifest stats merge), and answer
     the fixed query from the upserted store.  The oracle is the DIRECT
     full-corpus scoring plus the batch count — a green row proves
     upsert-then-serve ≡ full-rebuild-then-serve (every merged quantity
@@ -1199,7 +1220,7 @@ def bm25_stream_upsert_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream over them (`maxFilesPerTrigger=1` → one micro-batch per
     file), and let ``foreachBatch`` drive the store — batch 0
     initializes it, every later batch runs the SAME versioned upsert
-    the batch path certifies (posting append + lexicon/stats merge).
+    the batch path certifies (posting append + manifest stats merge).
     After the stream drains, the fixed query is served from the final
     version and must equal the DIRECT full-corpus scoring — proving the
     upsert chain COMPOSES: N successive merges from an empty store
@@ -1208,9 +1229,9 @@ def bm25_stream_upsert_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     hand-rolled loop.  This is how a 100 TB deployment actually feeds
     its retrieval index: a continuous ingest stream upserting
     per-micro-batch, never a rebuild.  Output: the top-k rows plus
-    n_docs_indexed read from the FINAL stats version (binds the chain's
-    accounting into the checked result); the 4-micro-batch version
-    chain itself is locked by tests/test_vectorstore.py."""
+    n_docs_indexed read from the FINAL manifest's stats (binds the
+    chain's accounting into the checked result); the 4-micro-batch
+    version chain itself is locked by tests/test_vectorstore.py."""
     import shutil
     import tempfile
 
@@ -1219,12 +1240,9 @@ def bm25_stream_upsert_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         _run_bm25_upsert_stream(spark, sf_dir, tmp)
         store = f"{tmp}/store"
         v = _latest_version(spark, store)
-        nd = _read_version(spark, store, "stats", v).select(
-            F.col("n_docs").alias("n_docs_indexed")
-        )
         out = (
-            serve_bm25_v2(spark, store)
-            .crossJoin(F.broadcast(nd))
+            serve_bm25_v2_at(spark, store, v)
+            .withColumn("n_docs_indexed", F.lit(_n_docs(spark, store, v)))
             .localCheckpoint(eager=True)
         )
     finally:
@@ -1236,21 +1254,18 @@ def _bm25_stream_sink(store: str, bdf: DataFrame, bid: int) -> None:
     """foreachBatch body for the ingest stream: batch 0 initializes the
     store, later batches run the certified versioned upsert.
 
-    Redelivery is exactly-once END TO END (ADVICE r14 #1): the batch
-    id rides IN the publish marker itself, so the authoritative
-    skip-check is "does any PUBLISHED version already carry this bid"
-    — atomic with the version commit by construction.  The r14 design
-    wrote a separate ``_batches/bid=N`` marker after the publish, and
-    a crash in the publish-to-marker window re-applied the batch on
-    redelivery (double-counted lexicon df/stats, the batch's postings
-    pinned in two segments); that window no longer exists.  The
-    ``_batches`` marker is kept only as a cheap fast-path (one exists
-    check beats V marker reads) — correctness never rests on it.  A
-    crash MIDWAY through a batch (before its publish) remains
-    exactly-once for the opposite reason: the crashed attempt's
-    segment is in no manifest and its staged dirs are unpublished, so
-    the retry re-applies against the same latest version and the
-    debris is vacuum's to sweep."""
+    Redelivery is exactly-once end to end: the batch id rides in the
+    publish marker itself, so the authoritative skip-check — "does any
+    PUBLISHED version already carry this bid" — is atomic with the
+    version commit, and a crash between the publish and the
+    ``_batches/bid=N`` marker cannot double-count the batch's stats or
+    pin its postings twice.  The ``_batches`` marker is only a cheap
+    fast path (one exists check beats V marker reads); correctness
+    never rests on it.  A crash before the publish is exactly-once for
+    the opposite reason: the crashed attempt's segment is in no
+    manifest and its staged manifest is unpublished, so the retry
+    re-applies against the same latest version and vacuum sweeps the
+    debris."""
     sess = bdf.sparkSession
     marker = f"{store}/_batches/bid={bid}"
     if _store_dir_exists(sess, marker):
@@ -1305,9 +1320,9 @@ def _run_bm25_upsert_stream(
                 pass
 
 
-# --- version retention / vacuum (r13, VERDICT r12 #2) ------------------------
+# --- version retention / vacuum ----------------------------------------------
 #
-# Snapshot isolation (each merge writes lexicon/stats v=N+1, old readers
+# Snapshot isolation (each mutation publishes manifest v=N+1, old readers
 # undisturbed) must not become unbounded storage: at 100 TB with
 # continuous ingest, dead versions dominate within days.  The vacuum is
 # the compaction twin on the TIME axis: keep the newest K versions of
@@ -1399,13 +1414,12 @@ def vacuum_bm25_store(
     spark: SparkSession, path: str, keep_last: int = RETAIN_VERSIONS
 ) -> int:
     """Retention vacuum for the BM25 store: keep the newest
-    ``keep_last`` published versions of lexicon/stats/manifests, sweep
-    dangling unpublished versions, and GC unreferenced posting
-    segments (see :func:`_vacuum_versioned_store` for the contract and
-    the single-writer assumption)."""
+    ``keep_last`` published manifests, sweep dangling unpublished ones,
+    and GC unreferenced posting segments (see
+    :func:`_vacuum_versioned_store` for the contract and the
+    single-writer assumption)."""
     return _vacuum_versioned_store(
-        spark, path, ("lexicon", "stats", "manifests"), ("postings",),
-        keep_last,
+        spark, path, ("manifests",), ("postings",), keep_last
     )
 
 
@@ -1415,7 +1429,7 @@ def bm25_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot-isolation state a few ingest cycles leave behind), VACUUM
     to the latest version only, and serve the fixed query from the
     survivor.  Output binds n_docs_indexed (read from the SURVIVING
-    stats version — proving the vacuum kept the right one) and
+    manifest — proving the vacuum kept the right one) and
     n_versions_purged into the checked rows.
 
     The oracle is the direct full-corpus scoring — a green row proves
@@ -1439,12 +1453,9 @@ def bm25_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         upsert_bm25_index(spark, tmp, b2)
         purged = vacuum_bm25_store(spark, tmp, keep_last=RETAIN_VERSIONS)
         v = _latest_version(spark, tmp)
-        nd = _read_version(spark, tmp, "stats", v).select(
-            F.col("n_docs").alias("n_docs_indexed")
-        )
         out = (
-            serve_bm25_v2(spark, tmp)
-            .crossJoin(F.broadcast(nd))
+            serve_bm25_v2_at(spark, tmp, v)
+            .withColumn("n_docs_indexed", F.lit(_n_docs(spark, tmp, v)))
             .withColumn(
                 "n_versions_purged", F.lit(purged).cast("bigint")
             )
@@ -1455,23 +1466,52 @@ def bm25_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# --- deletion through the index (r13, VERDICT r12 #3) ------------------------
+# --- deletion through the index ---------------------------------------------
 #
-# The lexical twin of vectorstore.delete_from_index: GDPR-class erasure
-# must reach the derived store.  The delete mirrors the upsert exactly,
-# with every merged integer decremented instead of added: the affected
-# term buckets' SURVIVING postings land in a new segment and the v+1
-# manifest un-pins every prior segment of those buckets (old files
-# untouched — snapshot isolation for in-flight readers; the deleted
-# bytes become unreachable at publish and are swept by vacuum's
-# segment GC), df decrements into a new lexicon version (terms
-# reaching df=0 are dropped), and stats decrement component-wise.  The
-# decrements are derived by re-tokenizing the deleted docs with the
-# SAME functions the ingest used (deterministic tokenization → exactly
-# what was indexed), so delete ≡ rebuild-without-the-docs holds
-# bit-exactly, including a changed avgdl and idf for every survivor.
+# GDPR-class erasure must reach the derived store.  Invariants: the
+# erased docs are re-tokenized with the SAME functions the ingest used
+# (deterministic tokenization → exactly what was indexed), so their
+# (n_docs, sum_len) and term buckets are exactly what they contributed;
+# the new version subtracts those stats and unpins exactly the
+# (segment, bucket) files holding an erased doc, whose surviving rows
+# land in one new segment.  Every other pin, and every old file, stays
+# as it was, so readers of older versions are undisturbed and delete ≡
+# rebuild-without-the-docs holds bit-exactly (df is counted from the
+# surviving posting lists; avgdl and idf change with them).
 
 DOC_DELETE_RES = 3  # erase set: doc_id % 10 == 3 (~10% of the corpus)
+
+def _probe_erased(
+    spark: SparkSession, root: str, entries: list, erased: DataFrame
+) -> tuple[set, set]:
+    """(hit, kept): the pinned (seg, tb) files among ``entries`` that
+    hold an erased doc, and those that hold a doc that is not erased,
+    observed during one pass over those files left-joined to
+    ``erased``, the (doc_id, gone=TRUE) relation, which is never
+    collected (the planner picks the join strategy by its size).  A
+    repeated id only repeats rows, which the sets absorb, and so would
+    a re-run task."""
+    from pyspark.sql import Observation
+
+    if not entries:
+        return set(), set()
+    seen = Observation()
+    gone = F.col("gone").isNotNull()
+    (
+        _read_segments(
+            spark, root, entries, _BM25_POSTING_SCHEMA, with_seg=True
+        )
+        .join(erased, "doc_id", "left")
+        .observe(
+            seen,
+            F.collect_set(F.when(gone, F.struct("seg", "tb"))).alias("hit"),
+            F.collect_set(F.when(~gone, F.struct("seg", "tb"))).alias("kept"),
+        )
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+    return tuple({tuple(f) for f in seen.get[k]} for k in ("hit", "kept"))
 
 
 def delete_from_bm25_index(
@@ -1479,115 +1519,57 @@ def delete_from_bm25_index(
 ) -> list[int]:
     """Erase ``del_docs`` (a (doc_id, text) frame — the erasure request
     carries the docs being purged, fetched from the base table before
-    the base rows themselves are erased) from the stored index.
-    Writes the next lexicon/stats version, writes the affected
-    buckets' SURVIVING postings as a new segment, and publishes a v+1
-    manifest that pins the new segment INSTEAD of every prior pin of
-    the affected buckets — old segments are never touched, so a
-    concurrent reader of v sees the FULL pre-delete store (true
-    snapshot isolation, VERDICT r13 #3; the pre-manifest layout
-    rewrote shared bucket files in place and could not honestly claim
-    this).  The deleted postings become physically unreachable at the
-    v+1 publish and their bytes are reclaimed by vacuum's segment GC —
-    the erasure SLA is "unreachable at commit, swept at retention",
-    the Iceberg/Delta erasure contract.  Returns the affected bucket
-    list (≤ N_TB ints).  Cost is proportional to the affected buckets'
-    postings + the vocabulary-bounded lexicon merge — never a corpus
-    rescan.  The deleted docs' postings are pinned for the leg, and
-    its three staged writes run as concurrent jobs."""
-    from pyspark import StorageLevel
+    the base rows themselves are erased) from the stored index and
+    publish v+1.
 
-    toks = _toks_of(del_docs).persist(StorageLevel.MEMORY_AND_DISK)
-    dp = _postings_of(toks).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        buckets = sorted(
-            r["tb"] for r in dp.select("tb").distinct().collect()
+    One aggregate over the erased docs' tokens gives the stats delta and
+    the mask of term buckets they touch; one scan of only those
+    buckets' pinned files finds the files holding an erased doc.  v+1
+    unpins exactly those files and pins their surviving rows, rewritten
+    into one new segment (no write when nothing survives).  Old files
+    are never touched: the erased postings become unreachable at the
+    publish and vacuum's segment GC reclaims their bytes — the erasure
+    contract is "unreachable at commit, swept at retention".  Returns
+    the touched buckets (≤ N_TB ints)."""
+    got = _toks_of(del_docs).agg(
+        *_stats_aggs(),
+        F.bit_or(
+            F.expr(
+                "aggregate(toks, 0,"
+                f" (m, t) -> m | shiftleft(1, {_bucket_sql('t')}))"
+            )
+        ).alias("mask"),
+    ).collect()[0]
+    dn, ds, mask = got["n_docs"], got["sum_len"] or 0, got["mask"] or 0
+    buckets = [b for b in range(N_TB) if mask >> b & 1]
+    erased = del_docs.select("doc_id", F.lit(True).alias("gone"))
+    root = f"{path}/postings"
+
+    def stage(v: int):
+        m = _read_manifest(spark, path, v)
+        n, s = m["stats"]
+        hit, kept = _probe_erased(
+            spark, root, [e for e in m["pins"] if e[1] in buckets], erased
         )
-        ddf = dp.groupBy("term").agg(F.count(F.lit(1)).alias("ddf"))
-        ds = _stats2_of(toks)
-        del_ids = del_docs.select("doc_id")
-        root = f"{path}/postings"
-        last: VersionConflict | None = None
-        for _ in range(PUBLISH_RETRIES):
-            v = _latest_version(spark, path)
-            att = _new_att()
+        pins = [e for e in m["pins"] if e not in hit]
+        if hit & kept:
+            seg = _new_seg_id()
+            rows = _read_segments(
+                spark, root, sorted(hit & kept), _BM25_POSTING_SCHEMA
+            ).join(erased, "doc_id", "left_anti")
+            pins += [(seg, b) for b in _write_segment(rows, root, seg)]
+        return pins, (n - dn, s - ds)
 
-            def _stage_lexicon(v=v, att=att) -> None:
-                old_lex = _read_version(spark, path, "lexicon", v)
-                (
-                    old_lex.join(ddf, "term", "left")
-                    .select(
-                        "term",
-                        (
-                            F.col("df") - F.coalesce("ddf", F.lit(0))
-                        ).alias("df"),
-                    )
-                    .filter(F.col("df") > 0)
-                    .write.mode("overwrite")
-                    .parquet(_stage_path(path, "lexicon", v + 1, att))
-                )
-
-            def _stage_stats(v=v, att=att) -> None:
-                old_stats = _read_version(spark, path, "stats", v)
-                (
-                    old_stats.select(
-                        F.col("n_docs").alias("n0"),
-                        F.col("sum_len").alias("s0"),
-                    )
-                    .crossJoin(
-                        F.broadcast(
-                            ds.select(
-                                F.col("n_docs").alias("n1"),
-                                F.col("sum_len").alias("s1"),
-                            )
-                        )
-                    )
-                    .select(
-                        (F.col("n0") - F.col("n1")).alias("n_docs"),
-                        (F.col("s0") - F.col("s1")).alias("sum_len"),
-                    )
-                    .write.mode("overwrite")
-                    .parquet(_stage_path(path, "stats", v + 1, att))
-                )
-
-            entries = _manifest_entries(spark, path, v)
-            thunks = [_stage_lexicon, _stage_stats]
-            if buckets:
-                hit = set(buckets)
-                affected = [e for e in entries if e[1] in hit]
-                seg = _new_seg_id()
-
-                def _stage_survivors(affected=affected, seg=seg) -> list:
-                    kept = _read_segments(
-                        spark, root, affected, _BM25_POSTING_SCHEMA
-                    ).join(del_ids, "doc_id", "left_anti")
-                    return _write_segment(kept, root, seg)
-
-                thunks.append(_stage_survivors)
-            staged = _run_staged(*thunks)
-            new_entries = entries
-            if buckets:
-                new_entries = [e for e in entries if e[1] not in hit] + [
-                    (seg, b) for b in staged[-1]
-                ]
-            _write_manifest(spark, path, v + 1, new_entries, att)
-            try:
-                _publish_version(spark, path, v + 1, att)
-                return buckets
-            except VersionConflict as e:
-                last = e  # re-derive survivors against the new latest
-        raise last if last is not None else RuntimeError("unreachable")
-    finally:
-        dp.unpersist()
-        toks.unpersist()
+    _commit(spark, path, stage)
+    return buckets
 
 
 def bm25_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deletion through the lexical store, end to end: build the
     versioned store over the FULL corpus, erase the delete set
-    (affected-bucket rewrite + decremented lexicon/stats version), and
-    serve the fixed query from the post-delete store.  Output binds
-    n_deleted into the checked rows.
+    (rewrite of the files holding erased docs + decremented manifest
+    stats), and serve the fixed query from the post-delete store.
+    Output binds n_deleted into the checked rows.
 
     The oracle restates the rebuild: direct scoring over the surviving
     documents only — every decremented integer (df, n_docs, sum_len)
@@ -1681,8 +1663,9 @@ ORACLES = {
 }
 
 # stored-index semantics: serving from the persisted postings/lexicon/
-# stats must equal the direct one-pass recompute — the oracle IS the
-# direct scoring SQL (the ann_index_store discipline)
+# stats (the unversioned v1 layout) must equal the direct one-pass
+# recompute — the oracle IS the direct scoring SQL (the ann_index_store
+# discipline)
 ORACLES["bm25_index_store"] = ORACLES["bm25_topk_docs"]
 
 # upsert semantics: base-build + batch-merge + serve must equal the
@@ -1747,13 +1730,12 @@ ORACLES["bm25_stream_upsert_store"] = (
 
 # vacuum semantics: serve-from-the-surviving-version must equal the
 # direct full-corpus scoring (the vacuum changed STORAGE, not state);
-# n_docs_indexed read from the surviving stats version must equal the
+# n_docs_indexed read from the surviving manifest must equal the
 # corpus count (the vacuum kept the RIGHT version), and the purge
-# count restates the retention policy: the chain writes 1 build + 2
-# upsert versions per versioned table (lexicon, stats, manifests),
-# keep_last=1 leaves one each ⇒ 3 * (3 - 1) directories removed; all
-# three posting segments are pinned by the surviving manifest, so the
-# segment GC removes none.
+# count restates the retention policy: the chain publishes 1 build + 2
+# upsert manifests, keep_last=1 leaves one ⇒ 3 - 1 manifests removed;
+# all three posting segments are pinned by the surviving manifest, so
+# the segment GC removes none.
 ORACLES["bm25_store_vacuum"] = (
     f"WITH tok AS ({_TOKS_DUCK}),"
     " st AS (SELECT CAST(SUM(len(toks)) AS DOUBLE)"
@@ -1776,7 +1758,7 @@ ORACLES["bm25_store_vacuum"] = (
     " SELECT doc_id, n_hit_terms,"
     f" CAST(FLOOR(score * {SCORE_QUANT}.0 + 0.5) AS BIGINT) AS score_q,"
     " nd.n_docs_indexed,"
-    f" CAST(3 * (3 - {RETAIN_VERSIONS}) AS BIGINT) AS n_versions_purged"
+    f" CAST(3 - {RETAIN_VERSIONS} AS BIGINT) AS n_versions_purged"
     " FROM per CROSS JOIN nd"
     f" ORDER BY score_q DESC, doc_id LIMIT {TOP_K}"
 )
@@ -1955,7 +1937,7 @@ def _pos_postings_of(docs: DataFrame) -> DataFrame:
             F.size("toks").alias("dl"),
             F.posexplode("toks").alias("pos", "term"),
         )
-        .withColumn("tb", _term_bucket(F.col("term")))
+        .withColumn("tb", F.expr(_bucket_sql("term")))
     )
 
 
@@ -1998,9 +1980,8 @@ def _init_pos_store(
 ) -> None:
     """First write of the VERSIONED positional store: one bucket-
     partitioned segment + the v=1 manifest pinning it (the positional
-    index carries no lexicon/stats — phrase/NEAR scoring is pure
-    per-document counting, so the manifest is the only versioned
-    metadata)."""
+    manifest carries no stats — phrase/NEAR scoring is pure
+    per-document counting)."""
     spark = docs.sparkSession
     root = f"{path}/{_POS_ROOT}"
     seg = _new_seg_id()
@@ -2031,20 +2012,16 @@ def upsert_phrase_index(
     root = f"{path}/{_POS_ROOT}"
     seg = _new_seg_id()
     seg_buckets = _write_segment(_pos_postings_of(batch_docs), root, seg)
-    last: VersionConflict | None = None
-    for _ in range(PUBLISH_RETRIES):
-        v = _latest_version(spark, path)
-        att = _new_att()
-        entries = _manifest_entries(spark, path, v) + [
-            (seg, b) for b in seg_buckets
-        ]
-        _write_manifest(spark, path, v + 1, entries, att)
-        try:
-            _publish_version(spark, path, v + 1, att, bid)
-            return
-        except VersionConflict as e:
-            last = e
-    raise last if last is not None else RuntimeError("unreachable")
+    _commit(
+        spark,
+        path,
+        lambda v: (
+            _manifest_entries(spark, path, v)
+            + [(seg, b) for b in seg_buckets],
+            None,
+        ),
+        bid,
+    )
 
 
 def delete_from_phrase_index(
@@ -2064,38 +2041,31 @@ def delete_from_phrase_index(
     )
     del_ids = del_docs.select("doc_id")
     root = f"{path}/{_POS_ROOT}"
-    last: VersionConflict | None = None
-    for _ in range(PUBLISH_RETRIES):
-        v = _latest_version(spark, path)
-        att = _new_att()
+
+    def stage(v: int):
         entries = _manifest_entries(spark, path, v)
-        if buckets:
-            hit = set(buckets)
-            affected = [e for e in entries if e[1] in hit]
-            kept = _read_segments(
-                spark, root, affected, _POS_POSTING_SCHEMA
-            ).join(del_ids, "doc_id", "left_anti")
-            seg = _new_seg_id()
-            survivors = _write_segment(kept, root, seg)
-            new_entries = [e for e in entries if e[1] not in hit] + [
-                (seg, b) for b in survivors
-            ]
-        else:
-            new_entries = entries
-        _write_manifest(spark, path, v + 1, new_entries, att)
-        try:
-            _publish_version(spark, path, v + 1, att)
-            return buckets
-        except VersionConflict as e:
-            last = e
-    raise last if last is not None else RuntimeError("unreachable")
+        if not buckets:
+            return entries, None
+        kept = _read_segments(
+            spark,
+            root,
+            [e for e in entries if e[1] in buckets],
+            _POS_POSTING_SCHEMA,
+        ).join(del_ids, "doc_id", "left_anti")
+        seg = _new_seg_id()
+        return [e for e in entries if e[1] not in buckets] + [
+            (seg, b) for b in _write_segment(kept, root, seg)
+        ], None
+
+    _commit(spark, path, stage)
+    return buckets
 
 
 def vacuum_phrase_store(
     spark: SparkSession, path: str, keep_last: int = RETAIN_VERSIONS
 ) -> int:
     """Retention vacuum for the positional store (manifests + segment
-    GC; no lexicon/stats tables)."""
+    GC; no stats)."""
     return _vacuum_versioned_store(
         spark, path, ("manifests",), (_POS_ROOT,), keep_last
     )
@@ -2189,62 +2159,50 @@ ORACLES["phrase_search_topk"] = _phrase_oracle()
 ORACLES["phrase_index_store"] = _phrase_oracle()
 
 
-# --- post-upsert postings compaction (r13) -----------------------------------
+# --- post-upsert postings compaction -----------------------------------------
 #
-# The lexical twin of vectorstore.compact_index_cells: every append-mode
-# upsert leaves one more small file in each affected term bucket, and at
-# 100 TB with continuous ingest the bucket file count grows without
-# bound (the small-files problem compaction_plan budgets).  Compaction
-# rewrites ONLY the affected buckets, coalescing each back to one file
-# via dynamic partition overwrite; untouched buckets are never read or
+# Every upsert leaves one more small file in each term bucket it
+# touches, and with continuous ingest the bucket file count grows
+# without bound (the small-files problem compaction_plan budgets).
+# Compaction coalesces each requested bucket pinned in more than one
+# file back to one file; every other bucket is neither read nor
 # rewritten.
 
 
 def compact_bm25_buckets(spark: SparkSession, path: str, buckets) -> None:
-    """Coalesce the given term buckets' postings to one file each — as
-    a new SNAPSHOT: the coalesced rows land in a fresh segment, the
-    lexicon/stats carry forward content-identical into v+1 (the
-    compaction changes storage, not state), and the v+1 manifest pins
-    the new segment instead of every prior pin of the compacted
-    buckets.  Readers of v keep their exact pre-compaction file set
-    (no in-place rewrite, no lineage hazard — the old localCheckpoint
-    is obsolete because the write target is a NEW directory); the
-    small-file debris becomes unreferenced and vacuum's segment GC
-    reclaims it."""
-    buckets = sorted(int(b) for b in buckets)
-    if not buckets:
-        return
+    """Coalesce the given term buckets' postings to one file each, as a
+    new snapshot.
+
+    Invariants: only buckets pinned in more than one file are read and
+    rewritten, into one fresh segment; v+1 pins it instead of those
+    buckets' prior pins and carries v's stats unchanged (compaction
+    changes storage, not state).  When no requested bucket has more
+    than one pin, nothing is written and no version is published.
+    Readers of v keep their exact file set; the superseded files become
+    unreferenced and vacuum's segment GC reclaims them."""
+    from collections import Counter
+
+    want = {int(b) for b in buckets}
     root = f"{path}/postings"
-    hit = set(buckets)
-    last: VersionConflict | None = None
-    for _ in range(PUBLISH_RETRIES):
-        v = _latest_version(spark, path)
-        entries = _manifest_entries(spark, path, v)
-        affected = [e for e in entries if e[1] in hit]
-        if not affected:
-            return  # nothing pinned in those buckets — no new snapshot
-        rows = _read_segments(spark, root, affected, _BM25_POSTING_SCHEMA)
+
+    def stage(v: int):
+        m = _read_manifest(spark, path, v)
+        n_pins = Counter(t for _, t in m["pins"])
+        frag = {t for t in want if n_pins[t] > 1}
+        if not frag:
+            return None
         seg = _new_seg_id()
-        att = _new_att()
-        survivors, *_ = _run_staged(
-            lambda: _write_segment(rows, root, seg),
-            *(
-                lambda t=t: _read_version(spark, path, t, v)
-                .write.mode("overwrite")
-                .parquet(_stage_path(path, t, v + 1, att))
-                for t in ("lexicon", "stats")
-            ),
+        rows = _read_segments(
+            spark,
+            root,
+            [e for e in m["pins"] if e[1] in frag],
+            _BM25_POSTING_SCHEMA,
         )
-        new_entries = [e for e in entries if e[1] not in hit] + [
-            (seg, b) for b in survivors
-        ]
-        _write_manifest(spark, path, v + 1, new_entries, att)
-        try:
-            _publish_version(spark, path, v + 1, att)
-            return
-        except VersionConflict as e:
-            last = e
-    raise last if last is not None else RuntimeError("unreachable")
+        pins = [e for e in m["pins"] if e[1] not in frag]
+        pins += [(seg, b) for b in _write_segment(rows, root, seg)]
+        return pins, m["stats"]
+
+    _commit(spark, path, stage)
 
 
 def bm25_postings_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2265,14 +2223,9 @@ def bm25_postings_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         build_bm25_index_v2(spark, sf_dir, tmp)
         batch = _base_docs(spark, sf_dir).filter(_doc_batch_pred())
-        upsert_bm25_index(spark, tmp, batch)
-        bp = _postings_of(_toks_of(batch))
-        # bounded driver-side scalar list (≤ N_TB ints — the
-        # model-boundary collect class)
-        buckets = [
-            r["tb"] for r in bp.select("tb").distinct().collect()
-        ]
-        compact_bm25_buckets(spark, tmp, buckets)
+        compact_bm25_buckets(
+            spark, tmp, upsert_bm25_index(spark, tmp, batch)
+        )
         nu = batch.agg(F.count(F.lit(1)).alias("n_upserted"))
         out = (
             serve_bm25_v2(spark, tmp)
@@ -2381,7 +2334,7 @@ def _near_oracle() -> str:
 ORACLES["near_search_topk"] = _near_oracle()
 
 
-# --- interleaved CRUD chain certification (r13) ------------------------------
+# --- interleaved CRUD chain certification ------------------------------------
 #
 # Each lifecycle leg is individually certified (build / upsert / delete
 # / compact / vacuum / stream-ingest), but a production store never
@@ -2391,11 +2344,11 @@ ORACLES["near_search_topk"] = _near_oracle()
 # compact(b2's buckets) → vacuum(keep latest) — and requires the final
 # serve to equal direct scoring over the NET corpus (base ∪ b1 ∪ b2)
 # − d.  A green row proves the merge/decrement/rewrite algebra
-# COMPOSES: version numbers chain (v1..v5 — compaction snapshots too
-# under the r14 manifest pinning), the deletion survives the later
-# upsert, the compaction and vacuum change nothing, and the
-# stats/lexicon land exactly where a from-scratch index of the net
-# corpus would put them.
+# COMPOSES: version numbers chain (v1..v5 — the compaction publishes a
+# snapshot because b2's buckets are pinned in two files), the deletion
+# survives the later upsert, the compaction and vacuum change nothing,
+# and the stats and posting lists land exactly where a from-scratch
+# index of the net corpus would put them.
 
 DOC_CRUD_DEL_RES = 5  # chain erase set: doc_id % 10 == 5 (~10%),
 # disjoint from both ingest batches (7 and 3)
@@ -2404,10 +2357,8 @@ DOC_CRUD_DEL_RES = 5  # chain erase set: doc_id % 10 == 5 (~10%),
 def bm25_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full interleaved lifecycle on the lexical store; output
     binds the final published version (a closed-form constant of the
-    chain: init 1 + upsert 2 + delete 3 + upsert 4 + compact 5 — the
-    manifest-pinned compaction publishes a snapshot of its own since
-    r14) and the surviving doc count read from the FINAL stats
-    version."""
+    chain: init 1 + upsert 2 + delete 3 + upsert 4 + compact 5) and the
+    surviving doc count read from the FINAL manifest."""
     import shutil
     import tempfile
 
@@ -2425,32 +2376,26 @@ def bm25_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         _init_bm25_store(base, tmp)
         upsert_bm25_index(spark, tmp, b1)
         delete_from_bm25_index(spark, tmp, dels)
-        # the compaction targets are exactly the b2 segment's buckets,
-        # which the upsert already read back from the stored files —
-        # re-deriving them via a second tokenize pass was pure rework
-        # (optimization r15, guide §1.2 "don't compute things twice")
+        # the compaction targets are exactly the b2 segment's buckets
         buckets = sorted(upsert_bm25_index(spark, tmp, b2))
         compact_bm25_buckets(spark, tmp, buckets)
         # the retention vacuum (driver-side metadata deletes whose
         # result the chain does not bind) runs CONCURRENTLY with the
-        # serve of the latest version (optimization r16, guide §2.6):
-        # vacuum retains exactly the version the serve reads — its
-        # manifest, lexicon/stats dirs and every pinned segment — so
-        # a reader of the latest is undisturbed by construction (the
-        # single-writer assumption concerns writers' staged dirs, and
-        # the chain's writers are all done).  The thread is joined
-        # before teardown.
+        # serve of the latest version: vacuum retains exactly the
+        # version the serve reads — its manifest and every pinned
+        # segment — so a reader of the latest is undisturbed by
+        # construction (the single-writer assumption concerns writers'
+        # staged files, and the chain's writers are all done).  The
+        # thread is joined before teardown.
         from concurrent.futures import ThreadPoolExecutor
 
         v = _latest_version(spark, tmp)
+        n_docs = _n_docs(spark, tmp, v)
         with ThreadPoolExecutor(max_workers=1) as _pool:
             _vac = _pool.submit(vacuum_bm25_store, spark, tmp, keep_last=1)
-            nd = _read_version(spark, tmp, "stats", v).select(
-                F.col("n_docs").alias("n_docs_indexed")
-            )
             out = (
                 serve_bm25_v2_at(spark, tmp, v)
-                .crossJoin(F.broadcast(nd))
+                .withColumn("n_docs_indexed", F.lit(n_docs))
                 .withColumn("final_version", F.lit(v).cast("bigint"))
                 .localCheckpoint(eager=True)
             )
@@ -3150,69 +3095,30 @@ BM25_BATCH_K = 5
 def serve_bm25_batch_from_store(
     spark: SparkSession, path: str, v: int | None = None
 ) -> DataFrame:
-    """Top-k per query for a BATCH of BM25 term-set queries in ONE
-    pinned postings scan: manifest-level pruning to the
-    union of the batch's term buckets, the pushed term IN-filter on
-    the scan, lexicon/stats of the pinned version broadcast, per-
-    (qid, doc) term-ordered fold, per-query window top-k."""
-    import zlib
-
-    from pyspark.sql import Window
-
-    if v is None:
-        v = _latest_version(spark, path)
+    """Top-k per query for a BATCH of BM25 term-set queries as one SQL
+    statement over ONE pinned postings scan: manifest-level pruning to
+    the union of the batch's term buckets, the pushed term IN-filter on
+    the scan, df counted over those postings, the version's stats as
+    parameters, per-(qid, doc) term-ordered fold, per-query window
+    top-k."""
     all_terms = sorted({t for _, ts in BM25_BATCH for t in ts})
-    buckets = sorted(
-        {zlib.crc32(t.encode("utf-8")) % N_TB for t in all_terms}
+    args, postings = _serve_args(spark, path, all_terms, v)
+    queries = ", ".join(
+        f"({qid}, '{t}')" for qid, ts in BM25_BATCH for t in ts
     )
-    entries = [
-        e for e in _manifest_entries(spark, path, v) if e[1] in set(buckets)
-    ]
-    postings = (
-        _read_segments(
-            spark, f"{path}/postings", entries, _BM25_POSTING_SCHEMA
-        )
-        .filter(F.col("tb").isin(buckets))
-        .filter(F.col("term").isin(all_terms))
-    )
-    q = spark.createDataFrame(
-        [(qid, t) for qid, ts in BM25_BATCH for t in ts],
-        "qid int, term string",
-    )
-    lex = _read_version(spark, path, "lexicon", v).filter(
-        F.col("term").isin(all_terms)
-    )
-    stats = _avgdl_stats(spark, path, v)
-    scored = (
-        postings.join(F.broadcast(q), "term")
-        .join(F.broadcast(lex), "term")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "qid",
-            "doc_id",
-            "term",
-            F.expr(_bm25_term_score("tf", "df", "dl", "n_docs")).alias("s"),
-        )
-    )
-    per = scored.groupBy("qid", "doc_id").agg(
-        F.count(F.lit(1)).alias("n_hit_terms"),
-        F.array_sort(F.collect_list(F.struct("term", "s"))).alias("ts"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("score_q"), "doc_id")
-    return (
-        per.select(
-            "qid",
-            "doc_id",
-            "n_hit_terms",
-            F.expr(
-                "CAST(FLOOR(aggregate(ts, CAST(0.0 AS DOUBLE),"
-                f" (acc, x) -> acc + x.s) * {SCORE_QUANT}.0 + 0.5)"
-                " AS BIGINT)"
-            ).alias("score_q"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= BM25_BATCH_K)
-        .orderBy("qid", "rank")
+    return spark.sql(
+        f"WITH {_hit_sql(all_terms)},"
+        f" q(qid, term) AS (VALUES {queries}),"
+        " per AS (SELECT qid, doc_id, COUNT(*) AS n_hit_terms,"
+        f" array_sort(collect_list({_STORE_SCORE_SQL})) AS ts"
+        " FROM hit JOIN q USING (term) GROUP BY qid, doc_id),"
+        f" r AS (SELECT qid, doc_id, n_hit_terms, {_SCORE_Q_SQL} AS score_q"
+        " FROM per)"
+        " SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY qid"
+        " ORDER BY score_q DESC, doc_id) AS rank FROM r)"
+        f" WHERE rank <= {BM25_BATCH_K} ORDER BY qid, rank",
+        args=args,
+        postings=postings,
     )
 
 
@@ -3277,13 +3183,13 @@ QUERIES["bm25_topk_batch"] = bm25_topk_batch
 ORACLES["bm25_topk_batch"] = _bm25_batch_oracle()
 
 
-# --- metadata-filtered lexical retrieval (r15 stretch, VERDICT r14 #7) -------
+# --- metadata-filtered lexical retrieval -------------------------------------
 #
 # The lexical twin of similarity.ann_filtered_topk: "top-k matching
 # docs WHERE lang = 'en'".  The discipline is identical — the metadata
 # predicate lands on the scan (PushedFilters carries the equality)
 # BEFORE the score fold, so only qualifying documents' postings enter
-# the ranking; the collection statistics (lexicon df, avgdl, n_docs)
+# the ranking; the collection statistics (df, avgdl, n_docs)
 # stay GLOBAL, which is how production filtered retrieval scores (the
 # filter narrows candidates, not the model).  At 100 TB the filter
 # column doubles as a partition key and the semi-join's build side is
@@ -3296,59 +3202,19 @@ def serve_bm25_filtered_from_store(
     spark: SparkSession, path: str, docs_meta: DataFrame
 ) -> DataFrame:
     """Answer the fixed query from the pinned store over only the
-    documents matching the metadata predicate: pinned bucket-pruned
-    postings scan + pushed term IN-filter, semi-join against the
+    documents matching the metadata predicate, as one SQL statement:
+    pinned bucket-pruned postings scan with the term IN-filter pushed,
+    df counted over ALL those postings, THEN the semi-join against the
     lang-filtered doc ids (the lang equality is pushed into the
     documents scan), THEN the global-stats score fold."""
-    import zlib
-
-    v = _latest_version(spark, path)
-    buckets = sorted(
-        {zlib.crc32(t.encode("utf-8")) % N_TB for t in QUERY_TERMS}
-    )
-    entries = [
-        e for e in _manifest_entries(spark, path, v) if e[1] in set(buckets)
-    ]
-    postings = (
-        _read_segments(
-            spark, f"{path}/postings", entries, _BM25_POSTING_SCHEMA
-        )
-        .filter(F.col("tb").isin(buckets))
-        .filter(F.col("term").isin(*QUERY_TERMS))
-    )
-    keep_ids = docs_meta.filter(F.col("lang") == FILTER_LANG).select(
-        "doc_id"
-    )
-    hit = postings.join(keep_ids, "doc_id", "left_semi")
-    lex = _read_version(spark, path, "lexicon", v).filter(
-        F.col("term").isin(*QUERY_TERMS)
-    )
-    stats = _avgdl_stats(spark, path, v)
-    scored = (
-        hit.join(F.broadcast(lex), "term")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            "term",
-            F.expr(_bm25_term_score("tf", "df", "dl", "n_docs")).alias("s"),
-        )
-    )
-    per_doc = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_hit_terms"),
-        F.array_sort(F.collect_list(F.struct("term", "s"))).alias("ts"),
-    )
-    return (
-        per_doc.select(
-            "doc_id",
-            "n_hit_terms",
-            F.expr(
-                "CAST(FLOOR(aggregate(ts, CAST(0.0 AS DOUBLE),"
-                f" (acc, x) -> acc + x.s) * {SCORE_QUANT}.0 + 0.5)"
-                " AS BIGINT)"
-            ).alias("score_q"),
-        )
-        .orderBy(F.desc("score_q"), "doc_id")
-        .limit(TOP_K)
+    args, postings = _serve_args(spark, path, QUERY_TERMS, None)
+    return spark.sql(
+        _topk_sql(
+            " WHERE doc_id IN (SELECT doc_id FROM {docs} WHERE lang = :lang)"
+        ),
+        args={**args, "lang": FILTER_LANG},
+        postings=postings,
+        docs=docs_meta,
     )
 
 

@@ -267,8 +267,9 @@ for _mod in _MODULES:
 #     driver row anywhere is r9;
 # (b) r13 net-new: deletion through BOTH index stores
 #     (ann_index_delete — affected-cell rewrite, delete-then-serve ≡
-#     rebuild-without-docs; bm25_index_delete — affected-bucket
-#     rewrite + decremented lexicon/stats version; VERDICT r12 #3),
+#     rebuild-without-docs; bm25_index_delete — rewrite of the
+#     files holding erased docs + decremented manifest stats;
+#     VERDICT r12 #3),
 #     version retention (bm25_store_vacuum — keep-latest vacuum over a
 #     3-version chain, serve-from-latest unchanged; VERDICT r12 #2),
 #     streaming ANN ingestion (ann_stream_upsert_store — availableNow
@@ -336,8 +337,8 @@ for _mod in _MODULES:
 #     is r8;
 # (b) r12 net-new: the two incremental index-maintenance queries
 #     (ann_index_upsert — frozen-model cell-partition merge;
-#     bm25_index_upsert — posting append + versioned lexicon/stats
-#     merge; both VERDICT r11 #2), the MB4 ISO-BMFF box-tree
+#     bm25_index_upsert — posting append + manifest stats merge;
+#     both VERDICT r11 #2), the MB4 ISO-BMFF box-tree
 #     container (VERDICT r11 #8), the Bloom-filter membership
 #     decontam (the missing mergeable-summary family member),
 #     sketch_rollup_upsert (incremental maintenance for the third

@@ -8,12 +8,17 @@ IVF-PQ codes, HLL sketch rollup), checked across all four families:
 - every segment a lifecycle step writes is one directory of files in
   which each value of the segment's value column lies in exactly one
   file, sorted, and the value list the write returns (what manifests
-  pin) is exactly the set of values stored.
+  pin) is exactly the set of values stored;
+- every family's manifest is one JSON object ``{"pins": [...]}`` (BM25
+  adds ``"stats"``) that round-trips through ``_read_manifest``;
+- the BM25 steps stay within their Spark job budgets, and a delete
+  rewrites only the files holding an erased doc.
 """
 
 from __future__ import annotations
 
 import contextlib
+import json
 import os
 import shutil
 import tempfile
@@ -64,9 +69,9 @@ def _value_files(seg_dir: str, pcol: str) -> dict:
 
 
 # family → (segment root under the store, value column, logical
-# schema, version tables with their declared schemas)
+# schema, unversioned tables with their declared schemas)
 _LAYOUT = {
-    "bm25": ("postings", "tb", rt._BM25_POSTING_SCHEMA, rt._VERSION_SCHEMAS),
+    "bm25": ("postings", "tb", rt._BM25_POSTING_SCHEMA, {}),
     "positional": (rt._POS_ROOT, "tb", rt._POS_POSTING_SCHEMA, {}),
     "ann": (
         vs._ANN_CODES_ROOT,
@@ -138,17 +143,18 @@ def _lifecycle(spark, sf_dir, family: str, path: str) -> dict[str, set]:
 def _recorded_writes():
     """Record the value list every segment write returns, by segment
     directory."""
-    write, returned = rt._write_segment, {}
+    write, returned = rt._write_observed, {}
 
-    def recording(df, root, seg, pcol="tb"):
-        returned[f"{root}/seg={seg}"] = values = write(df, root, seg, pcol)
-        return values
+    def recording(df, root, seg, pcol, *metrics, keep=None):
+        got = write(df, root, seg, pcol, *metrics, keep=keep)
+        returned[f"{root}/seg={seg}"] = got["values"]
+        return got
 
-    rt._write_segment = recording
+    rt._write_observed = recording
     try:
         yield returned
     finally:
-        rt._write_segment = write
+        rt._write_observed = write
 
 
 @pytest.fixture(scope="module")
@@ -192,15 +198,9 @@ def test_declared_schemas_match_stored_files(spark, lifecycles, family):
         got = _fields(spark.read.parquet(f"{path}/{seg_root}/{seg}").schema)
         assert got == declared, (seg, got)
     for table, ddl in tables.items():
-        dirs = [f"{path}/{table}"]
-        if family == "bm25":
-            dirs = [
-                f"{path}/{table}/{d}" for d in os.listdir(f"{path}/{table}")
-            ]
-        for d in dirs:
-            assert _fields(spark.read.parquet(d).schema) == _fields(
-                _parse_datatype_string(ddl)
-            ), d
+        assert _fields(spark.read.parquet(f"{path}/{table}").schema) == (
+            _fields(_parse_datatype_string(ddl))
+        ), table
 
 
 def test_sketch_day_partition_reads_as_manifest_string(spark, lifecycles):
@@ -346,5 +346,203 @@ def test_store_serve_submits_no_job_before_action(spark, sf_dir, family):
                 "jobGroup.id", "job.description", "job.interruptOnCancel"
             ):
                 sc.setLocalProperty(f"spark.{prop}", None)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+@pytest.mark.parametrize("family", FAMILIES)
+def test_manifest_round_trips(spark, lifecycles, family):
+    """Every family writes its manifest as one JSON object: ``pins``,
+    plus ``stats`` for BM25 only, and ``_read_manifest`` returns exactly
+    what was written, values typed as stored; a manifest written from
+    that reading reads back unchanged."""
+    path, _, _ = lifecycles[family]
+    v = rt._latest_version(spark, path)
+    with open(rt._table_dir(spark, path, "manifests", v)) as f:
+        raw = json.load(f)
+    assert set(raw) == ({"pins", "stats"} if family == "bm25" else {"pins"})
+    got = rt._read_manifest(spark, path, v)
+    assert got["pins"] == sorted(tuple(p) for p in raw["pins"])
+    assert got["pins"] == rt._manifest_entries(spark, path, v)
+    if family == "bm25":
+        assert got["stats"] == (
+            raw["stats"]["n_docs"], raw["stats"]["sum_len"]
+        )
+        assert all(isinstance(x, int) for x in got["stats"])
+    else:
+        assert got["stats"] is None
+    tmp = tempfile.mkdtemp(prefix="sgraft_manifest_rt_")
+    try:
+        att = rt._new_att()
+        rt._write_manifest(spark, tmp, 1, got["pins"], att, got["stats"])
+        rt._publish_version(spark, tmp, 1, att)
+        assert rt._read_manifest(spark, tmp, 1) == got
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_bm25_write_postings_counts_every_doc_once(spark):
+    """The (n_docs, sum_len) a BM25 segment write observes equal
+    ``_stats2_of`` over the same docs, docs with no token and with NULL
+    text included, and the segment holds exactly ``_postings_of``'s
+    rows (no row of the lead marker reaches the files)."""
+    docs = spark.createDataFrame(
+        [(1, "a b a c"), (2, ""), (3, None), (4, "!!"), (5, "c c d")],
+        "doc_id bigint, text string",
+    )
+    tmp = tempfile.mkdtemp(prefix="sgraft_bm25_postings_")
+    try:
+        buckets, stats = rt._write_postings(docs, tmp, "s1")
+        n, s = rt._stats2_of(rt._toks_of(docs)).collect()[0]
+        assert stats == (n, s) == (5, 7)
+        stored = rt._read_segments(
+            spark, tmp, [("s1", b) for b in buckets], rt._BM25_POSTING_SCHEMA
+        )
+        want = rt._postings_of(rt._toks_of(docs))
+        assert sorted(map(tuple, stored.collect())) == sorted(
+            map(tuple, want.collect())
+        )
+        assert spark.read.parquet(f"{tmp}/seg=s1").columns == want.columns
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _step_jobs(spark, step: str, run) -> int:
+    """Spark jobs that ``run()`` submits, counted in a job group of its
+    own."""
+    sc = spark.sparkContext
+    group = f"test_bm25_job_budget_{step}"
+    sc.setJobGroup(group, step)
+    try:
+        run()
+    finally:
+        for prop in ("jobGroup.id", "job.description", "job.interruptOnCancel"):
+            sc.setLocalProperty(f"spark.{prop}", None)
+    return len(_group_jobs(spark, group))
+
+
+def test_bm25_steps_stay_within_job_budgets(spark, sf_dir):
+    """One store_churn-shaped BM25 cycle: upsert a batch, serve, delete
+    the batch, serve, compact.  Upsert is one segment write (≤ 3 jobs:
+    two shuffle stages and the write), a serve one statement (≤ 3), a
+    delete one aggregate, one probe and at most one rewrite (≤ 8); the
+    compaction of a store already in one file per bucket submits no job
+    and publishes no version."""
+    docs = _docs(spark, sf_dir)
+    batch = docs.filter(rt._doc_batch_pred())
+    tmp = tempfile.mkdtemp(prefix="sgraft_bm25_budget_")
+    try:
+        rt.build_bm25_index_v2(spark, sf_dir, tmp)
+        batch.count()  # the batch's own scan is not the store's
+        budgets = {
+            "upsert": (lambda: rt.upsert_bm25_index(spark, tmp, batch), 3),
+            "serve_upserted": (
+                lambda: rt.serve_bm25_v2(spark, tmp).collect(), 3
+            ),
+            "delete": (
+                lambda: rt.delete_from_bm25_index(spark, tmp, batch), 8
+            ),
+            "serve_deleted": (
+                lambda: rt.serve_bm25_v2(spark, tmp).collect(), 3
+            ),
+        }
+        for step, (run, budget) in budgets.items():
+            n = _step_jobs(spark, step, run)
+            assert 0 < n <= budget, (step, n, budget)
+        v = rt._latest_version(spark, tmp)
+        assert v == 3
+        n = _step_jobs(
+            spark,
+            "compact",
+            lambda: rt.compact_bm25_buckets(spark, tmp, range(rt.N_TB)),
+        )
+        assert n == 0 and rt._latest_version(spark, tmp) == v
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _served(spark, path):
+    return [tuple(r) for r in rt.serve_bm25_v2(spark, path).collect()]
+
+
+def _file_bytes(seg_dir: str) -> dict[str, bytes]:
+    out = {}
+    for f in os.listdir(seg_dir):
+        if f.endswith(".parquet"):
+            with open(f"{seg_dir}/{f}", "rb") as fh:
+                out[f] = fh.read()
+    return out
+
+
+def test_bm25_delete_of_an_upsert_restores_the_base_pins(spark, sf_dir):
+    """Upserting batch B and then deleting B publishes a version that
+    pins exactly what the store pinned before the upsert, with those
+    base files byte-identical and the stats restored; the delete writes
+    no segment (nothing of B's files survives), and compacting the store
+    afterwards publishes nothing."""
+    docs = _docs(spark, sf_dir)
+    batch = docs.filter(rt._doc_batch_pred())
+    tmp = tempfile.mkdtemp(prefix="sgraft_bm25_del_upsert_")
+    try:
+        rt.build_bm25_index_v2(spark, sf_dir, tmp)
+        base = rt._read_manifest(spark, tmp, 1)
+        (base_seg,) = {s for s, _ in base["pins"]}
+        base_bytes = _file_bytes(f"{tmp}/postings/seg={base_seg}")
+        served = _served(spark, tmp)
+        rt.upsert_bm25_index(spark, tmp, batch)
+        segs = _segments(f"{tmp}/postings")
+        rt.delete_from_bm25_index(spark, tmp, batch)
+        assert _segments(f"{tmp}/postings") == segs  # no rewrite
+        assert rt._latest_version(spark, tmp) == 3
+        assert rt._read_manifest(spark, tmp, 3) == base
+        assert _file_bytes(f"{tmp}/postings/seg={base_seg}") == base_bytes
+        assert _served(spark, tmp) == served
+        rt.compact_bm25_buckets(spark, tmp, range(rt.N_TB))
+        assert rt._latest_version(spark, tmp) == 3
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_bm25_delete_unpins_only_the_files_holding_erased_docs(
+    spark, sf_dir
+):
+    """Erasing docs spread through the base segment unpins exactly the
+    (segment, bucket) files whose bucket one of their terms hashes into
+    — every other pin stays — and the serve and the stats equal a
+    rebuild without those docs."""
+    docs = _docs(spark, sf_dir)
+    # the three docs whose terms touch the fewest buckets
+    per_doc = (
+        rt._postings_of(rt._toks_of(docs))
+        .groupBy("doc_id")
+        .agg(F.collect_set("tb").alias("tbs"))
+        .collect()
+    )
+    chosen = sorted(per_doc, key=lambda r: (len(r["tbs"]), r["doc_id"]))[:3]
+    ids = [r["doc_id"] for r in chosen]
+    touched = set().union(*(r["tbs"] for r in chosen))
+    assert len(touched) < rt.N_TB
+    erased = docs.filter(F.col("doc_id").isin(ids))
+    kept = docs.filter(~F.col("doc_id").isin(ids))
+    tmp = tempfile.mkdtemp(prefix="sgraft_bm25_del_spread_")
+    try:
+        rt._init_bm25_store(docs, f"{tmp}/store")
+        m1 = rt._read_manifest(spark, f"{tmp}/store", 1)
+        assert sorted(rt.delete_from_bm25_index(
+            spark, f"{tmp}/store", erased
+        )) == sorted(touched)
+        m2 = rt._read_manifest(spark, f"{tmp}/store", 2)
+        unpinned = set(m1["pins"]) - set(m2["pins"])
+        assert unpinned == {e for e in m1["pins"] if e[1] in touched}
+        new = set(m2["pins"]) - set(m1["pins"])
+        assert len({s for s, _ in new}) == 1
+        assert {t for _, t in new} == touched
+        rt._init_bm25_store(kept, f"{tmp}/rebuild")
+        assert m2["stats"] == rt._read_manifest(
+            spark, f"{tmp}/rebuild", 1
+        )["stats"]
+        assert _served(spark, f"{tmp}/store") == _served(
+            spark, f"{tmp}/rebuild"
+        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

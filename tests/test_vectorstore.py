@@ -193,11 +193,13 @@ def test_batch_stored_equals_in_memory_ranking(spark, sf_dir):
 
 def test_bm25_stored_equals_direct_ranking(spark, sf_dir):
     """The lexical twin of the IVF-PQ store contract: serving from the
-    persisted postings/lexicon/stats must reproduce the direct BM25
-    ranking bit for bit (same quantized scores, same order).  Runs
-    through serve_bm25_from_store — the SAME composition bench.py's
+    persisted v1 postings/lexicon/stats, and from a versioned store
+    (df counted over the pinned posting lists, stats from the
+    manifest), must each reproduce the direct BM25 ranking bit for bit
+    (same quantized scores, same order).  The v1 serve runs through
+    serve_bm25_from_store — the SAME composition bench.py's
     bm25_index_serve_only metric times — so the verified path IS the
-    timed path (VERDICT r10 #4)."""
+    timed path."""
     from intellect_bi_spark.operators import retrieval as rt
 
     want = [
@@ -211,9 +213,15 @@ def test_bm25_stored_equals_direct_ranking(spark, sf_dir):
             (r["doc_id"], r["n_hit_terms"], r["score_q"])
             for r in rt.serve_bm25_from_store(spark, tmp).collect()
         ]
+        rt._init_bm25_store(rt._base_docs(spark, sf_dir), f"{tmp}/v2")
+        got_v2 = [
+            (r["doc_id"], r["n_hit_terms"], r["score_q"])
+            for r in rt.serve_bm25_v2(spark, f"{tmp}/v2").collect()
+        ]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     assert got == want and len(got) == rt.TOP_K
+    assert got_v2 == want
 
 
 def test_bm25_serve_scan_pushes_term_filter(spark, sf_dir):
@@ -337,9 +345,50 @@ def test_upsert_rewrites_only_affected_cells(spark, sf_dir):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _pinned_df(spark, path, v):
+    """(term, df) of version ``v``, df counted over its pinned posting
+    lists — what every serve counts."""
+    from intellect_bi_spark.operators import retrieval as rt
+
+    return sorted(
+        (r["term"], r["df"])
+        for r in rt._read_segments(
+            spark,
+            f"{path}/postings",
+            rt._manifest_entries(spark, path, v),
+            rt._BM25_POSTING_SCHEMA,
+        )
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .collect()
+    )
+
+
+def _rebuild_df(docs):
+    """(term, df) of a full rebuild over ``docs``."""
+    from intellect_bi_spark.operators import retrieval as rt
+
+    return sorted(
+        (r["term"], r["df"])
+        for r in rt._postings_of(rt._toks_of(docs))
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .collect()
+    )
+
+
+def _rebuild_stats(docs):
+    """(n_docs, sum_len) of ``docs``, as a full rebuild computes them."""
+    from intellect_bi_spark.operators import retrieval as rt
+
+    r = rt._stats2_of(rt._toks_of(docs)).collect()[0]
+    return (r["n_docs"], r["sum_len"])
+
+
 def test_bm25_upsert_equals_rebuild_and_direct(spark, sf_dir):
-    """The lexical upsert ≡ rebuild proof at the table level: after the
-    base-build + batch-merge, the versioned lexicon and stats equal a
+    """The lexical upsert ≡ rebuild proof at the state level: after the
+    base-build + batch-merge, the df of every term counted over the
+    pinned posting lists and the manifest's (n_docs, sum_len) equal a
     full-corpus rebuild's exactly, and the served ranking equals the
     DIRECT full-corpus scoring bit for bit."""
     from intellect_bi_spark.operators import retrieval as rt
@@ -358,31 +407,12 @@ def test_bm25_upsert_equals_rebuild_and_direct(spark, sf_dir):
             for r in rt.serve_bm25_v2(spark, tmp).collect()
         ]
         assert got == want and len(got) == rt.TOP_K
-        # merged lexicon == full-corpus df relation, exactly
         v = rt._latest_version(spark, tmp)
         assert v == 2  # build wrote v=1, the upsert wrote v=2
-        merged_lex = sorted(
-            (r["term"], r["df"])
-            for r in spark.read.parquet(
-                rt._table_dir(spark, tmp, "lexicon", v)
-            ).collect()
-        )
-        toks = rt._toks_of(rt._base_docs(spark, sf_dir))
-        full_lex = sorted(
-            (r["term"], r["df"])
-            for r in rt._postings_of(toks)
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .collect()
-        )
-        assert merged_lex == full_lex
-        stats = spark.read.parquet(
-            rt._table_dir(spark, tmp, "stats", v)
-        ).collect()[0]
-        full = rt._stats2_of(toks).collect()[0]
-        assert (stats["n_docs"], stats["sum_len"]) == (
-            full["n_docs"],
-            full["sum_len"],
+        docs = rt._base_docs(spark, sf_dir)
+        assert _pinned_df(spark, tmp, v) == _rebuild_df(docs)
+        assert rt._read_manifest(spark, tmp, v)["stats"] == (
+            _rebuild_stats(docs)
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -410,15 +440,16 @@ def test_bm25_upsert_appends_only_batch_term_buckets(spark, sf_dir):
     upsert never touches a pre-existing posting file — all new files
     land in exactly ONE new segment whose buckets are the batch's term
     buckets; the v=2 manifest extends v=1's pin list by exactly that
-    segment's entries; the superseded lexicon/stats versions stay
-    untouched (snapshot isolation)."""
+    segment's entries, with the batch's stats added; the superseded
+    v=1 manifest stays untouched (snapshot isolation)."""
     from intellect_bi_spark.operators import retrieval as rt
 
     tmp = tempfile.mkdtemp(prefix="sgraft_bm25upfiles_")
     try:
         rt.build_bm25_index_v2(spark, sf_dir, tmp)
         before = _tree_files(f"{tmp}/postings")
-        m1 = rt._manifest_entries(spark, tmp, 1)
+        v1 = rt._read_manifest(spark, tmp, 1)
+        m1 = v1["pins"]
         batch = rt._base_docs(spark, sf_dir).filter(rt._doc_batch_pred())
         batch_buckets = {
             int(r["tb"])
@@ -442,13 +473,11 @@ def test_bm25_upsert_appends_only_batch_term_buckets(spark, sf_dir):
         added = set(m2) - set(m1)
         assert {t for _, t in added} == batch_buckets
         assert {f"seg={s}" for s, _ in added} == new_segs
-        # v=1 lexicon/stats remain readable (snapshot isolation)
-        assert spark.read.parquet(
-            rt._table_dir(spark, tmp, "lexicon", 1)
-        ).count() > 0
-        assert spark.read.parquet(
-            rt._table_dir(spark, tmp, "stats", 1)
-        ).count() == 1
+        # v=1 is unchanged (snapshot isolation); v=2 adds the batch
+        assert rt._read_manifest(spark, tmp, 1) == v1
+        bn, bs = _rebuild_stats(batch)
+        n1, s1 = v1["stats"]
+        assert rt._read_manifest(spark, tmp, 2)["stats"] == (n1 + bn, s1 + bs)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -477,9 +506,10 @@ def test_bm25_v2_serve_prunes_term_buckets(spark, sf_dir):
 
 def test_bm25_stream_upsert_version_chain(spark, sf_dir):
     """The streaming ingest really runs as N_FEED_FILES micro-batches
-    (maxFilesPerTrigger=1 under availableNow), each landing one more
-    lexicon/stats version — and the final version serves the exact
-    direct full-corpus ranking (the upsert chain composes)."""
+    (maxFilesPerTrigger=1 under availableNow), each publishing one more
+    manifest — and the final version serves the exact direct
+    full-corpus ranking, with df and stats equal to a rebuild's (the
+    upsert chain composes)."""
     import os
 
     from intellect_bi_spark.operators import retrieval as rt
@@ -495,19 +525,20 @@ def test_bm25_stream_upsert_version_chain(spark, sf_dir):
         assert rt._latest_version(spark, store) == rt.N_FEED_FILES
         # every intermediate version survives (snapshot isolation chain)
         for v in range(1, rt.N_FEED_FILES + 1):
-            assert os.path.isdir(rt._table_dir(spark, store, "lexicon", v))
+            assert os.path.isfile(
+                rt._table_dir(spark, store, "manifests", v)
+            )
         got = [
             (r["doc_id"], r["n_hit_terms"], r["score_q"])
             for r in rt.serve_bm25_v2(spark, store).collect()
         ]
         assert got == want and len(got) == rt.TOP_K
-        # final stats == full corpus accounting
+        # final df and stats == full corpus accounting
         v = rt._latest_version(spark, store)
-        stats = spark.read.parquet(
-            rt._table_dir(spark, store, "stats", v)
-        ).collect()[0]
-        n_docs = rt._base_docs(spark, sf_dir).count()
-        assert stats["n_docs"] == n_docs
+        docs = rt._base_docs(spark, sf_dir)
+        stats = rt._read_manifest(spark, store, v)["stats"]
+        assert stats == _rebuild_stats(docs)
+        assert _pinned_df(spark, store, v) == _rebuild_df(docs)
         # redelivery idempotency (ADVICE r12): every applied batch left
         # a marker, and re-running the sink with an already-applied
         # batch id must NOT double-append — version chain and stats are
@@ -517,10 +548,7 @@ def test_bm25_stream_upsert_version_chain(spark, sf_dir):
         redelivered = rt._base_docs(spark, sf_dir).limit(5)
         rt._bm25_stream_sink(store, redelivered, 0)
         assert rt._latest_version(spark, store) == v
-        stats2 = spark.read.parquet(
-            rt._table_dir(spark, store, "stats", v)
-        ).collect()[0]
-        assert stats2["n_docs"] == n_docs
+        assert rt._read_manifest(spark, store, v)["stats"] == stats
         # the AUTHORITATIVE exactly-once check (ADVICE r14 #1): even
         # with the _batches fast-path marker REMOVED (the crashed
         # publish-to-marker window), redelivery is skipped because a
@@ -826,13 +854,12 @@ def test_vacuum_ann_store_retention_and_segment_gc(spark, sf_dir):
 
 
 def test_bm25_vacuum_retains_latest_leaves_live_files(spark, sf_dir):
-    """Version retention (VERDICT r12 #2), file level: after a
-    3-version chain (build + two upserts), vacuum(keep_last=1) removes
-    exactly the six superseded version directories (lexicon, stats and
-    manifests × v1,v2); every segment is pinned by the surviving
-    manifest so the segment GC removes nothing and the postings tree
-    is byte-untouched; the live version's files are byte-untouched;
-    and serve-from-latest is unchanged."""
+    """Version retention, file level: after a 3-version chain (build +
+    two upserts), vacuum(keep_last=1) removes exactly the two
+    superseded manifests (v1, v2); every segment is pinned by the
+    surviving manifest so the segment GC removes nothing and the
+    postings tree is byte-untouched; the live manifest is
+    byte-untouched; and serve-from-latest is unchanged."""
     from intellect_bi_spark.operators import retrieval as rt
 
     docs = rt._base_docs(spark, sf_dir)
@@ -845,20 +872,16 @@ def test_bm25_vacuum_retains_latest_leaves_live_files(spark, sf_dir):
         rt._init_bm25_store(base, tmp)
         rt.upsert_bm25_index(spark, tmp, b1)
         rt.upsert_bm25_index(spark, tmp, b2)
-        for table in ("lexicon", "stats", "manifests"):
-            assert rt._versions_in(spark, f"{tmp}/{table}") == [1, 2, 3]
+        assert rt._versions_in(spark, f"{tmp}/manifests") == [1, 2, 3]
         serve_before = [
             tuple(r) for r in rt.serve_bm25_v2(spark, tmp).collect()
         ]
-        live_before = {
-            t: _tree_files(f"{tmp}/{t}/v=3")
-            for t in ("lexicon", "stats", "manifests")
-        }
+        live = rt._table_dir(spark, tmp, "manifests", 3)
+        live_before = open(live, "rb").read()
         postings_before = _tree_files(f"{tmp}/postings")
-        assert rt.vacuum_bm25_store(spark, tmp, keep_last=1) == 6
-        for table in ("lexicon", "stats", "manifests"):
-            assert rt._versions_in(spark, f"{tmp}/{table}") == [3]
-            assert _tree_files(f"{tmp}/{table}/v=3") == live_before[table]
+        assert rt.vacuum_bm25_store(spark, tmp, keep_last=1) == 2
+        assert rt._versions_in(spark, f"{tmp}/manifests") == [3]
+        assert open(live, "rb").read() == live_before
         assert _tree_files(f"{tmp}/postings") == postings_before
         serve_after = [
             tuple(r) for r in rt.serve_bm25_v2(spark, tmp).collect()
@@ -870,15 +893,15 @@ def test_bm25_vacuum_retains_latest_leaves_live_files(spark, sf_dir):
 
 
 def test_bm25_delete_equals_rebuild_without_docs(spark, sf_dir):
-    """Deletion through the lexical store (VERDICT r12 #3): after
-    erasing the delete set from a full-corpus store, the lexicon,
-    stats, manifest-pinned surviving postings, AND the served ranking
-    all equal a from-scratch index of ONLY the survivors — every
-    decremented integer lands exactly where the rebuild puts it
-    (changed avgdl and idf included).  File level (r14 manifests): NO
-    pre-existing file changes at all — the delete is pure copy-on-
-    write; untouched buckets keep their exact v=1 pins, affected
-    buckets are re-pinned to one new segment."""
+    """Deletion through the lexical store: after erasing the delete set
+    from a full-corpus store, the df counted over the pinned posting
+    lists, the manifest's (n_docs, sum_len), the pinned surviving
+    postings, AND the served ranking all equal a from-scratch index of
+    ONLY the survivors — every decremented integer lands exactly where
+    the rebuild puts it (changed avgdl and idf included).  File level:
+    NO pre-existing file changes at all — the delete is pure
+    copy-on-write; untouched buckets keep their exact v=1 pins, the
+    files holding erased docs are re-pinned to one new segment."""
     from intellect_bi_spark.operators import retrieval as rt
 
     docs = rt._base_docs(spark, sf_dir)
@@ -908,29 +931,11 @@ def test_bm25_delete_equals_rebuild_without_docs(spark, sf_dir):
         rt._init_bm25_store(kept, tmp2)
         v = rt._latest_version(spark, tmp)
         assert v == 2  # build wrote v=1, the delete wrote v=2
-        got_lex = sorted(
-            (r["term"], r["df"])
-            for r in spark.read.parquet(
-                rt._table_dir(spark, tmp, "lexicon", v)
-            ).collect()
-        )
-        want_lex = sorted(
-            (r["term"], r["df"])
-            for r in spark.read.parquet(
-                rt._table_dir(spark, tmp2, "lexicon", 1)
-            ).collect()
-        )
-        assert got_lex == want_lex
-        got_stats = spark.read.parquet(
-            rt._table_dir(spark, tmp, "stats", v)
-        ).collect()[0]
-        want_stats = spark.read.parquet(
-            rt._table_dir(spark, tmp2, "stats", 1)
-        ).collect()[0]
-        assert (got_stats["n_docs"], got_stats["sum_len"]) == (
-            want_stats["n_docs"],
-            want_stats["sum_len"],
-        )
+        assert _pinned_df(spark, tmp, v) == _pinned_df(spark, tmp2, 1)
+        assert _pinned_df(spark, tmp, v) == _rebuild_df(kept)
+        assert rt._read_manifest(spark, tmp, v)["stats"] == (
+            rt._read_manifest(spark, tmp2, 1)["stats"]
+        ) == _rebuild_stats(kept)
         got_postings = sorted(
             (r["term"], r["doc_id"], r["dl"], r["tf"])
             for r in rt._read_segments(
@@ -998,19 +1003,18 @@ def test_bm25_mid_delete_reader_sees_full_pre_delete_store(spark, sf_dir):
 
 
 def test_bm25_concurrent_upsert_conflict_retries(spark, sf_dir):
-    """Optimistic writer concurrency (VERDICT r13 #4 + r14 #4, ADVICE
-    r14 #2): two interleaved upserts race the same version number.
-    Writer B completes an ENTIRE upsert — staging AND publishing v=2 —
-    while writer A has already staged its own v=2 merge; A's
-    conditional publish raises VersionConflict and its retry re-merges
-    onto v=3.  The r15 attempt-unique staging closes the r14 hole this
-    exact interleaving used to hit: A's stale staging can no longer
-    clobber B's published v=2 data, because the two writers stage under
+    """Optimistic writer concurrency: two interleaved upserts race the
+    same version number.  Writer B completes an ENTIRE upsert — staging
+    AND publishing v=2 — while writer A has already staged its own v=2
+    manifest; A's conditional publish raises VersionConflict and its
+    retry re-merges onto v=3.  A's stale staging cannot clobber B's
+    published v=2, because the two writers stage under attempt-unique
     paths only they can name.  Asserted: (a) both batches survive and
-    the final lexicon equals a full rebuild's; (b) the WINNER's v=2
-    data files are byte-identical after A's conflicting attempt +
-    retry (the lost-update is unreachable); (c) the LOSER's staged v=2
-    attempt dirs exist as debris and vacuum sweeps exactly them."""
+    the final df (counted over the pinned posting lists) and stats
+    equal a full rebuild's; (b) the WINNER's v=2 manifest is
+    byte-identical after A's conflicting attempt + retry (the
+    lost-update is unreachable); (c) the LOSER's staged v=2 manifest
+    exists as debris and vacuum sweeps exactly it."""
     import os
 
     from intellect_bi_spark.operators import retrieval as rt
@@ -1039,11 +1043,10 @@ def test_bm25_concurrent_upsert_conflict_retries(spark, sf_dir):
                     rt.upsert_bm25_index(sess, store, b2)
                 finally:
                     rt._publish_version = racy
-                # snapshot the winner's published v=2 data bytes
-                state["winner_files"] = {
-                    t: _tree_files(rt._table_dir(sess, store, t, 2))
-                    for t in ("lexicon", "stats", "manifests")
-                }
+                # snapshot the winner's published v=2 manifest bytes
+                state["winner_files"] = open(
+                    rt._table_dir(sess, store, "manifests", 2), "rb"
+                ).read()
             try:
                 return orig(sess, store, v, att, bid)
             except rt.VersionConflict:
@@ -1057,15 +1060,15 @@ def test_bm25_concurrent_upsert_conflict_retries(spark, sf_dir):
     try:
         assert state["fired"] and state["conflicts"] == 1
         assert rt._latest_version(spark, tmp) == 3
-        # (b) the winner's v=2 data survived A's losing attempt
-        # byte-identical — the ADVICE r14 #2 lost-update is unreachable
-        for t, files in state["winner_files"].items():
-            assert _tree_files(rt._table_dir(spark, tmp, t, 2)) == files
-        # (c) the loser's staged v=2 dirs are present as debris ...
-        win2 = os.path.basename(rt._table_dir(spark, tmp, "lexicon", 2))
-        lex_dirs = set(os.listdir(f"{tmp}/lexicon"))
+        # (b) the winner's v=2 manifest survived A's losing attempt
+        # byte-identical — the lost-update is unreachable
+        win2_path = rt._table_dir(spark, tmp, "manifests", 2)
+        assert open(win2_path, "rb").read() == state["winner_files"]
+        # (c) the loser's staged v=2 manifest is present as debris ...
+        win2 = os.path.basename(win2_path)
         loser_dirs = {
-            d for d in lex_dirs if d.startswith("v=2-") and d != win2
+            d for d in os.listdir(f"{tmp}/manifests")
+            if d.startswith("v=2-") and d != win2
         }
         assert loser_dirs, "loser staging missing — injection broke?"
         got = [
@@ -1073,28 +1076,17 @@ def test_bm25_concurrent_upsert_conflict_retries(spark, sf_dir):
             for r in rt.serve_bm25_v2(spark, tmp).collect()
         ]
         assert got == want and len(got) == rt.TOP_K
-        # final lexicon == full-corpus rebuild (both batches merged)
-        toks = rt._toks_of(docs)
-        full_lex = sorted(
-            (r["term"], r["df"])
-            for r in rt._postings_of(toks)
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .collect()
+        # final df and stats == full-corpus rebuild (both batches merged)
+        assert _pinned_df(spark, tmp, 3) == _rebuild_df(docs)
+        assert rt._read_manifest(spark, tmp, 3)["stats"] == (
+            _rebuild_stats(docs)
         )
-        got_lex = sorted(
-            (r["term"], r["df"])
-            for r in spark.read.parquet(
-                rt._table_dir(spark, tmp, "lexicon", 3)
-            ).collect()
-        )
-        assert got_lex == full_lex
         # ... and vacuum sweeps exactly the loser's debris while the
-        # retained versions' winning dirs survive
+        # retained versions' winning manifests survive
         rt.vacuum_bm25_store(spark, tmp, keep_last=3)
-        lex_after = set(os.listdir(f"{tmp}/lexicon"))
-        assert loser_dirs.isdisjoint(lex_after)
-        assert win2 in lex_after
+        after = set(os.listdir(f"{tmp}/manifests"))
+        assert loser_dirs.isdisjoint(after)
+        assert win2 in after
         got2 = [
             (r["doc_id"], r["n_hit_terms"], r["score_q"])
             for r in rt.serve_bm25_v2(spark, tmp).collect()
@@ -1105,14 +1097,14 @@ def test_bm25_concurrent_upsert_conflict_retries(spark, sf_dir):
 
 
 def test_bm25_manifest_commit_gates_visibility(spark, sf_dir):
-    """The marker commit (r13): readers resolve only PUBLISHED
-    versions, so a crashed writer's dangling v=N+1 data dirs are
-    invisible to serve, and vacuum sweeps them as the crash-recovery
-    half.  Walks the whole lifecycle: build publishes v=1, upsert
-    publishes v=2, a simulated mid-crash (v=3 data dirs, no marker)
-    leaves the live version serving unchanged, and vacuum removes
-    exactly the superseded + dangling dirs while the published chain
-    stays intact."""
+    """The marker commit: readers resolve only PUBLISHED versions, so a
+    crashed writer's dangling v=N+1 manifest is invisible to serve, and
+    vacuum sweeps it as the crash-recovery half.  Walks the whole
+    lifecycle: build publishes v=1, upsert publishes v=2, a simulated
+    mid-crash (a staged v=3 manifest, no marker) leaves the live
+    version serving unchanged, and vacuum removes exactly the
+    superseded + dangling manifests while the published chain stays
+    intact."""
     import os
 
     from intellect_bi_spark.operators import retrieval as rt
@@ -1126,20 +1118,14 @@ def test_bm25_manifest_commit_gates_visibility(spark, sf_dir):
         assert rt._published_versions(spark, tmp) == [1, 2]
         assert rt._latest_version(spark, tmp) == 2
         want = [tuple(r) for r in rt.serve_bm25_v2(spark, tmp).collect()]
-        # simulate a writer that crashed AFTER staging v=3 data but
-        # BEFORE the marker commit: copy the live version's parquet
-        # into staged v=3 attempt dirs (content is irrelevant — it
-        # must be ignored)
-        for table in ("lexicon", "stats"):
-            shutil.copytree(
-                rt._table_dir(spark, tmp, table, 2),
-                rt._stage_path(tmp, table, 3, "deadcafe"),
-            )
-        shutil.copy(  # manifests are files, not parquet dirs (r15)
+        # simulate a writer that crashed AFTER staging its v=3 manifest
+        # but BEFORE the marker commit (content is irrelevant — it must
+        # be ignored)
+        shutil.copy(
             rt._table_dir(spark, tmp, "manifests", 2),
             rt._stage_path(tmp, "manifests", 3, "deadcafe"),
         )
-        assert rt._versions_in(spark, f"{tmp}/lexicon") == [1, 2, 3]
+        assert rt._versions_in(spark, f"{tmp}/manifests") == [1, 2, 3]
         assert rt._latest_version(spark, tmp) == 2  # dangling invisible
         got = [tuple(r) for r in rt.serve_bm25_v2(spark, tmp).collect()]
         assert got == want  # serve unaffected by the crash debris
@@ -1148,15 +1134,13 @@ def test_bm25_manifest_commit_gates_visibility(spark, sf_dir):
         # sweep it as unresolvable
         open(f"{tmp}/_published/v=9", "w").close()
         assert rt._latest_version(spark, tmp) == 2
-        # vacuum removes v=1 (superseded) AND v=3 (dangling) from all
-        # three versioned tables: 6 data dirs (every segment is pinned
-        # by the surviving v=2 manifest, so the segment GC removes 0)
-        assert rt.vacuum_bm25_store(spark, tmp, keep_last=1) == 6
-        for table in ("lexicon", "stats", "manifests"):
-            assert rt._versions_in(spark, f"{tmp}/{table}") == [2]
+        # vacuum removes the v=1 (superseded) AND v=3 (dangling)
+        # manifests (every segment is pinned by the surviving v=2
+        # manifest, so the segment GC removes 0)
+        assert rt.vacuum_bm25_store(spark, tmp, keep_last=1) == 2
+        assert rt._versions_in(spark, f"{tmp}/manifests") == [2]
         assert rt._published_versions(spark, tmp) == [2]
         assert not os.path.exists(f"{tmp}/_published/v=9")
-        assert rt._versions_in(spark, f"{tmp}/lexicon") == [2]
         got2 = [tuple(r) for r in rt.serve_bm25_v2(spark, tmp).collect()]
         assert got2 == want
     finally:
@@ -1649,9 +1633,6 @@ def test_bm25_batch_matches_singles_and_one_scan(spark, sf_dir):
         assert len(scans) == 1, f"{len(scans)} postings scans:\n" + final[:2000]
         pushed = [ln for ln in final.splitlines() if "PushedFilters" in ln]
         assert any("In(term" in ln for ln in pushed), final[:2000]
-        # the 1-row broadcast stats fold plans as BroadcastNestedLoopJoin
-        # Cross — the engine's documented bounds-fold pattern (plan_audit
-        # does not flag it); only a real CartesianProduct is a violation
         assert "CartesianProduct" not in plan
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -1686,37 +1667,29 @@ def test_bm25_filtered_topk_semantics_and_plan(spark, sf_dir):
         # direct-scoring-with-filter: the certified fixed-query fold
         # over ONLY the qualifying docs (not the unfiltered top-k
         # truncated after the fact — the filter must run before the
-        # ranking, so docs below the unfiltered top-k can surface)
+        # ranking, so docs below the unfiltered top-k can surface),
+        # with df counted over ALL pinned posting lists and the
+        # manifest's stats
+        v = rt._latest_version(spark, tmp)
+        pinned = rt._read_segments(
+            spark,
+            f"{tmp}/postings",
+            rt._manifest_entries(spark, tmp, v),
+            rt._BM25_POSTING_SCHEMA,
+        )
+        n_docs, sum_len = rt._read_manifest(spark, tmp, v)["stats"]
         full = rt.topk_from_bm25_index(
-            rt._read_segments(
-                spark,
-                f"{tmp}/postings",
-                rt._manifest_entries(
-                    spark, tmp, rt._latest_version(spark, tmp)
-                ),
-                rt._BM25_POSTING_SCHEMA,
-            ).join(
+            pinned.join(
                 docs_meta.filter(
                     F.col("lang") == rt.FILTER_LANG
                 ).select("doc_id"),
                 "doc_id",
                 "left_semi",
             ),
-            spark.read.parquet(
-                rt._table_dir(
-                    spark, tmp, "lexicon", rt._latest_version(spark, tmp)
-                )
-            ),
-            spark.read.parquet(
-                rt._table_dir(
-                    spark, tmp, "stats", rt._latest_version(spark, tmp)
-                )
-            ).select(
-                (
-                    F.col("sum_len").cast("double")
-                    / F.col("n_docs").cast("double")
-                ).alias("avgdl"),
-                "n_docs",
+            pinned.groupBy("term").agg(F.count(F.lit(1)).alias("df")),
+            spark.createDataFrame(
+                [(float(sum_len) / float(n_docs), n_docs)],
+                "avgdl double, n_docs bigint",
             ),
         )
         want = [
@@ -1732,8 +1705,6 @@ def test_bm25_filtered_topk_semantics_and_plan(spark, sf_dir):
         assert any(
             "EqualTo(lang," in ln for ln in pushed
         ), final[:2000]
-        # 1-row broadcast stats fold → BroadcastNestedLoopJoin Cross is
-        # the documented pattern; only CartesianProduct is a violation
         assert "CartesianProduct" not in plan
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

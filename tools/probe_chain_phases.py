@@ -38,12 +38,12 @@ def main() -> None:
         def serve(tmp):
             store = f"{tmp}/store"
             v = retrieval._latest_version(spark, store)
-            nd = spark.read.parquet(
-                retrieval._table_dir(spark, store, "stats", v)
-            ).select(F.col("n_docs").alias("n_docs_indexed"))
             (
-                retrieval.serve_bm25_v2(spark, store)
-                .crossJoin(F.broadcast(nd))
+                retrieval.serve_bm25_v2_at(spark, store, v)
+                .withColumn(
+                    "n_docs_indexed",
+                    F.lit(retrieval._n_docs(spark, store, v)),
+                )
                 .localCheckpoint(eager=True)
             )
     elif which == "sketch":
