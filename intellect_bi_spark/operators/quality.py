@@ -251,23 +251,18 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def erasure_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed erasure certification (VERDICT r13 #7): ONE query
-    drives the whole compliance pipeline the three r13 delete legs
-    exist for — the erasure impact plan (the dry-run accounting over
-    the customer FK chain), then deletion through ALL THREE derived
-    stores (BM25 affected-bucket copy-on-write, ANN affected-cell
-    rewrite, sketch affected-day recompute), each store then SERVED
-    post-delete with a deterministic integer binding over the served
-    relation.  One output row per unit: 3 ``base:*`` impact rows plus
-    one row per store, each carrying (n_deleted, n_affected, binding).
-    ``n_affected`` is the store's erasure blast radius: rewritten IVF
-    cells (ann), recomputed day partitions (sketch), decremented
-    lexicon terms (bm25 — the bucket count is locked by the
-    bm25_index_delete row and its units; DuckDB lacks crc32, so the
-    restatable vocabulary touch-count binds here instead).  The oracle
-    restates every binding from survivors-only first principles, so a
-    green row proves the three erasures actually reached the stores,
-    in one composed run."""
+    """Composed erasure certification: one query runs the erasure
+    impact plan (the dry-run accounting over the customer FK chain),
+    then deletes through all three derived stores (BM25 bucket rewrite,
+    ANN affected-cell rewrite, sketch affected-day recompute) and serves
+    each store post-delete with a deterministic integer binding over
+    the served relation.  One output row per unit: 3 ``base:*`` impact
+    rows plus one row per store, each carrying (n_deleted, n_affected,
+    binding).  ``n_affected`` is the store's erasure blast radius:
+    rewritten IVF cells (ann), recomputed days (sketch), distinct terms
+    of the erased docs (bm25; DuckDB lacks crc32, so the restatable
+    vocabulary count binds here instead of the bucket count).  The
+    oracle restates every binding from the survivors alone."""
     import shutil
     import tempfile
 
@@ -279,6 +274,7 @@ def erasure_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         _base_docs,
         _init_bm25_store,
         _postings_of,
+        _run_staged,
         _toks_of,
         delete_from_bm25_index,
         serve_bm25_v2,
@@ -311,19 +307,10 @@ def erasure_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp_ann = tempfile.mkdtemp(prefix="sgraft_erasure_ann_")
     tmp_sk = tempfile.mkdtemp(prefix="sgraft_erasure_sketch_")
     try:
-        # The three store chains (build → delete → serve binding) are
-        # fully independent — separate temp stores, separate base
-        # tables — so they run as CONCURRENT driver threads
-        # (optimization r15, guide §2.6 "overlap independent jobs"):
-        # sequentially, each chain's job tails left most of the
-        # cluster idle while the next chain waited.  Each worker
-        # thread runs its chain's store build/delete jobs EAGERLY
-        # against its own isolated temp store (that isolation is the
-        # thread-safety argument), and returns its summary row frame
-        # lazily; only the union and the one eager checkpoint action
-        # run on the main thread, so the checked output (and its
-        # fixed store-ordered rows) is unchanged.  (ADVICE r15
-        # docstring correction: the threads are not build-only.)
+        # The three chains use separate temp stores and base tables, so
+        # they run as concurrent driver threads.  Each runs its store's
+        # build and delete jobs eagerly and returns its summary row
+        # lazily; the union and its one eager action run afterwards.
         def _bm25_chain() -> DataFrame:
             docs = _base_docs(spark, sf_dir)
             ddocs = docs.filter(
@@ -425,33 +412,9 @@ def erasure_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _pooled(name: str, fn):
-            # per-chain scheduler pool (r16, guide §2.6 full form):
-            # under the engine session's FAIR mode the three chains
-            # share executors equally instead of head-of-line
-            # blocking each other; a no-op under FIFO sessions
-            def run() -> DataFrame:
-                try:
-                    spark.sparkContext.setLocalProperty(
-                        "spark.scheduler.pool", f"sgraft-erasure-{name}"
-                    )
-                except Exception:  # pragma: no cover - exotic contexts
-                    pass
-                return fn()
-
-            return run
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_bm = pool.submit(_pooled("bm25", _bm25_chain))
-            f_ann = pool.submit(_pooled("ann", _ann_chain))
-            f_sk = pool.submit(_pooled("sketch", _sketch_chain))
-            bm_row, ann_row, sk_row = (
-                f_bm.result(),
-                f_ann.result(),
-                f_sk.result(),
-            )
+        bm_row, ann_row, sk_row = _run_staged(
+            _bm25_chain, _ann_chain, _sketch_chain
+        )
         out = release_after_action(
             impact_rows.unionByName(bm_row)
             .unionByName(ann_row)

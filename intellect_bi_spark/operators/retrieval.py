@@ -41,6 +41,8 @@ integer arithmetic.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -625,11 +627,6 @@ def _fs_of(spark: SparkSession, path: str):
     return fs, hpath
 
 
-def _store_dir_exists(spark: SparkSession, path: str) -> bool:
-    fs, hpath = _fs_of(spark, path)
-    return bool(fs.exists(hpath))
-
-
 def _versions_in(spark: SparkSession, path: str) -> list[int]:
     """Distinct version numbers present under ``path``, from both the
     bare marker form ``v=N`` and the attempt-suffixed data-dir form
@@ -663,45 +660,80 @@ def _version_dirs(spark: SparkSession, path: str) -> list[tuple[int, str]]:
 
 
 def _run_staged(*thunks) -> list:
-    """Run independent staged-write thunks as concurrent jobs and
-    return their results in argument order.
+    """Run independent thunks as concurrent driver threads and return
+    their results in argument order.  One thunk runs as a plain call.
 
-    A build stages its artifacts (e.g. the ANN model tables and code
-    segment) before one publish, so the writes have no ordering
-    dependency.  The first exception propagates before the publish,
-    leaving only unpublished debris that vacuum sweeps.  One thunk runs
-    as a plain call.  Each thunk's jobs run in their own scheduler
-    pool, named uniquely per call, so under FAIR scheduling a large
-    segment write cannot head-of-line block the small model writes,
-    nor can one build's thunks share a pool with a concurrent one's;
-    under FIFO the pool tag is a no-op."""
+    The first exception (in argument order) propagates after every
+    thunk has finished, so a caller that publishes after this returns
+    never publishes over a failed staged write: the failure leaves only
+    unpublished debris, which vacuum sweeps."""
     if len(thunks) == 1:
         return [thunks[0]()]
-    from concurrent.futures import ThreadPoolExecutor
-
-    call = _new_att()
-
-    def _pooled(i: int, t):
-        def run():
-            from pyspark import SparkContext
-
-            sc = SparkContext._active_spark_context
-            if sc is not None:
-                try:
-                    sc.setLocalProperty(
-                        "spark.scheduler.pool", f"sgraft-staged-{call}-{i}"
-                    )
-                except Exception:  # pragma: no cover - exotic contexts
-                    pass
-            return t()
-
-        return run
-
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [
-            pool.submit(_pooled(i, t)) for i, t in enumerate(thunks)
-        ]
+        futures = [pool.submit(t) for t in thunks]
         return [f.result() for f in futures]
+
+
+N_FEED_FILES = 4  # staged feed files → availableNow micro-batches
+
+
+def _apply_stream_batch(
+    store: str, bdf: DataFrame, bid: int, init, upsert
+) -> None:
+    """Apply micro-batch ``bid`` to the versioned store at ``store``
+    exactly once: an empty batch does nothing; a bid that a published
+    version already carries is skipped; with no version published the
+    batch initializes the store; otherwise it is upserted.
+
+    The bid rides in the publish marker of the version the batch
+    creates, so the skip check is atomic with the commit.  A crash
+    before the publish leaves only unpublished debris, and the
+    redelivery re-applies against the same latest version.  The ledger
+    is the retained versions' markers: Spark redelivers only the last
+    batch whose commit it did not log, so a vacuum that runs while a
+    stream feeds the store must keep the version carrying that bid."""
+    if bdf.isEmpty():
+        return
+    sess = bdf.sparkSession
+    if not _published_versions(sess, store):
+        init(bdf, store, bid)
+    elif bid not in _published_bids(sess, store):
+        upsert(bdf, store, bid)
+
+
+def stream_into_store(
+    spark: SparkSession, feed: DataFrame, root: str, init, upsert
+) -> str:
+    """Stage ``feed`` as N_FEED_FILES parquet files under ``root``, run
+    an availableNow file stream over them (one micro-batch per file)
+    whose ``foreachBatch`` applies each batch to the store at
+    ``root/store`` (see :func:`_apply_stream_batch`), block until the
+    stream drains and return the store path.  ``init`` and ``upsert``
+    are called as ``(batch, store, bid)``."""
+    store = f"{root}/store"
+    feed.repartition(N_FEED_FILES).write.parquet(f"{root}/feed")
+    q = (
+        spark.readStream.schema(feed.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{root}/feed")
+        .writeStream.foreachBatch(
+            lambda bdf, bid: _apply_stream_batch(store, bdf, bid, init, upsert)
+        )
+        .option("checkpointLocation", f"{root}/ckpt")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(300)
+        if q.isActive:
+            raise TimeoutError(f"stream into {store} did not drain in 300 s")
+    finally:
+        if q.isActive:
+            try:
+                q.stop()
+            except Exception:
+                pass
+    return store
 
 
 class VersionConflict(RuntimeError):
@@ -968,9 +1000,9 @@ def _table_dir(spark: SparkSession, store: str, table: str, v: int) -> str:
 
 def _published_bids(spark: SparkSession, store: str) -> set:
     """Every ingest batch id any PUBLISHED version carries — the
-    exactly-once ledger a stream sink consults before applying a
-    possibly-redelivered batch (ADVICE r14 #1).  Metadata-bounded:
-    one small marker read per published version."""
+    exactly-once ledger :func:`_apply_stream_batch` consults before
+    applying a possibly-redelivered batch.  Metadata-bounded: one small
+    marker read per published version."""
     return {
         _version_meta(spark, store, v).get("bid")
         for v in _published_versions(spark, store)
@@ -1211,34 +1243,30 @@ def bm25_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-N_FEED_FILES = 4  # staged corpus files → availableNow micro-batches
+def _bm25_stream(spark: SparkSession, sf_dir: str) -> tuple:
+    """(feed, init, upsert) of the BM25 ingest stream."""
+    return (
+        _base_docs(spark, sf_dir),
+        _init_bm25_store,
+        lambda b, s, bid: upsert_bm25_index(b.sparkSession, s, b, bid),
+    )
 
 
 def bm25_stream_upsert_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING ingestion into the upsertable lexical store: stage the
-    corpus as N_FEED_FILES parquet files, run a REAL availableNow file
-    stream over them (`maxFilesPerTrigger=1` → one micro-batch per
-    file), and let ``foreachBatch`` drive the store — batch 0
-    initializes it, every later batch runs the SAME versioned upsert
-    the batch path certifies (posting append + manifest stats merge).
-    After the stream drains, the fixed query is served from the final
-    version and must equal the DIRECT full-corpus scoring — proving the
-    upsert chain COMPOSES: N successive merges from an empty store
-    reconstruct the exact global index state (associativity of every
-    merged integer), driven by the real streaming engine rather than a
-    hand-rolled loop.  This is how a 100 TB deployment actually feeds
-    its retrieval index: a continuous ingest stream upserting
-    per-micro-batch, never a rebuild.  Output: the top-k rows plus
-    n_docs_indexed read from the FINAL manifest's stats (binds the
-    chain's accounting into the checked result); the 4-micro-batch
-    version chain itself is locked by tests/test_vectorstore.py."""
+    """Streaming ingestion into the upsertable lexical store: the
+    corpus feeds :func:`stream_into_store` (one micro-batch per staged
+    file; the first initializes the store, each later one runs the
+    versioned upsert), then the fixed query is served from the final
+    version.  The N-batch upsert chain composes to the full-corpus
+    index, so the rows equal the direct full-corpus scoring; the
+    output binds n_docs_indexed from the final manifest's stats."""
     import shutil
     import tempfile
 
     tmp = tempfile.mkdtemp(prefix="sgraft_bm25_stream_")
     try:
-        _run_bm25_upsert_stream(spark, sf_dir, tmp)
-        store = f"{tmp}/store"
+        feed, init, upsert = _bm25_stream(spark, sf_dir)
+        store = stream_into_store(spark, feed, tmp, init, upsert)
         v = _latest_version(spark, store)
         out = (
             serve_bm25_v2_at(spark, store, v)
@@ -1248,76 +1276,6 @@ def bm25_stream_upsert_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return out
-
-
-def _bm25_stream_sink(store: str, bdf: DataFrame, bid: int) -> None:
-    """foreachBatch body for the ingest stream: batch 0 initializes the
-    store, later batches run the certified versioned upsert.
-
-    Redelivery is exactly-once end to end: the batch id rides in the
-    publish marker itself, so the authoritative skip-check — "does any
-    PUBLISHED version already carry this bid" — is atomic with the
-    version commit, and a crash between the publish and the
-    ``_batches/bid=N`` marker cannot double-count the batch's stats or
-    pin its postings twice.  The ``_batches`` marker is only a cheap
-    fast path (one exists check beats V marker reads); correctness
-    never rests on it.  A crash before the publish is exactly-once for
-    the opposite reason: the crashed attempt's segment is in no
-    manifest and its staged manifest is unpublished, so the retry
-    re-applies against the same latest version and vacuum sweeps the
-    debris."""
-    sess = bdf.sparkSession
-    marker = f"{store}/_batches/bid={bid}"
-    if _store_dir_exists(sess, marker):
-        return  # redelivered, already fully applied (fast path)
-    if not bdf.isEmpty():
-        published = _published_versions(sess, store)
-        if published and bid in _published_bids(sess, store):
-            pass  # redelivered: a published version carries this bid
-        elif not published:
-            # no PUBLISHED version ⇒ initialize (a crashed batch-0
-            # attempt left only unpublished debris, which vacuum
-            # sweeps; fresh attempt-unique staging never collides)
-            _init_bm25_store(bdf, store, bid=bid)
-        else:
-            upsert_bm25_index(sess, store, bdf, bid=bid)
-    fs, hpath = _fs_of(sess, marker)
-    fs.mkdirs(hpath)
-
-
-def _run_bm25_upsert_stream(
-    spark: SparkSession, sf_dir: str, root: str
-) -> None:
-    """Stage the corpus feed, run the availableNow upsert stream into
-    ``root/store``, and block until it drains (extracted so the
-    version-chain unit can inspect the store the registry query
-    deletes)."""
-    store = f"{root}/store"
-    docs = _base_docs(spark, sf_dir)
-    docs.repartition(N_FEED_FILES).write.parquet(f"{root}/feed")
-
-    def sink(bdf: DataFrame, bid: int) -> None:
-        _bm25_stream_sink(store, bdf, bid)
-
-    q = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{root}/feed")
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(300)
-        if q.isActive:
-            raise TimeoutError("bm25 upsert stream did not drain in 300 s")
-    finally:
-        if q.isActive:
-            try:
-                q.stop()
-            except Exception:
-                pass
 
 
 # --- version retention / vacuum ----------------------------------------------
@@ -2379,27 +2337,17 @@ def bm25_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the compaction targets are exactly the b2 segment's buckets
         buckets = sorted(upsert_bm25_index(spark, tmp, b2))
         compact_bm25_buckets(spark, tmp, buckets)
-        # the retention vacuum (driver-side metadata deletes whose
-        # result the chain does not bind) runs CONCURRENTLY with the
-        # serve of the latest version: vacuum retains exactly the
-        # version the serve reads — its manifest and every pinned
-        # segment — so a reader of the latest is undisturbed by
-        # construction (the single-writer assumption concerns writers'
-        # staged files, and the chain's writers are all done).  The
-        # thread is joined before teardown.
-        from concurrent.futures import ThreadPoolExecutor
-
+        # the retention vacuum runs alongside the serve: it keeps the
+        # served version's manifest and every segment it pins
         v = _latest_version(spark, tmp)
         n_docs = _n_docs(spark, tmp, v)
-        with ThreadPoolExecutor(max_workers=1) as _pool:
-            _vac = _pool.submit(vacuum_bm25_store, spark, tmp, keep_last=1)
-            out = (
-                serve_bm25_v2_at(spark, tmp, v)
-                .withColumn("n_docs_indexed", F.lit(n_docs))
-                .withColumn("final_version", F.lit(v).cast("bigint"))
-                .localCheckpoint(eager=True)
-            )
-            _vac.result()
+        _, out = _run_staged(
+            lambda: vacuum_bm25_store(spark, tmp, keep_last=1),
+            lambda: serve_bm25_v2_at(spark, tmp, v)
+            .withColumn("n_docs_indexed", F.lit(n_docs))
+            .withColumn("final_version", F.lit(v).cast("bigint"))
+            .localCheckpoint(eager=True),
+        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return out
@@ -2751,97 +2699,35 @@ def _phrase_batch_oracle() -> str:
 ORACLES["phrase_search_batch"] = _phrase_batch_oracle()
 
 
-# --- streaming positional-store ingestion + CRUD chain (r15) ------------------
-#
-# The positional store was the one persisted index without a streaming
-# ingest leg or an interleaved lifecycle certification (ann/bm25/sketch
-# all have both).  Same construction as the BM25 chain: availableNow
-# file stream, one micro-batch per staged file, foreachBatch driving
-# the certified versioned upsert, batch ids riding the publish markers
-# for end-to-end exactly-once redelivery.
+# --- streaming positional-store ingestion + CRUD chain -----------------------
 
 
-def _pos_stream_sink(store: str, bdf: DataFrame, bid: int) -> None:
-    """foreachBatch body for the positional ingest stream: batch 0
-    initializes the store, later batches run the certified versioned
-    upsert.  Exactly-once on redelivery by the same construction as
-    the BM25 sink (ADVICE r14 #1): the authoritative skip-check is
-    "does any PUBLISHED version carry this bid"; the ``_batches``
-    marker is only a fast path."""
-    sess = bdf.sparkSession
-    marker = f"{store}/_batches/bid={bid}"
-    if _store_dir_exists(sess, marker):
-        return  # redelivered, already fully applied (fast path)
-    if not bdf.isEmpty():
-        published = _published_versions(sess, store)
-        if published and bid in _published_bids(sess, store):
-            pass  # redelivered: a published version carries this bid
-        elif not published:
-            _init_pos_store(bdf, store, bid=bid)
-        else:
-            upsert_phrase_index(sess, store, bdf, bid=bid)
-    fs, hpath = _fs_of(sess, marker)
-    fs.mkdirs(hpath)
-
-
-def _run_pos_upsert_stream(
-    spark: SparkSession, sf_dir: str, root: str
-) -> None:
-    """Stage the corpus feed, run the availableNow upsert stream into
-    ``root/store``, and block until it drains (extracted so the
-    version-chain unit can inspect the store the registry query
-    deletes)."""
-    store = f"{root}/store"
-    docs = _base_docs(spark, sf_dir)
-    docs.repartition(N_FEED_FILES).write.parquet(f"{root}/feed")
-
-    def sink(bdf: DataFrame, bid: int) -> None:
-        _pos_stream_sink(store, bdf, bid)
-
-    q = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{root}/feed")
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+def _pos_stream(spark: SparkSession, sf_dir: str) -> tuple:
+    """(feed, init, upsert) of the positional ingest stream."""
+    return (
+        _base_docs(spark, sf_dir),
+        _init_pos_store,
+        lambda b, s, bid: upsert_phrase_index(b.sparkSession, s, b, bid),
     )
-    try:
-        q.awaitTermination(300)
-        if q.isActive:
-            raise TimeoutError(
-                "positional upsert stream did not drain in 300 s"
-            )
-    finally:
-        if q.isActive:
-            try:
-                q.stop()
-            except Exception:
-                pass
 
 
 def phrase_stream_upsert_store(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """STREAMING ingestion into the positional store: stage the corpus
-    as N_FEED_FILES parquet files, run a real availableNow stream (one
-    micro-batch per file), let ``foreachBatch`` drive the store (init
-    then versioned upserts), and serve BOTH probes (ordered phrase +
-    unordered NEAR) from the stream-composed store.  The oracle
-    restates both probes from the FULL corpus raw text — proving the
-    N-batch upsert chain composes to the exact single-pass index for
-    the positional semantics too (manifest-entry union is the only
-    cross-batch state; position arithmetic is per-document) — with
-    n_docs_indexed (distinct documents in the PINNED postings) binding
-    the chain's accounting into the checked rows."""
+    """Streaming ingestion into the positional store: the corpus feeds
+    :func:`stream_into_store` (init, then versioned upserts), and BOTH
+    probes (ordered phrase and unordered NEAR) are served from the
+    stream-composed store.  The manifest-entry union is the only
+    cross-batch state and position arithmetic is per document, so the
+    rows equal the single-pass index's; the output binds
+    n_docs_indexed, the distinct documents in the pinned postings."""
     import shutil
     import tempfile
 
     tmp = tempfile.mkdtemp(prefix="sgraft_pos_stream_")
     try:
-        _run_pos_upsert_stream(spark, sf_dir, tmp)
-        store = f"{tmp}/store"
+        feed, init, upsert = _pos_stream(spark, sf_dir)
+        store = stream_into_store(spark, feed, tmp, init, upsert)
         v = _latest_version(spark, store)
         pinned = _read_segments(
             spark,
@@ -2869,8 +2755,7 @@ def phrase_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     version — then serve BOTH probes from the survivor.  The oracle
     restates phrase and NEAR from the SURVIVING documents' raw text
     (the batch is back in, the erase set is out), with n_survivors
-    bound in — one green row proves the three mutation classes and the
-    retention sweep compose for the positional semantics."""
+    bound in."""
     import shutil
     import tempfile
 
@@ -2884,26 +2769,18 @@ def phrase_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         _init_pos_store(docs.filter(~_doc_batch_pred()), tmp)
         upsert_phrase_index(spark, tmp, b1)
         delete_from_phrase_index(spark, tmp, dels)
-        # retention vacuum (result unused) runs concurrently with the
-        # serve of the latest version (optimization r16, guide §2.6):
-        # vacuum retains exactly the version served, so the reader is
-        # undisturbed by construction; joined before teardown.
-        from concurrent.futures import ThreadPoolExecutor
-
+        # the retention vacuum runs alongside the serve: it keeps the
+        # served version's manifest and every segment it pins
         v = _latest_version(spark, tmp)
-        with ThreadPoolExecutor(max_workers=1) as _pool:
-            _vac = _pool.submit(
-                vacuum_phrase_store, spark, tmp, keep_last=1
-            )
-            n_surv = docs.join(
-                dels.select("doc_id"), "doc_id", "left_anti"
-            ).agg(F.count(F.lit(1)).alias("n_survivors"))
-            out = (
-                _pos_probes_from_store(spark, tmp, v)
-                .crossJoin(F.broadcast(n_surv))
-                .localCheckpoint(eager=True)
-            )
-            _vac.result()
+        n_surv = docs.join(
+            dels.select("doc_id"), "doc_id", "left_anti"
+        ).agg(F.count(F.lit(1)).alias("n_survivors"))
+        _, out = _run_staged(
+            lambda: vacuum_phrase_store(spark, tmp, keep_last=1),
+            lambda: _pos_probes_from_store(spark, tmp, v)
+            .crossJoin(F.broadcast(n_surv))
+            .localCheckpoint(eager=True),
+        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return out

@@ -1284,24 +1284,22 @@ def sketch_rollup_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="sgraft_sketch_delete_")
     try:
         surv = ev.filter(~_del_users_pred())
-        # the exact self-check aggregate depends only on the base fact,
-        # not on the store — run it as a concurrent driver job while
-        # the store build + erasure run (optimization r16, guide §2.6;
-        # the checkpointed frame joins identically to the lazy one, so
-        # the checked rows are unchanged)
-        from concurrent.futures import ThreadPoolExecutor
+        # the exact self-check depends only on the base fact, so it
+        # runs as a concurrent job alongside the store build and erasure
+        from .retrieval import _run_staged
 
-        with ThreadPoolExecutor(max_workers=1) as _pool:
-            _f_exact = _pool.submit(
-                lambda: surv.groupBy("event_type")
-                .agg(F.countDistinct("user_id").alias("exact_users"))
-                .localCheckpoint(eager=True)
-            )
+        def _build_and_erase() -> list:
             build_sketch_rollup_store(spark, sf_dir, tmp)
-            affected = delete_users_from_sketch_store(
+            return delete_users_from_sketch_store(
                 spark, tmp, ev, _del_users_pred()
             )
-            exact = _f_exact.result()
+
+        exact, affected = _run_staged(
+            lambda: surv.groupBy("event_type")
+            .agg(F.countDistinct("user_id").alias("exact_users"))
+            .localCheckpoint(eager=True),
+            _build_and_erase,
+        )
         merged = serve_sketch_rollup_from_store(spark, tmp)
         tele = surv.sparkSession.createDataFrame(
             [(len(affected),)], "n_days_rewritten bigint"
@@ -1567,33 +1565,30 @@ def sketch_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_batch_day = F.dayofmonth(F.expr("CAST(ts AS DATE)")) % 7 == 3
     tmp = tempfile.mkdtemp(prefix="sgraft_sketch_crud_")
     try:
-        from .retrieval import _published_versions
+        from .retrieval import _published_versions, _run_staged
 
-        # the exact self-check aggregate depends only on the base
-        # fact, not on the store — run it as a concurrent driver job
-        # while the whole mutation chain runs (optimization r16, guide
-        # §2.6; the checkpointed frame joins identically to the lazy
-        # one, so the checked rows are unchanged)
-        from concurrent.futures import ThreadPoolExecutor
-
+        batch = ev.filter(is_batch_day)
         surv = ev.filter(~_del_users_pred())
-        with ThreadPoolExecutor(max_workers=1) as _pool:
-            _f_exact = _pool.submit(
-                lambda: surv.groupBy("event_type")
-                .agg(F.countDistinct("user_id").alias("exact_users"))
-                .localCheckpoint(eager=True)
-            )
+
+        def _chain() -> tuple[int, int]:
             _init_sketch_store(ev.filter(~is_batch_day), tmp)
-            batch = ev.filter(is_batch_day)
             upsert_sketch_rollup_store(batch, tmp)
             delete_users_from_sketch_store(
                 spark, tmp, ev, _del_users_pred()
             )
             _, n_after = compact_sketch_store(spark, tmp)
-            n_before_vac = len(_published_versions(spark, tmp))
+            n_before = len(_published_versions(spark, tmp))
             vacuum_sketch_store(spark, tmp, keep_last=1)
-            n_purged = n_before_vac - len(_published_versions(spark, tmp))
-            exact = _f_exact.result()
+            return n_after, n_before - len(_published_versions(spark, tmp))
+
+        # the exact self-check depends only on the base fact, so it
+        # runs as a concurrent job alongside the mutation chain
+        exact, (n_after, n_purged) = _run_staged(
+            lambda: surv.groupBy("event_type")
+            .agg(F.countDistinct("user_id").alias("exact_users"))
+            .localCheckpoint(eager=True),
+            _chain,
+        )
         merged = serve_sketch_rollup_from_store(spark, tmp)
         tele = (
             spark.createDataFrame(
@@ -1676,115 +1671,48 @@ ORACLES["sketch_crud_chain"] = (
 )
 
 
-# --- streaming sketch-store ingestion (r13) ----------------------------------
+# --- streaming sketch-store ingestion ----------------------------------------
 #
-# The third store's ingest-stream leg, and the one where composition is
-# FREE by algebra: serve-time hll_union_agg is associative and
-# commutative over cells, so ANY batch split of the fact — including
-# splits that land partial days in different micro-batches — composes
-# to the same served estimates; no version chain or frozen model is
-# needed.  The foreachBatch sink is the certified append
-# (upsert_sketch_rollup_store) plus the same per-batch marker
-# idempotency contract as the BM25/ANN sinks.
+# Composition is free by algebra here: serve-time hll_union_agg is
+# associative and commutative over cells, so any batch split of the
+# fact, including splits that land partial days in different
+# micro-batches, composes to the same served estimates.
 
 
-def _sketch_stream_sink(store: str, bdf: DataFrame, bid: int) -> None:
-    """foreachBatch sink for the sketch store, exactly-once on
-    redelivery by the same construction as the BM25 sink (ADVICE r14
-    #1): the batch id rides the version's PUBLISH marker, so the
-    authoritative skip-check is "does any published version already
-    carry this bid" — one metadata read, no window between apply and
-    record.  The ``_batches/bid=N`` marker is only a fast path."""
-    from .retrieval import (
-        _fs_of,
-        _published_bids,
-        _published_versions,
-        _store_dir_exists,
-    )
-
-    sess = bdf.sparkSession
-    marker = f"{store}/_batches/bid={bid}"
-    if _store_dir_exists(sess, marker):
-        return  # redelivered, already fully applied
-    if not bdf.isEmpty():
-        published = _published_versions(sess, store)
-        if published and bid in _published_bids(sess, store):
-            pass  # redelivered: a published version carries this bid
-        elif not published:
-            _init_sketch_store(bdf, store, bid=bid)
-        else:
-            upsert_sketch_rollup_store(bdf, store, bid=bid)
-    fs, hp = _fs_of(sess, marker)
-    fs.mkdirs(hp)
-
-
-def _run_sketch_upsert_stream(
-    spark: SparkSession, sf_dir: str, root: str
-) -> None:
-    """Stage the fact feed, run the availableNow append stream into
-    ``root/store``, and block until it drains (extracted so the
-    composition unit can inspect the store the registry query
-    deletes)."""
-    from .retrieval import N_FEED_FILES
-
-    store = f"{root}/store"
+def _sketch_stream(spark: SparkSession, sf_dir: str) -> tuple:
+    """(feed, init, upsert) of the sketch ingest stream."""
     ev = load_tables(spark, sf_dir)["events"].filter(
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
-    ev.repartition(N_FEED_FILES).write.parquet(f"{root}/feed")
-
-    def sink(bdf: DataFrame, bid: int) -> None:
-        _sketch_stream_sink(store, bdf, bid)
-
-    q = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{root}/feed")
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(300)
-        if q.isActive:
-            raise TimeoutError("sketch upsert stream did not drain in 300 s")
-    finally:
-        if q.isActive:
-            try:
-                q.stop()
-            except Exception:
-                pass
+    return ev, _init_sketch_store, upsert_sketch_rollup_store
 
 
 def sketch_stream_upsert_store(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """STREAMING ingestion into the sketch store: stage the fact as
-    N_FEED_FILES parquet files, run a real availableNow stream
-    (one micro-batch per file), and let ``foreachBatch`` append each
-    batch's (day, type) HLL cells — partial-day cells from different
-    batches coexist and merge at serve time (union associativity), so
-    the N-batch composition equals the single-pass build WITHOUT any
-    cross-batch coordination.  After the stream drains, merged per-type
-    estimates are self-checked against the exact distinct over all
-    events; n_days_stored (distinct day partitions in the composed
-    store) binds the store's physical layout into the checked rows."""
+    """Streaming ingestion into the sketch store: the fact feeds
+    :func:`retrieval.stream_into_store`, each micro-batch appending its
+    (day, type) HLL cells.  Partial-day cells from different batches
+    coexist and merge at serve time, so the N-batch composition equals
+    the single-pass build with no cross-batch coordination.  Merged
+    per-type estimates are self-checked against the exact distinct over
+    all events; n_days_stored (distinct days the final manifest pins)
+    binds the store's layout into the checked rows."""
     import shutil
     import tempfile
 
-    ev = load_tables(spark, sf_dir)["events"].filter(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
+    from .retrieval import (
+        _latest_version,
+        _manifest_entries,
+        stream_into_store,
     )
+
+    ev, init, upsert = _sketch_stream(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="sgraft_sketch_stream_")
     try:
-        _run_sketch_upsert_stream(spark, sf_dir, tmp)
-        store = f"{tmp}/store"
-        # distinct pinned days straight from the latest manifest — a
-        # driver-side metadata read (entries are (seg, day) pairs;
-        # partial-day cells from different batches pin the same day)
-        from .retrieval import _latest_version, _manifest_entries
-
+        store = stream_into_store(spark, ev, tmp, init, upsert)
+        # entries are (seg, day) pairs; partial-day cells from
+        # different batches pin the same day
         n_days = len(
             {
                 d

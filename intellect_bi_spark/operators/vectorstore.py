@@ -912,107 +912,42 @@ def ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# --- streaming index ingestion (r13, VERDICT r12 #4) -------------------------
+# --- streaming index ingestion -----------------------------------------------
 #
-# The ANN twin of retrieval.bm25_stream_upsert_store: a REAL
-# availableNow file stream over the staged corpus drives the certified
-# cell-partition upsert per micro-batch, composing the full index from
-# an EMPTY store.  The frozen-model discipline is held ACROSS batches:
-# the model (centroids + reservoir codebook) is written once by the
-# first batch — from the fixed training reservoir, which is a build-
-# time artifact independent of batch arrival order — and every batch
-# (including the first) only appends codes.
+# The frozen-model discipline holds across micro-batches: the first
+# batch writes the model (centroids and reservoir codebook) from the
+# fixed training reservoir, a build-time artifact independent of batch
+# arrival order, and every batch, the first included, only appends codes.
 
 
-def _ann_stream_sink(
-    sf_dir: str, store: str, bdf: DataFrame, bid: int
-) -> None:
-    """foreachBatch body for the ANN ingest stream: the first applied
-    batch initializes the manifest-pinned store (frozen model + v=1
-    segment), every later batch runs the certified versioned upsert.
-    Redelivery is exactly-once end to end (the
-    retrieval._bm25_stream_sink contract, ADVICE r14 #1): the batch id
-    rides in the publish marker, so the authoritative skip-check —
-    "does any PUBLISHED version carry this bid" — is atomic with the
-    version commit; the ``_batches/bid=N`` marker is only a fast
-    path.  A crash midway through a batch (before its publish) leaves
-    unpinned segment + staged-dir debris for vacuum and the retry
-    re-applies against the same latest version."""
-    from .retrieval import _fs_of, _published_bids, _published_versions, _store_dir_exists
-
-    sess = bdf.sparkSession
-    marker = f"{store}/_batches/bid={bid}"
-    if _store_dir_exists(sess, marker):
-        return
-    if not bdf.isEmpty():
-        published = _published_versions(sess, store)
-        if published and bid in _published_bids(sess, store):
-            pass  # redelivered: a published version carries this bid
-        elif not published:
-            _init_ann_versioned(sess, sf_dir, store, bdf, bid=bid)
-        else:
-            upsert_index(sess, sf_dir, store, bdf, bid=bid)
-    fs, hp = _fs_of(sess, marker)
-    fs.mkdirs(hp)
-
-
-def _run_ann_upsert_stream(
-    spark: SparkSession, sf_dir: str, root: str
-) -> None:
-    """Stage the corpus feed, run the availableNow ingest stream into
-    ``root/store``, and block until it drains (extracted so the
-    composition unit can inspect the store the registry query
-    deletes)."""
-    from .retrieval import N_FEED_FILES
-
-    store = f"{root}/store"
-    emb = _emb(spark, sf_dir)
-    emb.repartition(N_FEED_FILES).write.parquet(f"{root}/feed")
-
-    def sink(bdf: DataFrame, bid: int) -> None:
-        _ann_stream_sink(sf_dir, store, bdf, bid)
-
-    q = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{root}/feed")
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+def _ann_stream(spark: SparkSession, sf_dir: str) -> tuple:
+    """(feed, init, upsert) of the ANN ingest stream."""
+    return (
+        _emb(spark, sf_dir),
+        lambda b, s, bid: _init_ann_versioned(
+            b.sparkSession, sf_dir, s, b, bid=bid
+        ),
+        lambda b, s, bid: upsert_index(b.sparkSession, sf_dir, s, b, bid=bid),
     )
-    try:
-        q.awaitTermination(300)
-        if q.isActive:
-            raise TimeoutError("ann upsert stream did not drain in 300 s")
-    finally:
-        if q.isActive:
-            try:
-                q.stop()
-            except Exception:
-                pass
 
 
 def ann_stream_upsert_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING ingestion into the ANN index store: stage the corpus
-    as N_FEED_FILES parquet files, run a real availableNow stream
-    (`maxFilesPerTrigger=1` → one micro-batch per file), and let
-    ``foreachBatch`` compose the index from an EMPTY store — the first
-    batch writes the frozen model, every batch appends its codes into
-    affected cells only.  After the stream drains, the fixed top-k is
-    served from the composed store and must equal the full-rebuild
-    restatement — proving the N-batch cell-append chain COMPOSES under
-    the frozen-model discipline (the model never depends on batch
-    order).  Output binds n_vecs_indexed (distinct vectors in the
-    stored codes) into the checked rows; the per-batch marker chain is
-    locked by tests/test_vectorstore.py."""
+    """Streaming ingestion into the ANN index store: the embeddings feed
+    :func:`retrieval.stream_into_store`, composing the index from an
+    empty store (the first batch writes the frozen model, every batch
+    appends its codes into the affected cells only).  The model never
+    depends on batch order, so the top-k served from the composed store
+    equals the full rebuild's; the output binds n_vecs_indexed, the
+    distinct vectors in the stored codes."""
     import shutil
     import tempfile
 
+    from .retrieval import stream_into_store
+
     tmp = tempfile.mkdtemp(prefix="sgraft_ann_stream_")
     try:
-        _run_ann_upsert_stream(spark, sf_dir, tmp)
-        store = f"{tmp}/store"
+        feed, init, upsert = _ann_stream(spark, sf_dir)
+        store = stream_into_store(spark, feed, tmp, init, upsert)
         centroids, codebook, codes = read_index_versioned(spark, store)
         nv = codes.select("vec_id").distinct().agg(
             F.count(F.lit(1)).alias("n_vecs_indexed")
@@ -1359,34 +1294,26 @@ def ann_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         ]
         compact_index_cells(spark, tmp, batch_cells)
-        from .retrieval import _latest_version
+        from .retrieval import _latest_version, _run_staged
 
-        # retention vacuum (result unused) runs concurrently with the
-        # serve of the latest version (optimization r16, guide §2.6):
-        # vacuum retains exactly the version served — manifest, model
-        # tables and every pinned segment — so the reader is
-        # undisturbed by construction; joined before teardown.
-        from concurrent.futures import ThreadPoolExecutor
-
+        # the retention vacuum runs alongside the serve: it keeps the
+        # served version's manifest, model tables and pinned segments
         v = _latest_version(spark, tmp)
-        with ThreadPoolExecutor(max_workers=1) as _pool:
-            _vac = _pool.submit(vacuum_ann_store, spark, tmp, keep_last=1)
-            tele = dels.agg(
-                F.count(F.lit(1)).alias("n_deleted"),
-                F.lit(len(affected_del)).cast("bigint").alias(
-                    "n_cells_rewritten"
-                ),
+        tele = dels.agg(
+            F.count(F.lit(1)).alias("n_deleted"),
+            F.lit(len(affected_del)).cast("bigint").alias(
+                "n_cells_rewritten"
+            ),
+        )
+        _, out = _run_staged(
+            lambda: vacuum_ann_store(spark, tmp, keep_last=1),
+            lambda: topk_from_index(
+                *read_index_versioned(spark, tmp, v), emb
             )
-            centroids2, codebook, codes = read_index_versioned(
-                spark, tmp, v
-            )
-            out = (
-                topk_from_index(centroids2, codebook, codes, emb)
-                .crossJoin(F.broadcast(tele))
-                .withColumn("final_version", F.lit(v).cast("bigint"))
-                .localCheckpoint(eager=True)
-            )
-            _vac.result()
+            .crossJoin(F.broadcast(tele))
+            .withColumn("final_version", F.lit(v).cast("bigint"))
+            .localCheckpoint(eager=True),
+        )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return out

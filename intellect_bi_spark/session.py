@@ -77,17 +77,6 @@ def get_spark(app_name: str = "intellect_bi_spark") -> SparkSession:
             "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
             "2",
         )
-        # FAIR scheduler (optimization r16, guide §2.6 full form): the
-        # store-mutation legs submit 2-3 independent staged writes as
-        # concurrent jobs (retrieval._run_staged), each tagged with its
-        # own scheduler pool.  Under the default FIFO mode a big segment
-        # write can head-of-line block the small lexicon/stats writes on
-        # a busy cluster; FAIR gives each staged job an equal share.
-        # Sequential queries are unaffected (one pool, one job at a
-        # time).  Static conf — applies to sessions this factory builds;
-        # an externally-built FIFO session still runs the same code
-        # (the pool tag is a no-op under FIFO).
-        .config("spark.scheduler.mode", "FAIR")
         # Generated-code cache: Spark's default holds 100 classes, fewer
         # than one interactive request mix uses, so every request
         # recompiled its classes (Janino, tens of ms each). Measured

@@ -230,20 +230,17 @@ def test_sketch_compact_serve_invariant(spark, sf_dir):
 
 
 def test_sketch_stream_composes_to_single_pass_build(spark, sf_dir):
-    """The streaming ingest chain: per-batch markers land, the batch
-    ids ride the publish markers (the exactly-once record — ADVICE r14
-    #1: redelivery skips even if the fast _batches marker is gone),
+    """The streaming ingest chain: the batch ids ride the publish
+    markers (the exactly-once ledger: a redelivered batch is skipped),
     and the stream-composed store SERVES exactly what the single-pass
     build serves — partial-day cells from different batches merge
     losslessly (union associativity over max-register HLL)."""
     ev = _events(spark, sf_dir)
+    feed, init, upsert = sk._sketch_stream(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="sgraft_skstream_")
     tmp2 = tempfile.mkdtemp(prefix="sgraft_skstream_build_")
     try:
-        sk._run_sketch_upsert_stream(spark, sf_dir, tmp)
-        store = f"{tmp}/store"
-        for bid in range(rt.N_FEED_FILES):
-            assert os.path.isdir(f"{store}/_batches/bid={bid}")
+        store = rt.stream_into_store(spark, feed, tmp, init, upsert)
         assert rt._published_bids(spark, store) == set(
             range(rt.N_FEED_FILES)
         )
@@ -253,14 +250,13 @@ def test_sketch_stream_composes_to_single_pass_build(spark, sf_dir):
         # exact accounting reached the store losslessly
         n_ev = ev.count()
         assert sum(n for _t, _e, n in got) == n_ev
-        # redelivery of an applied batch id must change nothing, even
-        # with the fast marker REMOVED (the publish-marker bid is the
-        # authoritative ledger)
-        shutil.rmtree(f"{store}/_batches/bid=0")
+        # redelivery of an applied batch id through the sink changes
+        # nothing: same version, same served rows
         v_before = rt._latest_version(spark, store)
-        sk._sketch_stream_sink(store, ev.limit(50), 0)
-        assert rt._latest_version(spark, store) == v_before
-        assert _served(spark, store) == got
+        for bid in (0, rt.N_FEED_FILES - 1):
+            rt._apply_stream_batch(store, ev.limit(50), bid, init, upsert)
+            assert rt._latest_version(spark, store) == v_before
+            assert _served(spark, store) == got
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
         shutil.rmtree(tmp2, ignore_errors=True)

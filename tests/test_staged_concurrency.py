@@ -1,16 +1,20 @@
-"""Focused units for the r15 optimization internals: `_run_staged`
-(concurrent staged-write execution inside a mutation leg — guide §2.6)
-must run every thunk, propagate failures, and degrade to a plain call
-for a single thunk.  The store-content consequences of using it (byte-
-identical pinned files, manifest correctness, serve parity) are locked
-by the existing test_vectorstore / test_pin_lifecycle / test_parity
-suites; these units pin the helper's own contract."""
+"""Focused units for `_run_staged`, the package's one driver-thread
+helper: it must run every thunk, propagate failures, and degrade to a
+plain call for a single thunk; it is the only place the package builds
+a thread pool, and the engine runs Spark's default FIFO scheduler.
+The store-content consequences of using it (byte-identical pinned
+files, manifest correctness, serve parity) are locked by the
+test_vectorstore / test_pin_lifecycle / test_parity suites."""
 
+import ast
 import threading
+from pathlib import Path
 
 import pytest
 
 from intellect_bi_spark.operators.retrieval import _run_staged
+
+PACKAGE = Path(__file__).resolve().parents[1] / "intellect_bi_spark"
 
 
 def test_run_staged_runs_every_thunk():
@@ -56,26 +60,63 @@ def test_run_staged_returns_results_in_argument_order():
     assert _run_staged(lambda: "only") == ["only"]
 
 
-def test_concurrent_run_staged_calls_use_distinct_pools(spark):
-    """Two mutations staging at once (the concurrent chains of one
-    query) must not share FAIR pools: every thunk of both calls runs
-    in a pool of its own."""
-    sc = spark.sparkContext
-    all_running = threading.Barrier(4, timeout=30)
-    pools = []
-    lock = threading.Lock()
+def test_engine_session_is_fifo_and_leaks_no_pools(spark, sf_dir):
+    """The engine session runs Spark's default FIFO scheduler, and a
+    store build that stages concurrent writes registers no scheduler
+    pool, so repeated runs leave the pool count unchanged."""
+    from intellect_bi_spark.operators import vectorstore as vs
 
-    def thunk():
-        all_running.wait()
-        with lock:
-            pools.append(sc.getLocalProperty("spark.scheduler.pool"))
+    sc = spark.sparkContext._jsc.sc()
+    assert sc.getSchedulingMode().toString() == "FIFO"
+    before = sc.getAllPools().size()
+    for _ in range(2):
+        vs.ann_index_store(spark, sf_dir).collect()
+    assert sc.getAllPools().size() == before
 
-    callers = [
-        threading.Thread(target=_run_staged, args=(thunk, thunk))
-        for _ in range(2)
-    ]
-    for t in callers:
-        t.start()
-    for t in callers:
-        t.join(60)
-    assert len(pools) == 4 and len(set(pools)) == 4, pools
+
+def _calls_by_function(tree: ast.AST) -> list[tuple[str | None, ast.Call]]:
+    """(name of the innermost enclosing function, call) for every call."""
+    out: list[tuple[str | None, ast.Call]] = []
+
+    def visit(node: ast.AST, fn: str | None) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            if isinstance(child, ast.Call):
+                out.append((fn, child))
+            visit(child, fn)
+
+    visit(tree, None)
+    return out
+
+
+def test_one_thread_pool_and_no_scheduler_settings():
+    """The package constructs ``ThreadPoolExecutor`` only inside
+    ``_run_staged``, and no code names a scheduler mode or pool."""
+    pool_sites, settings = [], []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        names = {"ThreadPoolExecutor"} | {
+            alias.asname
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom)
+            for alias in node.names
+            if alias.name == "ThreadPoolExecutor" and alias.asname
+        }
+        for fn, call in _calls_by_function(tree):
+            f = call.func
+            callee = f.id if isinstance(f, ast.Name) else getattr(
+                f, "attr", None
+            )
+            if callee in names:
+                pool_sites.append((path.name, fn))
+        settings += [
+            (path.name, node.lineno)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Constant)
+            and node.value
+            in ("spark.scheduler.pool", "spark.scheduler.mode")
+        ]
+    assert pool_sites == [("retrieval.py", "_run_staged")]
+    assert settings == []

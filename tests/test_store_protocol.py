@@ -9,6 +9,8 @@ IVF-PQ codes, HLL sketch rollup), checked across all four families:
   which each value of the segment's value column lies in exactly one
   file, sorted, and the value list the write returns (what manifests
   pin) is exactly the set of values stored;
+- the stream sink ignores an empty micro-batch, at the first bid and
+  at a later one;
 - every family's manifest is one JSON object ``{"pins": [...]}`` (BM25
   adds ``"stats"``) that round-trips through ``_read_manifest``;
 - the BM25 steps stay within their Spark job budgets, and a delete
@@ -35,6 +37,12 @@ from intellect_bi_spark.operators import vectorstore as vs
 from tests.test_plans import _group_jobs
 
 FAMILIES = ("bm25", "positional", "ann", "sketch")
+STREAMS = {  # family → its ingest stream's (feed, init, upsert)
+    "bm25": rt._bm25_stream,
+    "positional": rt._pos_stream,
+    "ann": vs._ann_stream,
+    "sketch": sk._sketch_stream,
+}
 
 
 def _docs(spark, sf_dir):
@@ -346,6 +354,26 @@ def test_store_serve_submits_no_job_before_action(spark, sf_dir, family):
                 "jobGroup.id", "job.description", "job.interruptOnCancel"
             ):
                 sc.setLocalProperty(f"spark.{prop}", None)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+@pytest.mark.parametrize("family", FAMILIES)
+def test_empty_micro_batch_publishes_nothing(spark, sf_dir, family):
+    """The stream sink ignores an empty micro-batch: at bid 0 it does
+    not initialize the store (nothing is written), and at a later bid
+    it publishes no version and records no bid."""
+    feed, init, upsert = STREAMS[family](spark, sf_dir)
+    tmp = tempfile.mkdtemp(prefix="sgraft_store_empty_batch_")
+    store = f"{tmp}/store"
+    try:
+        rt._apply_stream_batch(store, feed.limit(0), 0, init, upsert)
+        assert not os.path.exists(store)
+        rt._apply_stream_batch(store, feed, 0, init, upsert)
+        assert rt._published_versions(spark, store) == [1]
+        rt._apply_stream_batch(store, feed.limit(0), 2, init, upsert)
+        assert rt._published_versions(spark, store) == [1]
+        assert rt._published_bids(spark, store) == {0}
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -507,9 +507,10 @@ def test_bm25_v2_serve_prunes_term_buckets(spark, sf_dir):
 def test_bm25_stream_upsert_version_chain(spark, sf_dir):
     """The streaming ingest really runs as N_FEED_FILES micro-batches
     (maxFilesPerTrigger=1 under availableNow), each publishing one more
-    manifest — and the final version serves the exact direct
-    full-corpus ranking, with df and stats equal to a rebuild's (the
-    upsert chain composes)."""
+    manifest that carries its batch id — and the final version serves
+    the exact direct full-corpus ranking, with df and stats equal to a
+    rebuild's (the upsert chain composes).  A redelivered batch is
+    skipped by its published bid."""
     import os
 
     from intellect_bi_spark.operators import retrieval as rt
@@ -518,10 +519,10 @@ def test_bm25_stream_upsert_version_chain(spark, sf_dir):
         (r["doc_id"], r["n_hit_terms"], r["score_q"])
         for r in rt.bm25_topk_docs(spark, sf_dir).collect()
     ]
+    feed, init, upsert = rt._bm25_stream(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="sgraft_bm25streamtest_")
     try:
-        rt._run_bm25_upsert_stream(spark, sf_dir, tmp)
-        store = f"{tmp}/store"
+        store = rt.stream_into_store(spark, feed, tmp, init, upsert)
         assert rt._latest_version(spark, store) == rt.N_FEED_FILES
         # every intermediate version survives (snapshot isolation chain)
         for v in range(1, rt.N_FEED_FILES + 1):
@@ -539,24 +540,17 @@ def test_bm25_stream_upsert_version_chain(spark, sf_dir):
         stats = rt._read_manifest(spark, store, v)["stats"]
         assert stats == _rebuild_stats(docs)
         assert _pinned_df(spark, store, v) == _rebuild_df(docs)
-        # redelivery idempotency (ADVICE r12): every applied batch left
-        # a marker, and re-running the sink with an already-applied
-        # batch id must NOT double-append — version chain and stats are
-        # unchanged after the redelivery
-        for bid in range(rt.N_FEED_FILES):
-            assert os.path.isdir(f"{store}/_batches/bid={bid}")
-        redelivered = rt._base_docs(spark, sf_dir).limit(5)
-        rt._bm25_stream_sink(store, redelivered, 0)
-        assert rt._latest_version(spark, store) == v
-        assert rt._read_manifest(spark, store, v)["stats"] == stats
-        # the AUTHORITATIVE exactly-once check (ADVICE r14 #1): even
-        # with the _batches fast-path marker REMOVED (the crashed
-        # publish-to-marker window), redelivery is skipped because a
-        # published version already carries the bid
-        shutil.rmtree(f"{store}/_batches/bid=0")
-        assert 0 in rt._published_bids(spark, store)
-        rt._bm25_stream_sink(store, redelivered, 0)
-        assert rt._latest_version(spark, store) == v
+        # exactly-once: every applied batch's id rides a published
+        # version, so redelivering one through the sink must NOT
+        # double-append — version, stats and served rows unchanged
+        assert rt._published_bids(spark, store) == set(
+            range(rt.N_FEED_FILES)
+        )
+        redelivered = docs.limit(5)
+        for bid in (0, rt.N_FEED_FILES - 1):
+            rt._apply_stream_batch(store, redelivered, bid, init, upsert)
+            assert rt._latest_version(spark, store) == v
+            assert rt._read_manifest(spark, store, v)["stats"] == stats
         got2 = [
             (r["doc_id"], r["n_hit_terms"], r["score_q"])
             for r in rt.serve_bm25_v2(spark, store).collect()
@@ -739,20 +733,16 @@ def test_ann_delete_rewrites_only_affected_cells(spark, sf_dir):
 
 def test_ann_stream_upsert_marker_chain(spark, sf_dir):
     """The ANN ingest stream really runs as N_FEED_FILES micro-batches,
-    leaves one applied-batch marker per batch, composes the full corpus
-    into the codes table, and skips a redelivered batch id without
-    double-appending (same idempotency contract as the BM25 sink)."""
-    import os
-
+    each publishing one version whose publish marker carries its batch
+    id, composes the full corpus into the codes table, and skips a
+    redelivered batch id without double-appending."""
     from intellect_bi_spark.operators import retrieval as rt
 
     emb = _emb(spark, sf_dir)
+    feed, init, upsert = vs._ann_stream(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="sgraft_annstreamtest_")
     try:
-        vs._run_ann_upsert_stream(spark, sf_dir, tmp)
-        store = f"{tmp}/store"
-        for bid in range(rt.N_FEED_FILES):
-            assert os.path.isdir(f"{store}/_batches/bid={bid}")
+        store = rt.stream_into_store(spark, feed, tmp, init, upsert)
         # one published version per applied batch, each carrying its bid
         assert rt._latest_version(spark, store) == rt.N_FEED_FILES
         assert rt._published_bids(spark, store) == set(
@@ -778,18 +768,20 @@ def test_ann_stream_upsert_marker_chain(spark, sf_dir):
             ).collect()
         ]
         assert serve == want and len(serve) == vs.TOP_K
-        # redelivery of an applied batch id must change nothing
-        vs._ann_stream_sink(sf_dir, store, emb.limit(5), 0)
-        codes2 = vs.read_index_versioned(spark, store)[2]
-        assert codes2.count() == n_rows
-        assert codes2.select("vec_id").distinct().count() == n_corpus
-        # the AUTHORITATIVE exactly-once check (ADVICE r14 #1): even
-        # with the fast-path marker removed — the crashed
-        # publish-to-marker window — the published bid skips the batch
-        shutil.rmtree(f"{store}/_batches/bid=0")
-        vs._ann_stream_sink(sf_dir, store, emb.limit(5), 0)
-        assert rt._latest_version(spark, store) == rt.N_FEED_FILES
-        assert vs.read_index_versioned(spark, store)[2].count() == n_rows
+        # redelivery of an applied batch id through the sink changes
+        # nothing: same version, same codes, same served rows
+        for bid in (0, rt.N_FEED_FILES - 1):
+            rt._apply_stream_batch(store, emb.limit(5), bid, init, upsert)
+            assert rt._latest_version(spark, store) == rt.N_FEED_FILES
+            codes2 = vs.read_index_versioned(spark, store)[2]
+            assert codes2.count() == n_rows
+            assert codes2.select("vec_id").distinct().count() == n_corpus
+        assert [
+            tuple(r)
+            for r in vs.topk_from_index(
+                *vs.read_index_versioned(spark, store), emb
+            ).collect()
+        ] == serve
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1711,22 +1703,22 @@ def test_bm25_filtered_topk_semantics_and_plan(spark, sf_dir):
 
 
 def test_pos_stream_upsert_version_chain(spark, sf_dir):
-    """The positional ingest stream (r15): N_FEED_FILES micro-batches
-    each publish one more manifest version, the stream-composed store
-    serves BOTH probes exactly as a single-pass build does, and
-    redelivery is exactly-once end to end (bid rides the publish
-    marker — skipped even with the fast-path marker removed)."""
+    """The positional ingest stream: N_FEED_FILES micro-batches each
+    publish one more manifest version carrying its batch id, the
+    stream-composed store serves BOTH probes exactly as a single-pass
+    build does, and a redelivered batch is skipped by its published
+    bid."""
     import os
 
     from intellect_bi_spark.operators import retrieval as rt
 
+    feed, init, upsert = rt._pos_stream(spark, sf_dir)
     build_tmp = tempfile.mkdtemp(prefix="sgraft_posstream_build_")
     tmp = tempfile.mkdtemp(prefix="sgraft_posstreamtest_")
     try:
         rt._init_pos_store(rt._base_docs(spark, sf_dir), build_tmp)
         want = rt._pos_probes_from_store(spark, build_tmp).collect()
-        rt._run_pos_upsert_stream(spark, sf_dir, tmp)
-        store = f"{tmp}/store"
+        store = rt.stream_into_store(spark, feed, tmp, init, upsert)
         assert rt._latest_version(spark, store) == rt.N_FEED_FILES
         # every intermediate manifest survives (snapshot chain)
         for v in range(1, rt.N_FEED_FILES + 1):
@@ -1735,19 +1727,18 @@ def test_pos_stream_upsert_version_chain(spark, sf_dir):
             )
         got = rt._pos_probes_from_store(spark, store).collect()
         assert [tuple(r) for r in got] == [tuple(r) for r in want]
-        # redelivery: fast marker present → no-op
+        # exactly-once: redelivery through the sink is skipped by the
+        # bid its published version carries
         v = rt._latest_version(spark, store)
-        for bid in range(rt.N_FEED_FILES):
-            assert os.path.isdir(f"{store}/_batches/bid={bid}")
+        assert rt._published_bids(spark, store) == set(
+            range(rt.N_FEED_FILES)
+        )
+        pins = rt._manifest_entries(spark, store, v)
         redelivered = rt._base_docs(spark, sf_dir).limit(5)
-        rt._pos_stream_sink(store, redelivered, 0)
-        assert rt._latest_version(spark, store) == v
-        # authoritative exactly-once: fast marker REMOVED, the publish
-        # marker's bid still skips the redelivered batch
-        shutil.rmtree(f"{store}/_batches/bid=0")
-        assert 0 in rt._published_bids(spark, store)
-        rt._pos_stream_sink(store, redelivered, 0)
-        assert rt._latest_version(spark, store) == v
+        for bid in (0, rt.N_FEED_FILES - 1):
+            rt._apply_stream_batch(store, redelivered, bid, init, upsert)
+            assert rt._latest_version(spark, store) == v
+            assert rt._manifest_entries(spark, store, v) == pins
         got2 = rt._pos_probes_from_store(spark, store).collect()
         assert [tuple(r) for r in got2] == [tuple(r) for r in want]
     finally:

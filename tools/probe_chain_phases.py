@@ -27,13 +27,11 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from intellect_bi_spark.operators import retrieval, sketches, vectorstore
-    from intellect_bi_spark.catalog import load_tables
 
     N = retrieval.N_FEED_FILES
 
     if which == "bm25":
-        feed_df = lambda: retrieval._base_docs(spark, sf_dir)  # noqa: E731
-        sink_fn = retrieval._bm25_stream_sink
+        wiring = retrieval._bm25_stream
 
         def serve(tmp):
             store = f"{tmp}/store"
@@ -47,22 +45,14 @@ def main() -> None:
                 .localCheckpoint(eager=True)
             )
     elif which == "sketch":
-        def feed_df():
-            return load_tables(spark, sf_dir)["events"].filter(
-                F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-            )
-        sink_fn = sketches._sketch_stream_sink if hasattr(
-            sketches, "_sketch_stream_sink") else None
+        wiring = sketches._sketch_stream
 
         def serve(tmp):
             sketches.serve_sketch_rollup_from_store(
                 spark, f"{tmp}/store"
             ).collect()
     elif which == "ann":
-        feed_df = lambda: vectorstore._emb(spark, sf_dir)  # noqa: E731
-
-        def sink_fn(store, bdf, bid):
-            vectorstore._ann_stream_sink(sf_dir, store, bdf, bid)
+        wiring = vectorstore._ann_stream
 
         def serve(tmp):
             store = f"{tmp}/store"
@@ -77,6 +67,13 @@ def main() -> None:
                 .crossJoin(F.broadcast(nv))
                 .localCheckpoint(eager=True)
             )
+    elif which == "phrase":
+        wiring = retrieval._pos_stream
+
+        def serve(tmp):
+            retrieval._pos_probes_from_store(
+                spark, f"{tmp}/store"
+            ).collect()
     else:
         raise SystemExit(f"unsupported: {which}")
 
@@ -86,13 +83,13 @@ def main() -> None:
         try:
             ph = {}
             t0 = time.perf_counter()
-            df = feed_df()
+            df, init, upsert = wiring(spark, sf_dir)
             df.repartition(N).write.parquet(f"{tmp}/feed")
             ph["stage_feed"] = round(time.perf_counter() - t0, 3)
             store = f"{tmp}/store"
 
             def sink(bdf, bid):
-                sink_fn(store, bdf, bid)
+                retrieval._apply_stream_batch(store, bdf, bid, init, upsert)
 
             t0 = time.perf_counter()
             q = (
