@@ -353,7 +353,7 @@ def main() -> None:
                     pass
     from intellect_bi_spark.catalog import sales  # noqa: E402
 
-    sales(spark, sf_dir).count()
+    sales(spark, sf_dir)  # a cache-sized view is materialized at build
 
     from intellect_bi_spark.functions import windows  # noqa: E402
     from intellect_bi_spark.operators import (  # noqa: E402

@@ -638,9 +638,8 @@ def test_dsir_token_relation_reused_not_recomputed(spark, sf_dir):
 
 def test_forecast_payload_aggregates_daily_series_once(spark, sf_dir):
     """History and forecast both come from ONE daily aggregate — no union
-    of two daily branches (AQE does not reuse an exchange over a cached
-    relation, so a second branch would aggregate the fact view again) —
-    with no window and no cartesian product."""
+    of two daily branches, each aggregating the fact view — with no
+    window and no cartesian product."""
     from intellect_bi_spark.operators.forecast import forecast_payload
 
     for algo in ("ma7_baseline", "seasonal7", "drift"):

@@ -1,7 +1,10 @@
 #!/usr/bin/env python
 """Whole-registry physical-plan audit: mechanically enforce the scale
 rules every operator is designed to (and tests/test_plans.py locks for a
-sample of). For EVERY registry query, build the plan at sf0.001 and flag:
+sample of). For EVERY registry query, and for the star joins behind the
+``sales`` and ``sales_txn`` views (a cache-sized view is read as one
+materialized relation, so its joins show in no query's plan), build the
+plan at sf0.001 and flag:
 
 - ``CartesianProduct``  — a non-broadcast cross product anywhere.
   (``BroadcastNestedLoopJoin Cross`` against 1-row bounds/stats frames is
@@ -29,6 +32,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from intellect_bi_spark.catalog import (  # noqa: E402
+    SALES_SELECT_SQL,
+    TXN_SALES_SELECT_SQL,
+    load_tables,
+)
 from intellect_bi_spark.registry import QUERIES  # noqa: E402
 from intellect_bi_spark.session import get_spark  # noqa: E402
 
@@ -40,7 +48,12 @@ def main() -> None:
     spark = get_spark("plan_audit")
     violations: dict[str, list[str]] = {}
     checked = 0
-    for name, fn in QUERIES.items():
+    load_tables(spark, SF_DIR)
+    views = {
+        "view:sales": lambda s, _: s.sql(SALES_SELECT_SQL),
+        "view:sales_txn": lambda s, _: s.sql(TXN_SALES_SELECT_SQL),
+    }
+    for name, fn in {**views, **QUERIES}.items():
         try:
             df = fn(spark, SF_DIR)
             buf = io.StringIO()
