@@ -9,6 +9,7 @@ Layout:
 - ``operators``  — the query library (SURVEY.md §2 inventory), each with a
                    DuckDB oracle.
 - ``plans``      — NL-intent → DataFrame compiler + SQL dialect sanitizer.
+- ``store``      — the versioned-store protocol every persisted store shares.
 - ``sources``    — CSV normalization layer, sinks.
 - ``streaming``  — Structured Streaming extensions over the events table.
 """

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import store
 from ..catalog import load_tables
 
 # (edge name, child table, child key, parent table, parent key, broadcast)
@@ -274,7 +275,6 @@ def erasure_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         _base_docs,
         _init_bm25_store,
         _postings_of,
-        _run_staged,
         _toks_of,
         delete_from_bm25_index,
         serve_bm25_v2,
@@ -412,7 +412,7 @@ def erasure_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
 
-        bm_row, ann_row, sk_row = _run_staged(
+        bm_row, ann_row, sk_row = store._run_staged(
             _bm25_chain, _ann_chain, _sketch_chain
         )
         out = release_after_action(

@@ -41,11 +41,10 @@ integer arithmetic.
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import store
 from ..catalog import load_tables
 from ..functions.text import P, md5_mod_hash_duck, md5_mod_hash_sql
 
@@ -603,7 +602,7 @@ def _write_postings(
     once, while a shuffle-map task that is re-run (fetch failure, lost
     executor) would add its rows again.  So the counts are exact, at no
     extra job."""
-    got = _write_observed(
+    got = store._write_observed(
         _postings_of(_toks_of(docs), lead=True),
         root,
         seg,
@@ -613,429 +612,6 @@ def _write_postings(
         keep=lambda rows: rows.filter("term IS NOT NULL").drop("lead"),
     )
     return got["values"], (int(got["n_docs"]), int(got["sum_len"] or 0))
-
-
-def _fs_of(spark: SparkSession, path: str):
-    """(Hadoop FileSystem, Path) for ``path``, resolved through the
-    session's Hadoop configuration, so every store metadata op works
-    on any supported filesystem (HDFS, S3A, local)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(
-        spark._jsc.hadoopConfiguration()  # type: ignore[union-attr]
-    )
-    return fs, hpath
-
-
-def _versions_in(spark: SparkSession, path: str) -> list[int]:
-    """Distinct version numbers present under ``path``, from both the
-    bare marker form ``v=N`` and the attempt-suffixed data-dir form
-    ``v=N-<att>`` (one version can transiently have several attempt
-    dirs)."""
-    fs, hpath = _fs_of(spark, path)
-    if not fs.exists(hpath):
-        return []
-    out = set()
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if name.startswith("v="):
-            out.add(int(name.split("=", 1)[1].split("-", 1)[0]))
-    return sorted(out)
-
-
-def _version_dirs(spark: SparkSession, path: str) -> list[tuple[int, str]]:
-    """(version, dir-name) pairs under ``path`` — unlike
-    :func:`_versions_in` this keeps one row PER DIRECTORY, so vacuum
-    can sweep a losing writer's attempt dirs while keeping the
-    published attempt of the same version."""
-    fs, hpath = _fs_of(spark, path)
-    if not fs.exists(hpath):
-        return []
-    out = []
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if name.startswith("v="):
-            out.append((int(name.split("=", 1)[1].split("-", 1)[0]), name))
-    return sorted(out)
-
-
-def _run_staged(*thunks) -> list:
-    """Run independent thunks as concurrent driver threads and return
-    their results in argument order.  One thunk runs as a plain call.
-
-    The first exception (in argument order) propagates after every
-    thunk has finished, so a caller that publishes after this returns
-    never publishes over a failed staged write: the failure leaves only
-    unpublished debris, which vacuum sweeps."""
-    if len(thunks) == 1:
-        return [thunks[0]()]
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
-        return [f.result() for f in futures]
-
-
-N_FEED_FILES = 4  # staged feed files → availableNow micro-batches
-
-
-def _apply_stream_batch(
-    store: str, bdf: DataFrame, bid: int, init, upsert
-) -> None:
-    """Apply micro-batch ``bid`` to the versioned store at ``store``
-    exactly once: an empty batch does nothing; a bid that a published
-    version already carries is skipped; with no version published the
-    batch initializes the store; otherwise it is upserted.
-
-    The bid rides in the publish marker of the version the batch
-    creates, so the skip check is atomic with the commit.  A crash
-    before the publish leaves only unpublished debris, and the
-    redelivery re-applies against the same latest version.  The ledger
-    is the retained versions' markers: Spark redelivers only the last
-    batch whose commit it did not log, so a vacuum that runs while a
-    stream feeds the store must keep the version carrying that bid."""
-    if bdf.isEmpty():
-        return
-    sess = bdf.sparkSession
-    if not _published_versions(sess, store):
-        init(bdf, store, bid)
-    elif bid not in _published_bids(sess, store):
-        upsert(bdf, store, bid)
-
-
-def stream_into_store(
-    spark: SparkSession, feed: DataFrame, root: str, init, upsert
-) -> str:
-    """Stage ``feed`` as N_FEED_FILES parquet files under ``root``, run
-    an availableNow file stream over them (one micro-batch per file)
-    whose ``foreachBatch`` applies each batch to the store at
-    ``root/store`` (see :func:`_apply_stream_batch`), block until the
-    stream drains and return the store path.  ``init`` and ``upsert``
-    are called as ``(batch, store, bid)``."""
-    store = f"{root}/store"
-    feed.repartition(N_FEED_FILES).write.parquet(f"{root}/feed")
-    q = (
-        spark.readStream.schema(feed.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{root}/feed")
-        .writeStream.foreachBatch(
-            lambda bdf, bid: _apply_stream_batch(store, bdf, bid, init, upsert)
-        )
-        .option("checkpointLocation", f"{root}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(300)
-        if q.isActive:
-            raise TimeoutError(f"stream into {store} did not drain in 300 s")
-    finally:
-        if q.isActive:
-            try:
-                q.stop()
-            except Exception:
-                pass
-    return store
-
-
-class VersionConflict(RuntimeError):
-    """Raised when a writer tries to publish a version number another
-    writer already published — the optimistic-concurrency signal.
-    Callers retry: re-read the new latest, re-merge,
-    publish the next number."""
-
-
-PUBLISH_RETRIES = 3  # optimistic-concurrency retry budget per mutation
-
-
-def _new_seg_id() -> str:
-    """A fresh immutable-segment id.  The 's' prefix keeps it
-    non-numeric, so partition inference over a store reads ``seg`` as
-    a string."""
-    import uuid
-
-    return "s" + uuid.uuid4().hex[:12]
-
-
-def _write_segment(
-    df: DataFrame, root: str, seg: str, pcol: str = "tb"
-) -> list:
-    """Write one immutable segment ``{root}/seg={seg}/`` and return the
-    sorted distinct ``pcol`` values it holds.
-
-    Invariants: the segment is one directory of parquet files in which
-    ``pcol`` is an ordinary stored column; each value lies in exactly
-    one file (the hash repartition puts each value in one task, AQE
-    sizes the task count), and within that file its rows are
-    contiguous, so row-group statistics prune a ``pcol IN (...)``
-    filter.  The value list is observed during the write job itself,
-    typed as stored, so the manifest pins exactly what is on disk at
-    no extra job.  A segment's files are never rewritten once a
-    manifest pins them; overwrite mode confines a retry of the same
-    segment id to its own partial debris."""
-    return _write_observed(df, root, seg, pcol)["values"]
-
-
-def _write_observed(
-    df: DataFrame, root: str, seg: str, pcol: str, *metrics, keep=None
-) -> dict:
-    """:func:`_write_segment` that also observes the aggregate columns
-    ``metrics`` over the rows reaching the write, and then writes
-    ``keep(rows)``; returns the metrics by name and the sorted ``pcol``
-    values as ``"values"``."""
-    from pyspark.sql import Observation
-
-    seen = Observation()
-    rows = (
-        df.repartition(pcol)
-        .sortWithinPartitions(pcol)
-        .observe(seen, F.collect_set(pcol).alias("values"), *metrics)
-    )
-    if keep is not None:
-        rows = keep(rows)
-    rows.write.mode("overwrite").parquet(f"{root}/seg={seg}")
-    return {**seen.get, "values": sorted(seen.get["values"])}
-
-
-def _read_segments(
-    spark: SparkSession,
-    root: str,
-    entries: list[tuple],
-    schema: str,
-    pcol: str = "tb",
-    with_seg: bool = False,
-) -> DataFrame:
-    """Exactly the rows of the (seg, value) pairs ``entries`` pins, as
-    ``schema`` (plus the ``seg`` string column when ``with_seg``).
-
-    Invariants: ``schema`` declares every stored column, ``pcol``
-    included, so the read infers nothing and submits no job until the
-    caller's action; ``seg`` is the only directory partition, so the
-    filter prunes the scan to the pinned segment directories, and its
-    ``pcol IN (...)`` part is pushed into the parquet scan, where the
-    value-sorted files' row-group statistics skip unpinned values.  No
-    pins yield an empty frame of the same schema."""
-    stored = f"{schema}, seg string"
-    out = stored if with_seg else schema
-    cols = [c.split()[0] for c in out.split(",")]
-    if not entries:
-        return spark.createDataFrame([], out)
-    pinned: dict[str, list] = {}
-    for s, t in sorted(entries):
-        pinned.setdefault(s, []).append(t)
-    keep = None
-    for s, ts in pinned.items():
-        cond = (F.col("seg") == s) & F.col(pcol).isin(ts)
-        keep = cond if keep is None else keep | cond
-    return (
-        spark.read.schema(stored)
-        .option("basePath", root)
-        .parquet(*(f"{root}/seg={s}" for s in pinned))
-        .filter(keep)
-        .select(*cols)
-    )
-
-
-def _write_manifest(
-    spark: SparkSession,
-    store: str,
-    v: int,
-    entries: list[tuple],
-    att: str,
-    stats: tuple[int, int] | None = None,
-) -> None:
-    """Stage version ``v``'s manifest under attempt ``att``: one JSON
-    file ``{"pins": [[seg, value], ...]}``, the exact (segment, value)
-    pairs that are the version's data, plus ``"stats": {"n_docs",
-    "sum_len"}`` for a BM25 store.  Written driver-side through the
-    Hadoop FileSystem, so it costs no Spark job.  No other writer can
-    name the attempt-unique path, and overwrite covers a same-attempt
-    retry.  Values keep their type through JSON: int for the tb/cell
-    axes, str for the sketch store's day axis; the stats are exact
-    integers."""
-    import json as _json
-
-    body: dict = {"pins": [[s, t] for s, t in sorted(entries)]}
-    if stats is not None:
-        body["stats"] = {"n_docs": stats[0], "sum_len": stats[1]}
-    fs, hp = _fs_of(spark, _stage_path(store, "manifests", v, att))
-    out = fs.create(hp, True)
-    try:
-        out.write(bytearray(_json.dumps(body).encode()))
-    finally:
-        out.close()
-
-
-def _read_manifest(spark: SparkSession, store: str, v: int) -> dict:
-    """Version ``v``'s manifest, read driver-side (no Spark job) through
-    the published attempt: ``{"pins": sorted [(seg, value)], "stats":
-    (n_docs, sum_len) or None}``, values typed as the writer stored
-    them.  Every store family reads its manifests through here."""
-    import json as _json
-
-    fs, hp = _fs_of(spark, _table_dir(spark, store, "manifests", v))
-    jvm = spark._jvm
-    stream = fs.open(hp)
-    try:
-        bos = jvm.java.io.ByteArrayOutputStream()
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, bos, 4096, False)
-        body = _json.loads(bytes(bos.toByteArray()).decode())
-    finally:
-        stream.close()
-    stats = body.get("stats")
-    return {
-        "pins": sorted((s, t) for s, t in body["pins"]),
-        "stats": None
-        if stats is None
-        else (stats["n_docs"], stats["sum_len"]),
-    }
-
-
-def _manifest_entries(
-    spark: SparkSession, store: str, v: int
-) -> list[tuple]:
-    """Version ``v``'s pinned (seg, value) list."""
-    return _read_manifest(spark, store, v)["pins"]
-
-
-def _new_att() -> str:
-    """A fresh attempt id: every publish attempt stages its version
-    data dirs under ``v={v}-{att}`` paths no other writer can name, so
-    two writers racing the same version number never clobber each
-    other's staged data."""
-    import uuid
-
-    return uuid.uuid4().hex[:8]
-
-
-def _stage_path(store: str, table: str, v: int, att: str) -> str:
-    """Where attempt ``att`` stages version ``v`` of ``table`` — the
-    directory BECOMES the version's data the instant the marker naming
-    ``att`` is published; nothing is ever renamed or rewritten."""
-    return f"{store}/{table}/v={v}-{att}"
-
-
-def _publish_version(
-    spark: SparkSession, store: str, v: int, att: str, bid: int | None = None
-) -> None:
-    """PUBLISH version ``v`` of a store: create the marker FILE
-    ``{store}/_published/v=N`` AFTER every data directory and the
-    manifest of that version are fully staged under their
-    attempt-unique ``v=N-{att}`` paths.  The marker is created with
-    ``FileSystem.create(path, overwrite=false)`` — create-exclusive
-    where the filesystem supports it — and carries a one-line JSON body
-    ``{"att": ..., "bid": ...}`` naming the WINNING attempt (readers
-    resolve a version's data dirs through it) and, for stream-driven
-    mutations, the ingest batch id (the exactly-once record, ADVICE
-    r14 #1: a redelivered batch whose bid any published marker already
-    carries is skipped, closing the publish-to-batch-marker
-    double-apply window).  If another writer already published ``v``,
-    the create fails (``FileAlreadyExistsException`` — translated, per
-    ADVICE r14 #3, rather than escaping as a raw Py4J error) and
-    :class:`VersionConflict` tells the caller to re-merge against the
-    new latest with a FRESH attempt id; the loser's staged dirs are
-    unreferenced debris vacuum sweeps.  Atomicity of the gate is
-    filesystem-dependent (HDFS: atomic create-exclusive; local /
-    object stores: best-effort exists-then-create) — the conditional
-    publish serializes LOGICAL commits for the single-compactor /
-    single-ingester deployments this store targets, and the
-    attempt-unique staging means even a gate race that escapes the
-    check can corrupt no data, only publish one of two valid merges.
-    A reader that catches the marker between create and content-close
-    sees an empty file; :func:`_version_meta` retries briefly (the
-    window is the writer's in-process microseconds) and a marker left
-    PERMANENTLY empty by a writer killed inside that window is swept
-    by vacuum as unresolvable."""
-    import json as _json
-
-    fs, hp = _fs_of(spark, f"{store}/_published/v={v}")
-    try:
-        out = fs.create(hp, False)
-    except Exception as e:  # Py4JJavaError wrapping FileAlreadyExists
-        if fs.exists(hp) or "AlreadyExists" in str(e):
-            raise VersionConflict(
-                f"version {v} already published under {store}"
-            ) from None
-        raise
-    try:
-        out.write(bytearray(_json.dumps({"att": att, "bid": bid}).encode()))
-    finally:
-        out.close()
-
-
-def _version_meta(spark: SparkSession, store: str, v: int) -> dict:
-    """The published marker's JSON body for version ``v`` — the
-    attempt id that won the publish (+ the ingest batch id, if any).
-    Retries briefly on an empty marker (the create-to-close window of
-    a concurrent publisher), then raises: a marker that never gains
-    content is a writer killed mid-publish, and vacuum's sweep is the
-    recovery path."""
-    import json as _json
-    import time as _time
-
-    fs, hp = _fs_of(spark, f"{store}/_published/v={v}")
-    jvm = spark._jvm
-    for attempt in range(20):
-        if fs.exists(hp) and fs.getFileStatus(hp).getLen() > 0:
-            stream = fs.open(hp)
-            try:
-                bos = jvm.java.io.ByteArrayOutputStream()
-                jvm.org.apache.hadoop.io.IOUtils.copyBytes(
-                    stream, bos, 4096, False
-                )
-                return _json.loads(bytes(bos.toByteArray()).decode())
-            finally:
-                stream.close()
-        _time.sleep(0.05)
-    raise FileNotFoundError(
-        f"published marker v={v} under {store} has no readable body "
-        "(writer killed mid-publish? vacuum sweeps it)"
-    )
-
-
-def _table_dir(spark: SparkSession, store: str, table: str, v: int) -> str:
-    """Version ``v``'s data directory for ``table`` — resolved through
-    the published marker's winning attempt id, so losers' staged dirs
-    of the same version are invisible to every reader."""
-    return _stage_path(store, table, v, _version_meta(spark, store, v)["att"])
-
-
-def _published_bids(spark: SparkSession, store: str) -> set:
-    """Every ingest batch id any PUBLISHED version carries — the
-    exactly-once ledger :func:`_apply_stream_batch` consults before
-    applying a possibly-redelivered batch.  Metadata-bounded: one small
-    marker read per published version."""
-    return {
-        _version_meta(spark, store, v).get("bid")
-        for v in _published_versions(spark, store)
-    } - {None}
-
-
-def _published_versions(spark: SparkSession, store: str) -> list[int]:
-    """Versions with a NON-EMPTY marker body.  A zero-length marker is
-    a writer killed inside the create-to-close window (or a concurrent
-    publisher mid-write): its version is not yet resolvable, so
-    readers must not count it — they keep serving the previous latest
-    — and vacuum sweeps it if it never gains a body.  The version
-    number stays burned either way (the create-exclusive gate saw the
-    file), so no number is ever published twice."""
-    fs, hpath = _fs_of(spark, f"{store}/_published")
-    if not fs.exists(hpath):
-        return []
-    out = []
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if name.startswith("v=") and st.getLen() > 0:
-            out.append(int(name.split("=", 1)[1]))
-    return sorted(out)
-
-
-def _latest_version(spark: SparkSession, store: str) -> int:
-    """The store's live version: the newest PUBLISHED marker — never a
-    directory listing of the data dirs themselves, so partially-written
-    versions from a crashed writer are invisible by construction."""
-    vs = _published_versions(spark, store)
-    if not vs:
-        raise FileNotFoundError(f"no published versions under {store}")
-    return max(vs)
 
 
 def _base_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1049,34 +625,6 @@ def _base_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BM25_POSTING_SCHEMA = "term string, doc_id bigint, dl int, tf bigint, tb int"
 
 
-def _commit(
-    spark: SparkSession, path: str, stage, bid: int | None = None
-) -> None:
-    """Publish the next version of a manifest-pinned store.
-
-    ``stage(v)`` writes whatever data version v+1 needs on top of the
-    latest published version v and returns its ``(pins, stats)``, or
-    None to publish nothing.  On :class:`VersionConflict` (another
-    writer published v+1 first) ``stage`` runs again against the new
-    latest under a fresh attempt id; the loser's staged files are
-    unreferenced debris that vacuum sweeps."""
-    last: VersionConflict | None = None
-    for _ in range(PUBLISH_RETRIES):
-        v = _latest_version(spark, path)
-        staged = stage(v)
-        if staged is None:
-            return
-        pins, stats = staged
-        att = _new_att()
-        _write_manifest(spark, path, v + 1, pins, att, stats)
-        try:
-            _publish_version(spark, path, v + 1, att, bid)
-            return
-        except VersionConflict as e:
-            last = e
-    raise last if last is not None else RuntimeError("unreachable")
-
-
 def _init_bm25_store(
     docs: DataFrame, path: str, bid: int | None = None
 ) -> None:
@@ -1084,11 +632,11 @@ def _init_bm25_store(
     bucket-sorted posting segment, whose write job also observes the
     corpus (n_docs, sum_len), and the v=1 manifest pinning exactly that
     segment's buckets with those stats, committed by the v=1 publish."""
-    spark = docs.sparkSession
-    seg, att = _new_seg_id(), _new_att()
+    seg = store._new_seg_id()
     buckets, stats = _write_postings(docs, f"{path}/postings", seg)
-    _write_manifest(spark, path, 1, [(seg, b) for b in buckets], att, stats)
-    _publish_version(spark, path, 1, att, bid)
+    store._publish_manifest(
+        docs.sparkSession, path, 1, [(seg, b) for b in buckets], stats, bid
+    )
 
 
 def build_bm25_index_v2(spark: SparkSession, sf_dir: str, path: str) -> None:
@@ -1116,15 +664,15 @@ def upsert_bm25_index(
     no manifest; a publish conflict re-merges the manifest onto the new
     latest without rewriting the segment.  Returns the new segment's
     buckets."""
-    seg = _new_seg_id()
+    seg = store._new_seg_id()
     buckets, (dn, ds) = _write_postings(batch_docs, f"{path}/postings", seg)
 
     def stage(v: int):
-        m = _read_manifest(spark, path, v)
+        m = store._read_manifest(spark, path, v)
         n, s = m["stats"]
         return m["pins"] + [(seg, b) for b in buckets], (n + dn, s + ds)
 
-    _commit(spark, path, stage, bid)
+    store._commit(spark, path, stage, bid)
     return buckets
 
 
@@ -1139,10 +687,10 @@ def _serve_args(spark: SparkSession, path: str, terms, v: int | None):
     the version's exact (n_docs, sum_len) as SQL parameters, and the
     pinned postings of the buckets ``terms`` hash into."""
     if v is None:
-        v = _latest_version(spark, path)
-    m = _read_manifest(spark, path, v)
+        v = store._latest_version(spark, path)
+    m = store._read_manifest(spark, path, v)
     buckets = _query_buckets(terms)
-    postings = _read_segments(
+    postings = store._read_segments(
         spark,
         f"{path}/postings",
         [e for e in m["pins"] if e[1] in buckets],
@@ -1208,12 +756,12 @@ def serve_bm25_v2_at(
 
 def serve_bm25_v2(spark: SparkSession, path: str) -> DataFrame:
     """Serve from the store's LATEST published version."""
-    return serve_bm25_v2_at(spark, path, _latest_version(spark, path))
+    return serve_bm25_v2_at(spark, path, store._latest_version(spark, path))
 
 
 def _n_docs(spark: SparkSession, path: str, v: int) -> int:
     """Version ``v``'s indexed document count, from its manifest."""
-    return _read_manifest(spark, path, v)["stats"][0]
+    return store._read_manifest(spark, path, v)["stats"][0]
 
 
 def bm25_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1254,7 +802,7 @@ def _bm25_stream(spark: SparkSession, sf_dir: str) -> tuple:
 
 def bm25_stream_upsert_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ingestion into the upsertable lexical store: the
-    corpus feeds :func:`stream_into_store` (one micro-batch per staged
+    corpus feeds :func:`store.stream_into_store` (one micro-batch per staged
     file; the first initializes the store, each later one runs the
     versioned upsert), then the fixed query is served from the final
     version.  The N-batch upsert chain composes to the full-corpus
@@ -1266,11 +814,11 @@ def bm25_stream_upsert_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="sgraft_bm25_stream_")
     try:
         feed, init, upsert = _bm25_stream(spark, sf_dir)
-        store = stream_into_store(spark, feed, tmp, init, upsert)
-        v = _latest_version(spark, store)
+        path = store.stream_into_store(spark, feed, tmp, init, upsert)
+        v = store._latest_version(spark, path)
         out = (
-            serve_bm25_v2_at(spark, store, v)
-            .withColumn("n_docs_indexed", F.lit(_n_docs(spark, store, v)))
+            serve_bm25_v2_at(spark, path, v)
+            .withColumn("n_docs_indexed", F.lit(_n_docs(spark, path, v)))
             .localCheckpoint(eager=True)
         )
     finally:
@@ -1291,94 +839,16 @@ def bm25_stream_upsert_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (reference api/main.py:152-157) — it never accumulates snapshots;
 # our snapshot-isolation upgrade needs this op to not regress storage.
 
-RETAIN_VERSIONS = 1  # the registry query's retention: latest-only
 DOC_UPSERT_RES2 = 3  # second ingest batch for the vacuum chain (~10%,
 # disjoint from the DOC_UPSERT_RES batch)
 
 
-def _vacuum_versioned_store(
-    spark: SparkSession,
-    path: str,
-    tables: tuple[str, ...],
-    posting_roots: tuple[str, ...],
-    keep_last: int,
-) -> int:
-    """Shared vacuum for manifest-pinned stores: keep the newest
-    ``keep_last`` PUBLISHED versions (ADVICE r13: derived from the
-    published set itself, so a sparse chain still retains exactly
-    ``keep_last`` live versions), delete every other version directory
-    of every versioned table — including UNPUBLISHED dirs a crashed
-    writer left dangling (unreferenced by construction) — and
-    garbage-collect every posting segment no retained manifest pins.
-    Returns version dirs + segments removed.  Cost is pure metadata
-    (directory deletes + manifest reads): independent of corpus size.
-    Single-writer assumption, stated: vacuum must not run concurrently
-    with a writer — it would sweep the writer's staged (unpublished)
-    version dirs and segment mid-flight; deployments serialize vacuum
-    behind the ingest lock (the same single-compactor discipline the
-    conditional publish targets)."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1 (the live version)")
-    # Sweep markers a writer killed mid-publish left without a body —
-    # they gate their version number but resolve to nothing; removing
-    # them is the documented recovery path (the version number is
-    # burned: the next publish takes a higher one, so no reader can
-    # ever see two meanings for one version).
-    fs_pub, pub_root = _fs_of(spark, f"{path}/_published")
-    if fs_pub.exists(pub_root):
-        for st in fs_pub.listStatus(pub_root):
-            if st.getLen() == 0:
-                fs_pub.delete(st.getPath(), False)
-    published = _published_versions(spark, path)
-    if not published:
-        raise FileNotFoundError(f"no published versions under {path}")
-    keep = set(sorted(published)[-keep_last:])
-    # The retained versions' WINNING attempt dirs — every other dir of
-    # a versioned table (older versions, losing attempts of retained
-    # versions, unpublished crash debris) is dead by construction.
-    live_dirs = {
-        (table, f"v={v}-{_version_meta(spark, path, v)['att']}")
-        for table in tables
-        for v in keep
-    }
-    removed = 0
-    for table in tables:
-        for _v, name in _version_dirs(spark, f"{path}/{table}"):
-            if (table, name) not in live_dirs:
-                fs, hp = _fs_of(spark, f"{path}/{table}/{name}")
-                fs.delete(hp, True)
-                removed += 1
-    for v in published:
-        if v not in keep:
-            fs, hp = _fs_of(spark, f"{path}/_published/v={v}")
-            fs.delete(hp, True)
-    live_segs: set[str] = set()
-    for v in keep:
-        live_segs |= {s for s, _ in _manifest_entries(spark, path, v)}
-    for root_name in posting_roots:
-        root = f"{path}/{root_name}"
-        fs, hp = _fs_of(spark, root)
-        if not fs.exists(hp):
-            continue
-        for st in fs.listStatus(hp):
-            name = st.getPath().getName()
-            if name.startswith("seg=") and name[4:] not in live_segs:
-                fs.delete(st.getPath(), True)
-                removed += 1
-    return removed
-
-
 def vacuum_bm25_store(
-    spark: SparkSession, path: str, keep_last: int = RETAIN_VERSIONS
+    spark: SparkSession, path: str, keep_last: int = store.RETAIN_VERSIONS
 ) -> int:
-    """Retention vacuum for the BM25 store: keep the newest
-    ``keep_last`` published manifests, sweep dangling unpublished ones,
-    and GC unreferenced posting segments (see
-    :func:`_vacuum_versioned_store` for the contract and the
-    single-writer assumption)."""
-    return _vacuum_versioned_store(
-        spark, path, ("manifests",), ("postings",), keep_last
-    )
+    """Retention vacuum for the BM25 store (see
+    :func:`store._vacuum_versioned_store`)."""
+    return store._vacuum_versioned_store(spark, path, "postings", keep_last)
 
 
 def bm25_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1409,8 +879,8 @@ def bm25_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         _init_bm25_store(base, tmp)
         upsert_bm25_index(spark, tmp, b1)
         upsert_bm25_index(spark, tmp, b2)
-        purged = vacuum_bm25_store(spark, tmp, keep_last=RETAIN_VERSIONS)
-        v = _latest_version(spark, tmp)
+        purged = vacuum_bm25_store(spark, tmp)
+        v = store._latest_version(spark, tmp)
         out = (
             serve_bm25_v2_at(spark, tmp, v)
             .withColumn("n_docs_indexed", F.lit(_n_docs(spark, tmp, v)))
@@ -1456,7 +926,7 @@ def _probe_erased(
     seen = Observation()
     gone = F.col("gone").isNotNull()
     (
-        _read_segments(
+        store._read_segments(
             spark, root, entries, _BM25_POSTING_SCHEMA, with_seg=True
         )
         .join(erased, "doc_id", "left")
@@ -1504,21 +974,21 @@ def delete_from_bm25_index(
     root = f"{path}/postings"
 
     def stage(v: int):
-        m = _read_manifest(spark, path, v)
+        m = store._read_manifest(spark, path, v)
         n, s = m["stats"]
         hit, kept = _probe_erased(
             spark, root, [e for e in m["pins"] if e[1] in buckets], erased
         )
         pins = [e for e in m["pins"] if e not in hit]
         if hit & kept:
-            seg = _new_seg_id()
-            rows = _read_segments(
+            seg = store._new_seg_id()
+            rows = store._read_segments(
                 spark, root, sorted(hit & kept), _BM25_POSTING_SCHEMA
             ).join(erased, "doc_id", "left_anti")
-            pins += [(seg, b) for b in _write_segment(rows, root, seg)]
+            pins += [(seg, b) for b in store._write_segment(rows, root, seg)]
         return pins, (n - dn, s - ds)
 
-    _commit(spark, path, stage)
+    store._commit(spark, path, stage)
     return buckets
 
 
@@ -1716,7 +1186,7 @@ ORACLES["bm25_store_vacuum"] = (
     " SELECT doc_id, n_hit_terms,"
     f" CAST(FLOOR(score * {SCORE_QUANT}.0 + 0.5) AS BIGINT) AS score_q,"
     " nd.n_docs_indexed,"
-    f" CAST(3 - {RETAIN_VERSIONS} AS BIGINT) AS n_versions_purged"
+    f" CAST(3 - {store.RETAIN_VERSIONS} AS BIGINT) AS n_versions_purged"
     " FROM per CROSS JOIN nd"
     f" ORDER BY score_q DESC, doc_id LIMIT {TOP_K}"
 )
@@ -1940,13 +1410,13 @@ def _init_pos_store(
     partitioned segment + the v=1 manifest pinning it (the positional
     manifest carries no stats — phrase/NEAR scoring is pure
     per-document counting)."""
-    spark = docs.sparkSession
-    root = f"{path}/{_POS_ROOT}"
-    seg = _new_seg_id()
-    buckets = _write_segment(_pos_postings_of(docs), root, seg)
-    att = _new_att()
-    _write_manifest(spark, path, 1, [(seg, b) for b in buckets], att)
-    _publish_version(spark, path, 1, att, bid)
+    seg = store._new_seg_id()
+    buckets = store._write_segment(
+        _pos_postings_of(docs), f"{path}/{_POS_ROOT}", seg
+    )
+    store._publish_manifest(
+        docs.sparkSession, path, 1, [(seg, b) for b in buckets], bid=bid
+    )
 
 
 def build_phrase_index(spark: SparkSession, sf_dir: str, path: str) -> None:
@@ -1963,18 +1433,18 @@ def upsert_phrase_index(
     """Merge an ingest batch into the positional store: the batch's
     positional postings land as one new immutable segment, and the v+1
     manifest pins the old entries plus the new segment's buckets —
-    the same copy-on-write discipline as the BM25 upsert (VERDICT r13
-    #5), with the same conditional-publish retry.  ``bid`` rides the
-    publish marker for the streaming sink's exactly-once ledger
-    (r15)."""
-    root = f"{path}/{_POS_ROOT}"
-    seg = _new_seg_id()
-    seg_buckets = _write_segment(_pos_postings_of(batch_docs), root, seg)
-    _commit(
+    the same copy-on-write discipline as the BM25 upsert, with the
+    same conditional-publish retry.  ``bid`` rides the publish marker
+    for the streaming sink's exactly-once ledger."""
+    seg = store._new_seg_id()
+    seg_buckets = store._write_segment(
+        _pos_postings_of(batch_docs), f"{path}/{_POS_ROOT}", seg
+    )
+    store._commit(
         spark,
         path,
         lambda v: (
-            _manifest_entries(spark, path, v)
+            store._manifest_entries(spark, path, v)
             + [(seg, b) for b in seg_buckets],
             None,
         ),
@@ -2001,32 +1471,30 @@ def delete_from_phrase_index(
     root = f"{path}/{_POS_ROOT}"
 
     def stage(v: int):
-        entries = _manifest_entries(spark, path, v)
+        entries = store._manifest_entries(spark, path, v)
         if not buckets:
             return entries, None
-        kept = _read_segments(
+        kept = store._read_segments(
             spark,
             root,
             [e for e in entries if e[1] in buckets],
             _POS_POSTING_SCHEMA,
         ).join(del_ids, "doc_id", "left_anti")
-        seg = _new_seg_id()
+        seg = store._new_seg_id()
         return [e for e in entries if e[1] not in buckets] + [
-            (seg, b) for b in _write_segment(kept, root, seg)
+            (seg, b) for b in store._write_segment(kept, root, seg)
         ], None
 
-    _commit(spark, path, stage)
+    store._commit(spark, path, stage)
     return buckets
 
 
 def vacuum_phrase_store(
-    spark: SparkSession, path: str, keep_last: int = RETAIN_VERSIONS
+    spark: SparkSession, path: str, keep_last: int = store.RETAIN_VERSIONS
 ) -> int:
-    """Retention vacuum for the positional store (manifests + segment
-    GC; no stats)."""
-    return _vacuum_versioned_store(
-        spark, path, ("manifests",), (_POS_ROOT,), keep_last
-    )
+    """Retention vacuum for the positional store (see
+    :func:`store._vacuum_versioned_store`)."""
+    return store._vacuum_versioned_store(spark, path, _POS_ROOT, keep_last)
 
 
 def _pos_store_postings(
@@ -2039,14 +1507,16 @@ def _pos_store_postings(
     import zlib
 
     if v is None:
-        v = _latest_version(spark, path)
+        v = store._latest_version(spark, path)
     buckets = sorted(
         {zlib.crc32(t.encode("utf-8")) % N_TB for t in terms}
     )
     entries = [
-        e for e in _manifest_entries(spark, path, v) if e[1] in set(buckets)
+        e
+        for e in store._manifest_entries(spark, path, v)
+        if e[1] in set(buckets)
     ]
-    return _read_segments(
+    return store._read_segments(
         spark, f"{path}/{_POS_ROOT}", entries, _POS_POSTING_SCHEMA
     ).filter(F.col("tb").isin(buckets))
 
@@ -2144,23 +1614,23 @@ def compact_bm25_buckets(spark: SparkSession, path: str, buckets) -> None:
     root = f"{path}/postings"
 
     def stage(v: int):
-        m = _read_manifest(spark, path, v)
+        m = store._read_manifest(spark, path, v)
         n_pins = Counter(t for _, t in m["pins"])
         frag = {t for t in want if n_pins[t] > 1}
         if not frag:
             return None
-        seg = _new_seg_id()
-        rows = _read_segments(
+        seg = store._new_seg_id()
+        rows = store._read_segments(
             spark,
             root,
             [e for e in m["pins"] if e[1] in frag],
             _BM25_POSTING_SCHEMA,
         )
         pins = [e for e in m["pins"] if e[1] not in frag]
-        pins += [(seg, b) for b in _write_segment(rows, root, seg)]
+        pins += [(seg, b) for b in store._write_segment(rows, root, seg)]
         return pins, m["stats"]
 
-    _commit(spark, path, stage)
+    store._commit(spark, path, stage)
 
 
 def bm25_postings_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2339,9 +1809,9 @@ def bm25_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact_bm25_buckets(spark, tmp, buckets)
         # the retention vacuum runs alongside the serve: it keeps the
         # served version's manifest and every segment it pins
-        v = _latest_version(spark, tmp)
+        v = store._latest_version(spark, tmp)
         n_docs = _n_docs(spark, tmp, v)
-        _, out = _run_staged(
+        _, out = store._run_staged(
             lambda: vacuum_bm25_store(spark, tmp, keep_last=1),
             lambda: serve_bm25_v2_at(spark, tmp, v)
             .withColumn("n_docs_indexed", F.lit(n_docs))
@@ -2715,7 +2185,7 @@ def phrase_stream_upsert_store(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Streaming ingestion into the positional store: the corpus feeds
-    :func:`stream_into_store` (init, then versioned upserts), and BOTH
+    :func:`store.stream_into_store` (init, then versioned upserts), and BOTH
     probes (ordered phrase and unordered NEAR) are served from the
     stream-composed store.  The manifest-entry union is the only
     cross-batch state and position arithmetic is per document, so the
@@ -2727,19 +2197,19 @@ def phrase_stream_upsert_store(
     tmp = tempfile.mkdtemp(prefix="sgraft_pos_stream_")
     try:
         feed, init, upsert = _pos_stream(spark, sf_dir)
-        store = stream_into_store(spark, feed, tmp, init, upsert)
-        v = _latest_version(spark, store)
-        pinned = _read_segments(
+        path = store.stream_into_store(spark, feed, tmp, init, upsert)
+        v = store._latest_version(spark, path)
+        pinned = store._read_segments(
             spark,
-            f"{store}/{_POS_ROOT}",
-            _manifest_entries(spark, store, v),
+            f"{path}/{_POS_ROOT}",
+            store._manifest_entries(spark, path, v),
             _POS_POSTING_SCHEMA,
         )
         nd = pinned.agg(
             F.countDistinct("doc_id").alias("n_docs_indexed")
         )
         out = (
-            _pos_probes_from_store(spark, store)
+            _pos_probes_from_store(spark, path)
             .crossJoin(F.broadcast(nd))
             .localCheckpoint(eager=True)
         )
@@ -2771,11 +2241,11 @@ def phrase_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         delete_from_phrase_index(spark, tmp, dels)
         # the retention vacuum runs alongside the serve: it keeps the
         # served version's manifest and every segment it pins
-        v = _latest_version(spark, tmp)
+        v = store._latest_version(spark, tmp)
         n_surv = docs.join(
             dels.select("doc_id"), "doc_id", "left_anti"
         ).agg(F.count(F.lit(1)).alias("n_survivors"))
-        _, out = _run_staged(
+        _, out = store._run_staged(
             lambda: vacuum_phrase_store(spark, tmp, keep_last=1),
             lambda: _pos_probes_from_store(spark, tmp, v)
             .crossJoin(F.broadcast(n_surv))

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import store
 from ..catalog import load_tables
 
 # lgConfigK=14 → relative standard error ~0.8%, so the 6% band is ~7.3σ
@@ -109,11 +110,10 @@ def _write_sketch_segment(
     days it holds).  The value column is ``day_part``, the calendar
     day as a string: each day's cells lie in one file of the segment,
     and the manifest JSON round-trips the day strings unchanged."""
-    from .retrieval import _new_seg_id, _write_segment
-
-    seg = _new_seg_id()
-    days = _write_segment(cells, f"{path}/{_SK_ROOT}", seg, pcol="day_part")
-    return seg, days
+    seg = store._new_seg_id()
+    return seg, store._write_segment(
+        cells, f"{path}/{_SK_ROOT}", seg, pcol="day_part"
+    )
 
 
 def _init_sketch_store(
@@ -124,13 +124,10 @@ def _init_sketch_store(
     rollup carries no lexicon/stats twin — serve is a pure union over
     the pinned cells, so the manifest is the only versioned
     metadata)."""
-    from .retrieval import _new_att, _publish_version, _write_manifest
-
-    spark = ev.sparkSession
     seg, days = _write_sketch_segment(path, _rollup_cells(ev))
-    att = _new_att()
-    _write_manifest(spark, path, 1, [(seg, d) for d in days], att)
-    _publish_version(spark, path, 1, att, bid)
+    store._publish_manifest(
+        ev.sparkSession, path, 1, [(seg, d) for d in days], bid=bid
+    )
 
 
 def build_sketch_rollup_store(
@@ -153,20 +150,17 @@ def serve_sketch_rollup_from_store(
     """The production query path: read exactly the day cells the
     latest (or a pinned ``v``'s) manifest references and merge to
     per-type distinct-user estimates — no fact scan, and no visibility
-    of any concurrent mutation's segments (r15: the store is
-    snapshot-isolated like its BM25/positional/ANN siblings; a reader
-    pinned at v mid-erasure sees the complete pre-delete rollup).
+    of any concurrent mutation's segments (a reader pinned at v
+    mid-erasure sees the complete pre-delete rollup).
     This exact composition is what ``sketch_rollup_store`` self-checks
     against the exact recompute (so the timed path and the verified
     path cannot drift, the serve_bm25_from_store discipline)."""
-    from .retrieval import _latest_version, _manifest_entries, _read_segments
-
     if v is None:
-        v = _latest_version(spark, path)
-    cells = _read_segments(
+        v = store._latest_version(spark, path)
+    cells = store._read_segments(
         spark,
         f"{path}/{_SK_ROOT}",
-        _manifest_entries(spark, path, v),
+        store._manifest_entries(spark, path, v),
         _SK_CELL_SCHEMA,
         pcol="day_part",
     )
@@ -977,7 +971,7 @@ ORACLES["bloom_decontam_stats"] = (
 )
 
 
-# --- incremental sketch-store maintenance (r12) ------------------------------
+# --- incremental sketch-store maintenance ------------------------------------
 
 
 def upsert_sketch_rollup_store(
@@ -985,42 +979,24 @@ def upsert_sketch_rollup_store(
 ) -> None:
     """Merge an ingest batch into the sketch store: the batch's
     (day, type) HLL cells land as one new immutable segment and the
-    v+1 manifest pins the old entries plus the new segment's days —
-    copy-on-write with the conditional-publish retry, exactly the
-    BM25/positional upsert discipline (r15; was a bare parquet append
-    before the store was manifest-pinned).  Partial-day cells from
-    different batches coexist as separate manifest entries and merge
-    at serve time (HLL union associativity), so no existing cell is
-    ever read or rewritten.  (The merge half of
-    :func:`sketch_rollup_upsert`, extracted so bench.py's
-    ``sketch_upsert_only`` metric can stage the base store untimed and
-    time only the append — VERDICT r12 #7.)"""
-    from .retrieval import (
-        PUBLISH_RETRIES,
-        VersionConflict,
-        _latest_version,
-        _manifest_entries,
-        _new_att,
-        _publish_version,
-        _write_manifest,
-    )
-
+    v+1 manifest pins the old entries plus the new segment's days.
+    The segment is written once; a publish conflict re-merges only the
+    manifest onto the new latest.  Partial-day cells from different
+    batches coexist as separate manifest entries and merge at serve
+    time (HLL union associativity), so no existing cell is ever read
+    or rewritten."""
     spark = batch_events.sparkSession
     seg, days = _write_sketch_segment(path, _rollup_cells(batch_events))
-    last: VersionConflict | None = None
-    for _ in range(PUBLISH_RETRIES):
-        v = _latest_version(spark, path)
-        att = _new_att()
-        entries = _manifest_entries(spark, path, v) + [
-            (seg, d) for d in days
-        ]
-        _write_manifest(spark, path, v + 1, entries, att)
-        try:
-            _publish_version(spark, path, v + 1, att, bid)
-            return
-        except VersionConflict as e:
-            last = e
-    raise last if last is not None else RuntimeError("unreachable")
+    store._commit(
+        spark,
+        path,
+        lambda v: (
+            store._manifest_entries(spark, path, v)
+            + [(seg, d) for d in days],
+            None,
+        ),
+        bid,
+    )
 
 
 def sketch_rollup_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1109,7 +1085,7 @@ ORACLES["sketch_rollup_upsert"] = (
 )
 
 
-# --- deletion through the sketch store (r13) ---------------------------------
+# --- deletion through the sketch store ---------------------------------------
 #
 # The third store's erasure leg: HLL sketches are NOT subtractable (a
 # union-only summary cannot remove a member), so GDPR-class deletion of
@@ -1137,31 +1113,15 @@ def delete_users_from_sketch_store(
     """Erase every user matching ``del_pred`` from the stored rollup:
     locate the affected days from the base events, recompute those
     days' cells over the surviving events only into one NEW immutable
-    segment, and publish a v+1 manifest that un-pins every prior
-    entry of those days (r15, VERDICT r14 #3 option A — this replaced
-    the r14 in-place dynamic-partition overwrite and its documented
-    read-committed-per-day contract).  Old files untouched: a reader
-    pinned at v keeps the complete pre-delete rollup — the erasure is
-    one atomic cross-day cut at publish, snapshot isolation identical
-    to the BM25/positional/ANN stores' — and the erased cells become
-    unreachable bytes vacuum's segment GC reclaims.  Days emptied by
-    the erasure simply have no survivor cells and drop out of the
-    manifest.  Returns the affected day list (bounded by the calendar
-    — the model-boundary collect class).  ``ev_base`` is the raw fact
-    (the deletion MUST re-derive from base data: union-only sketches
-    cannot subtract).
-    tests/test_sketch_upsert.py::test_sketch_delete_pinned_reader_snapshot
-    locks the mid-delete visibility."""
-    from .retrieval import (
-        PUBLISH_RETRIES,
-        VersionConflict,
-        _latest_version,
-        _manifest_entries,
-        _new_att,
-        _publish_version,
-        _write_manifest,
-    )
-
+    segment once, and publish a v+1 manifest that un-pins every prior
+    entry of those days.  Old files untouched: a reader pinned at v
+    keeps the complete pre-delete rollup, the erasure is one atomic
+    cross-day cut at publish, and the erased cells become unreachable
+    bytes that vacuum's segment GC reclaims.  Days emptied by the
+    erasure have no survivor cells and drop out of the manifest.
+    Returns the affected day list (bounded by the calendar).
+    ``ev_base`` is the raw fact: union-only sketches cannot subtract,
+    so the deletion re-derives from base data."""
     affected = sorted(
         str(r["day"])
         for r in ev_base.filter(del_pred)
@@ -1177,21 +1137,15 @@ def delete_users_from_sketch_store(
     )
     seg, survivor_days = _write_sketch_segment(path, _rollup_cells(surv))
     hit = set(affected)
-    last: VersionConflict | None = None
-    for _ in range(PUBLISH_RETRIES):
-        v = _latest_version(spark, path)
-        att = _new_att()
-        entries = _manifest_entries(spark, path, v)
-        new_entries = [e for e in entries if e[1] not in hit] + [
+
+    def stage(v: int):
+        entries = store._manifest_entries(spark, path, v)
+        return [e for e in entries if e[1] not in hit] + [
             (seg, d) for d in survivor_days
-        ]
-        _write_manifest(spark, path, v + 1, new_entries, att)
-        try:
-            _publish_version(spark, path, v + 1, att)
-            return affected
-        except VersionConflict as e:
-            last = e
-    raise last if last is not None else RuntimeError("unreachable")
+        ], None
+
+    store._commit(spark, path, stage)
+    return affected
 
 
 def compact_sketch_store(spark: SparkSession, path: str) -> tuple[int, int]:
@@ -1207,22 +1161,11 @@ def compact_sketch_store(spark: SparkSession, path: str) -> tuple[int, int]:
     pinned at v keeps the pre-compact cells; vacuum reclaims them.
     Returns (entries before, entries after) — the manifest-size
     shrink, both metadata-bounded."""
-    from .retrieval import (
-        PUBLISH_RETRIES,
-        VersionConflict,
-        _latest_version,
-        _manifest_entries,
-        _new_att,
-        _publish_version,
-        _read_segments,
-        _write_manifest,
-    )
+    sizes: list[int] = []
 
-    last: VersionConflict | None = None
-    for _ in range(PUBLISH_RETRIES):
-        v = _latest_version(spark, path)
-        entries = _manifest_entries(spark, path, v)
-        cells = _read_segments(
+    def stage(v: int):
+        entries = store._manifest_entries(spark, path, v)
+        cells = store._read_segments(
             spark, f"{path}/{_SK_ROOT}", entries, _SK_CELL_SCHEMA,
             pcol="day_part",
         )
@@ -1236,33 +1179,19 @@ def compact_sketch_store(spark: SparkSession, path: str) -> tuple[int, int]:
             .withColumn("day_part", F.col("day").cast("string"))
         )
         seg, days = _write_sketch_segment(path, merged)
-        att = _new_att()
-        new_entries = [(seg, d) for d in days]
-        _write_manifest(spark, path, v + 1, new_entries, att)
-        try:
-            _publish_version(spark, path, v + 1, att)
-            return len(entries), len(new_entries)
-        except VersionConflict as e:
-            last = e
-    raise last if last is not None else RuntimeError("unreachable")
+        sizes[:] = [len(entries), len(days)]
+        return [(seg, d) for d in days], None
+
+    store._commit(spark, path, stage)
+    return sizes[0], sizes[1]
 
 
 def vacuum_sketch_store(
-    spark: SparkSession, path: str, keep_last: int | None = None
+    spark: SparkSession, path: str, keep_last: int = store.RETAIN_VERSIONS
 ) -> int:
-    """Retention vacuum for the sketch store: keep the newest
-    ``keep_last`` published versions, sweep dangling unpublished
-    version dirs, and GC every rollup segment no retained manifest
-    pins (see retrieval._vacuum_versioned_store for the contract and
-    the single-writer assumption — the machinery is shared verbatim;
-    only the table/segment roots differ)."""
-    from .retrieval import RETAIN_VERSIONS, _vacuum_versioned_store
-
-    if keep_last is None:
-        keep_last = RETAIN_VERSIONS
-    return _vacuum_versioned_store(
-        spark, path, ("manifests",), (_SK_ROOT,), keep_last
-    )
+    """Retention vacuum for the sketch store (see
+    :func:`store._vacuum_versioned_store`)."""
+    return store._vacuum_versioned_store(spark, path, _SK_ROOT, keep_last)
 
 
 def sketch_rollup_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1286,7 +1215,6 @@ def sketch_rollup_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         surv = ev.filter(~_del_users_pred())
         # the exact self-check depends only on the base fact, so it
         # runs as a concurrent job alongside the store build and erasure
-        from .retrieval import _run_staged
 
         def _build_and_erase() -> list:
             build_sketch_rollup_store(spark, sf_dir, tmp)
@@ -1294,7 +1222,7 @@ def sketch_rollup_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, tmp, ev, _del_users_pred()
             )
 
-        exact, affected = _run_staged(
+        exact, affected = store._run_staged(
             lambda: surv.groupBy("event_type")
             .agg(F.countDistinct("user_id").alias("exact_users"))
             .localCheckpoint(eager=True),
@@ -1362,10 +1290,10 @@ ORACLES["sketch_rollup_delete"] = (
 )
 
 
-# --- sketch-store compaction / retention / CRUD chain (r15) ------------------
+# --- sketch-store compaction / retention / CRUD chain ------------------------
 #
-# The manifest upgrade (VERDICT r14 #3, option A) gives the sketch
-# store the same lifecycle surface as its three siblings, so the same
+# The manifest-pinned sketch store has the same lifecycle surface as
+# its three siblings, so the same
 # lifecycle legs get certified: compaction (partial-day cells from an
 # upsert chain merged to one cell per (day, type) — serve-invariant by
 # union associativity), retention vacuum (keep-latest + segment GC),
@@ -1483,14 +1411,12 @@ def sketch_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_batch_day = F.dayofmonth(F.expr("CAST(ts AS DATE)")) % 7 == 3
     tmp = tempfile.mkdtemp(prefix="sgraft_sketch_vacuum_")
     try:
-        from .retrieval import _published_versions
-
         _init_sketch_store(ev.filter(~is_batch_day), tmp)
         upsert_sketch_rollup_store(ev.filter(is_batch_day), tmp)
         delete_users_from_sketch_store(spark, tmp, ev, _del_users_pred())
-        n_before = len(_published_versions(spark, tmp))
+        n_before = len(store._published_versions(spark, tmp))
         vacuum_sketch_store(spark, tmp, keep_last=1)
-        n_purged = n_before - len(_published_versions(spark, tmp))
+        n_purged = n_before - len(store._published_versions(spark, tmp))
         surv = ev.filter(~_del_users_pred())
         merged = serve_sketch_rollup_from_store(spark, tmp)
         exact = surv.groupBy("event_type").agg(
@@ -1565,8 +1491,6 @@ def sketch_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_batch_day = F.dayofmonth(F.expr("CAST(ts AS DATE)")) % 7 == 3
     tmp = tempfile.mkdtemp(prefix="sgraft_sketch_crud_")
     try:
-        from .retrieval import _published_versions, _run_staged
-
         batch = ev.filter(is_batch_day)
         surv = ev.filter(~_del_users_pred())
 
@@ -1577,13 +1501,14 @@ def sketch_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, tmp, ev, _del_users_pred()
             )
             _, n_after = compact_sketch_store(spark, tmp)
-            n_before = len(_published_versions(spark, tmp))
+            n_before = len(store._published_versions(spark, tmp))
             vacuum_sketch_store(spark, tmp, keep_last=1)
-            return n_after, n_before - len(_published_versions(spark, tmp))
+            n_kept = len(store._published_versions(spark, tmp))
+            return n_after, n_before - n_kept
 
         # the exact self-check depends only on the base fact, so it
         # runs as a concurrent job alongside the mutation chain
-        exact, (n_after, n_purged) = _run_staged(
+        exact, (n_after, n_purged) = store._run_staged(
             lambda: surv.groupBy("event_type")
             .agg(F.countDistinct("user_id").alias("exact_users"))
             .localCheckpoint(eager=True),
@@ -1691,7 +1616,7 @@ def sketch_stream_upsert_store(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Streaming ingestion into the sketch store: the fact feeds
-    :func:`retrieval.stream_into_store`, each micro-batch appending its
+    :func:`store.stream_into_store`, each micro-batch appending its
     (day, type) HLL cells.  Partial-day cells from different batches
     coexist and merge at serve time, so the N-batch composition equals
     the single-pass build with no cross-batch coordination.  Merged
@@ -1701,30 +1626,24 @@ def sketch_stream_upsert_store(
     import shutil
     import tempfile
 
-    from .retrieval import (
-        _latest_version,
-        _manifest_entries,
-        stream_into_store,
-    )
-
     ev, init, upsert = _sketch_stream(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="sgraft_sketch_stream_")
     try:
-        store = stream_into_store(spark, ev, tmp, init, upsert)
+        path = store.stream_into_store(spark, ev, tmp, init, upsert)
         # entries are (seg, day) pairs; partial-day cells from
         # different batches pin the same day
         n_days = len(
             {
                 d
-                for _, d in _manifest_entries(
-                    spark, store, _latest_version(spark, store)
+                for _, d in store._manifest_entries(
+                    spark, path, store._latest_version(spark, path)
                 )
             }
         )
         nd = spark.createDataFrame(
             [(n_days,)], "n_days_stored bigint"
         )
-        merged = serve_sketch_rollup_from_store(spark, store)
+        merged = serve_sketch_rollup_from_store(spark, path)
         exact = ev.groupBy("event_type").agg(
             F.countDistinct("user_id").alias("exact_users")
         )

@@ -50,6 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import store
 from .clustering import M_SUB, QUANT, SUBDIM, _pq_codes, _subspace_rows
 from .similarity import (
     N_BATCH_QUERIES,
@@ -117,12 +118,10 @@ def build_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     a table is missing or partial."""
     emb = _emb(spark, sf_dir)
     codes, cb = _pq_codes(spark, sf_dir)
-    from .retrieval import _fs_of, _new_att, _run_staged
-
-    stage = f"{path}/_build-{_new_att()}"
-    # the three stored tables are independent files; write them as
-    # concurrent jobs (optimization r15, guide §2.6)
-    _run_staged(
+    stage = f"{path}/_build-{store._new_seg_id()}"
+    # the three stored tables are independent files, written as
+    # concurrent jobs
+    store._run_staged(
         lambda: _centroids(emb)
         .write.mode("overwrite")
         .parquet(f"{stage}/centroids"),
@@ -141,7 +140,7 @@ def build_index(spark: SparkSession, sf_dir: str, path: str) -> None:
             .parquet(f"{stage}/codes")
         ),
     )
-    fs, _ = _fs_of(spark, path)
+    fs, _ = store._fs_of(spark, path)
 
     def _move(src, dst) -> None:
         if not fs.rename(src, dst):
@@ -150,9 +149,9 @@ def build_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     swapped = []  # (live, staged, aside) of every table swapped so far
     try:
         for table in ("centroids", "codebook", "codes"):
-            _, live = _fs_of(spark, f"{path}/{table}")
-            _, staged = _fs_of(spark, f"{stage}/{table}")
-            _, aside = _fs_of(spark, f"{stage}/old-{table}")
+            _, live = store._fs_of(spark, f"{path}/{table}")
+            _, staged = store._fs_of(spark, f"{stage}/{table}")
+            _, aside = store._fs_of(spark, f"{stage}/old-{table}")
             swapped.append((live, staged, aside))
             if fs.exists(live):
                 _move(live, aside)
@@ -166,7 +165,7 @@ def build_index(spark: SparkSession, sf_dir: str, path: str) -> None:
             if fs.exists(aside):
                 _move(aside, live)
         raise
-    _, sp = _fs_of(spark, stage)
+    _, sp = store._fs_of(spark, stage)
     fs.delete(sp, True)
     # the PQ training artifacts are the session-lifetime memoized model
     # (clustering._pq_model) shared by every PQ consumer — the serving
@@ -378,7 +377,7 @@ def ann_index_store_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# --- incremental index maintenance (r12, VERDICT r11 #2) --------------------
+# --- incremental index maintenance ------------------------------------------
 #
 # At 100 TB you never full-rebuild an index for a new ingest batch: the
 # model (coarse centroids + PQ codebooks) is a FROZEN build-time
@@ -390,7 +389,7 @@ def ann_index_store_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the reference's ingest is incremental (Chroma upsert,
 # api/ingest_docs.py:97-102, etl/index_docs.py:101-108) while its index
 # never full-rebuilds per batch — this closes the same gap for the
-# serving store (VERDICT r11 "What's missing" #2).
+# serving store.
 #
 # For upsert ≡ full-rebuild to hold EXACTLY (the oracle's claim), the
 # model must be invariant to the batch — which is precisely how
@@ -459,19 +458,13 @@ def _encode_codes(vecs: DataFrame, cb: DataFrame, centroids: DataFrame) -> DataF
     return codes.join(_assign_cells(vecs, centroids), "vec_id")
 
 
-# The upsertable ("frozen-model") store is MANIFEST-PINNED (r15,
-# VERDICT r14 #2 — the r14 upgrade covered BM25 + positional only;
-# this closes the ANN twin): code rows live in immutable segments
-# ``codes/seg={seg}/`` whose files are sorted by the stored ``cell``
-# column, each published version's manifest pins its exact
-# (segment, cell) pairs, and every mutation (upsert,
-# delete, compact, stream batch) is pure copy-on-write — a reader
-# pinned at version v is fully isolated from concurrent mutations
-# (previously delete/compact rewrote cell partitions in place via
-# dynamic partition overwrite and a mid-delete reader saw mixed
-# cells).  The machinery is retrieval.py's (segments, attempt-staged
-# manifests, conditional publish, vacuum GC) with ``cell`` as the
-# segment's value column instead of the term bucket.
+# The upsertable ("frozen-model") store is manifest-pinned: code rows
+# live in immutable segments ``codes/seg={seg}/`` whose files are
+# sorted by the stored ``cell`` column, each published version's
+# manifest pins its exact (segment, cell) pairs, and every mutation
+# (upsert, delete, compact, stream batch) is copy-on-write through the
+# protocol in ``store.py``, so a reader pinned at version v is isolated
+# from concurrent mutations.
 
 _ANN_CODES_SCHEMA = "vec_id bigint, m int, cid bigint, cell int"
 _ANN_CODES_ROOT = "codes"
@@ -482,10 +475,8 @@ def _ann_write_codes_segment(
 ) -> tuple[str, list[int]]:
     """Write one immutable code segment and return (seg, the cells it
     holds)."""
-    from .retrieval import _new_seg_id, _write_segment
-
-    seg = _new_seg_id()
-    cells = _write_segment(
+    seg = store._new_seg_id()
+    cells = store._write_segment(
         codes_df.select(
             "vec_id",
             F.col("m").cast("int").alias("m"),
@@ -507,14 +498,12 @@ def _ann_pinned_codes(
     value-sorted segment files, so the probe's ``cell IN (...)``
     filter is pushed into the parquet scan and skips the row groups of
     unprobed cells."""
-    from .retrieval import _latest_version, _manifest_entries, _read_segments
-
     if v is None:
-        v = _latest_version(spark, path)
-    return _read_segments(
+        v = store._latest_version(spark, path)
+    return store._read_segments(
         spark,
         f"{path}/{_ANN_CODES_ROOT}",
-        _manifest_entries(spark, path, v),
+        store._manifest_entries(spark, path, v),
         _ANN_CODES_SCHEMA,
         pcol="cell",
     )
@@ -546,31 +535,22 @@ def _init_ann_versioned(
     touch), one code segment over ``vecs``, and the published v=1
     manifest pinning exactly that segment's cells.
 
-    Optimization (r15, guide §2.6): the three writes (centroids,
-    codebook, code segment) are physically independent files gated by
-    the one v=1 publish — the code segment encodes against the
-    IN-MEMORY model frames, not the parquet copies — so they run as
-    concurrent jobs instead of leaving the cluster idle through each
-    write's tail."""
-    from .retrieval import (
-        _new_att,
-        _publish_version,
-        _run_staged,
-        _write_manifest,
-    )
-
+    The three writes (centroids, codebook, code segment) are
+    independent files gated by the one v=1 publish (the code segment
+    encodes against the in-memory model frames, not the parquet
+    copies), so they run as concurrent jobs."""
     cents = _centroids(_emb(spark, sf_dir))
     cb = _reservoir_codebook(spark, sf_dir)
-    *_, (seg, cells) = _run_staged(
+    *_, (seg, cells) = store._run_staged(
         lambda: cents.write.mode("overwrite").parquet(f"{path}/centroids"),
         lambda: cb.write.mode("overwrite").parquet(f"{path}/codebook"),
         lambda: _ann_write_codes_segment(
             _encode_codes(vecs, cb, cents), path
         ),
     )
-    att = _new_att()
-    _write_manifest(spark, path, 1, [(seg, c) for c in cells], att)
-    _publish_version(spark, path, 1, att, bid)
+    store._publish_manifest(
+        spark, path, 1, [(seg, c) for c in cells], bid=bid
+    )
 
 
 def build_index_frozen(spark: SparkSession, sf_dir: str, path: str) -> None:
@@ -597,38 +577,24 @@ def upsert_index(
     pre-existing file is touched (tests prove the file-level claim),
     so every reader of v is undisturbed.  At 100 TB this is the whole
     point: the merge cost is proportional to the BATCH plus fixed
-    metadata, never to the corpus.  On :class:`VersionConflict` the
-    manifest merge retries against the new latest (the batch segment
-    is version-independent and written once)."""
-    from .retrieval import (
-        PUBLISH_RETRIES,
-        VersionConflict,
-        _latest_version,
-        _manifest_entries,
-        _new_att,
-        _publish_version,
-        _write_manifest,
-    )
-
+    metadata, never to the corpus.  The batch segment is
+    version-independent and written once; a publish conflict re-merges
+    only the manifest onto the new latest."""
     centroids = _read_model(spark, path, "centroids")
     cb = _read_model(spark, path, "codebook")
     seg, cells = _ann_write_codes_segment(
         _encode_codes(batch, cb, centroids), path
     )
-    last: VersionConflict | None = None
-    for _ in range(PUBLISH_RETRIES):
-        v = _latest_version(spark, path)
-        att = _new_att()
-        entries = _manifest_entries(spark, path, v) + [
-            (seg, c) for c in cells
-        ]
-        _write_manifest(spark, path, v + 1, entries, att)
-        try:
-            _publish_version(spark, path, v + 1, att, bid)
-            return
-        except VersionConflict as e:
-            last = e
-    raise last if last is not None else RuntimeError("unreachable")
+    store._commit(
+        spark,
+        path,
+        lambda v: (
+            store._manifest_entries(spark, path, v)
+            + [(seg, c) for c in cells],
+            None,
+        ),
+        bid,
+    )
 
 
 def ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -671,6 +637,32 @@ def ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+def _rewrite_cells(
+    spark: SparkSession,
+    path: str,
+    entries: list[tuple],
+    hit: set,
+    drop: DataFrame | None = None,
+) -> list[tuple]:
+    """``entries`` with every pin of a cell in ``hit`` replaced by one
+    new segment holding those pins' rows, less the vec_ids in
+    ``drop``."""
+    root = f"{path}/{_ANN_CODES_ROOT}"
+    rows = store._read_segments(
+        spark,
+        root,
+        [e for e in entries if e[1] in hit],
+        _ANN_CODES_SCHEMA,
+        pcol="cell",
+    )
+    if drop is not None:
+        rows = rows.join(drop, "vec_id", "left_anti")
+    seg = store._new_seg_id()
+    return [e for e in entries if e[1] not in hit] + [
+        (seg, c) for c in store._write_segment(rows, root, seg, pcol="cell")
+    ]
+
+
 def compact_index_cells(spark: SparkSession, path: str, cells) -> None:
     """Post-upsert maintenance: every upsert pins one more segment into
     each affected cell; compaction coalesces the given cells' pinned
@@ -678,52 +670,20 @@ def compact_index_cells(spark: SparkSession, path: str, cells) -> None:
     snapshot whose manifest pins the new segment instead of every
     prior pin of those cells.  Readers of v keep their exact
     pre-compaction file set — no in-place rewrite, no lineage hazard
-    (the old localCheckpoint is obsolete: the write target is a NEW
-    directory, never in the read plan) — and the small-file debris
-    becomes unreferenced for vacuum's segment GC.  At 100 TB this runs
+    (the write target is a new directory, never in the read plan) —
+    and the small-file debris becomes unreferenced for vacuum's
+    segment GC.  At 100 TB this runs
     per-cell-batch on a schedule, exactly the job the generic
     ``compaction_plan`` operator budgets."""
-    from .retrieval import (
-        PUBLISH_RETRIES,
-        VersionConflict,
-        _latest_version,
-        _manifest_entries,
-        _new_att,
-        _new_seg_id,
-        _publish_version,
-        _read_segments,
-        _write_manifest,
-        _write_segment,
-    )
+    hit = {int(c) for c in cells}
 
-    cells = sorted(int(c) for c in cells)
-    if not cells:
-        return
-    root = f"{path}/{_ANN_CODES_ROOT}"
-    hit = set(cells)
-    last: VersionConflict | None = None
-    for _ in range(PUBLISH_RETRIES):
-        v = _latest_version(spark, path)
-        entries = _manifest_entries(spark, path, v)
-        affected = [e for e in entries if e[1] in hit]
-        if not affected:
-            return  # nothing pinned in those cells — no new snapshot
-        rows = _read_segments(
-            spark, root, affected, _ANN_CODES_SCHEMA, pcol="cell"
-        )
-        seg = _new_seg_id()
-        att = _new_att()
-        survivors = _write_segment(rows, root, seg, pcol="cell")
-        new_entries = [e for e in entries if e[1] not in hit] + [
-            (seg, c) for c in survivors
-        ]
-        _write_manifest(spark, path, v + 1, new_entries, att)
-        try:
-            _publish_version(spark, path, v + 1, att)
-            return
-        except VersionConflict as e:
-            last = e
-    raise last if last is not None else RuntimeError("unreachable")
+    def stage(v: int):
+        entries = store._manifest_entries(spark, path, v)
+        if not any(c in hit for _, c in entries):
+            return None  # nothing pinned in those cells: no new snapshot
+        return _rewrite_cells(spark, path, entries, hit), None
+
+    store._commit(spark, path, stage)
 
 
 def ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -767,17 +727,16 @@ def ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-# --- deletion through the index (r13, VERDICT r12 #3) -----------------------
+# --- deletion through the index ---------------------------------------------
 #
-# The remaining CRUD leg after r12's upserts: a governed 100 TB corpus
-# must be able to ERASE documents from the derived stores, not just the
-# base parquet (GDPR erasure reaches the index, the
-# quality.erasure_impact_plan shape).  The delete is tombstone-free and
-# affected-cells-only: find the cells holding any deleted vector (a
-# semi-join against the stored codes — never a corpus scan), rewrite
-# ONLY those cell partitions without the deleted rows (dynamic
-# partition overwrite, the compaction discipline), and drop outright
-# any cell left empty.  The frozen model stays — production erasure
+# A governed 100 TB corpus must be able to ERASE documents from the
+# derived stores, not just the base parquet (GDPR erasure reaches the
+# index, the quality.erasure_impact_plan shape).  The delete is
+# tombstone-free and affected-cells-only: find the cells holding any
+# deleted vector (a semi-join against the pinned codes — never a corpus
+# scan), write those cells' surviving rows into one new segment, and
+# unpin every prior segment of those cells; a cell left empty drops
+# out of the manifest.  The frozen model stays — production erasure
 # removes DATA immediately; the model retrains on its own schedule
 # (here the delete set is disjoint from the training reservoir, so a
 # rebuild-without-the-docs retrains to the IDENTICAL model and the
@@ -815,65 +774,32 @@ def delete_from_index(
     and publish a v+1 manifest that pins the new segment instead of
     every prior pin of the affected cells — old segments are never
     touched, so a concurrent reader of v sees the FULL pre-delete
-    store (true snapshot isolation; the pre-r15 layout rewrote cell
-    partitions in place via dynamic partition overwrite and a
-    mid-delete reader saw mixed cells — VERDICT r14 #2).  A cell left
-    empty simply has no files in the new segment and its old pins are
-    dropped — emptiness needs no explicit directory delete anymore.
+    store.  A cell left empty has no files in the new segment and its
+    old pins are dropped.
     The erased codes become unreachable at publish; vacuum's segment
     GC reclaims the bytes.  Returns the affected cell list (bounded
     ≤ N_CELLS — the model-boundary collect class).  Merge cost is
     proportional to the affected cells' code rows + fixed metadata,
     never to the corpus."""
-    from .retrieval import (
-        PUBLISH_RETRIES,
-        VersionConflict,
-        _latest_version,
-        _manifest_entries,
-        _new_att,
-        _new_seg_id,
-        _publish_version,
-        _read_segments,
-        _write_manifest,
-        _write_segment,
-    )
+    affected: list[int] = []
 
-    root = f"{path}/{_ANN_CODES_ROOT}"
-    last: VersionConflict | None = None
-    for _ in range(PUBLISH_RETRIES):
-        v = _latest_version(spark, path)
-        codes = _ann_pinned_codes(spark, path, v)
-        affected = sorted(
+    def stage(v: int):
+        affected[:] = sorted(
             r["cell"]
-            for r in codes.join(delete_ids, "vec_id", "left_semi")
+            for r in _ann_pinned_codes(spark, path, v)
+            .join(delete_ids, "vec_id", "left_semi")
             .select("cell")
             .distinct()
             .collect()
         )
         if not affected:
-            return []
+            return None
+        entries = store._manifest_entries(spark, path, v)
         hit = set(affected)
-        entries = _manifest_entries(spark, path, v)
-        kept = _read_segments(
-            spark,
-            root,
-            [e for e in entries if e[1] in hit],
-            _ANN_CODES_SCHEMA,
-            pcol="cell",
-        ).join(delete_ids, "vec_id", "left_anti")
-        seg = _new_seg_id()
-        att = _new_att()
-        survivors = _write_segment(kept, root, seg, pcol="cell")
-        new_entries = [e for e in entries if e[1] not in hit] + [
-            (seg, c) for c in survivors
-        ]
-        _write_manifest(spark, path, v + 1, new_entries, att)
-        try:
-            _publish_version(spark, path, v + 1, att)
-            return affected
-        except VersionConflict as e:
-            last = e
-    raise last if last is not None else RuntimeError("unreachable")
+        return _rewrite_cells(spark, path, entries, hit, delete_ids), None
+
+    store._commit(spark, path, stage)
+    return affected
 
 
 def ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -933,7 +859,7 @@ def _ann_stream(spark: SparkSession, sf_dir: str) -> tuple:
 
 def ann_stream_upsert_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ingestion into the ANN index store: the embeddings feed
-    :func:`retrieval.stream_into_store`, composing the index from an
+    :func:`store.stream_into_store`, composing the index from an
     empty store (the first batch writes the frozen model, every batch
     appends its codes into the affected cells only).  The model never
     depends on batch order, so the top-k served from the composed store
@@ -942,13 +868,11 @@ def ann_stream_upsert_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .retrieval import stream_into_store
-
     tmp = tempfile.mkdtemp(prefix="sgraft_ann_stream_")
     try:
         feed, init, upsert = _ann_stream(spark, sf_dir)
-        store = stream_into_store(spark, feed, tmp, init, upsert)
-        centroids, codebook, codes = read_index_versioned(spark, store)
+        path = store.stream_into_store(spark, feed, tmp, init, upsert)
+        centroids, codebook, codes = read_index_versioned(spark, path)
         nv = codes.select("vec_id").distinct().agg(
             F.count(F.lit(1)).alias("n_vecs_indexed")
         )
@@ -963,20 +887,12 @@ def ann_stream_upsert_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def vacuum_ann_store(
-    spark: SparkSession, path: str, keep_last: int = 1
+    spark: SparkSession, path: str, keep_last: int = store.RETAIN_VERSIONS
 ) -> int:
-    """Retention vacuum for the manifest-pinned ANN store: keep the
-    newest ``keep_last`` published versions' manifests, sweep dangling
-    unpublished / losing-attempt staged dirs, and garbage-collect
-    every code segment no retained manifest pins — the crash-recovery
-    + storage-reclaim sweep a 100 TB store runs on a schedule (same
-    contract and single-writer assumption as
-    retrieval.vacuum_bm25_store; this replaces the r13 junk-file
-    sweep, whose in-place layout no longer exists)."""
-    from .retrieval import _vacuum_versioned_store
-
-    return _vacuum_versioned_store(
-        spark, path, ("manifests",), (_ANN_CODES_ROOT,), keep_last
+    """Retention vacuum for the ANN store; the frozen model tables are
+    unversioned and kept (see :func:`store._vacuum_versioned_store`)."""
+    return store._vacuum_versioned_store(
+        spark, path, _ANN_CODES_ROOT, keep_last
     )
 
 
@@ -1294,18 +1210,17 @@ def ann_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()
         ]
         compact_index_cells(spark, tmp, batch_cells)
-        from .retrieval import _latest_version, _run_staged
 
         # the retention vacuum runs alongside the serve: it keeps the
         # served version's manifest, model tables and pinned segments
-        v = _latest_version(spark, tmp)
+        v = store._latest_version(spark, tmp)
         tele = dels.agg(
             F.count(F.lit(1)).alias("n_deleted"),
             F.lit(len(affected_del)).cast("bigint").alias(
                 "n_cells_rewritten"
             ),
         )
-        _, out = _run_staged(
+        _, out = store._run_staged(
             lambda: vacuum_ann_store(spark, tmp, keep_last=1),
             lambda: topk_from_index(
                 *read_index_versioned(spark, tmp, v), emb

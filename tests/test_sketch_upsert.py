@@ -14,8 +14,8 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from intellect_bi_spark import store
 from intellect_bi_spark.catalog import load_tables
-from intellect_bi_spark.operators import retrieval as rt
 from intellect_bi_spark.operators import sketches as sk
 
 
@@ -29,11 +29,11 @@ def _cells(spark, path, v=None):
     """(day, event_type) → (estimate, n_events) from the store's
     PINNED cells (latest or version ``v``'s manifest)."""
     if v is None:
-        v = rt._latest_version(spark, path)
-    pinned = rt._read_segments(
+        v = store._latest_version(spark, path)
+    pinned = store._read_segments(
         spark,
         f"{path}/{sk._SK_ROOT}",
-        rt._manifest_entries(spark, path, v),
+        store._manifest_entries(spark, path, v),
         sk._SK_CELL_SCHEMA,
         pcol="day_part",
     )
@@ -96,7 +96,7 @@ def test_sketch_upsert_copy_on_write_and_manifest(spark, sf_dir):
     try:
         sk._init_sketch_store(ev.filter(~is_batch), tmp)
         before = _seg_files(tmp)
-        v1_entries = rt._manifest_entries(spark, tmp, 1)
+        v1_entries = store._manifest_entries(spark, tmp, 1)
         batch_days = sorted(
             str(r["d"])
             for r in ev.filter(is_batch)
@@ -111,7 +111,7 @@ def test_sketch_upsert_copy_on_write_and_manifest(spark, sf_dir):
         after = _seg_files(tmp)
         for f, sz in before.items():
             assert after.get(f) == sz, f"{f}: pre-existing file changed"
-        v2_entries = rt._manifest_entries(spark, tmp, 2)
+        v2_entries = store._manifest_entries(spark, tmp, 2)
         new = [e for e in v2_entries if e not in v1_entries]
         assert sorted(d for _, d in new) == batch_days
         segs = {s for s, _ in new}
@@ -163,7 +163,7 @@ def test_sketch_delete_pinned_reader_snapshot(spark, sf_dir):
         pre_cells = _cells(spark, tmp, v=1)
         pre_served = _served(spark, tmp, v=1)
         pre_files = _seg_files(tmp)
-        v1_entries = rt._manifest_entries(spark, tmp, 1)
+        v1_entries = store._manifest_entries(spark, tmp, 1)
         affected = sk.delete_users_from_sketch_store(spark, tmp, ev, pred)
         assert affected
         # the pinned reader: full pre-delete state, bit-exact
@@ -173,7 +173,7 @@ def test_sketch_delete_pinned_reader_snapshot(spark, sf_dir):
         for f, sz in pre_files.items():
             assert after_files.get(f) == sz, f"{f}: pinned file changed"
         # the latest reader: survivors only, no erased-day leakage
-        v2_entries = rt._manifest_entries(spark, tmp, 2)
+        v2_entries = store._manifest_entries(spark, tmp, 2)
         hit = set(affected)
         assert not [e for e in v2_entries if e in v1_entries and e[1] in hit]
         post_served = _served(spark, tmp)
@@ -188,7 +188,7 @@ def test_sketch_delete_pinned_reader_snapshot(spark, sf_dir):
         # vacuum: v1 gone, unreferenced segments GC'd, serve unchanged
         removed = sk.vacuum_sketch_store(spark, tmp, keep_last=1)
         assert removed > 0
-        live_segs = {s for s, _ in rt._manifest_entries(spark, tmp, 2)}
+        live_segs = {s for s, _ in store._manifest_entries(spark, tmp, 2)}
         root = os.path.join(tmp, sk._SK_ROOT)
         on_disk = {
             d[4:] for d in os.listdir(root) if d.startswith("seg=")
@@ -240,23 +240,23 @@ def test_sketch_stream_composes_to_single_pass_build(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="sgraft_skstream_")
     tmp2 = tempfile.mkdtemp(prefix="sgraft_skstream_build_")
     try:
-        store = rt.stream_into_store(spark, feed, tmp, init, upsert)
-        assert rt._published_bids(spark, store) == set(
-            range(rt.N_FEED_FILES)
+        path = store.stream_into_store(spark, feed, tmp, init, upsert)
+        assert store._published_bids(spark, path) == set(
+            range(store.N_FEED_FILES)
         )
         sk.build_sketch_rollup_store(spark, sf_dir, tmp2)
-        got = _served(spark, store)
+        got = _served(spark, path)
         assert got == _served(spark, tmp2)
         # exact accounting reached the store losslessly
         n_ev = ev.count()
         assert sum(n for _t, _e, n in got) == n_ev
         # redelivery of an applied batch id through the sink changes
         # nothing: same version, same served rows
-        v_before = rt._latest_version(spark, store)
-        for bid in (0, rt.N_FEED_FILES - 1):
-            rt._apply_stream_batch(store, ev.limit(50), bid, init, upsert)
-            assert rt._latest_version(spark, store) == v_before
-            assert _served(spark, store) == got
+        v_before = store._latest_version(spark, path)
+        for bid in (0, store.N_FEED_FILES - 1):
+            store._apply_stream_batch(path, ev.limit(50), bid, init, upsert)
+            assert store._latest_version(spark, path) == v_before
+            assert _served(spark, path) == got
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
         shutil.rmtree(tmp2, ignore_errors=True)

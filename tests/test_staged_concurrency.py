@@ -12,7 +12,7 @@ from pathlib import Path
 
 import pytest
 
-from intellect_bi_spark.operators.retrieval import _run_staged
+from intellect_bi_spark.store import _run_staged
 
 PACKAGE = Path(__file__).resolve().parents[1] / "intellect_bi_spark"
 
@@ -118,5 +118,32 @@ def test_one_thread_pool_and_no_scheduler_settings():
             and node.value
             in ("spark.scheduler.pool", "spark.scheduler.mode")
         ]
-    assert pool_sites == [("retrieval.py", "_run_staged")]
+    assert pool_sites == [("store.py", "_run_staged")]
     assert settings == []
+
+
+def test_publish_steps_and_retry_budget_only_in_store():
+    """Only ``store.py`` mints attempt ids, stages manifests and creates
+    publish markers, and only it names the retry budget and the
+    conflict signal: every other module publishes through
+    ``store._commit`` or ``store._publish_manifest``."""
+    steps = {"_new_att", "_write_manifest", "_publish_version"}
+    names = {"PUBLISH_RETRIES", "VersionConflict"}
+    calls, refs = set(), set()
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        for _fn, call in _calls_by_function(tree):
+            f = call.func
+            callee = f.id if isinstance(f, ast.Name) else getattr(
+                f, "attr", None
+            )
+            if callee in steps:
+                calls.add((path.name, callee))
+        for node in ast.walk(tree):
+            name = node.id if isinstance(node, ast.Name) else getattr(
+                node, "attr", None
+            )
+            if isinstance(node, (ast.Name, ast.Attribute)) and name in names:
+                refs.add((path.name, name))
+    assert calls == {("store.py", step) for step in steps}
+    assert refs == {("store.py", name) for name in names}

@@ -14,7 +14,9 @@ IVF-PQ codes, HLL sketch rollup), checked across all four families:
 - every family's manifest is one JSON object ``{"pins": [...]}`` (BM25
   adds ``"stats"``) that round-trips through ``_read_manifest``;
 - the BM25 steps stay within their Spark job budgets, and a delete
-  rewrites only the files holding an erased doc.
+  rewrites only the files holding an erased doc;
+- every ANN and sketch mutation that loses a publish race retries onto
+  the winner's version without disturbing it.
 """
 
 from __future__ import annotations
@@ -30,6 +32,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, _parse_datatype_string
 
+from intellect_bi_spark import store
 from intellect_bi_spark.catalog import load_tables
 from intellect_bi_spark.operators import retrieval as rt
 from intellect_bi_spark.operators import sketches as sk
@@ -151,18 +154,18 @@ def _lifecycle(spark, sf_dir, family: str, path: str) -> dict[str, set]:
 def _recorded_writes():
     """Record the value list every segment write returns, by segment
     directory."""
-    write, returned = rt._write_observed, {}
+    write, returned = store._write_observed, {}
 
     def recording(df, root, seg, pcol, *metrics, keep=None):
         got = write(df, root, seg, pcol, *metrics, keep=keep)
         returned[f"{root}/seg={seg}"] = got["values"]
         return got
 
-    rt._write_observed = recording
+    store._write_observed = recording
     try:
         yield returned
     finally:
-        rt._write_observed = write
+        store._write_observed = write
 
 
 @pytest.fixture(scope="module")
@@ -213,9 +216,9 @@ def test_declared_schemas_match_stored_files(spark, lifecycles, family):
 
 def test_sketch_day_partition_reads_as_manifest_string(spark, lifecycles):
     path, _, _ = lifecycles["sketch"]
-    v = rt._latest_version(spark, path)
-    entries = rt._manifest_entries(spark, path, v)
-    cells = rt._read_segments(
+    v = store._latest_version(spark, path)
+    entries = store._manifest_entries(spark, path, v)
+    cells = store._read_segments(
         spark,
         f"{path}/{sk._SK_ROOT}",
         entries,
@@ -260,8 +263,8 @@ def test_write_returns_the_stored_values(spark, lifecycles, family):
             seg_dir = f"{path}/{seg_root}/{seg}"
             stored = sorted(_value_files(seg_dir, pcol))
             assert returned[seg_dir] == stored, (step, seg)
-    v = rt._latest_version(spark, path)
-    for seg, value in rt._manifest_entries(spark, path, v):
+    v = store._latest_version(spark, path)
+    for seg, value in store._manifest_entries(spark, path, v):
         assert value in returned[f"{path}/{seg_root}/seg={seg}"], (seg, value)
 
 
@@ -282,9 +285,9 @@ def test_erasure_that_empties_a_day_pins_nothing_for_it(spark, sf_dir):
                 spark, f"{tmp}/store", ev, erased
             )
         assert affected == [gone] and list(returned.values()) == [[]]
-        v = rt._latest_version(spark, f"{tmp}/store")
+        v = store._latest_version(spark, f"{tmp}/store")
         assert v == 2
-        pinned = {d for _, d in rt._manifest_entries(spark, f"{tmp}/store", v)}
+        pinned = {d for _, d in store._manifest_entries(spark, f"{tmp}/store", v)}
         assert gone not in pinned and pinned
         sk._init_sketch_store(ev.filter(~erased), f"{tmp}/rebuild")
         got = sorted(
@@ -338,8 +341,8 @@ def test_store_serve_submits_no_job_before_action(spark, sf_dir, family):
             sk.upsert_sketch_rollup_store(
                 ev.filter(sk._del_users_pred()), tmp
             )
-            v = rt._latest_version(spark, tmp)
-            assert len(rt._manifest_entries(spark, tmp, v)) > 32
+            v = store._latest_version(spark, tmp)
+            assert len(store._manifest_entries(spark, tmp, v)) > 32
         load_tables(spark, sf_dir)  # catalog set-up is not the serve's
         sc = spark.sparkContext
         group = f"test_store_serve_no_job_{family}"
@@ -365,15 +368,15 @@ def test_empty_micro_batch_publishes_nothing(spark, sf_dir, family):
     it publishes no version and records no bid."""
     feed, init, upsert = STREAMS[family](spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="sgraft_store_empty_batch_")
-    store = f"{tmp}/store"
+    path = f"{tmp}/store"
     try:
-        rt._apply_stream_batch(store, feed.limit(0), 0, init, upsert)
-        assert not os.path.exists(store)
-        rt._apply_stream_batch(store, feed, 0, init, upsert)
-        assert rt._published_versions(spark, store) == [1]
-        rt._apply_stream_batch(store, feed.limit(0), 2, init, upsert)
-        assert rt._published_versions(spark, store) == [1]
-        assert rt._published_bids(spark, store) == {0}
+        store._apply_stream_batch(path, feed.limit(0), 0, init, upsert)
+        assert not os.path.exists(path)
+        store._apply_stream_batch(path, feed, 0, init, upsert)
+        assert store._published_versions(spark, path) == [1]
+        store._apply_stream_batch(path, feed.limit(0), 2, init, upsert)
+        assert store._published_versions(spark, path) == [1]
+        assert store._published_bids(spark, path) == {0}
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -385,13 +388,13 @@ def test_manifest_round_trips(spark, lifecycles, family):
     what was written, values typed as stored; a manifest written from
     that reading reads back unchanged."""
     path, _, _ = lifecycles[family]
-    v = rt._latest_version(spark, path)
-    with open(rt._table_dir(spark, path, "manifests", v)) as f:
+    v = store._latest_version(spark, path)
+    with open(store._table_dir(spark, path, "manifests", v)) as f:
         raw = json.load(f)
     assert set(raw) == ({"pins", "stats"} if family == "bm25" else {"pins"})
-    got = rt._read_manifest(spark, path, v)
+    got = store._read_manifest(spark, path, v)
     assert got["pins"] == sorted(tuple(p) for p in raw["pins"])
-    assert got["pins"] == rt._manifest_entries(spark, path, v)
+    assert got["pins"] == store._manifest_entries(spark, path, v)
     if family == "bm25":
         assert got["stats"] == (
             raw["stats"]["n_docs"], raw["stats"]["sum_len"]
@@ -401,10 +404,10 @@ def test_manifest_round_trips(spark, lifecycles, family):
         assert got["stats"] is None
     tmp = tempfile.mkdtemp(prefix="sgraft_manifest_rt_")
     try:
-        att = rt._new_att()
-        rt._write_manifest(spark, tmp, 1, got["pins"], att, got["stats"])
-        rt._publish_version(spark, tmp, 1, att)
-        assert rt._read_manifest(spark, tmp, 1) == got
+        att = store._new_att()
+        store._write_manifest(spark, tmp, 1, got["pins"], att, got["stats"])
+        store._publish_version(spark, tmp, 1, att)
+        assert store._read_manifest(spark, tmp, 1) == got
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -423,7 +426,7 @@ def test_bm25_write_postings_counts_every_doc_once(spark):
         buckets, stats = rt._write_postings(docs, tmp, "s1")
         n, s = rt._stats2_of(rt._toks_of(docs)).collect()[0]
         assert stats == (n, s) == (5, 7)
-        stored = rt._read_segments(
+        stored = store._read_segments(
             spark, tmp, [("s1", b) for b in buckets], rt._BM25_POSTING_SCHEMA
         )
         want = rt._postings_of(rt._toks_of(docs))
@@ -477,14 +480,14 @@ def test_bm25_steps_stay_within_job_budgets(spark, sf_dir):
         for step, (run, budget) in budgets.items():
             n = _step_jobs(spark, step, run)
             assert 0 < n <= budget, (step, n, budget)
-        v = rt._latest_version(spark, tmp)
+        v = store._latest_version(spark, tmp)
         assert v == 3
         n = _step_jobs(
             spark,
             "compact",
             lambda: rt.compact_bm25_buckets(spark, tmp, range(rt.N_TB)),
         )
-        assert n == 0 and rt._latest_version(spark, tmp) == v
+        assert n == 0 and store._latest_version(spark, tmp) == v
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -513,7 +516,7 @@ def test_bm25_delete_of_an_upsert_restores_the_base_pins(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="sgraft_bm25_del_upsert_")
     try:
         rt.build_bm25_index_v2(spark, sf_dir, tmp)
-        base = rt._read_manifest(spark, tmp, 1)
+        base = store._read_manifest(spark, tmp, 1)
         (base_seg,) = {s for s, _ in base["pins"]}
         base_bytes = _file_bytes(f"{tmp}/postings/seg={base_seg}")
         served = _served(spark, tmp)
@@ -521,12 +524,12 @@ def test_bm25_delete_of_an_upsert_restores_the_base_pins(spark, sf_dir):
         segs = _segments(f"{tmp}/postings")
         rt.delete_from_bm25_index(spark, tmp, batch)
         assert _segments(f"{tmp}/postings") == segs  # no rewrite
-        assert rt._latest_version(spark, tmp) == 3
-        assert rt._read_manifest(spark, tmp, 3) == base
+        assert store._latest_version(spark, tmp) == 3
+        assert store._read_manifest(spark, tmp, 3) == base
         assert _file_bytes(f"{tmp}/postings/seg={base_seg}") == base_bytes
         assert _served(spark, tmp) == served
         rt.compact_bm25_buckets(spark, tmp, range(rt.N_TB))
-        assert rt._latest_version(spark, tmp) == 3
+        assert store._latest_version(spark, tmp) == 3
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -555,22 +558,132 @@ def test_bm25_delete_unpins_only_the_files_holding_erased_docs(
     tmp = tempfile.mkdtemp(prefix="sgraft_bm25_del_spread_")
     try:
         rt._init_bm25_store(docs, f"{tmp}/store")
-        m1 = rt._read_manifest(spark, f"{tmp}/store", 1)
+        m1 = store._read_manifest(spark, f"{tmp}/store", 1)
         assert sorted(rt.delete_from_bm25_index(
             spark, f"{tmp}/store", erased
         )) == sorted(touched)
-        m2 = rt._read_manifest(spark, f"{tmp}/store", 2)
+        m2 = store._read_manifest(spark, f"{tmp}/store", 2)
         unpinned = set(m1["pins"]) - set(m2["pins"])
         assert unpinned == {e for e in m1["pins"] if e[1] in touched}
         new = set(m2["pins"]) - set(m1["pins"])
         assert len({s for s, _ in new}) == 1
         assert {t for _, t in new} == touched
         rt._init_bm25_store(kept, f"{tmp}/rebuild")
-        assert m2["stats"] == rt._read_manifest(
+        assert m2["stats"] == store._read_manifest(
             spark, f"{tmp}/rebuild", 1
         )["stats"]
         assert _served(spark, f"{tmp}/store") == _served(
             spark, f"{tmp}/rebuild"
         )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _mutation(spark, sf_dir, family: str, step: str):
+    """(build, mutate, vacuum) of one ANN or sketch mutation; build and
+    mutate take the store path.  The deletes erase one vector (one
+    cell) and one user (24 of the 30 days at sf0.001), so they keep
+    pins of untouched cells and days."""
+    if family == "ann":
+        emb = load_tables(spark, sf_dir)["embeddings"]
+        mutate = {
+            "upsert": lambda p: vs.upsert_index(
+                spark, sf_dir, p, emb.filter(vs._upsert_batch_pred())),
+            "delete": lambda p: vs.delete_from_index(
+                spark, p, emb.filter(vs._delete_pred()).agg(
+                    F.min("vec_id").alias("vec_id"))),
+            "compact": lambda p: vs.compact_index_cells(
+                spark, p, range(vs.N_CELLS)),
+        }[step]
+        return (
+            lambda p: vs.build_index_frozen(spark, sf_dir, p),
+            mutate,
+            vs.vacuum_ann_store,
+        )
+    ev = _events(spark, sf_dir)
+    erased = F.col("user_id") == 5
+    mutate = {
+        "upsert": lambda p: sk.upsert_sketch_rollup_store(
+            ev.filter(erased), p),
+        "delete": lambda p: sk.delete_users_from_sketch_store(
+            spark, p, ev, erased),
+        "compact": lambda p: sk.compact_sketch_store(spark, p),
+    }[step]
+    return (
+        lambda p: sk._init_sketch_store(ev, p),
+        mutate,
+        sk.vacuum_sketch_store,
+    )
+
+
+@pytest.mark.parametrize("step", ("upsert", "delete", "compact"))
+@pytest.mark.parametrize("family", ("ann", "sketch"))
+def test_mutation_retries_after_a_competing_publish(
+    spark, sf_dir, monkeypatch, family, step
+):
+    """A competing writer publishes v+1 between the mutation's staging
+    and its publish: the same rows as v, copied into a new segment.  The
+    mutation's publish raises exactly one ``VersionConflict`` and its
+    retry publishes v+2 on top of the winner (pinning none of v's
+    segments, which the winner unpinned), whose manifest stays
+    byte-identical; the serve and the mutation's result equal the same
+    mutation run without the race, and vacuum sweeps the loser's staged
+    manifest."""
+    build, mutate, vacuum = _mutation(spark, sf_dir, family, step)
+    root, pcol, schema, _ = _LAYOUT[family]
+    tmp = tempfile.mkdtemp(prefix="sgraft_store_race_")
+    calm, raced = f"{tmp}/calm", f"{tmp}/raced"
+    try:
+        build(calm)
+        shutil.copytree(calm, raced)
+        want = mutate(calm)
+        publish = store._publish_version
+        race = {"conflicts": 0, "loser": None, "winner": None}
+
+        def racing(sess, path, v, att, bid=None):
+            if race["loser"] is None:
+                race["loser"] = att
+                seg, segs = store._new_seg_id(), f"{path}/{root}"
+                rows = store._read_segments(
+                    sess,
+                    segs,
+                    store._manifest_entries(sess, path, v - 1),
+                    schema,
+                    pcol=pcol,
+                )
+                values = store._write_segment(rows, segs, seg, pcol=pcol)
+                store._publish_manifest(
+                    sess, path, v, [(seg, x) for x in values]
+                )
+                with open(store._table_dir(sess, path, "manifests", v),
+                          "rb") as f:
+                    race["winner"] = f.read()
+            try:
+                return publish(sess, path, v, att, bid)
+            except store.VersionConflict:
+                race["conflicts"] += 1
+                raise
+
+        monkeypatch.setattr(store, "_publish_version", racing)
+        got = mutate(raced)
+        monkeypatch.undo()
+        assert race["conflicts"] == 1
+        assert got == want
+        assert store._latest_version(spark, raced) == 3
+        base = {s for s, _ in store._manifest_entries(spark, raced, 1)}
+        assert not base & {
+            s for s, _ in store._manifest_entries(spark, raced, 3)
+        }
+        winner = store._table_dir(spark, raced, "manifests", 2)
+        with open(winner, "rb") as f:
+            assert f.read() == race["winner"]
+        assert sorted(_serve(spark, sf_dir, family, raced).collect()) == (
+            sorted(_serve(spark, sf_dir, family, calm).collect())
+        )
+        loser = f"{raced}/manifests/v=2-{race['loser']}"
+        assert os.path.exists(loser)
+        vacuum(spark, raced, keep_last=2)
+        assert not os.path.exists(loser)
+        assert os.path.exists(winner)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

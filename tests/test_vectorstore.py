@@ -15,6 +15,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from intellect_bi_spark import store
 from intellect_bi_spark.operators import vectorstore as vs
 from intellect_bi_spark.operators.clustering import _pq_codes
 from intellect_bi_spark.operators.similarity import _emb, ivf_assignments
@@ -79,8 +80,6 @@ def test_build_index_failed_rename_keeps_old_and_new_tables(
     ``_build-*``: the failure destroys neither store."""
     import os
 
-    from intellect_bi_spark.operators import retrieval as rt
-
     tables = ("centroids", "codebook", "codes")
 
     def files(root):
@@ -105,7 +104,7 @@ def test_build_index_failed_rename_keeps_old_and_new_tables(
                 return False
             return self._fs.rename(src, dst)
 
-    real_fs_of = rt._fs_of
+    real_fs_of = store._fs_of
 
     def failing_fs_of(spark, path):
         fs, hpath = real_fs_of(spark, path)
@@ -115,7 +114,7 @@ def test_build_index_failed_rename_keeps_old_and_new_tables(
     try:
         vs.build_index(spark, sf_dir, tmp)
         old = {t: files(f"{tmp}/{t}") for t in tables}
-        monkeypatch.setattr(rt, "_fs_of", failing_fs_of)
+        monkeypatch.setattr(store, "_fs_of", failing_fs_of)
         with pytest.raises(IOError):
             vs.build_index(spark, sf_dir, tmp)
         monkeypatch.undo()
@@ -312,15 +311,13 @@ def test_upsert_rewrites_only_affected_cells(spark, sf_dir):
     segment whose cells are the batch's assigned cells, and the v=2
     manifest extends v=1's pin list by exactly that segment's
     entries."""
-    from intellect_bi_spark.operators import retrieval as rt
-
     emb = _emb(spark, sf_dir)
     batch = emb.filter(vs._upsert_batch_pred())
     tmp = tempfile.mkdtemp(prefix="sgraft_upsertfiles_")
     try:
         vs.build_index_frozen(spark, sf_dir, tmp)
         before = _tree_files(f"{tmp}/codes")
-        m1 = rt._manifest_entries(spark, tmp, 1)
+        m1 = store._manifest_entries(spark, tmp, 1)
         centroids = spark.read.parquet(f"{tmp}/centroids")
         batch_cells = {
             int(r["cell"])
@@ -336,7 +333,7 @@ def test_upsert_rewrites_only_affected_cells(spark, sf_dir):
         new_segs = {path.split("/", 1)[0] for path in new_files}
         assert len(new_segs) == 1, f"batch spread over {new_segs}"
         assert new_segs.isdisjoint({f"seg={seg}" for seg, _ in m1})
-        m2 = rt._manifest_entries(spark, tmp, 2)
+        m2 = store._manifest_entries(spark, tmp, 2)
         assert set(m1) <= set(m2), "v=2 manifest dropped a v=1 pin"
         added = set(m2) - set(m1)
         assert {c for _, c in added} == batch_cells
@@ -352,10 +349,10 @@ def _pinned_df(spark, path, v):
 
     return sorted(
         (r["term"], r["df"])
-        for r in rt._read_segments(
+        for r in store._read_segments(
             spark,
             f"{path}/postings",
-            rt._manifest_entries(spark, path, v),
+            store._manifest_entries(spark, path, v),
             rt._BM25_POSTING_SCHEMA,
         )
         .groupBy("term")
@@ -407,11 +404,11 @@ def test_bm25_upsert_equals_rebuild_and_direct(spark, sf_dir):
             for r in rt.serve_bm25_v2(spark, tmp).collect()
         ]
         assert got == want and len(got) == rt.TOP_K
-        v = rt._latest_version(spark, tmp)
+        v = store._latest_version(spark, tmp)
         assert v == 2  # build wrote v=1, the upsert wrote v=2
         docs = rt._base_docs(spark, sf_dir)
         assert _pinned_df(spark, tmp, v) == _rebuild_df(docs)
-        assert rt._read_manifest(spark, tmp, v)["stats"] == (
+        assert store._read_manifest(spark, tmp, v)["stats"] == (
             _rebuild_stats(docs)
         )
     finally:
@@ -448,7 +445,7 @@ def test_bm25_upsert_appends_only_batch_term_buckets(spark, sf_dir):
     try:
         rt.build_bm25_index_v2(spark, sf_dir, tmp)
         before = _tree_files(f"{tmp}/postings")
-        v1 = rt._read_manifest(spark, tmp, 1)
+        v1 = store._read_manifest(spark, tmp, 1)
         m1 = v1["pins"]
         batch = rt._base_docs(spark, sf_dir).filter(rt._doc_batch_pred())
         batch_buckets = {
@@ -468,16 +465,16 @@ def test_bm25_upsert_appends_only_batch_term_buckets(spark, sf_dir):
         new_segs = {p.split("/", 1)[0] for p in new_files}
         assert len(new_segs) == 1, f"batch spread over {new_segs}"
         assert new_segs.isdisjoint({f"seg={s}" for s, _ in m1})
-        m2 = rt._manifest_entries(spark, tmp, 2)
+        m2 = store._manifest_entries(spark, tmp, 2)
         assert set(m1) <= set(m2), "v=2 manifest dropped a v=1 pin"
         added = set(m2) - set(m1)
         assert {t for _, t in added} == batch_buckets
         assert {f"seg={s}" for s, _ in added} == new_segs
         # v=1 is unchanged (snapshot isolation); v=2 adds the batch
-        assert rt._read_manifest(spark, tmp, 1) == v1
+        assert store._read_manifest(spark, tmp, 1) == v1
         bn, bs = _rebuild_stats(batch)
         n1, s1 = v1["stats"]
-        assert rt._read_manifest(spark, tmp, 2)["stats"] == (n1 + bn, s1 + bs)
+        assert store._read_manifest(spark, tmp, 2)["stats"] == (n1 + bn, s1 + bs)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -522,38 +519,38 @@ def test_bm25_stream_upsert_version_chain(spark, sf_dir):
     feed, init, upsert = rt._bm25_stream(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="sgraft_bm25streamtest_")
     try:
-        store = rt.stream_into_store(spark, feed, tmp, init, upsert)
-        assert rt._latest_version(spark, store) == rt.N_FEED_FILES
+        path = store.stream_into_store(spark, feed, tmp, init, upsert)
+        assert store._latest_version(spark, path) == store.N_FEED_FILES
         # every intermediate version survives (snapshot isolation chain)
-        for v in range(1, rt.N_FEED_FILES + 1):
+        for v in range(1, store.N_FEED_FILES + 1):
             assert os.path.isfile(
-                rt._table_dir(spark, store, "manifests", v)
+                store._table_dir(spark, path, "manifests", v)
             )
         got = [
             (r["doc_id"], r["n_hit_terms"], r["score_q"])
-            for r in rt.serve_bm25_v2(spark, store).collect()
+            for r in rt.serve_bm25_v2(spark, path).collect()
         ]
         assert got == want and len(got) == rt.TOP_K
         # final df and stats == full corpus accounting
-        v = rt._latest_version(spark, store)
+        v = store._latest_version(spark, path)
         docs = rt._base_docs(spark, sf_dir)
-        stats = rt._read_manifest(spark, store, v)["stats"]
+        stats = store._read_manifest(spark, path, v)["stats"]
         assert stats == _rebuild_stats(docs)
-        assert _pinned_df(spark, store, v) == _rebuild_df(docs)
+        assert _pinned_df(spark, path, v) == _rebuild_df(docs)
         # exactly-once: every applied batch's id rides a published
         # version, so redelivering one through the sink must NOT
         # double-append — version, stats and served rows unchanged
-        assert rt._published_bids(spark, store) == set(
-            range(rt.N_FEED_FILES)
+        assert store._published_bids(spark, path) == set(
+            range(store.N_FEED_FILES)
         )
         redelivered = docs.limit(5)
-        for bid in (0, rt.N_FEED_FILES - 1):
-            rt._apply_stream_batch(store, redelivered, bid, init, upsert)
-            assert rt._latest_version(spark, store) == v
-            assert rt._read_manifest(spark, store, v)["stats"] == stats
+        for bid in (0, store.N_FEED_FILES - 1):
+            store._apply_stream_batch(path, redelivered, bid, init, upsert)
+            assert store._latest_version(spark, path) == v
+            assert store._read_manifest(spark, path, v)["stats"] == stats
         got2 = [
             (r["doc_id"], r["n_hit_terms"], r["score_q"])
-            for r in rt.serve_bm25_v2(spark, store).collect()
+            for r in rt.serve_bm25_v2(spark, path).collect()
         ]
         assert got2 == want
     finally:
@@ -570,8 +567,6 @@ def test_compact_rewrites_only_affected_cells_to_one_file(spark, sf_dir):
     set), and (c) leave the served ranking unchanged."""
     from collections import Counter
 
-    from intellect_bi_spark.operators import retrieval as rt
-
     emb = _emb(spark, sf_dir)
     batch = emb.filter(vs._upsert_batch_pred())
     tmp = tempfile.mkdtemp(prefix="sgraft_compact_")
@@ -587,7 +582,7 @@ def test_compact_rewrites_only_affected_cells_to_one_file(spark, sf_dir):
             .collect()
         }
         before = _tree_files(f"{tmp}/codes")
-        m2 = rt._manifest_entries(spark, tmp, 2)
+        m2 = store._manifest_entries(spark, tmp, 2)
         pins_per_cell = Counter(c for _, c in m2)
         assert any(pins_per_cell[c] > 1 for c in affected)  # real fragmentation
         codes_before = sorted(
@@ -601,11 +596,11 @@ def test_compact_rewrites_only_affected_cells_to_one_file(spark, sf_dir):
             ).collect()
         ]
         vs.compact_index_cells(spark, tmp, sorted(affected))
-        assert rt._latest_version(spark, tmp) == 3  # a snapshot, not a rewrite
+        assert store._latest_version(spark, tmp) == 3  # a snapshot, not a rewrite
         after = _tree_files(f"{tmp}/codes")
         for path, sz in before.items():
             assert after.get(path) == sz, f"{path}: old file changed"
-        m3 = rt._manifest_entries(spark, tmp, 3)
+        m3 = store._manifest_entries(spark, tmp, 3)
         assert [e for e in m2 if e[1] not in affected] == [
             e for e in m3 if e[1] not in affected
         ], "unaffected pins changed"
@@ -652,7 +647,7 @@ def test_ann_delete_rewrites_only_affected_cells(spark, sf_dir):
 
         vs.build_index_frozen_full(spark, sf_dir, tmp)
         before = _tree_files(f"{tmp}/codes")
-        m1 = rt._manifest_entries(spark, tmp, 1)
+        m1 = store._manifest_entries(spark, tmp, 1)
         codes_before = sorted(
             (r["vec_id"], r["m"], r["cid"], r["cell"])
             for r in vs.read_index_versioned(spark, tmp)[2].collect()
@@ -672,7 +667,7 @@ def test_ann_delete_rewrites_only_affected_cells(spark, sf_dir):
             assert after.get(path) == sz, f"{path}: pre-existing file changed"
         # untouched cells keep their exact v=1 pins; affected cells are
         # re-pinned to one survivor segment
-        m2 = rt._manifest_entries(spark, tmp, 2)
+        m2 = store._manifest_entries(spark, tmp, 2)
         assert [e for e in m1 if e[1] not in hit] == [
             e for e in m2 if e[1] not in hit
         ], "untouched cells re-pinned"
@@ -683,7 +678,7 @@ def test_ann_delete_rewrites_only_affected_cells(spark, sf_dir):
         # pinned at v=1 sees the COMPLETE pre-delete store — identical
         # pins, byte-identical files, identical served ranking — even
         # after the delete fully committed v=2
-        assert rt._manifest_entries(spark, tmp, 1) == m1
+        assert store._manifest_entries(spark, tmp, 1) == m1
         for seg in {s for s, _ in m1}:
             pinned = {path for path in before if path.startswith(f"seg={seg}/")}
             assert pinned
@@ -736,26 +731,24 @@ def test_ann_stream_upsert_marker_chain(spark, sf_dir):
     each publishing one version whose publish marker carries its batch
     id, composes the full corpus into the codes table, and skips a
     redelivered batch id without double-appending."""
-    from intellect_bi_spark.operators import retrieval as rt
-
     emb = _emb(spark, sf_dir)
     feed, init, upsert = vs._ann_stream(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="sgraft_annstreamtest_")
     try:
-        store = rt.stream_into_store(spark, feed, tmp, init, upsert)
+        path = store.stream_into_store(spark, feed, tmp, init, upsert)
         # one published version per applied batch, each carrying its bid
-        assert rt._latest_version(spark, store) == rt.N_FEED_FILES
-        assert rt._published_bids(spark, store) == set(
-            range(rt.N_FEED_FILES)
+        assert store._latest_version(spark, path) == store.N_FEED_FILES
+        assert store._published_bids(spark, path) == set(
+            range(store.N_FEED_FILES)
         )
-        codes = vs.read_index_versioned(spark, store)[2]
+        codes = vs.read_index_versioned(spark, path)[2]
         n_corpus = emb.count()
         assert codes.select("vec_id").distinct().count() == n_corpus
         n_rows = codes.count()
         serve = [
             tuple(r)
             for r in vs.topk_from_index(
-                *vs.read_index_versioned(spark, store), emb
+                *vs.read_index_versioned(spark, path), emb
             ).collect()
         ]
         # the composed store serves the single-pass full build's answer
@@ -770,16 +763,16 @@ def test_ann_stream_upsert_marker_chain(spark, sf_dir):
         assert serve == want and len(serve) == vs.TOP_K
         # redelivery of an applied batch id through the sink changes
         # nothing: same version, same codes, same served rows
-        for bid in (0, rt.N_FEED_FILES - 1):
-            rt._apply_stream_batch(store, emb.limit(5), bid, init, upsert)
-            assert rt._latest_version(spark, store) == rt.N_FEED_FILES
-            codes2 = vs.read_index_versioned(spark, store)[2]
+        for bid in (0, store.N_FEED_FILES - 1):
+            store._apply_stream_batch(path, emb.limit(5), bid, init, upsert)
+            assert store._latest_version(spark, path) == store.N_FEED_FILES
+            codes2 = vs.read_index_versioned(spark, path)[2]
             assert codes2.count() == n_rows
             assert codes2.select("vec_id").distinct().count() == n_corpus
         assert [
             tuple(r)
             for r in vs.topk_from_index(
-                *vs.read_index_versioned(spark, store), emb
+                *vs.read_index_versioned(spark, path), emb
             ).collect()
         ] == serve
     finally:
@@ -796,18 +789,16 @@ def test_vacuum_ann_store_retention_and_segment_gc(spark, sf_dir):
     Idempotent: a second vacuum removes nothing."""
     import os
 
-    from intellect_bi_spark.operators import retrieval as rt
-
     emb = _emb(spark, sf_dir)
     tmp = tempfile.mkdtemp(prefix="sgraft_annvac_")
     try:
         vs.build_index_frozen(spark, sf_dir, tmp)
-        m1 = rt._manifest_entries(spark, tmp, 1)
+        m1 = store._manifest_entries(spark, tmp, 1)
         seg_a = {seg for seg, _ in m1}
         assert len(seg_a) == 1
         all_cells = sorted({c for _, c in m1})
         vs.compact_index_cells(spark, tmp, all_cells)
-        assert rt._latest_version(spark, tmp) == 2
+        assert store._latest_version(spark, tmp) == 2
         serve_before = [
             tuple(r)
             for r in vs.topk_from_index(
@@ -817,21 +808,21 @@ def test_vacuum_ann_store_retention_and_segment_gc(spark, sf_dir):
         # plant a losing attempt's staged manifest file (the race
         # debris vacuum owns; manifests are driver-written JSON files)
         shutil.copy(
-            rt._table_dir(spark, tmp, "manifests", 2),
-            rt._stage_path(tmp, "manifests", 2, "deadcafe"),
+            store._table_dir(spark, tmp, "manifests", 2),
+            store._stage_path(tmp, "manifests", 2, "deadcafe"),
         )
         live_manifest = open(
-            rt._table_dir(spark, tmp, "manifests", 2), "rb"
+            store._table_dir(spark, tmp, "manifests", 2), "rb"
         ).read()
         removed = vs.vacuum_ann_store(spark, tmp, keep_last=1)
         # v=1 manifest + the planted attempt file + segment A
         assert removed == 3
-        assert rt._published_versions(spark, tmp) == [2]
-        assert not os.path.exists(rt._stage_path(tmp, "manifests", 2, "deadcafe"))
+        assert store._published_versions(spark, tmp) == [2]
+        assert not os.path.exists(store._stage_path(tmp, "manifests", 2, "deadcafe"))
         for seg in seg_a:
             assert not os.path.isdir(f"{tmp}/codes/seg={seg}")
         assert open(
-            rt._table_dir(spark, tmp, "manifests", 2), "rb"
+            store._table_dir(spark, tmp, "manifests", 2), "rb"
         ).read() == live_manifest
         serve_after = [
             tuple(r)
@@ -864,15 +855,19 @@ def test_bm25_vacuum_retains_latest_leaves_live_files(spark, sf_dir):
         rt._init_bm25_store(base, tmp)
         rt.upsert_bm25_index(spark, tmp, b1)
         rt.upsert_bm25_index(spark, tmp, b2)
-        assert rt._versions_in(spark, f"{tmp}/manifests") == [1, 2, 3]
+        assert sorted(
+            {v for v, _ in store._version_dirs(spark, f"{tmp}/manifests")}
+        ) == [1, 2, 3]
         serve_before = [
             tuple(r) for r in rt.serve_bm25_v2(spark, tmp).collect()
         ]
-        live = rt._table_dir(spark, tmp, "manifests", 3)
+        live = store._table_dir(spark, tmp, "manifests", 3)
         live_before = open(live, "rb").read()
         postings_before = _tree_files(f"{tmp}/postings")
         assert rt.vacuum_bm25_store(spark, tmp, keep_last=1) == 2
-        assert rt._versions_in(spark, f"{tmp}/manifests") == [3]
+        assert sorted(
+            {v for v, _ in store._version_dirs(spark, f"{tmp}/manifests")}
+        ) == [3]
         assert open(live, "rb").read() == live_before
         assert _tree_files(f"{tmp}/postings") == postings_before
         serve_after = [
@@ -906,13 +901,13 @@ def test_bm25_delete_equals_rebuild_without_docs(spark, sf_dir):
     try:
         rt._init_bm25_store(docs, tmp)
         before = _tree_files(f"{tmp}/postings")
-        m1 = rt._manifest_entries(spark, tmp, 1)
+        m1 = store._manifest_entries(spark, tmp, 1)
         affected = set(rt.delete_from_bm25_index(spark, tmp, dels))
         assert affected
         after = _tree_files(f"{tmp}/postings")
         for p, sz in before.items():
             assert after.get(p) == sz, f"{p}: pre-existing file changed"
-        m2 = rt._manifest_entries(spark, tmp, 2)
+        m2 = store._manifest_entries(spark, tmp, 2)
         assert [e for e in m1 if e[1] not in affected] == [
             e for e in m2 if e[1] not in affected
         ], "untouched buckets re-pinned"
@@ -921,25 +916,25 @@ def test_bm25_delete_equals_rebuild_without_docs(spark, sf_dir):
         assert len({s for s, _ in new_pins}) == 1  # one survivor segment
         # independent rebuild over the survivors only
         rt._init_bm25_store(kept, tmp2)
-        v = rt._latest_version(spark, tmp)
+        v = store._latest_version(spark, tmp)
         assert v == 2  # build wrote v=1, the delete wrote v=2
         assert _pinned_df(spark, tmp, v) == _pinned_df(spark, tmp2, 1)
         assert _pinned_df(spark, tmp, v) == _rebuild_df(kept)
-        assert rt._read_manifest(spark, tmp, v)["stats"] == (
-            rt._read_manifest(spark, tmp2, 1)["stats"]
+        assert store._read_manifest(spark, tmp, v)["stats"] == (
+            store._read_manifest(spark, tmp2, 1)["stats"]
         ) == _rebuild_stats(kept)
         got_postings = sorted(
             (r["term"], r["doc_id"], r["dl"], r["tf"])
-            for r in rt._read_segments(
+            for r in store._read_segments(
                 spark, f"{tmp}/postings", m2, rt._BM25_POSTING_SCHEMA
             ).collect()
         )
         want_postings = sorted(
             (r["term"], r["doc_id"], r["dl"], r["tf"])
-            for r in rt._read_segments(
+            for r in store._read_segments(
                 spark,
                 f"{tmp2}/postings",
-                rt._manifest_entries(spark, tmp2, 1),
+                store._manifest_entries(spark, tmp2, 1),
                 rt._BM25_POSTING_SCHEMA,
             ).collect()
         )
@@ -973,13 +968,13 @@ def test_bm25_mid_delete_reader_sees_full_pre_delete_store(spark, sf_dir):
         want_v1 = [
             tuple(r) for r in rt.serve_bm25_v2_at(spark, tmp, 1).collect()
         ]
-        m1 = rt._manifest_entries(spark, tmp, 1)
+        m1 = store._manifest_entries(spark, tmp, 1)
         before = _tree_files(f"{tmp}/postings")
         assert rt.delete_from_bm25_index(spark, tmp, dels)
-        assert rt._latest_version(spark, tmp) == 2
+        assert store._latest_version(spark, tmp) == 2
         # the v=1 reader's world is untouched: same pins, same bytes,
         # same answer
-        assert rt._manifest_entries(spark, tmp, 1) == m1
+        assert store._manifest_entries(spark, tmp, 1) == m1
         after = _tree_files(f"{tmp}/postings")
         for s in {s for s, _ in m1}:
             pinned = {p for p in before if p.startswith(f"seg={s}/")}
@@ -1020,41 +1015,41 @@ def test_bm25_concurrent_upsert_conflict_retries(spark, sf_dir):
         for r in rt.bm25_topk_docs(spark, sf_dir).collect()
     ]
     tmp = tempfile.mkdtemp(prefix="sgraft_bm25race_")
-    orig = rt._publish_version
+    orig = store._publish_version
     state = {"conflicts": 0, "fired": False, "winner_files": None}
     try:
         rt._init_bm25_store(base, tmp)
 
-        def racy(sess, store, v, att, bid=None):
+        def racy(sess, path, v, att, bid=None):
             if not state["fired"] and v == 2:
                 state["fired"] = True
                 # writer B completes an ENTIRE upsert (stage + publish
                 # v=2) between A's staging and A's publish
-                rt._publish_version = orig
+                store._publish_version = orig
                 try:
-                    rt.upsert_bm25_index(sess, store, b2)
+                    rt.upsert_bm25_index(sess, path, b2)
                 finally:
-                    rt._publish_version = racy
+                    store._publish_version = racy
                 # snapshot the winner's published v=2 manifest bytes
                 state["winner_files"] = open(
-                    rt._table_dir(sess, store, "manifests", 2), "rb"
+                    store._table_dir(sess, path, "manifests", 2), "rb"
                 ).read()
             try:
-                return orig(sess, store, v, att, bid)
-            except rt.VersionConflict:
+                return orig(sess, path, v, att, bid)
+            except store.VersionConflict:
                 state["conflicts"] += 1
                 raise
 
-        rt._publish_version = racy
+        store._publish_version = racy
         rt.upsert_bm25_index(spark, tmp, b1)  # writer A: loses v=2
     finally:
-        rt._publish_version = orig
+        store._publish_version = orig
     try:
         assert state["fired"] and state["conflicts"] == 1
-        assert rt._latest_version(spark, tmp) == 3
+        assert store._latest_version(spark, tmp) == 3
         # (b) the winner's v=2 manifest survived A's losing attempt
         # byte-identical — the lost-update is unreachable
-        win2_path = rt._table_dir(spark, tmp, "manifests", 2)
+        win2_path = store._table_dir(spark, tmp, "manifests", 2)
         assert open(win2_path, "rb").read() == state["winner_files"]
         # (c) the loser's staged v=2 manifest is present as debris ...
         win2 = os.path.basename(win2_path)
@@ -1070,7 +1065,7 @@ def test_bm25_concurrent_upsert_conflict_retries(spark, sf_dir):
         assert got == want and len(got) == rt.TOP_K
         # final df and stats == full-corpus rebuild (both batches merged)
         assert _pinned_df(spark, tmp, 3) == _rebuild_df(docs)
-        assert rt._read_manifest(spark, tmp, 3)["stats"] == (
+        assert store._read_manifest(spark, tmp, 3)["stats"] == (
             _rebuild_stats(docs)
         )
         # ... and vacuum sweeps exactly the loser's debris while the
@@ -1104,34 +1099,38 @@ def test_bm25_manifest_commit_gates_visibility(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="sgraft_bm25manifest_")
     try:
         rt.build_bm25_index_v2(spark, sf_dir, tmp)
-        assert rt._published_versions(spark, tmp) == [1]
+        assert store._published_versions(spark, tmp) == [1]
         batch = rt._base_docs(spark, sf_dir).filter(rt._doc_batch_pred())
         rt.upsert_bm25_index(spark, tmp, batch)
-        assert rt._published_versions(spark, tmp) == [1, 2]
-        assert rt._latest_version(spark, tmp) == 2
+        assert store._published_versions(spark, tmp) == [1, 2]
+        assert store._latest_version(spark, tmp) == 2
         want = [tuple(r) for r in rt.serve_bm25_v2(spark, tmp).collect()]
         # simulate a writer that crashed AFTER staging its v=3 manifest
         # but BEFORE the marker commit (content is irrelevant — it must
         # be ignored)
         shutil.copy(
-            rt._table_dir(spark, tmp, "manifests", 2),
-            rt._stage_path(tmp, "manifests", 3, "deadcafe"),
+            store._table_dir(spark, tmp, "manifests", 2),
+            store._stage_path(tmp, "manifests", 3, "deadcafe"),
         )
-        assert rt._versions_in(spark, f"{tmp}/manifests") == [1, 2, 3]
-        assert rt._latest_version(spark, tmp) == 2  # dangling invisible
+        assert sorted(
+            {v for v, _ in store._version_dirs(spark, f"{tmp}/manifests")}
+        ) == [1, 2, 3]
+        assert store._latest_version(spark, tmp) == 2  # dangling invisible
         got = [tuple(r) for r in rt.serve_bm25_v2(spark, tmp).collect()]
         assert got == want  # serve unaffected by the crash debris
         # plus a marker whose writer died inside the create-to-close
         # window (empty body): it must gate nothing and vacuum must
         # sweep it as unresolvable
         open(f"{tmp}/_published/v=9", "w").close()
-        assert rt._latest_version(spark, tmp) == 2
+        assert store._latest_version(spark, tmp) == 2
         # vacuum removes the v=1 (superseded) AND v=3 (dangling)
         # manifests (every segment is pinned by the surviving v=2
         # manifest, so the segment GC removes 0)
         assert rt.vacuum_bm25_store(spark, tmp, keep_last=1) == 2
-        assert rt._versions_in(spark, f"{tmp}/manifests") == [2]
-        assert rt._published_versions(spark, tmp) == [2]
+        assert sorted(
+            {v for v, _ in store._version_dirs(spark, f"{tmp}/manifests")}
+        ) == [2]
+        assert store._published_versions(spark, tmp) == [2]
         assert not os.path.exists(f"{tmp}/_published/v=9")
         got2 = [tuple(r) for r in rt.serve_bm25_v2(spark, tmp).collect()]
         assert got2 == want
@@ -1235,14 +1234,14 @@ def test_bm25_compact_rewrites_only_affected_buckets_to_one_file(
             .distinct()
             .collect()
         }
-        m2 = rt._manifest_entries(spark, tmp, 2)
+        m2 = store._manifest_entries(spark, tmp, 2)
         # fragmentation real: every affected bucket pinned in 2 segments
         for b in affected:
             assert len({s for s, t in m2 if t == b}) == 2
         before = _tree_files(f"{tmp}/postings")
         rows_before = sorted(
             (r["term"], r["doc_id"], r["dl"], r["tf"])
-            for r in rt._read_segments(
+            for r in store._read_segments(
                 spark, f"{tmp}/postings", m2, rt._BM25_POSTING_SCHEMA
             ).collect()
         )
@@ -1250,11 +1249,11 @@ def test_bm25_compact_rewrites_only_affected_buckets_to_one_file(
             tuple(r) for r in rt.serve_bm25_v2(spark, tmp).collect()
         ]
         rt.compact_bm25_buckets(spark, tmp, sorted(affected))
-        assert rt._latest_version(spark, tmp) == 3  # compaction snapshots
+        assert store._latest_version(spark, tmp) == 3  # compaction snapshots
         after = _tree_files(f"{tmp}/postings")
         for p, sz in before.items():
             assert after.get(p) == sz, f"{p}: pre-existing file changed"
-        m3 = rt._manifest_entries(spark, tmp, 3)
+        m3 = store._manifest_entries(spark, tmp, 3)
         assert [e for e in m2 if e[1] not in affected] == [
             e for e in m3 if e[1] not in affected
         ], "untouched buckets re-pinned"
@@ -1269,7 +1268,7 @@ def test_bm25_compact_rewrites_only_affected_buckets_to_one_file(
             assert len(holders[b]) == 1, f"tb={b}: not coalesced to one file"
         rows_after = sorted(
             (r["term"], r["doc_id"], r["dl"], r["tf"])
-            for r in rt._read_segments(
+            for r in store._read_segments(
                 spark, f"{tmp}/postings", m3, rt._BM25_POSTING_SCHEMA
             ).collect()
         )
@@ -1364,7 +1363,7 @@ def test_phrase_store_upsert_delete_copy_on_write(spark, sf_dir):
     try:
         rt._init_pos_store(base, tmp)
         rt.upsert_phrase_index(spark, tmp, batch)
-        assert rt._latest_version(spark, tmp) == 2
+        assert store._latest_version(spark, tmp) == 2
         got_ph = [tuple(r) for r in rt.serve_phrase_from_store(spark, tmp).collect()]
         got_nr = [tuple(r) for r in rt.serve_near_from_store(spark, tmp).collect()]
         assert got_ph == want_ph and got_nr == want_nr
@@ -1378,14 +1377,14 @@ def test_phrase_store_upsert_delete_copy_on_write(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="sgraft_posdel_")
     try:
         rt._init_pos_store(docs, tmp)
-        m1 = rt._manifest_entries(spark, tmp, 1)
+        m1 = store._manifest_entries(spark, tmp, 1)
         before = _tree_files(f"{tmp}/{rt._POS_ROOT}")
         affected = set(rt.delete_from_phrase_index(spark, tmp, dels))
         assert affected
         after = _tree_files(f"{tmp}/{rt._POS_ROOT}")
         for p, sz in before.items():
             assert after.get(p) == sz, f"{p}: pre-existing file changed"
-        m2 = rt._manifest_entries(spark, tmp, 2)
+        m2 = store._manifest_entries(spark, tmp, 2)
         assert [e for e in m1 if e[1] not in affected] == [
             e for e in m2 if e[1] not in affected
         ]
@@ -1662,14 +1661,14 @@ def test_bm25_filtered_topk_semantics_and_plan(spark, sf_dir):
         # ranking, so docs below the unfiltered top-k can surface),
         # with df counted over ALL pinned posting lists and the
         # manifest's stats
-        v = rt._latest_version(spark, tmp)
-        pinned = rt._read_segments(
+        v = store._latest_version(spark, tmp)
+        pinned = store._read_segments(
             spark,
             f"{tmp}/postings",
-            rt._manifest_entries(spark, tmp, v),
+            store._manifest_entries(spark, tmp, v),
             rt._BM25_POSTING_SCHEMA,
         )
-        n_docs, sum_len = rt._read_manifest(spark, tmp, v)["stats"]
+        n_docs, sum_len = store._read_manifest(spark, tmp, v)["stats"]
         full = rt.topk_from_bm25_index(
             pinned.join(
                 docs_meta.filter(
@@ -1718,28 +1717,28 @@ def test_pos_stream_upsert_version_chain(spark, sf_dir):
     try:
         rt._init_pos_store(rt._base_docs(spark, sf_dir), build_tmp)
         want = rt._pos_probes_from_store(spark, build_tmp).collect()
-        store = rt.stream_into_store(spark, feed, tmp, init, upsert)
-        assert rt._latest_version(spark, store) == rt.N_FEED_FILES
+        path = store.stream_into_store(spark, feed, tmp, init, upsert)
+        assert store._latest_version(spark, path) == store.N_FEED_FILES
         # every intermediate manifest survives (snapshot chain)
-        for v in range(1, rt.N_FEED_FILES + 1):
+        for v in range(1, store.N_FEED_FILES + 1):
             assert os.path.isfile(
-                rt._table_dir(spark, store, "manifests", v)
+                store._table_dir(spark, path, "manifests", v)
             )
-        got = rt._pos_probes_from_store(spark, store).collect()
+        got = rt._pos_probes_from_store(spark, path).collect()
         assert [tuple(r) for r in got] == [tuple(r) for r in want]
         # exactly-once: redelivery through the sink is skipped by the
         # bid its published version carries
-        v = rt._latest_version(spark, store)
-        assert rt._published_bids(spark, store) == set(
-            range(rt.N_FEED_FILES)
+        v = store._latest_version(spark, path)
+        assert store._published_bids(spark, path) == set(
+            range(store.N_FEED_FILES)
         )
-        pins = rt._manifest_entries(spark, store, v)
+        pins = store._manifest_entries(spark, path, v)
         redelivered = rt._base_docs(spark, sf_dir).limit(5)
-        for bid in (0, rt.N_FEED_FILES - 1):
-            rt._apply_stream_batch(store, redelivered, bid, init, upsert)
-            assert rt._latest_version(spark, store) == v
-            assert rt._manifest_entries(spark, store, v) == pins
-        got2 = rt._pos_probes_from_store(spark, store).collect()
+        for bid in (0, store.N_FEED_FILES - 1):
+            store._apply_stream_batch(path, redelivered, bid, init, upsert)
+            assert store._latest_version(spark, path) == v
+            assert store._manifest_entries(spark, path, v) == pins
+        got2 = rt._pos_probes_from_store(spark, path).collect()
         assert [tuple(r) for r in got2] == [tuple(r) for r in want]
     finally:
         shutil.rmtree(build_tmp, ignore_errors=True)

@@ -27,15 +27,20 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from intellect_bi_spark.operators import retrieval, sketches, vectorstore
+    from intellect_bi_spark.store import (
+        N_FEED_FILES,
+        _apply_stream_batch,
+        _latest_version,
+    )
 
-    N = retrieval.N_FEED_FILES
+    N = N_FEED_FILES
 
     if which == "bm25":
         wiring = retrieval._bm25_stream
 
         def serve(tmp):
             store = f"{tmp}/store"
-            v = retrieval._latest_version(spark, store)
+            v = _latest_version(spark, store)
             (
                 retrieval.serve_bm25_v2_at(spark, store, v)
                 .withColumn(
@@ -89,7 +94,7 @@ def main() -> None:
             store = f"{tmp}/store"
 
             def sink(bdf, bid):
-                retrieval._apply_stream_batch(store, bdf, bid, init, upsert)
+                _apply_stream_batch(store, bdf, bid, init, upsert)
 
             t0 = time.perf_counter()
             q = (
