@@ -466,7 +466,7 @@ def main() -> None:
         )
 
     def _ann_serve_only() -> None:
-        centroids, codebook, codes = vectorstore.read_index(
+        centroids, codebook, codes = vectorstore.read_index_versioned(
             spark, ann_store
         )
         vectorstore.topk_from_index(
@@ -476,7 +476,7 @@ def main() -> None:
     def _bm25_serve_only() -> None:
         # the EXACT composition the bit-exact parity unit verifies
         # (tests/test_vectorstore.py::test_bm25_stored_equals_direct_ranking)
-        retrieval.serve_bm25_from_store(spark, bm25_store).collect()
+        retrieval.serve_bm25_v2(spark, bm25_store).collect()
 
     def _sketch_serve_only() -> None:
         # the production rollup query: merge stored day-partitioned HLL

@@ -118,11 +118,11 @@ def register_cache(df: DataFrame) -> DataFrame:
 
 
 def release_after_action(out: DataFrame, *pins: DataFrame) -> DataFrame:
-    """One-shot pin lifecycle (VERDICT r10 #5): a query whose pinned
-    relation is consumed exactly once per invocation should not leave
-    the pin resident until cap eviction — across a 210-query driver
-    sweep those one-shots otherwise accumulate up to the cap in live
-    MEMORY_AND_DISK entries.  Run the query's final action NOW
+    """One-shot pin lifecycle: a query whose pinned relation is consumed
+    exactly once per invocation should not leave the pin resident until
+    cap eviction — across a 210-query driver sweep those one-shots
+    otherwise accumulate up to the cap in live MEMORY_AND_DISK
+    entries.  Run the query's final action NOW
     (``localCheckpoint(eager=True)`` — the output frames here are
     summary-sized, the same lifecycle bm25_index_store/ann_index_store
     already use), then unpersist the pins immediately and drop them
@@ -131,11 +131,11 @@ def release_after_action(out: DataFrame, *pins: DataFrame) -> DataFrame:
     rows.  Identity-based removal: ``DataFrame.__eq__`` builds a Column,
     so ``list.remove`` would misbehave.
 
-    Cluster caveat (ADVICE r11): ``localCheckpoint`` blocks are
-    executor-local and NOT replicated — on a real cluster, losing an
-    executor after the query returns makes a later ``collect()`` of the
-    returned frame fail irrecoverably, and composing without consuming
-    still pays the full job (the checkpoint is eager by design).  That
+    Cluster caveat: ``localCheckpoint`` blocks are executor-local and
+    NOT replicated — on a real cluster, losing an executor after the
+    query returns makes a later ``collect()`` of the returned frame
+    fail irrecoverably, and composing without consuming still pays
+    the full job (the checkpoint is eager by design).  That
     trade is correct for this engine's call sites: every converted
     query returns a summary-sized frame that the caller collects
     immediately (driver sweep, bench, tests).  A deployment that hands

@@ -353,16 +353,15 @@ def _pq_model(
     artifacts — the long-form subvector relation and the codebook —
     exactly the dedup._shingle_rows policy.  PQ training is a
     build-once artifact every consumer shares (pq_codes_stats,
-    ann_topk_pq, vectorstore.build_index, and — via Spark's
+    ann_topk_pq, vectorstore.build_index's codebook, and — via Spark's
     CacheManager subplan substitution — the serving path's
     query-subvector derivation), so a per-invocation pin would retrain
-    per query (r11: measured +0.76 s on ann_topk_pq and +0.55 s on the
+    per query (measured +0.76 s on ann_topk_pq and +0.55 s on the
     serve-only metric when these were converted to one-shot pins).
     ``reset_caches()`` releases both; bench reps call it so each rep
     times one honest training plus the shared-consumer reuse, the same
     policy as the dedup relations.  Keyed by applicationId
-    (functions/memo.py — VERDICT r11 #5), capped +
-    stopped-session-evicting (ADVICE r11)."""
+    (functions/memo.py), capped + stopped-session-evicting."""
     cached = _PQ_CACHE.get(spark, sf_dir)
     if cached is not None:
         return cached

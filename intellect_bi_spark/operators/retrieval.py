@@ -82,8 +82,7 @@ def _bm25_term_score(
 
 
 # the term-ordered per-document fold of the (term, s) structs ``ts``,
-# quantized: every scoring path (direct, v1 store, versioned store)
-# ranks on this one text
+# quantized: every scoring path (direct, stored) ranks on this one text
 _SCORE_Q_SQL = (
     "CAST(FLOOR(aggregate(ts, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.s)"
     f" * {SCORE_QUANT}.0 + 0.5) AS BIGINT)"
@@ -372,130 +371,29 @@ def _ndcg_composed(spark, sf_dir):
     ), (scored,)
 
 
-# --- persisted lexical serving: the BM25 inverted-index store (r10) ----------
+# --- persisted lexical serving: the BM25 store ------------------------------
 
 
 def build_bm25_index(spark: SparkSession, sf_dir: str, path: str) -> None:
-    """Write the classic lexical-serving layout to parquet: ``postings``
-    (term, doc_id, tf, dl) — the inverted index, ``lexicon`` (term, df),
-    and the one-row ``stats`` (n_docs, avgdl).  The lexical twin of
-    vectorstore.build_index (reference analogue S9/R6: api/main.py:1416
-    serves top-k from a PERSISTED retrieval index; this certifies the
-    persistence half for the lexical ranker).
-
-    Scale: the postings build is one tokenize+explode+groupBy — the
-    same map-side-combinable shape as the direct BM25 scoring pass.  At
-    100 TB the postings table is written bucketed by term hash so a
-    query's read prunes to a handful of buckets; the fixture store
-    keeps the plain layout (the term IN-filter still pushes to the
-    parquet scan), and the pruning composes exactly as the IVF cell
-    filter does in the vector store."""
-    docs = (
-        load_tables(spark, sf_dir)["documents"]
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    )
-    toks = docs.select(
-        "doc_id",
-        F.expr(
-            f"filter(split(lower(text), '{TOKEN_SPLIT}'), t -> t <> '')"
-        ).alias("toks"),
-    )
-    postings = (
-        toks.select(
-            "doc_id",
-            F.size("toks").alias("dl"),
-            F.explode("toks").alias("term"),
-        )
-        .groupBy("term", "doc_id", "dl")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    postings.write.mode("overwrite").parquet(f"{path}/postings")
-    # lexicon df derives from the STORED postings (one row per
-    # term×doc), so store and lexicon cannot drift
-    spark.read.parquet(f"{path}/postings").groupBy("term").agg(
-        F.count(F.lit(1)).alias("df")
-    ).write.mode("overwrite").parquet(f"{path}/lexicon")
-    toks.agg(
-        (
-            F.sum(F.size("toks")).cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("avgdl"),
-        F.count(F.lit(1)).alias("n_docs"),
-    ).write.mode("overwrite").parquet(f"{path}/stats")
-
-
-def read_bm25_index(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    return (
-        spark.read.parquet(f"{path}/postings"),
-        spark.read.parquet(f"{path}/lexicon"),
-        spark.read.parquet(f"{path}/stats"),
-    )
-
-
-def topk_from_bm25_index(
-    postings: DataFrame, lexicon: DataFrame, stats: DataFrame
-) -> DataFrame:
-    """Serve the fixed query FROM the stored tables: term-filter the
-    postings scan (pushed to parquet as an IN filter), broadcast the
-    ≤|query terms| lexicon rows and the 1-row stats, and rebuild the
-    identical term-ordered per-document fold — every double is the same
-    arithmetic on the same exact integers, so the output must equal
-    :func:`bm25_topk_docs` bit for bit (the unit test asserts it)."""
-    hit = postings.filter(F.col("term").isin(*QUERY_TERMS))
-    lex = lexicon.filter(F.col("term").isin(*QUERY_TERMS))
-    scored = (
-        hit.join(F.broadcast(lex), "term")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            "term",
-            F.expr(_bm25_term_score("tf", "df", "dl", "n_docs")).alias("s"),
-        )
-    )
-    per_doc = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_hit_terms"),
-        F.array_sort(F.collect_list(F.struct("term", "s"))).alias("ts"),
-    )
-    return (
-        per_doc.select(
-            "doc_id",
-            "n_hit_terms",
-            F.expr(_SCORE_Q_SQL).alias("score_q"),
-        )
-        .orderBy(F.desc("score_q"), "doc_id")
-        .limit(TOP_K)
-    )
-
-
-def serve_bm25_from_store(spark: SparkSession, path: str) -> DataFrame:
-    """The serving path as ONE composition — read the persisted
-    postings/lexicon/stats and answer the fixed query.  This exact
-    helper is both what ``bench.py``'s ``bm25_index_serve_only`` metric
-    times and what tests/test_vectorstore.py's bit-exact parity unit
-    compares against direct scoring, so the timed path and the verified
-    path cannot drift apart (VERDICT r10 #4)."""
-    return topk_from_bm25_index(*read_bm25_index(spark, path))
+    """Version 1 of the BM25 store over the full corpus: the lexical
+    twin of vectorstore.build_index (reference analogue S9/R6:
+    api/main.py:1416 serves top-k from a PERSISTED retrieval index)."""
+    _init_bm25_store(_base_docs(spark, sf_dir), path)
 
 
 def bm25_index_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build the inverted index, persist it to parquet, and answer the
-    fixed query FROM THE STORE (ann_index_store lifecycle: eager
-    localCheckpoint of the TOP_K rows, then delete the temp store).
-    The oracle is the direct full recompute — serve-from-store must
-    equal direct scoring exactly, certifying the postings/lexicon/stats
-    write/read roundtrip."""
+    """Build the store and answer the fixed query FROM it
+    (ann_index_store lifecycle: eager localCheckpoint of the TOP_K
+    rows, then delete the temp store).  The oracle is the direct full
+    recompute: serve-from-store must equal direct scoring exactly,
+    certifying the postings/manifest write/read roundtrip."""
     import shutil
     import tempfile
 
     tmp = tempfile.mkdtemp(prefix="sgraft_bm25_index_")
     try:
         build_bm25_index(spark, sf_dir, tmp)
-        out = topk_from_bm25_index(
-            *read_bm25_index(spark, tmp)
-        ).localCheckpoint(eager=True)
+        out = serve_bm25_v2(spark, tmp).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return out
@@ -1090,10 +988,9 @@ ORACLES = {
     ),
 }
 
-# stored-index semantics: serving from the persisted postings/lexicon/
-# stats (the unversioned v1 layout) must equal the direct one-pass
-# recompute — the oracle IS the direct scoring SQL (the ann_index_store
-# discipline)
+# stored-index semantics: serving from version 1 of the store must equal
+# the direct one-pass recompute — the oracle IS the direct scoring SQL
+# (the ann_index_store discipline)
 ORACLES["bm25_index_store"] = ORACLES["bm25_topk_docs"]
 
 # upsert semantics: base-build + batch-merge + serve must equal the

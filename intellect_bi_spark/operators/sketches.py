@@ -153,8 +153,8 @@ def serve_sketch_rollup_from_store(
     of any concurrent mutation's segments (a reader pinned at v
     mid-erasure sees the complete pre-delete rollup).
     This exact composition is what ``sketch_rollup_store`` self-checks
-    against the exact recompute (so the timed path and the verified
-    path cannot drift, the serve_bm25_from_store discipline)."""
+    against the exact recompute, so the timed path and the verified
+    path cannot drift."""
     if v is None:
         v = store._latest_version(spark, path)
     cells = store._read_segments(

@@ -1,33 +1,38 @@
 """Persisted ANN index serving (IVF + PQ on parquet) — 100 TB extension.
 
-The production shape of the vector family (VERDICT r8 item 3): every
-prior ANN query (similarity.ann_topk_ivf, clustering.ann_topk_pq) builds
-its index structures in-query; a serving deployment builds them ONCE,
-writes them to storage, and answers every query from the STORED index.
+The production shape of the vector family: the in-query ANN operators
+(similarity.ann_topk_ivf, clustering.ann_topk_pq) build their index
+structures per query; a serving deployment builds them ONCE, writes
+them to storage, and answers every query from the STORED index.
 Reference analogue: the reference's retrieval path queries a persistent
 Chroma collection (reference api/main.py:1416-1417 top-k over an
-on-disk vector store) — persistence is exactly the part the in-query
-operators had not certified.  Mirrors the proven store discipline of
-sketches.sketch_rollup_store (write → read back → answer from stored
-bytes → temp-dir teardown after an eager localCheckpoint).
+on-disk vector store).  Every store lifecycle query follows
+sketches.sketch_rollup_store: write → read back → answer from stored
+bytes → temp-dir teardown after an eager localCheckpoint.
 
-What gets stored (the three tables a real IVF-PQ index serves from):
+One store format, the manifest-pinned versioned store of ``store.py``;
+a build is its version 1.  What a store holds:
 
 - ``centroids``  (cell, c_emb)       — the coarse quantizer, N_CELLS rows
 - ``codebook``   (m, cid, carr)      — the PQ sub-codebooks, M_SUB·KS rows
-- ``codes``      (cell | vec_id, m, cid) — 16-bit PQ codes,
-  **directory-partitioned by the IVF cell**, so a probe reads only its
-  cells' files: partition pruning IS the IVF inverted list on parquet.
+- ``codes/seg={s}/`` (vec_id, m, cid, cell) — 16-bit PQ codes in
+  immutable segments whose files are sorted by the stored ``cell``
+  column, each cell in one file per segment; a version's manifest pins
+  its (segment, cell) pairs, so a probe's ``cell IN (...)`` filter is
+  pushed into the parquet scan and row-group statistics skip every
+  unprobed cell: the IVF inverted list on parquet.
+
+The two model tables are unversioned: no mutation touches them.
 
 Query path, all from the store: probe the N_PROBE cells nearest the
-query (tiny centroid table, broadcast) → scan ONLY those partitions of
-the code table → ADC distance from the stored codebook (fixed-point
+query (tiny centroid table, broadcast) → scan ONLY those cells of the
+pinned codes → ADC distance from the stored codebook (fixed-point
 BIGINT, order-independent) → keep the CAND_K best candidates → exact
 full-precision cosine rerank against the base embeddings table → top-k.
 This is the textbook IVFADC serving pipeline (Jégou et al. 2011,
 "Product Quantization for Nearest Neighbor Search"), restated as three
-broadcast joins and one partition-pruned scan — no all-pairs product,
-no driver-side model beyond the broadcast codebook.
+broadcast joins and one cell-pruned scan — no all-pairs product, no
+driver-side model beyond the broadcast codebook.
 
 Scale notes: at 100 TB the codes table is ~2 bytes/vector payload, the
 centroid/codebook tables are KBs (always broadcast), and the rerank
@@ -42,7 +47,7 @@ stage is deterministic: ADC distances are exact BIGINTs with vec_id
 tie-breaks; the rerank cosine is the strict d-order fold both engines
 evaluate bit-identically (similarity._dot/_dot_duck).
 tests/test_vectorstore.py proves stored ≡ in-memory ranking and that
-the pruned-partition read returns exactly the probed cells' codes.
+the probe's scan is pruned to the probed cells.
 """
 
 from __future__ import annotations
@@ -61,7 +66,6 @@ from .similarity import (
     _dot,
     _emb,
     _norm,
-    ivf_assignments,
 )
 
 CAND_K = 40  # ADC candidates entering the exact rerank (4× the final k)
@@ -92,85 +96,6 @@ def _read_model(spark: SparkSession, path: str, table: str) -> DataFrame:
     return spark.read.schema(_ANN_MODEL_SCHEMAS[table]).parquet(
         f"{path}/{table}"
     )
-
-
-def build_index(spark: SparkSession, sf_dir: str, path: str) -> None:
-    """One corpus scan → the three stored index tables under ``path``.
-
-    The code table is written ``partitionBy("cell")`` — on parquet the
-    IVF inverted list IS the partition layout, so a probe's
-    ``cell IN (...)`` filter prunes to the probed directories before
-    any byte is read.
-
-    Staged-rename commit: this is the one UNVERSIONED build path —
-    unlike the manifest-pinned stores there is no publish gate, so a
-    mid-job failure writing straight into ``{path}/centroids`` etc.
-    could leave a partially-written table a later reader consumes
-    silently.  The three tables therefore stage into a build-unique
-    ``_build-*`` dir and are renamed into place only after all three
-    jobs complete.  An existing table is first renamed aside into the
-    stage; if any rename fails, every swapped table is restored and
-    the stage is kept, so a failed build destroys neither the old
-    store nor the new one.  The stage is deleted only after every
-    rename has succeeded.  A directory rename is an atomic metadata op
-    on HDFS and local disk, but on S3A it is an O(data) copy, so there
-    the swap leaves a window proportional to the index size in which
-    a table is missing or partial."""
-    emb = _emb(spark, sf_dir)
-    codes, cb = _pq_codes(spark, sf_dir)
-    stage = f"{path}/_build-{store._new_seg_id()}"
-    # the three stored tables are independent files, written as
-    # concurrent jobs
-    store._run_staged(
-        lambda: _centroids(emb)
-        .write.mode("overwrite")
-        .parquet(f"{stage}/centroids"),
-        lambda: cb.write.mode("overwrite").parquet(f"{stage}/codebook"),
-        lambda: (
-            codes.join(ivf_assignments(spark, sf_dir), "vec_id")
-            # co-locate each cell's codes before the partitioned write:
-            # one output file per cell per job instead of cells ×
-            # shuffle-partitions tiny files — the compaction-friendly
-            # layout a real index build writes (and measurably most of
-            # this query's cost at fixture scale was the
-            # many-small-files write)
-            .repartition(N_CELLS, "cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(f"{stage}/codes")
-        ),
-    )
-    fs, _ = store._fs_of(spark, path)
-
-    def _move(src, dst) -> None:
-        if not fs.rename(src, dst):
-            raise IOError(f"rename {src} -> {dst} failed")
-
-    swapped = []  # (live, staged, aside) of every table swapped so far
-    try:
-        for table in ("centroids", "codebook", "codes"):
-            _, live = store._fs_of(spark, f"{path}/{table}")
-            _, staged = store._fs_of(spark, f"{stage}/{table}")
-            _, aside = store._fs_of(spark, f"{stage}/old-{table}")
-            swapped.append((live, staged, aside))
-            if fs.exists(live):
-                _move(live, aside)
-            _move(staged, live)
-    except BaseException:
-        # back to the pre-build state; the new tables return to the
-        # stage, which stays behind as debris holding both
-        for live, staged, aside in reversed(swapped):
-            if fs.exists(live) and not fs.exists(staged):
-                _move(live, staged)
-            if fs.exists(aside):
-                _move(aside, live)
-        raise
-    _, sp = store._fs_of(spark, stage)
-    fs.delete(sp, True)
-    # the PQ training artifacts are the session-lifetime memoized model
-    # (clustering._pq_model) shared by every PQ consumer — the serving
-    # path's query-subvector derivation reuses them via CacheManager
-    # subplan substitution; clustering.reset_caches() owns the release
 
 
 def topk_from_index(
@@ -204,7 +129,7 @@ def topk_from_index(
     q_sub = _subspace_rows(
         emb.filter(F.col("vec_id") == query_vec_id)
     ).select("m", F.col("sub").alias("qsub"))
-    # partition-pruned ADC scan: only probed cells' code files are read
+    # ADC over the probed cells' codes only (broadcast semi-join)
     adc = (
         codes.join(F.broadcast(probe_cells), "cell", "left_semi")
         .filter(F.col("vec_id") != query_vec_id)
@@ -324,21 +249,11 @@ def topk_batch_from_index(
     )
 
 
-def read_index(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    return (
-        _read_model(spark, path, "centroids"),
-        _read_model(spark, path, "codebook"),
-        spark.read.parquet(f"{path}/codes"),
-    )
-
-
 def ann_index_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build the IVF-PQ index, persist it to parquet, and answer the
     fixed top-k query FROM THE STORED index (exact-cosine reranked) —
     certifying that the index tables survive the write/read cycle and
-    that the cell-partitioned layout serves a pruned probe.  The final
+    that the cell-sorted segments serve a pruned probe.  The final
     frame is eagerly localCheckpointed (TOP_K rows) so the temp store
     can be deleted before returning (sketches.sketch_rollup_store
     lifecycle)."""
@@ -348,7 +263,7 @@ def ann_index_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="sgraft_ann_index_")
     try:
         build_index(spark, sf_dir, tmp)
-        centroids, codebook, codes = read_index(spark, tmp)
+        centroids, codebook, codes = read_index_versioned(spark, tmp)
         out = topk_from_index(
             centroids, codebook, codes, _emb(spark, sf_dir)
         ).localCheckpoint(eager=True)
@@ -368,7 +283,7 @@ def ann_index_store_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="sgraft_ann_index_")
     try:
         build_index(spark, sf_dir, tmp)
-        centroids, codebook, codes = read_index(spark, tmp)
+        centroids, codebook, codes = read_index_versioned(spark, tmp)
         out = topk_batch_from_index(
             centroids, codebook, codes, _emb(spark, sf_dir)
         ).localCheckpoint(eager=True)
@@ -458,13 +373,13 @@ def _encode_codes(vecs: DataFrame, cb: DataFrame, centroids: DataFrame) -> DataF
     return codes.join(_assign_cells(vecs, centroids), "vec_id")
 
 
-# The upsertable ("frozen-model") store is manifest-pinned: code rows
-# live in immutable segments ``codes/seg={seg}/`` whose files are
-# sorted by the stored ``cell`` column, each published version's
-# manifest pins its exact (segment, cell) pairs, and every mutation
-# (upsert, delete, compact, stream batch) is copy-on-write through the
-# protocol in ``store.py``, so a reader pinned at version v is isolated
-# from concurrent mutations.
+# Every ANN store is manifest-pinned: code rows live in immutable
+# segments ``codes/seg={seg}/`` whose files are sorted by the stored
+# ``cell`` column, each published version's manifest pins its exact
+# (segment, cell) pairs, and every mutation (upsert, delete, compact,
+# stream batch) is copy-on-write through the protocol in ``store.py``,
+# so a reader pinned at version v is isolated from concurrent
+# mutations.
 
 _ANN_CODES_SCHEMA = "vec_id bigint, m int, cid bigint, cell int"
 _ANN_CODES_ROOT = "codes"
@@ -512,10 +427,8 @@ def _ann_pinned_codes(
 def read_index_versioned(
     spark: SparkSession, path: str, v: int | None = None
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(centroids, codebook, pinned codes) of the manifest-pinned
-    store — the versioned twin of :func:`read_index` (the simple
-    build-once store keeps its flat layout; it has no mutations to
-    isolate)."""
+    """(centroids, codebook, pinned codes) of version ``v`` of the
+    store (default: latest)."""
     return (
         _read_model(spark, path, "centroids"),
         _read_model(spark, path, "codebook"),
@@ -528,19 +441,23 @@ def _init_ann_versioned(
     sf_dir: str,
     path: str,
     vecs: DataFrame,
+    cb: DataFrame,
     bid: int | None = None,
 ) -> None:
-    """First write of the manifest-pinned store: frozen model tables
-    (unversioned — the model is a build-time artifact mutations never
-    touch), one code segment over ``vecs``, and the published v=1
+    """First write of the store: the frozen model tables (centroids and
+    the PQ codebook ``cb``; unversioned, since no mutation touches
+    them), one code segment encoding ``vecs``, and the published v=1
     manifest pinning exactly that segment's cells.
 
-    The three writes (centroids, codebook, code segment) are
-    independent files gated by the one v=1 publish (the code segment
-    encodes against the in-memory model frames, not the parquet
-    copies), so they run as concurrent jobs."""
+    The three writes are independent files gated by the one v=1
+    publish (the code segment encodes against the in-memory model
+    frames, not the parquet copies), so they run as concurrent jobs.
+    A path that already has a published version raises
+    :class:`store.VersionConflict` before anything is written: the
+    model tables are live files of that store."""
+    if store._published_versions(spark, path):
+        raise store.VersionConflict(f"{path} already holds a published store")
     cents = _centroids(_emb(spark, sf_dir))
-    cb = _reservoir_codebook(spark, sf_dir)
     *_, (seg, cells) = store._run_staged(
         lambda: cents.write.mode("overwrite").parquet(f"{path}/centroids"),
         lambda: cb.write.mode("overwrite").parquet(f"{path}/codebook"),
@@ -553,13 +470,25 @@ def _init_ann_versioned(
     )
 
 
+def build_index(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """Version 1 of the store over the full corpus, encoded with the
+    full-corpus PQ codebook that ``clustering._pq_codes`` memoizes and
+    the ``ann_index_store`` oracle restates."""
+    _init_ann_versioned(
+        spark, sf_dir, path, _emb(spark, sf_dir), _pq_codes(spark, sf_dir)[1]
+    )
+
+
 def build_index_frozen(spark: SparkSession, sf_dir: str, path: str) -> None:
-    """Initial build of the upsertable store: BASE corpus only (the
-    upsert batch is held out), reservoir-trained codebook, manifest-
-    pinned cell-sorted code segment."""
+    """Version 1 of the upsertable store: BASE corpus only (the upsert
+    batch is held out), reservoir-trained codebook."""
     emb = _emb(spark, sf_dir)
     _init_ann_versioned(
-        spark, sf_dir, path, emb.filter(~_upsert_batch_pred())
+        spark,
+        sf_dir,
+        path,
+        emb.filter(~_upsert_batch_pred()),
+        _reservoir_codebook(spark, sf_dir),
     )
 
 
@@ -762,7 +691,13 @@ def build_index_frozen_full(
     the starting state for the deletion query (build + upsert
     composition is certified by ``ann_index_upsert``; the delete row
     should time the delete)."""
-    _init_ann_versioned(spark, sf_dir, path, _emb(spark, sf_dir))
+    _init_ann_versioned(
+        spark,
+        sf_dir,
+        path,
+        _emb(spark, sf_dir),
+        _reservoir_codebook(spark, sf_dir),
+    )
 
 
 def delete_from_index(
@@ -851,7 +786,12 @@ def _ann_stream(spark: SparkSession, sf_dir: str) -> tuple:
     return (
         _emb(spark, sf_dir),
         lambda b, s, bid: _init_ann_versioned(
-            b.sparkSession, sf_dir, s, b, bid=bid
+            b.sparkSession,
+            sf_dir,
+            s,
+            b,
+            _reservoir_codebook(b.sparkSession, sf_dir),
+            bid,
         ),
         lambda b, s, bid: upsert_index(b.sparkSession, sf_dir, s, b, bid=bid),
     )

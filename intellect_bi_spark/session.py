@@ -62,17 +62,16 @@ def get_spark(app_name: str = "intellect_bi_spark") -> SparkSession:
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         )
-        # FileOutputCommitter v2 (optimization r15, guide §6): v1 pays a
-        # second sequential rename pass at JOB commit — measured 0.45-1.5 s
-        # per bucket-partitioned segment write at sf0.1 vs a consistent
-        # ~0.44 s under v2, and every store-mutation leg writes 1-3 such
-        # directories.  v2's trade (a failed job can leave task output in
-        # the destination) is exactly the crash-debris contract the
-        # versioned stores already operate under: all mutation writes land
-        # in attempt-unique staged dirs that only a successful publish
-        # makes visible, and vacuum sweeps unpublished debris (the one
-        # unversioned build path, vectorstore.build_index, stages to a
-        # temp dir and renames into place since r16, closing the gap).
+        # FileOutputCommitter v2: v1 pays a second sequential rename pass
+        # at JOB commit — measured 0.45-1.5 s per bucket-partitioned
+        # segment write at sf0.1 vs a consistent ~0.44 s under v2, and
+        # every store-mutation leg writes 1-3 such directories.  v2's
+        # trade (a failed job can leave task output in the destination)
+        # is exactly the crash-debris contract of the versioned stores,
+        # the only persisted format: every store write lands in a fresh
+        # segment dir, or (an ANN store's model tables) before the
+        # store's v=1 publish, so only a successful publish makes it
+        # visible, and vacuum sweeps unpublished debris.
         .config(
             "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
             "2",

@@ -27,6 +27,7 @@ import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -258,20 +259,26 @@ def _write_manifest(
         out.close()
 
 
-def _read_manifest(spark: SparkSession, store: str, v: int) -> dict:
-    """Version ``v``'s manifest, read driver-side (no Spark job) through
-    the published attempt: ``{"pins": sorted [(seg, value)], "stats":
-    (n_docs, sum_len) or None}``, values typed as the writer stored
-    them.  Every store family reads its manifests through here."""
-    fs, hp = _fs_of(spark, _table_dir(spark, store, "manifests", v))
+def _read_json(spark: SparkSession, path: str) -> dict:
+    """The JSON body of the file at ``path``, read driver-side through
+    the Hadoop FileSystem (no Spark job)."""
+    fs, hp = _fs_of(spark, path)
     jvm = spark._jvm
     stream = fs.open(hp)
     try:
         bos = jvm.java.io.ByteArrayOutputStream()
         jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, bos, 4096, False)
-        body = json.loads(bytes(bos.toByteArray()).decode())
+        return json.loads(bytes(bos.toByteArray()).decode())
     finally:
         stream.close()
+
+
+def _read_manifest(spark: SparkSession, store: str, v: int) -> dict:
+    """Version ``v``'s manifest, read driver-side (no Spark job) through
+    the published attempt: ``{"pins": sorted [(seg, value)], "stats":
+    (n_docs, sum_len) or None}``, values typed as the writer stored
+    them.  Every store family reads its manifests through here."""
+    body = _read_json(spark, _table_dir(spark, store, "manifests", v))
     stats = body.get("stats")
     return {
         "pins": sorted((s, t) for s, t in body["pins"]),
@@ -355,20 +362,12 @@ def _version_meta(spark: SparkSession, store: str, v: int) -> dict:
     a concurrent publisher), then raises: a marker that never gains
     content is a writer killed mid-publish, and vacuum's sweep is the
     recovery path."""
-    fs, hp = _fs_of(spark, f"{store}/_published/v={v}")
-    jvm = spark._jvm
+    marker = f"{store}/_published/v={v}"
     for attempt in range(20):
-        if fs.exists(hp) and fs.getFileStatus(hp).getLen() > 0:
-            stream = fs.open(hp)
-            try:
-                bos = jvm.java.io.ByteArrayOutputStream()
-                jvm.org.apache.hadoop.io.IOUtils.copyBytes(
-                    stream, bos, 4096, False
-                )
-                return json.loads(bytes(bos.toByteArray()).decode())
-            finally:
-                stream.close()
-        time.sleep(0.05)
+        try:
+            return _read_json(spark, marker)
+        except (Py4JJavaError, ValueError):  # missing, empty or partial
+            time.sleep(0.05)
     raise FileNotFoundError(
         f"published marker v={v} under {store} has no readable body "
         "(writer killed mid-publish? vacuum sweeps it)"
@@ -494,10 +493,13 @@ def _vacuum_versioned_store(
     if not published:
         raise FileNotFoundError(f"no published versions under {path}")
     keep = set(sorted(published)[-keep_last:])
-    live = {f"v={v}-{_version_meta(spark, path, v)['att']}" for v in keep}
+    live = {
+        _stage_path(path, "manifests", v, _version_meta(spark, path, v)["att"])
+        for v in keep
+    }
     removed = 0
     for _v, name in _version_dirs(spark, f"{path}/manifests"):
-        if name not in live:
+        if f"{path}/manifests/{name}" not in live:
             fs, hp = _fs_of(spark, f"{path}/manifests/{name}")
             fs.delete(hp, True)
             removed += 1
@@ -505,7 +507,7 @@ def _vacuum_versioned_store(
         if v not in keep:
             fs, hp = _fs_of(spark, f"{path}/_published/v={v}")
             fs.delete(hp, True)
-    live_segs = {s for v in keep for s, _ in _manifest_entries(spark, path, v)}
+    live_segs = {s for m in live for s, _ in _read_json(spark, m)["pins"]}
     fs, hp = _fs_of(spark, f"{path}/{root}")
     if fs.exists(hp):
         for st in fs.listStatus(hp):

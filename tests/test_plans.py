@@ -600,7 +600,9 @@ def test_ann_index_serving_is_broadcast_only(spark, sf_dir, tmp_path):
     path = str(tmp_path / "annidx")
     vs.build_index(spark, sf_dir, path)
     plan = plan_of(
-        vs.topk_from_index(*vs.read_index(spark, path), _emb(spark, sf_dir))
+        vs.topk_from_index(
+            *vs.read_index_versioned(spark, path), _emb(spark, sf_dir)
+        )
     )
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan

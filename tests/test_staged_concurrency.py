@@ -122,11 +122,39 @@ def test_one_thread_pool_and_no_scheduler_settings():
     assert settings == []
 
 
+def test_stores_never_rename_and_write_no_directory_partitions():
+    """The store protocol publishes by creating a marker, never by a
+    rename, so no module calls ``.rename(``; and the store families in
+    ``vectorstore.py`` and ``retrieval.py`` keep their value column as
+    a stored column of flat segments, so neither calls a writer's
+    ``partitionBy(`` (a ``Window.partitionBy`` is no write)."""
+    renames, partitioned = [], []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        for fn, call in _calls_by_function(tree):
+            f = call.func
+            if not isinstance(f, ast.Attribute):
+                continue
+            if f.attr == "rename":
+                renames.append((path.name, fn))
+            window = isinstance(f.value, ast.Name) and f.value.id == "Window"
+            if (
+                f.attr == "partitionBy"
+                and path.name in ("vectorstore.py", "retrieval.py")
+                and not window
+            ):
+                partitioned.append((path.name, fn))
+    assert renames == []
+    assert partitioned == []
+
+
 def test_publish_steps_and_retry_budget_only_in_store():
     """Only ``store.py`` mints attempt ids, stages manifests and creates
-    publish markers, and only it names the retry budget and the
-    conflict signal: every other module publishes through
-    ``store._commit`` or ``store._publish_manifest``."""
+    publish markers, and only it names the retry budget: every other
+    module publishes through ``store._commit`` or
+    ``store._publish_manifest``.  The conflict signal is named outside
+    it only where the ANN first write refuses a path that already
+    holds a published store (``vectorstore._init_ann_versioned``)."""
     steps = {"_new_att", "_write_manifest", "_publish_version"}
     names = {"PUBLISH_RETRIES", "VersionConflict"}
     calls, refs = set(), set()
@@ -146,4 +174,6 @@ def test_publish_steps_and_retry_budget_only_in_store():
             if isinstance(node, (ast.Name, ast.Attribute)) and name in names:
                 refs.add((path.name, name))
     assert calls == {("store.py", step) for step in steps}
-    assert refs == {("store.py", name) for name in names}
+    assert refs == {("store.py", name) for name in names} | {
+        ("vectorstore.py", "VersionConflict")
+    }

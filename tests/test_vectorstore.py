@@ -3,7 +3,7 @@
 Locks the two properties the parity gate alone can't see:
 (1) stored ≡ in-memory — the parquet write/read cycle changes nothing
     about the ranking; and
-(2) the cell-partitioned code table actually serves a PRUNED probe —
+(2) the cell-sorted code segments actually serve a PRUNED probe —
     the probed-cells scan reads exactly the probed cells' codes.
 """
 
@@ -41,10 +41,11 @@ def test_stored_equals_in_memory_ranking(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="sgraft_vstest_")
     try:
         vs.build_index(spark, sf_dir, tmp)
+        assert store._published_versions(spark, tmp) == [1]
         got = [
             (r["vec_id"], r["label"], r["cosine"])
             for r in vs.topk_from_index(
-                *vs.read_index(spark, tmp), emb
+                *vs.read_index_versioned(spark, tmp), emb
             ).collect()
         ]
     finally:
@@ -58,7 +59,7 @@ def test_store_roundtrip_preserves_index_tables(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="sgraft_vstest_")
     try:
         vs.build_index(spark, sf_dir, tmp)
-        r_cent, r_cb, r_codes = vs.read_index(spark, tmp)
+        r_cent, r_cb, r_codes = vs.read_index_versioned(spark, tmp)
         assert sorted(
             (r["vec_id"], r["m"], r["cid"], r["cell"])
             for r in r_codes.collect()
@@ -72,89 +73,61 @@ def test_store_roundtrip_preserves_index_tables(spark, sf_dir):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def test_build_index_failed_rename_keeps_old_and_new_tables(
-    spark, sf_dir, monkeypatch
-):
-    """A rebuild whose rename into place fails mid-swap restores every
-    old table and keeps the complete staged replacement under
-    ``_build-*``: the failure destroys neither store."""
+def test_build_over_published_store_refuses_and_keeps_it(spark, sf_dir):
+    """A build over a path that already holds a published store raises
+    before it writes anything: every file of the live store is left as
+    it was, and the store serves the same rows."""
     import os
 
-    tables = ("centroids", "codebook", "codes")
+    tmp = tempfile.mkdtemp(prefix="sgraft_vsrebuild_")
+    emb = _emb(spark, sf_dir)
 
-    def files(root):
-        return sorted(
-            os.path.relpath(os.path.join(d, f), root)
-            for d, _, fs in os.walk(root)
-            for f in fs
-        )
+    def files():
+        out = {}
+        for d, _, fs in os.walk(tmp):
+            for f in fs:
+                with open(os.path.join(d, f), "rb") as fh:
+                    out[os.path.relpath(os.path.join(d, f), tmp)] = fh.read()
+        return out
 
-    class FailingRename:
-        """Delegates to the real FileSystem, but refuses to move the
-        staged codebook into place."""
+    def serve():
+        return vs.topk_from_index(
+            *vs.read_index_versioned(spark, tmp), emb
+        ).collect()
 
-        def __init__(self, fs):
-            self._fs = fs
-
-        def __getattr__(self, name):
-            return getattr(self._fs, name)
-
-        def rename(self, src, dst):
-            if src.getName() == "codebook" and "_build-" in src.toString():
-                return False
-            return self._fs.rename(src, dst)
-
-    real_fs_of = store._fs_of
-
-    def failing_fs_of(spark, path):
-        fs, hpath = real_fs_of(spark, path)
-        return FailingRename(fs), hpath
-
-    tmp = tempfile.mkdtemp(prefix="sgraft_vsrename_")
     try:
         vs.build_index(spark, sf_dir, tmp)
-        old = {t: files(f"{tmp}/{t}") for t in tables}
-        monkeypatch.setattr(store, "_fs_of", failing_fs_of)
-        with pytest.raises(IOError):
+        before, rows = files(), serve()
+        with pytest.raises(store.VersionConflict):
             vs.build_index(spark, sf_dir, tmp)
-        monkeypatch.undo()
-        assert {t: files(f"{tmp}/{t}") for t in tables} == old
-        stages = [d for d in os.listdir(tmp) if d.startswith("_build-")]
-        assert len(stages) == 1
-        stage = f"{tmp}/{stages[0]}"
-        assert sorted(os.listdir(stage)) == sorted(tables)
-        for root in (tmp, stage):
-            cent, cb, codes = vs.read_index(spark, root)
-            assert cent.count() == vs.N_CELLS
-            assert cb.count() > 0 and codes.count() > 0
+        assert files() == before
+        assert store._published_versions(spark, tmp) == [1]
+        assert serve() == rows and len(rows) == vs.TOP_K
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_probe_scan_is_cell_pruned(spark, sf_dir):
     """The probed-cells read touches exactly the probed cells: a literal
-    cell filter over the partitioned layout returns the same code rows
-    the operator's semi-join feeds to ADC, and the scan's partition
-    filters carry the cell predicate (directory pruning, the IVF
-    inverted-list property the layout exists for)."""
+    cell filter over the cell-sorted segments returns only those cells'
+    code rows, and the scan's pushed filters carry the cell predicate
+    (row-group pruning, the IVF inverted-list property the layout
+    exists for)."""
     tmp = tempfile.mkdtemp(prefix="sgraft_vstest_")
     try:
         vs.build_index(spark, sf_dir, tmp)
-        _, _, codes = vs.read_index(spark, tmp)
+        _, _, codes = vs.read_index_versioned(spark, tmp)
         cells = [0, 1]
         pruned = codes.filter(F.col("cell").isin(cells))
         got_cells = {
             r["cell"] for r in pruned.select("cell").distinct().collect()
         }
         assert got_cells <= set(cells) and got_cells
-        # the cell predicate lands in the scan's PartitionFilters (it
-        # prunes directories, never reaching a data filter): the scan
-        # node must carry it and the post-scan Filter must not
+        # the cell predicate is pushed into the parquet scan, where the
+        # cell-sorted files' row-group statistics skip unprobed cells
         plan = pruned._jdf.queryExecution().executedPlan().toString()
-        part_lines = [
-            ln for ln in plan.splitlines() if "PartitionFilters" in ln
-        ]
-        assert part_lines and any("cell" in ln for ln in part_lines)
+        pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
+        assert any("In(cell," in ln for ln in pushed), plan[:2000]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -176,7 +149,7 @@ def test_batch_stored_equals_in_memory_ranking(spark, sf_dir):
         got = [
             (r["q_id"], r["vec_id"], r["cosine"])
             for r in vs.topk_batch_from_index(
-                *vs.read_index(spark, tmp), emb
+                *vs.read_index_versioned(spark, tmp), emb
             ).collect()
         ]
     finally:
@@ -191,14 +164,13 @@ def test_batch_stored_equals_in_memory_ranking(spark, sf_dir):
 
 
 def test_bm25_stored_equals_direct_ranking(spark, sf_dir):
-    """The lexical twin of the IVF-PQ store contract: serving from the
-    persisted v1 postings/lexicon/stats, and from a versioned store
-    (df counted over the pinned posting lists, stats from the
-    manifest), must each reproduce the direct BM25 ranking bit for bit
-    (same quantized scores, same order).  The v1 serve runs through
-    serve_bm25_from_store — the SAME composition bench.py's
-    bm25_index_serve_only metric times — so the verified path IS the
-    timed path."""
+    """The lexical twin of the IVF-PQ store contract: serving from
+    version 1 of the store (df counted over the pinned posting lists,
+    stats from the manifest) must reproduce the direct BM25 ranking bit
+    for bit (same quantized scores, same order).  The serve runs
+    through serve_bm25_v2 over a build_bm25_index store — the SAME
+    composition bench.py's bm25_index_serve_only metric times — so the
+    verified path IS the timed path."""
     from intellect_bi_spark.operators import retrieval as rt
 
     want = [
@@ -208,43 +180,14 @@ def test_bm25_stored_equals_direct_ranking(spark, sf_dir):
     tmp = tempfile.mkdtemp(prefix="sgraft_bm25test_")
     try:
         rt.build_bm25_index(spark, sf_dir, tmp)
+        assert store._published_versions(spark, tmp) == [1]
         got = [
             (r["doc_id"], r["n_hit_terms"], r["score_q"])
-            for r in rt.serve_bm25_from_store(spark, tmp).collect()
-        ]
-        rt._init_bm25_store(rt._base_docs(spark, sf_dir), f"{tmp}/v2")
-        got_v2 = [
-            (r["doc_id"], r["n_hit_terms"], r["score_q"])
-            for r in rt.serve_bm25_v2(spark, f"{tmp}/v2").collect()
+            for r in rt.serve_bm25_v2(spark, tmp).collect()
         ]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     assert got == want and len(got) == rt.TOP_K
-    assert got_v2 == want
-
-
-def test_bm25_serve_scan_pushes_term_filter(spark, sf_dir):
-    """The serving read must push the query-term IN filter into the
-    postings parquet scan — at 100 TB that pushdown (plus term-hash
-    bucketing) is what keeps a query from reading the whole index."""
-    from intellect_bi_spark.operators import retrieval as rt
-
-    tmp = tempfile.mkdtemp(prefix="sgraft_bm25test_")
-    try:
-        rt.build_bm25_index(spark, sf_dir, tmp)
-        postings, lex, stats = rt.read_bm25_index(spark, tmp)
-        plan = (
-            rt.topk_from_bm25_index(postings, lex, stats)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        pushed = [
-            ln for ln in plan.splitlines() if "PushedFilters" in ln
-        ]
-        assert any("In(term" in ln for ln in pushed), plan[:2000]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # --- incremental upsert (r12, VERDICT r11 #2) --------------------------------
@@ -264,16 +207,8 @@ def test_upsert_equals_full_rebuild(spark, sf_dir):
         vs.build_index_frozen(spark, sf_dir, up_tmp)
         vs.upsert_index(spark, sf_dir, up_tmp, batch)
         # full rebuild: same reservoir model, ALL vectors encoded fresh
-        cents = vs._centroids(emb)
-        cents.write.mode("overwrite").parquet(f"{rb_tmp}/centroids")
-        cb = vs._reservoir_codebook(spark, sf_dir)
-        cb.write.mode("overwrite").parquet(f"{rb_tmp}/codebook")
-        (
-            vs._encode_codes(emb, cb, cents)
-            .repartition(vs.N_CELLS, "cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(f"{rb_tmp}/codes")
+        vs._init_ann_versioned(
+            spark, sf_dir, rb_tmp, emb, vs._reservoir_codebook(spark, sf_dir)
         )
         up_codes = sorted(
             (r["vec_id"], r["m"], r["cid"], r["cell"])
@@ -281,7 +216,7 @@ def test_upsert_equals_full_rebuild(spark, sf_dir):
         )
         rb_codes = sorted(
             (r["vec_id"], r["m"], r["cid"], r["cell"])
-            for r in vs.read_index(spark, rb_tmp)[2].collect()
+            for r in vs.read_index_versioned(spark, rb_tmp)[2].collect()
         )
         assert up_codes == rb_codes
         n_vecs = emb.count()
@@ -295,7 +230,7 @@ def test_upsert_equals_full_rebuild(spark, sf_dir):
         rb_serve = [
             (r["vec_id"], r["label"], r["cosine"])
             for r in vs.topk_from_index(
-                *vs.read_index(spark, rb_tmp), emb
+                *vs.read_index_versioned(spark, rb_tmp), emb
             ).collect()
         ]
         assert up_serve == rb_serve and len(up_serve) == vs.TOP_K
@@ -1629,6 +1564,41 @@ def test_bm25_batch_matches_singles_and_one_scan(spark, sf_dir):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _topk_from_bm25_tables(postings, lexicon, stats):
+    """The fixed query's direct term-ordered fold over explicit
+    (term, doc_id, tf, dl) postings, (term, df) lexicon and one-row
+    (avgdl, n_docs) stats frames: the reference a filtered serve is
+    checked against."""
+    from intellect_bi_spark.operators import retrieval as rt
+
+    hit = postings.filter(F.col("term").isin(*rt.QUERY_TERMS))
+    lex = lexicon.filter(F.col("term").isin(*rt.QUERY_TERMS))
+    scored = (
+        hit.join(F.broadcast(lex), "term")
+        .crossJoin(F.broadcast(stats))
+        .select(
+            "doc_id",
+            "term",
+            F.expr(rt._bm25_term_score("tf", "df", "dl", "n_docs")).alias(
+                "s"
+            ),
+        )
+    )
+    per_doc = scored.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_hit_terms"),
+        F.array_sort(F.collect_list(F.struct("term", "s"))).alias("ts"),
+    )
+    return (
+        per_doc.select(
+            "doc_id",
+            "n_hit_terms",
+            F.expr(rt._SCORE_Q_SQL).alias("score_q"),
+        )
+        .orderBy(F.desc("score_q"), "doc_id")
+        .limit(rt.TOP_K)
+    )
+
+
 def test_bm25_filtered_topk_semantics_and_plan(spark, sf_dir):
     """Metadata-filtered lexical retrieval (VERDICT r14 #7, the
     ann_filtered_topk twin): every returned doc satisfies the lang
@@ -1669,7 +1639,7 @@ def test_bm25_filtered_topk_semantics_and_plan(spark, sf_dir):
             rt._BM25_POSTING_SCHEMA,
         )
         n_docs, sum_len = store._read_manifest(spark, tmp, v)["stats"]
-        full = rt.topk_from_bm25_index(
+        full = _topk_from_bm25_tables(
             pinned.join(
                 docs_meta.filter(
                     F.col("lang") == rt.FILTER_LANG
