@@ -58,7 +58,7 @@ join (operators/temporal.py), applied to LAG / rolling frames.
 
 Fixed cost: on a literal in-memory frame (no scan, no upstream aggregate)
 the stitched helpers measured ~370 ms more than a plain unpartitioned
-window (``tools/stitch_floor.py`` → ``STITCH_FLOOR.json``; local[32]),
+window (``STITCH_FLOOR.json``; local[32]),
 and the gap stayed constant from sf0.001 to sf0.1: Py4J and Catalyst plan
 construction, the persist fill, two extra AQE stages and the broadcast
 build — per-query driver and scheduler costs that do not grow with the

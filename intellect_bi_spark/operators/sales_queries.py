@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import datetime
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -458,10 +459,8 @@ def _gini_udaf():
     — a per-group bound, so use the window form for bigger groups)."""
     import numpy as np
 
-    # explicit functionType: the module's deferred annotations (PEP 563)
-    # can't resolve a locally-imported pd.Series hint
-    @F.pandas_udf("double", F.PandasUDFType.GROUPED_AGG)
-    def gini_cents(v):
+    @F.pandas_udf("double")
+    def gini_cents(v: pd.Series) -> float:
         vals = v.to_numpy()
         vals = vals[~np.isnan(vals)]
         c = np.sort(np.round(vals * 100).astype(np.int64))

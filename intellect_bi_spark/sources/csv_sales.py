@@ -129,12 +129,3 @@ def etl_load_csv(spark: SparkSession, path: str) -> DataFrame:
         df = df.withColumn(date_col, F.try_to_date(date_col)).orderBy(date_col)
     return df
 
-
-def register_sales_view(
-    spark: SparkSession, df: DataFrame, name: str = "sales"
-) -> DataFrame:
-    """S4 tail: expose the normalized frame as the ``sales`` temp view and
-    cache it (the reference's one-view-per-process lifecycle,
-    api/main.py:190)."""
-    df.createOrReplaceTempView(name)
-    return df

@@ -481,9 +481,11 @@ def _vacuum_versioned_store(
     unpublished files."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1 (the live version)")
-    # A marker a writer killed mid-publish left without a body burns
-    # its version number but resolves to nothing: the next publish
-    # takes a higher number, so removing it is safe.
+    # A marker a writer killed mid-publish left without a body resolves
+    # to nothing, yet it holds its version number: readers skip it, so
+    # the next publish picks that same number, conflicts on the marker
+    # and, after PUBLISH_RETRIES, raises VersionConflict.  Removing the
+    # marker frees the number.
     fs_pub, pub_root = _fs_of(spark, f"{path}/_published")
     if fs_pub.exists(pub_root):
         for st in fs_pub.listStatus(pub_root):

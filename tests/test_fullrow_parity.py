@@ -8,6 +8,8 @@ regression in any producer is still caught at sf0.001.
 
 from __future__ import annotations
 
+from functools import partial
+
 import pytest
 
 from intellect_bi_spark.operators import dedup, multimodal
@@ -32,21 +34,28 @@ def test_dedup_fullrow(spark, duck, sf_dir, producer, oracle_key):
     )
 
 
+# Every codec with a full-row oracle is checked row by row, so a codec
+# added with an oracle cannot go untested.  The ids keep the form the
+# suite has always printed ("_<codec>_feature_rows-<codec>_feature_rows").
+_CODEC_FULLROW = [
+    pytest.param(
+        partial(multimodal._feature_rows, codec=c),
+        f"{c}_feature_rows",
+        id=f"_{c}_feature_rows-{c}_feature_rows",
+    )
+    for c in multimodal.CODECS
+    if f"{c}_feature_rows" in multimodal.FULLROW_ORACLES
+]
+
+
 @pytest.mark.parametrize(
     "producer, oracle_key",
     [
         (multimodal._catalog_rows, "catalog_rows"),
         (multimodal._image_feature_rows, "image_feature_rows"),
         (multimodal._frame_sample_rows, "frame_sample_rows"),
-        (multimodal._wav_feature_rows, "wav_feature_rows"),
-        (multimodal._ppm_feature_rows, "ppm_feature_rows"),
-        (multimodal._y4m_feature_rows, "y4m_feature_rows"),
-        (multimodal._gif_feature_rows, "gif_feature_rows"),
         (multimodal._frame_fp_rows, "frame_fp_rows"),
-        (multimodal._bdv_feature_rows, "bdv_feature_rows"),
-        (multimodal._mb4_feature_rows, "mb4_feature_rows"),
-        (multimodal._fmp4_feature_rows, "fmp4_feature_rows"),
-        (multimodal._sts_feature_rows, "sts_feature_rows"),
+        *_CODEC_FULLROW,
     ],
 )
 def test_multimodal_fullrow(spark, duck, sf_dir, producer, oracle_key):

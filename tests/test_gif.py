@@ -159,7 +159,7 @@ def test_gif_feature_rows_accept_injected_codec(spark, sf_dir):
         return 2, 1, np.array([1, 2, 3, 4, 5, 6], dtype=np.uint8)
 
     rows = (
-        multimodal._gif_feature_rows(spark, sf_dir, decode=fake_decode)
+        multimodal._feature_rows(spark, sf_dir, "gif", decode=fake_decode)
         .limit(5)
         .collect()
     )

@@ -106,7 +106,7 @@ def test_jpeg_feature_rows_accept_injected_codec(spark, sf_dir):
         return 2, 1, np.array([1, 2, 3, 4, 5, 6], dtype=np.uint8)
 
     rows = (
-        m._jpeg_feature_rows(spark, sf_dir, decode=fake_decode)
+        m._feature_rows(spark, sf_dir, "jpeg", decode=fake_decode)
         .limit(5)
         .collect()
     )

@@ -113,7 +113,7 @@ def test_mjpeg_feature_rows_accept_injected_codec(spark, sf_dir):
         return 2, 1, [(0, np.array([1, 2, 3, 4, 5, 6], dtype=np.uint8))]
 
     rows = (
-        m._mjpeg_feature_rows(spark, sf_dir, decode=fake_decode)
+        m._feature_rows(spark, sf_dir, "mjpeg", decode=fake_decode)
         .limit(5)
         .collect()
     )

@@ -272,7 +272,7 @@ def test_png_feature_rows_accept_injected_codec(spark, sf_dir):
         return 2, 1, np.array([1, 2, 3, 4, 5, 6], dtype=np.uint8)
 
     rows = (
-        multimodal._png_feature_rows(spark, sf_dir, decode=fake_decode)
+        multimodal._feature_rows(spark, sf_dir, "png", decode=fake_decode)
         .limit(5)
         .collect()
     )
@@ -421,7 +421,7 @@ def test_mulaw_seam_injects_decoder(spark, sf_dir):
         return 8000, ramp
 
     rows = (
-        multimodal._mulaw_feature_rows(spark, sf_dir, decode=fake_decode)
+        multimodal._feature_rows(spark, sf_dir, "mulaw", decode=fake_decode)
         .limit(10)
         .collect()
     )
@@ -503,7 +503,7 @@ def test_adpcm_seam_injects_decoder(spark, sf_dir):
         return 11025, ramp
 
     rows = (
-        multimodal._adpcm_feature_rows(spark, sf_dir, decode=fake_decode)
+        multimodal._feature_rows(spark, sf_dir, "adpcm", decode=fake_decode)
         .limit(8)
         .collect()
     )

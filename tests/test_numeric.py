@@ -4,6 +4,8 @@ NULL values, and multi-group frames."""
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import functions as F
 
 from intellect_bi_spark.functions.numeric import dsum, grouped_exact
@@ -76,7 +78,11 @@ def test_gini_udaf_matches_window_form(spark, sf_dir):
         r["region"]: (r["n"], r["gini"])
         for r in region_sales_gini(spark, sf_dir).collect()
     }
-    udaf = _gini_udaf()
+    # the type-hinted form: building it must not raise PandasUDFType's
+    # deprecation UserWarning (or any other)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        udaf = _gini_udaf()
     # a grouped-agg pandas UDF cannot share an agg() with JVM aggregates
     # (INVALID_PANDAS_UDF_PLACEMENT), so the twin aggregates alone
     pand = {

@@ -576,11 +576,9 @@ def test_codec_stages_run_at_full_parallelism(spark, sf_dir):
     from intellect_bi_spark.operators import multimodal as m
 
     want = spark.sparkContext.defaultParallelism
-    for builder in (m._png_media, m._ppm_media, m._y4m_media, m._wav_media):
-        media = builder(spark, sf_dir)
-        assert media.rdd.getNumPartitions() == want, builder.__name__
-    jpeg = m._jpeg_media(spark, sf_dir)
-    assert jpeg.rdd.getNumPartitions() == want
+    for codec in m.CODECS:
+        media = m._codec_media(spark, sf_dir, m.CODECS[codec][0])
+        assert media.rdd.getNumPartitions() == want, codec
     # stub path: scan partitioning preserved (no exchange)
     stub = m._media(spark, sf_dir).select("doc_id", "payload")
     assert stub.rdd.getNumPartitions() < want
