@@ -25,6 +25,11 @@ from pyspark.sql import functions as F
 
 P = 1_000_000_007
 
+# the word tokenizer every lexical operator shares: lower-case, split on
+# runs of non-alphanumerics, drop empty tokens (identical regex text in
+# Spark's ``split`` and DuckDB's ``string_split_regex``)
+TOKEN_SPLIT = "[^a-z0-9]+"
+
 # fixed MinHash coefficient seeds (a_i, b_i < P)
 MINHASH_COEFFS: list[tuple[int, int]] = [
     (393342739, 153929004),

@@ -189,7 +189,7 @@ def semantic_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Arrow-vectorized cosine (similarity.py:_cosine_udf, bit-exact
     with the oracle's strict d-order fold).
 
-    Pin lifecycle (optimization r15, guide §5 cache-on-reuse): the
+    Pin lifecycle (cache on reuse): the
     ranked assignment fans into the member stats and the capped pair
     stage, and the flagged pair relation (the expensive Arrow cosine
     pass) fans into the pair stats and the removed-id aggregate —
@@ -370,13 +370,13 @@ def _pq_model(
     # the codebook derivation reads the subvector relation twice
     # (seed + assignment-1) and the final code assignment a third
     # time — without materialization the corpus explode+transform
-    # pipeline executes per reference (r9 review)
+    # pipeline executes per reference
     subr = _subspace_rows(_points(spark, sf_dir)).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     # the codebook (M_SUB×KS rows) is referenced twice by ann_topk_pq
     # (code assignment + reconstruction join) and its derivation scans
-    # the corpus (review r8)
+    # the corpus
     cb = _pq_codebook(subr).persist(StorageLevel.MEMORY_AND_DISK)
     return _PQ_CACHE.put(spark, sf_dir, (subr, cb))
 
@@ -543,38 +543,46 @@ _PQ_SUB_DIST_DUCK = (
     " (acc, v) -> acc + v)"
 )
 
-_PQ_CTES = (
-    "sub AS (SELECT vec_id, m,"
-    f" list_transform(range(1, {SUBDIM} + 1),"
-    f" i -> CAST(embedding[m * {SUBDIM} + i] AS DOUBLE)) AS sub"
-    f" FROM embeddings, unnest(range(0, {M_SUB})) AS u(m)),"
-    f" seed AS (SELECT m, vec_id AS cid, sub AS carr FROM sub"
-    f" WHERE vec_id < {KS}),"
-    " d1 AS (SELECT s.vec_id, s.m, c.cid,"
-    f" {_PQ_SUB_DIST_DUCK} AS dist"
-    " FROM sub s JOIN seed c ON c.m = s.m),"
-    " a1 AS (SELECT vec_id, m, cid FROM"
-    " (SELECT vec_id, m, cid, ROW_NUMBER() OVER"
-    " (PARTITION BY vec_id, m ORDER BY dist, cid) AS rn FROM d1)"
-    " WHERE rn = 1),"
-    " ups AS (SELECT a.m, a.cid, i,"
-    f" SUM(CAST(FLOOR(s.sub[i] * {QUANT}.0 + 0.5) AS BIGINT)) AS sq,"
-    " COUNT(*) AS n"
-    " FROM a1 a JOIN sub s ON s.vec_id = a.vec_id AND s.m = a.m,"
-    f" unnest(range(1, {SUBDIM} + 1)) AS ui(i)"
-    " GROUP BY a.m, a.cid, i),"
-    " cb AS (SELECT m, cid,"
-    " list((CAST(sq AS DOUBLE) / CAST(n AS DOUBLE))"
-    f" / {QUANT}.0 ORDER BY i) AS carr"
-    " FROM ups GROUP BY m, cid),"
-    " d2 AS (SELECT s.vec_id, s.m, c.cid,"
-    f" {_PQ_SUB_DIST_DUCK} AS dist"
-    " FROM sub s JOIN cb c ON c.m = s.m),"
-    " codes AS (SELECT vec_id, m, cid FROM"
-    " (SELECT vec_id, m, cid, ROW_NUMBER() OVER"
-    " (PARTITION BY vec_id, m ORDER BY dist, cid) AS rn FROM d2)"
-    " WHERE rn = 1)"
-)
+
+def _pq_ctes(train_where: str = "") -> str:
+    """The PQ CTE chain; ``train_where`` restricts the vectors the
+    codebook update trains on (the first assignment ``d1``), while every
+    vector is still encoded in ``codes``."""
+    return (
+        "sub AS (SELECT vec_id, m,"
+        f" list_transform(range(1, {SUBDIM} + 1),"
+        f" i -> CAST(embedding[m * {SUBDIM} + i] AS DOUBLE)) AS sub"
+        f" FROM embeddings, unnest(range(0, {M_SUB})) AS u(m)),"
+        f" seed AS (SELECT m, vec_id AS cid, sub AS carr FROM sub"
+        f" WHERE vec_id < {KS}),"
+        " d1 AS (SELECT s.vec_id, s.m, c.cid,"
+        f" {_PQ_SUB_DIST_DUCK} AS dist"
+        f" FROM sub s JOIN seed c ON c.m = s.m{train_where}),"
+        " a1 AS (SELECT vec_id, m, cid FROM"
+        " (SELECT vec_id, m, cid, ROW_NUMBER() OVER"
+        " (PARTITION BY vec_id, m ORDER BY dist, cid) AS rn FROM d1)"
+        " WHERE rn = 1),"
+        " ups AS (SELECT a.m, a.cid, i,"
+        f" SUM(CAST(FLOOR(s.sub[i] * {QUANT}.0 + 0.5) AS BIGINT)) AS sq,"
+        " COUNT(*) AS n"
+        " FROM a1 a JOIN sub s ON s.vec_id = a.vec_id AND s.m = a.m,"
+        f" unnest(range(1, {SUBDIM} + 1)) AS ui(i)"
+        " GROUP BY a.m, a.cid, i),"
+        " cb AS (SELECT m, cid,"
+        " list((CAST(sq AS DOUBLE) / CAST(n AS DOUBLE))"
+        f" / {QUANT}.0 ORDER BY i) AS carr"
+        " FROM ups GROUP BY m, cid),"
+        " d2 AS (SELECT s.vec_id, s.m, c.cid,"
+        f" {_PQ_SUB_DIST_DUCK} AS dist"
+        " FROM sub s JOIN cb c ON c.m = s.m),"
+        " codes AS (SELECT vec_id, m, cid FROM"
+        " (SELECT vec_id, m, cid, ROW_NUMBER() OVER"
+        " (PARTITION BY vec_id, m ORDER BY dist, cid) AS rn FROM d2)"
+        " WHERE rn = 1)"
+    )
+
+
+_PQ_CTES = _pq_ctes()
 
 ORACLES["pq_codes_stats"] = (
     f"WITH {_PQ_CTES}"

@@ -48,9 +48,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
-from ..functions.text import P, md5_mod_hash_duck, md5_mod_hash_sql
+from ..functions.text import (
+    TOKEN_SPLIT,
+    P,
+    md5_mod_hash_duck,
+    md5_mod_hash_sql,
+)
 
-TOKEN_SPLIT = "[^a-z0-9]+"  # retrieval.py's tokenizer, restated
 K_LIT = "0.5"  # add-k smoothing constant — identical literal both engines
 NLL_QUANT = 1 << 10
 LM_SPLIT_TAG = "lm|"  # train/held split salt (8/10 train)
@@ -108,7 +112,7 @@ def bigram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts on the 8/10 hash-split train fold, score each held-out
     document's average NLL per bigram (2^-10-quantized), aggregate per
     language.  Columns: lang, n_docs, sum_nll_q, min_nll_q, max_nll_q.
-    One-shot pin lifecycle (VERDICT r10 #5): the bigram-relation pin is
+    One-shot pin lifecycle: the bigram-relation pin is
     consumed exactly once per invocation, so the final action runs here
     and the pin is released immediately."""
     from ..functions.windows import release_after_action
@@ -148,8 +152,8 @@ def _bigram_lm_composed(spark, sf_dir):
     )
     # pin the bigram relation: the train-side counts and the held-out
     # scoring join both read it — one tokenize+explode pass instead of
-    # two (r9 review, same class as the DSIR tok_rows pin below).
-    # Registered (ADVICE r9): repeated calls must not leak cache entries.
+    # two (same class as the DSIR tok_rows pin below).
+    # Registered: repeated calls must not leak cache entries.
     from ..functions.windows import register_cache
 
     pairs = register_cache(pairs)
@@ -234,7 +238,7 @@ def importance_weights_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR selection: hashed-unigram importance weights against the
     ``lang = 'en'`` target distribution; top-25 documents by quantized
     weight.  Columns: doc_id, lang, n_toks, weight_q.  One-shot pin
-    lifecycle (VERDICT r10 #5): the hashed-token pin is consumed exactly
+    lifecycle: the hashed-token pin is consumed exactly
     once per invocation, so the final action runs here and the pin is
     released immediately."""
     from ..functions.windows import release_after_action
@@ -252,7 +256,7 @@ def _dsir_composed(spark, sf_dir):
     # pin the hashed token relation: the bucket-stats aggregate AND the
     # per-document weight join both read it, and without the pin the
     # tokenize + per-token md5 pipeline (the operator's dominant cost —
-    # measured ~2× at sf1) executes once per consumer (r9 review; the
+    # measured ~2× at sf1) executes once per consumer (the
     # pagerank-adjacency-pin class)
     tok_rows = toks.select(
         "doc_id",
@@ -264,7 +268,7 @@ def _dsir_composed(spark, sf_dir):
         "pos",
         F.expr(_bucket_sql("tok")).alias("bucket"),
     )
-    # registered (ADVICE r9): repeated calls must not leak cache entries
+    # registered: repeated calls must not leak cache entries
     tok_rows = register_cache(tok_rows)
     # one aggregation yields BOTH distributions' bucket counts; the
     # result is ≤ B rows — broadcast material by construction.
@@ -445,7 +449,7 @@ def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lang, tok) count integers that weight the final aggregate — no
     per-occurrence re-segmentation ever happens.  The two argmax
     collects are the model boundary (kmeans-seed class).  One-shot pin
-    lifecycle (VERDICT r10 #5): the (lang, tok) count relation feeds
+    lifecycle: the (lang, tok) count relation feeds
     the dictionary build, both learn argmaxes, and the final join, so
     it is pinned for the invocation and released after the final
     action runs here."""

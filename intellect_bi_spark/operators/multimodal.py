@@ -442,34 +442,31 @@ def mulaw_expand(codes: "np.ndarray") -> "np.ndarray":
     return np.where(u & 0x80, _MULAW_BIAS - t, t - _MULAW_BIAS)
 
 
-def _encode_wav_mulaw_bytes(doc_id: int) -> bytes:
-    """Hand-built RIFF/WAVE, format tag 7: fmt chunk (16-byte PCM-shaped
-    body), an odd-length unknown chunk on odd ids (forces the reader's
-    even-padding rule), then the μ-law data chunk."""
+def _riff_chunk(fourcc: bytes, data: bytes) -> bytes:
+    """One RIFF chunk: fourcc + LE size + data, padded to word length
+    (the pad byte is NOT counted in the size — RIFF spec)."""
     import struct
 
-    rate = _mulaw_rate(doc_id)
-    data = _mulaw_codes(doc_id).tobytes()
-    fmt = struct.pack("<HHIIHH", 7, 1, rate, rate, 1, 8)
-    chunks = [(b"fmt ", fmt)]
-    if doc_id % 2:
-        chunks.append((b"note", b"\x01\x02\x03"))  # odd length → pad byte
-    chunks.append((b"data", data))
-    body = b"WAVE"
-    for cid, cdata in chunks:
-        body += cid + struct.pack("<I", len(cdata)) + cdata
-        if len(cdata) % 2:
-            body += b"\x00"
+    pad = b"\x00" if len(data) % 2 else b""
+    return fourcc + struct.pack("<I", len(data)) + data + pad
+
+
+def _riff_wave(fmt: bytes, data: bytes, extra: bytes = b"") -> bytes:
+    """A RIFF/WAVE file: the ``fmt`` chunk, the ready-made chunks
+    ``extra``, then the ``data`` chunk."""
+    import struct
+
+    body = (
+        b"WAVE" + _riff_chunk(b"fmt ", fmt) + extra
+        + _riff_chunk(b"data", data)
+    )
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def decode_wav_mulaw(payload: bytes) -> tuple[int, "np.ndarray"]:
-    """Hand-rolled RIFF chunk walk + G.711 expansion, stdlib+numpy only
-    (the stdlib ``wave`` reader rejects format 7): validate the RIFF/
-    WAVE header, iterate chunks honoring the even-padding rule, require
-    fmt tag 7 mono 8-bit, expand the data chunk's codes to linear
-    samples.  Same ``bytes -> (rate, samples)`` seam signature as
-    :func:`decode_wav`, so the RMS extractor is shared."""
+def _riff_wave_chunks(payload: bytes) -> tuple[bytes, bytes]:
+    """The (fmt, data) chunk bodies of a RIFF/WAVE file: validate the
+    header, then walk the chunks within the declared size, honoring the
+    even-padding rule and skipping unknown chunks."""
     import struct
 
     b = bytes(payload)
@@ -488,6 +485,34 @@ def decode_wav_mulaw(payload: bytes) -> tuple[int, "np.ndarray"]:
         pos += 8 + size + (size % 2)  # RIFF chunks pad to even offsets
     if fmt is None or data is None:
         raise ValueError("missing fmt or data chunk")
+    return fmt, data
+
+
+def _encode_wav_mulaw_bytes(doc_id: int) -> bytes:
+    """Hand-built RIFF/WAVE, format tag 7: fmt chunk (16-byte PCM-shaped
+    body), an odd-length unknown chunk on odd ids (forces the reader's
+    even-padding rule), then the μ-law data chunk."""
+    import struct
+
+    rate = _mulaw_rate(doc_id)
+    return _riff_wave(
+        struct.pack("<HHIIHH", 7, 1, rate, rate, 1, 8),
+        _mulaw_codes(doc_id).tobytes(),
+        # odd length → pad byte
+        _riff_chunk(b"note", b"\x01\x02\x03") if doc_id % 2 else b"",
+    )
+
+
+def decode_wav_mulaw(payload: bytes) -> tuple[int, "np.ndarray"]:
+    """Hand-rolled RIFF chunk walk + G.711 expansion, stdlib+numpy only
+    (the stdlib ``wave`` reader rejects format 7): validate the RIFF/
+    WAVE header, iterate chunks honoring the even-padding rule, require
+    fmt tag 7 mono 8-bit, expand the data chunk's codes to linear
+    samples.  Same ``bytes -> (rate, samples)`` seam signature as
+    :func:`decode_wav`, so the RMS extractor is shared."""
+    import struct
+
+    fmt, data = _riff_wave_chunks(payload)
     tag, nch, rate, _brate, _balign, bits = struct.unpack("<HHIIHH", fmt[:16])
     if tag != 7 or nch != 1 or bits != 8:
         raise ValueError("expected mono 8-bit mu-law (format tag 7)")
@@ -605,13 +630,7 @@ def _encode_wav_adpcm_bytes(doc_id: int) -> bytes:
         0x11, 1, rate, rate * block_align // max(n, 1), block_align, 4,
         2, n,  # cbSize=2, wSamplesPerBlock=n
     )
-    data = struct.pack("<hBB", pred0, idx0, 0) + packed
-    body = b"WAVE"
-    for cid, cdata in ((b"fmt ", fmt), (b"data", data)):
-        body += cid + struct.pack("<I", len(cdata)) + cdata
-        if len(cdata) % 2:
-            body += b"\x00"
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _riff_wave(fmt, struct.pack("<hBB", pred0, idx0, 0) + packed)
 
 
 def decode_wav_adpcm(payload: bytes) -> tuple[int, "np.ndarray"]:
@@ -622,22 +641,7 @@ def decode_wav_adpcm(payload: bytes) -> tuple[int, "np.ndarray"]:
     as :func:`decode_wav` / :func:`decode_wav_mulaw`."""
     import struct
 
-    b = bytes(payload)
-    if b[0:4] != b"RIFF" or b[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE file")
-    end = min(len(b), 8 + struct.unpack("<I", b[4:8])[0])
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= end:
-        cid = b[pos : pos + 4]
-        size = struct.unpack("<I", b[pos + 4 : pos + 8])[0]
-        chunk_body = b[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt = chunk_body
-        elif cid == b"data":
-            data = chunk_body
-        pos += 8 + size + (size % 2)
-    if fmt is None or data is None:
-        raise ValueError("missing fmt or data chunk")
+    fmt, data = _riff_wave_chunks(payload)
     tag, nch, rate, _br, _ba, bits, cb, spb = struct.unpack(
         "<HHIIHHHH", fmt[:20]
     )
@@ -785,13 +789,7 @@ def _encode_wav_ilt_bytes(doc_id: int) -> bytes:
         _ILT_TAG, 1, rate, rate * block_align, block_align, 32,
         2, n,
     )
-    data = coeffs.astype("<i4").tobytes()
-    body = b"WAVE"
-    for cid, cdata in ((b"fmt ", fmt), (b"data", data)):
-        body += cid + struct.pack("<I", len(cdata)) + cdata
-        if len(cdata) % 2:
-            body += b"\x00"
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+    return _riff_wave(fmt, coeffs.astype("<i4").tobytes())
 
 
 def decode_wav_ilt(payload: bytes) -> tuple[int, "np.ndarray"]:
@@ -801,22 +799,7 @@ def decode_wav_ilt(payload: bytes) -> tuple[int, "np.ndarray"]:
     seam signature as decode_wav / decode_wav_mulaw / decode_wav_adpcm."""
     import struct
 
-    b = bytes(payload)
-    if b[0:4] != b"RIFF" or b[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE file")
-    end = min(len(b), 8 + struct.unpack("<I", b[4:8])[0])
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= end:
-        cid = b[pos : pos + 4]
-        size = struct.unpack("<I", b[pos + 4 : pos + 8])[0]
-        chunk_body = b[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt = chunk_body
-        elif cid == b"data":
-            data = chunk_body
-        pos += 8 + size + (size % 2)
-    if fmt is None or data is None:
-        raise ValueError("missing fmt or data chunk")
+    fmt, data = _riff_wave_chunks(payload)
     tag, nch, rate, _br, _ba, bits, cb, spb = struct.unpack(
         "<HHIIHHHH", fmt[:20]
     )
@@ -1111,12 +1094,12 @@ def _encode_png_raster(
     """Filter + deflate + chunk a (h, w·3) raster into a genuine
     truecolor-8 PNG, row r carrying filter type ``fts[r]``.
 
-    Fully vectorized (r8, VERDICT r7 item 2): filtering reads only the
+    Fully vectorized: filtering reads only the
     RAW raster (unlike decode there is no serial dependency), so all five
     filter candidates are computed for every row in one (5, h, stride)
     numpy pass and the per-row type is gathered by fancy index — no
-    Python loop over rows or bytes. Byte-identical to the r7 per-row
-    form (locked by the decode roundtrip tests)."""
+    Python loop over rows or bytes. Byte-identical to a per-row
+    encoder (locked by the decode roundtrip tests)."""
     import struct
     import zlib
 
@@ -1232,10 +1215,9 @@ _PNG_VEC_MIN_STRIDE = 128
 def _png_unfilter_row_serial(
     ft: int, row: list[int], pv: list[int], stride: int, bpp: int
 ) -> None:
-    """THE single serial un-filter implementation (r8 review: Average/
-    Paeth previously existed twice, once per width path — a fix applied
-    to one copy would silently diverge the paths at the
-    _PNG_VEC_MIN_STRIDE boundary). Mutates ``row`` (raw filtered bytes as
+    """THE single serial un-filter implementation: both width paths
+    call it, so Average/Paeth cannot diverge at the
+    _PNG_VEC_MIN_STRIDE boundary. Mutates ``row`` (raw filtered bytes as
     ints) into the reconstructed scanline given ``pv`` (previous decoded
     row); ft 0 is the caller's no-op."""
     if ft == 1:  # Sub
@@ -1281,8 +1263,7 @@ def _png_unfilter_bytes(
 def _png_unfilter_vec(
     stream: bytes, h: int, stride: int, bpp: int
 ) -> "np.ndarray":
-    """Hybrid-vectorized un-filter (r8, VERDICT r7 item 2) for real image
-    widths.
+    """Hybrid-vectorized un-filter for real image widths.
 
     Rows still decode in order (each filter may reference the previous
     DECODED row), but within a row: None is a copy, Up is one vector add,
@@ -1415,7 +1396,7 @@ _JPEG_AC_VALS = tuple(
 
 # Encode-side canonical tables are pure functions of the constants above:
 # built ONCE at import, not per document inside the mapInPandas encode
-# loop (r8 review finding — ~50k rebuilds of 174 dict entries at sf1).
+# loop (per document that is ~50k rebuilds of 174 dict entries at sf1).
 # The decode-side tables are necessarily per-file (rebuilt from DHT).
 
 
@@ -1715,7 +1696,7 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, "np.ndarray"]:
     while pos < len(b):
         if pos + 2 > len(b):
             # a lone 0xFF at the buffer end must land in the decoder-
-            # family ValueError contract, not IndexError (r8 review)
+            # family ValueError contract, not IndexError
             raise ValueError("truncated marker")
         if b[pos] != 0xFF:
             raise ValueError("bad marker alignment")
@@ -1759,7 +1740,7 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, "np.ndarray"]:
         elif marker == 0xC0:  # SOF0 baseline
             # length-validate BEFORE indexing: a seglen-valid but
             # structurally short segment must raise ValueError, not
-            # IndexError/struct.error (r8 review)
+            # IndexError/struct.error
             if len(seg) < 6 or len(seg) < 6 + 3 * seg[5]:
                 raise ValueError("truncated SOF0 segment")
             if seg[0] != 8:
@@ -2046,15 +2027,6 @@ def _mjpeg_frame_bytes(doc_id: int, f: int) -> bytes:
     return head + bytes(bw.buf) + b"\xff\xd9"
 
 
-def _riff_chunk(fourcc: bytes, data: bytes) -> bytes:
-    """One RIFF chunk: fourcc + LE size + data, padded to word length
-    (the pad byte is NOT counted in the size — RIFF spec)."""
-    import struct
-
-    pad = b"\x00" if len(data) % 2 else b""
-    return fourcc + struct.pack("<I", len(data)) + data + pad
-
-
 def _riff_list(list_type: bytes, payload: bytes) -> bytes:
     return _riff_chunk(b"LIST", list_type + payload)
 
@@ -2271,7 +2243,7 @@ def _avi_scan(b: bytes):
 
 def _idx1_base(b: bytes, movi, idx_entries) -> int:
     """idx1 dwChunkOffset convention varies in the wild and BOTH are
-    legal AVI (ADVICE r10): the spec reading is relative to the 'movi'
+    legal AVI: the spec reading is relative to the 'movi'
     list fourcc, but many real writers emit absolute file offsets.
     Probe the first entry under the movi-relative reading; if it
     doesn't land on its ckid but the absolute reading does, use
@@ -2299,7 +2271,7 @@ def decode_avi_mjpeg_sampled(
     frames, not stream length, which is the whole reason the container
     carries an index.  Both legal idx1 offset conventions are accepted
     (movi-relative per the spec, absolute file offsets as many real
-    writers emit; the first entry is probed to pick one — ADVICE r10).
+    writers emit; the first entry is probed to pick one).
     Each idx1 offset is cross-checked against the fourcc it points at
     (a stale/corrupt index must fail loudly, not decode garbage).
     Falls back to the sequential walk (skipping non-sampled chunks

@@ -16,6 +16,8 @@ pure relational plans:
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,11 +46,10 @@ def fk_integrity_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     parent (NULL child keys are counted separately — a NULL FK is a
     different defect than a dangling one).
 
-    One pass per edge (optimization r15, guide §2.3 "aggregate before
-    you shuffle" / §1.2): the earlier form scanned each child table
-    TWICE per edge — once through a left-anti join for the orphan
-    count and once for the null/total aggregate (36 scans across the 6
-    edges).  A left-outer join against the distinct parent keys with a
+    One pass per edge ("aggregate before you shuffle"): the earlier
+    form scanned each child table TWICE per edge — once through a
+    left-anti join for the orphan count and once for the null/total
+    aggregate (36 scans across the 6 edges).  A left-outer join against the distinct parent keys with a
     hit marker computes all three counts in one conditional aggregate
     over a single child scan: an orphan is a NON-NULL child key whose
     parent marker is null (null keys never match an equi-join, so they
@@ -191,7 +192,7 @@ def erasure_impact_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the request list is tiny → broadcast semi-joins down the FK
     chain; the affected-orders relation is reused (persisted) for the
     lineitem hop so the chain costs one scan per table.  One-shot pin
-    lifecycle (VERDICT r10 #5): the final action runs here and the pin
+    lifecycle: the final action runs here and the pin
     is released immediately instead of waiting for cap eviction."""
     from ..functions.windows import release_after_action
 
@@ -264,9 +265,6 @@ def erasure_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the erased docs (bm25; DuckDB lacks crc32, so the restatable
     vocabulary count binds here instead of the bucket count).  The
     oracle restates every binding from the survivors alone."""
-    import shutil
-    import tempfile
-
     from ..functions.text import md5_mod_hash_sql
     from ..functions.windows import release_after_action
     from .retrieval import (
@@ -281,9 +279,9 @@ def erasure_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from .similarity import _emb
     from .sketches import (
-        _ABS_SLACK,
-        _REL_BOUND,
         _del_users_pred,
+        _events,
+        _in_bounds,
         build_sketch_rollup_store,
         delete_users_from_sketch_store,
         serve_sketch_rollup_from_store,
@@ -303,10 +301,13 @@ def erasure_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("bigint").alias("n_affected"),
         F.col("row_binding").cast("bigint").alias("binding"),
     )
-    tmp_bm = tempfile.mkdtemp(prefix="sgraft_erasure_bm25_")
-    tmp_ann = tempfile.mkdtemp(prefix="sgraft_erasure_ann_")
-    tmp_sk = tempfile.mkdtemp(prefix="sgraft_erasure_sketch_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_erasure_bm25_", ignore_cleanup_errors=True
+    ) as tmp_bm, tempfile.TemporaryDirectory(
+        prefix="sgraft_erasure_ann_", ignore_cleanup_errors=True
+    ) as tmp_ann, tempfile.TemporaryDirectory(
+        prefix="sgraft_erasure_sketch_", ignore_cleanup_errors=True
+    ) as tmp_sk:
         # The three chains use separate temp stores and base tables, so
         # they run as concurrent driver threads.  Each runs its store's
         # build and delete jobs eagerly and returns its summary row
@@ -372,9 +373,7 @@ def erasure_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         def _sketch_chain() -> DataFrame:
-            ev = load_tables(spark, sf_dir)["events"].filter(
-                F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-            )
+            ev = _events(spark, sf_dir)
             build_sketch_rollup_store(spark, sf_dir, tmp_sk)
             days = delete_users_from_sketch_store(
                 spark, tmp_sk, ev, _del_users_pred()
@@ -383,13 +382,7 @@ def erasure_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             exact = surv.groupBy("event_type").agg(
                 F.countDistinct("user_id").alias("exact_users")
             )
-            in_bounds = (
-                F.abs(F.col("est") - F.col("exact_users"))
-                <= F.greatest(
-                    F.col("exact_users") * F.lit(_REL_BOUND),
-                    F.lit(_ABS_SLACK),
-                )
-            ).cast("bigint")
+            in_bounds = _in_bounds("est", "exact_users").cast("bigint")
             sk_tele = ev.filter(_del_users_pred()).agg(
                 F.countDistinct("user_id").alias("n_deleted")
             )
@@ -415,18 +408,13 @@ def erasure_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         bm_row, ann_row, sk_row = store._run_staged(
             _bm25_chain, _ann_chain, _sketch_chain
         )
-        out = release_after_action(
+        return release_after_action(
             impact_rows.unionByName(bm_row)
             .unionByName(ann_row)
             .unionByName(sk_row)
             .orderBy("store"),
             *pins,
         )
-    finally:
-        shutil.rmtree(tmp_bm, ignore_errors=True)
-        shutil.rmtree(tmp_ann, ignore_errors=True)
-        shutil.rmtree(tmp_sk, ignore_errors=True)
-    return out
 
 
 QUERIES = {
@@ -538,19 +526,19 @@ def _erasure_e2e_oracle() -> str:
     exact survivor aggregates with the literal-1 in-bounds flag (the
     self-checking-sketch rule)."""
     from ..functions.text import md5_mod_hash_duck
+    from . import vectorstore
     from .retrieval import (
+        _SCORE_Q_DUCK,
+        _TOKS_DUCK,
         DOC_DELETE_RES,
         DOC_UPSERT_MOD,
-        SCORE_QUANT,
-        TOKEN_SPLIT,
         TOP_K,
-        _bm25_term_score,
-        _terms_in,
+        _bm25_ctes,
     )
     from .sketches import DEL_USER_MOD, DEL_USER_RES
-    from .vectorstore import _delete_oracle
 
     ev_bind = md5_mod_hash_duck("event_type")
+    survivors = f" WHERE doc_id % {DOC_UPSERT_MOD} != {DOC_DELETE_RES}"
     return (
         f"WITH k AS (SELECT c_custkey FROM customer"
         f" WHERE c_custkey % {ERASE_MOD} = {ERASE_REM}),"
@@ -565,33 +553,11 @@ def _erasure_e2e_oracle() -> str:
         " CAST(SUM(l_orderkey % 1000000007) AS BIGINT) FROM lineitem"
         " WHERE l_orderkey IN (SELECT o_orderkey FROM o)),"
         # BM25: direct scoring of the surviving documents only
-        " tok AS (SELECT doc_id,"
-        f" list_filter(string_split_regex(lower(text), '{TOKEN_SPLIT}'),"
-        " t -> t <> '') AS toks FROM documents"
-        f" WHERE doc_id % {DOC_UPSERT_MOD} != {DOC_DELETE_RES}),"
-        " st AS (SELECT CAST(SUM(len(toks)) AS DOUBLE)"
-        " / CAST(COUNT(*) AS DOUBLE) AS avgdl,"
-        " COUNT(*) AS n_docs FROM tok),"
-        " base AS (SELECT doc_id, len(toks) AS dl,"
-        f" unnest(list_filter(toks, t -> t IN ({_terms_in()}))) AS term"
-        " FROM tok),"
-        " tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf FROM base"
-        " GROUP BY doc_id, dl, term),"
-        " dfs AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),"
-        " scored AS (SELECT doc_id, term,"
-        f" {_bm25_term_score('tf', 'df', 'dl', 'n_docs')} AS s"
-        " FROM tf JOIN dfs USING (term) CROSS JOIN st),"
-        " per AS (SELECT doc_id, COUNT(*) AS n_hit_terms,"
-        " list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-        " list(s ORDER BY term)), (acc, v) -> acc + v) AS score"
-        " FROM scored GROUP BY doc_id),"
-        " bmtop AS (SELECT doc_id, n_hit_terms,"
-        f" CAST(FLOOR(score * {SCORE_QUANT}.0 + 0.5) AS BIGINT)"
+        f" {_bm25_ctes(survivors)},"
+        f" bmtop AS (SELECT doc_id, n_hit_terms, {_SCORE_Q_DUCK}"
         " AS score_q FROM per"
         f" ORDER BY score_q DESC, doc_id LIMIT {TOP_K}),"
-        " dtok AS (SELECT doc_id,"
-        f" list_filter(string_split_regex(lower(text), '{TOKEN_SPLIT}'),"
-        " t -> t <> '') AS toks FROM documents"
+        f" dtok AS ({_TOKS_DUCK}"
         f" WHERE doc_id % {DOC_UPSERT_MOD} = {DOC_DELETE_RES}),"
         " bmrow AS (SELECT 'bm25' AS store,"
         " (SELECT COUNT(*) FROM dtok) AS n_deleted,"
@@ -605,7 +571,7 @@ def _erasure_e2e_oracle() -> str:
         " CAST(MAX(n_cells_rewritten) AS BIGINT) AS n_affected,"
         " CAST(SUM(vec_id * 1000003 + label * 101"
         " + CAST(FLOOR(cosine * 1048576.0 + 0.5) AS BIGINT)) AS BIGINT)"
-        f" AS binding FROM ({_delete_oracle()})),"
+        f" AS binding FROM ({vectorstore.ORACLES['ann_index_delete']})),"
         # sketch: exact survivor aggregates, literal-1 in-bounds flag
         " ebase AS (SELECT * FROM events"
         " WHERE user_id IS NOT NULL AND ts IS NOT NULL),"

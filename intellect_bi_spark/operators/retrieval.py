@@ -41,14 +41,15 @@ integer arithmetic.
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import store
 from ..catalog import load_tables
-from ..functions.text import P, md5_mod_hash_duck, md5_mod_hash_sql
+from ..functions.text import TOKEN_SPLIT, md5_mod_hash_duck, md5_mod_hash_sql
 
-TOKEN_SPLIT = "[^a-z0-9]+"
 QUERY_TERMS = ("dup", "vector", "window")  # df spread: rare → common
 K1_LIT = "1.2"  # identical literal text in both engines — never computed
 B_LIT = "0.75"
@@ -295,9 +296,9 @@ def bm25_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only engine-varying op (ulp-class, quantized away — the module's
     standard accepted-risk class).  The evaluation is top-k only: both
     rank lists are TakeOrderedAndProject heads, never a global sort.
-    One-shot pin lifecycle (VERDICT r10 #5): the scoring-relation pin is
-    consumed exactly once per invocation, so the final action runs here
-    and the pin is released immediately."""
+    One-shot pin lifecycle: the scoring-relation pin is consumed exactly
+    once per invocation, so the final action runs here and the pin is
+    released immediately."""
     from ..functions.windows import release_after_action
 
     out, pins = _ndcg_composed(spark, sf_dir)
@@ -314,9 +315,8 @@ def _ndcg_composed(spark, sf_dir):
     # persist the scoring relation (one narrow row per doc hitting ≥1
     # query term): BOTH rank lists below (actual top-10, ideal top-10)
     # read it, and without the pin the corpus-scale tokenize+score
-    # pipeline executes twice (r9 review; the pagerank-adjacency-pin
-    # class). Registered so repeated invocations in a long-lived session
-    # don't accumulate unreleasable cache entries (ADVICE r9) —
+    # pipeline executes twice. Registered so repeated invocations in a
+    # long-lived session don't accumulate unreleasable cache entries —
     # reset_caches()/the cap evict old pins.
     scored = register_cache(
         _bm25_scored_docs(spark, sf_dir)
@@ -387,16 +387,11 @@ def bm25_index_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, then delete the temp store).  The oracle is the direct full
     recompute: serve-from-store must equal direct scoring exactly,
     certifying the postings/manifest write/read roundtrip."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="sgraft_bm25_index_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_bm25_index_", ignore_cleanup_errors=True
+    ) as tmp:
         build_bm25_index(spark, sf_dir, tmp)
-        out = serve_bm25_v2(spark, tmp).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+        return serve_bm25_v2(spark, tmp).localCheckpoint(eager=True)
 
 
 # --- incremental index maintenance ------------------------------------------
@@ -670,23 +665,18 @@ def bm25_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-corpus scoring plus the batch count — a green row proves
     upsert-then-serve ≡ full-rebuild-then-serve (every merged quantity
     is an exact integer, so the equivalence is bit-exact)."""
-    import shutil
-    import tempfile
-
     batch = _base_docs(spark, sf_dir).filter(_doc_batch_pred())
-    tmp = tempfile.mkdtemp(prefix="sgraft_bm25_upsert_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_bm25_upsert_", ignore_cleanup_errors=True
+    ) as tmp:
         build_bm25_index_v2(spark, sf_dir, tmp)
         upsert_bm25_index(spark, tmp, batch)
         n_up = batch.agg(F.count(F.lit(1)).alias("n_upserted"))
-        out = (
+        return (
             serve_bm25_v2(spark, tmp)
             .crossJoin(F.broadcast(n_up))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def _bm25_stream(spark: SparkSession, sf_dir: str) -> tuple:
@@ -706,22 +696,17 @@ def bm25_stream_upsert_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     version.  The N-batch upsert chain composes to the full-corpus
     index, so the rows equal the direct full-corpus scoring; the
     output binds n_docs_indexed from the final manifest's stats."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="sgraft_bm25_stream_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_bm25_stream_", ignore_cleanup_errors=True
+    ) as tmp:
         feed, init, upsert = _bm25_stream(spark, sf_dir)
         path = store.stream_into_store(spark, feed, tmp, init, upsert)
         v = store._latest_version(spark, path)
-        out = (
+        return (
             serve_bm25_v2_at(spark, path, v)
             .withColumn("n_docs_indexed", F.lit(_n_docs(spark, path, v)))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 # --- version retention / vacuum ----------------------------------------------
@@ -762,9 +747,6 @@ def bm25_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     serve-from-latest is UNCHANGED by the vacuum; the file-level claims
     (old v=N directories gone, the live version's files byte-untouched,
     postings untouched) are locked by tests/test_vectorstore.py."""
-    import shutil
-    import tempfile
-
     docs = _base_docs(spark, sf_dir)
     b1 = docs.filter(F.col("doc_id") % DOC_UPSERT_MOD == DOC_UPSERT_RES)
     b2 = docs.filter(F.col("doc_id") % DOC_UPSERT_MOD == DOC_UPSERT_RES2)
@@ -772,14 +754,15 @@ def bm25_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % DOC_UPSERT_MOD != DOC_UPSERT_RES)
         & (F.col("doc_id") % DOC_UPSERT_MOD != DOC_UPSERT_RES2)
     )
-    tmp = tempfile.mkdtemp(prefix="sgraft_bm25_vacuum_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_bm25_vacuum_", ignore_cleanup_errors=True
+    ) as tmp:
         _init_bm25_store(base, tmp)
         upsert_bm25_index(spark, tmp, b1)
         upsert_bm25_index(spark, tmp, b2)
         purged = vacuum_bm25_store(spark, tmp)
         v = store._latest_version(spark, tmp)
-        out = (
+        return (
             serve_bm25_v2_at(spark, tmp, v)
             .withColumn("n_docs_indexed", F.lit(_n_docs(spark, tmp, v)))
             .withColumn(
@@ -787,9 +770,6 @@ def bm25_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 # --- deletion through the index ---------------------------------------------
@@ -902,24 +882,19 @@ def bm25_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     must land exactly where a from-scratch index of the survivors
     would, including the changed avgdl/idf, so a green row proves the
     erasure verifiably reached the derived store bit-for-bit."""
-    import shutil
-    import tempfile
-
     docs = _base_docs(spark, sf_dir)
     dels = docs.filter(F.col("doc_id") % DOC_UPSERT_MOD == DOC_DELETE_RES)
-    tmp = tempfile.mkdtemp(prefix="sgraft_bm25_delete_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_bm25_delete_", ignore_cleanup_errors=True
+    ) as tmp:
         _init_bm25_store(docs, tmp)
         delete_from_bm25_index(spark, tmp, dels)
         n_del = dels.agg(F.count(F.lit(1)).alias("n_deleted"))
-        out = (
+        return (
             serve_bm25_v2(spark, tmp)
             .crossJoin(F.broadcast(n_del))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 QUERIES = {
@@ -941,10 +916,18 @@ _TOKS_DUCK = (
     f" list_filter(string_split_regex(lower(text), '{TOKEN_SPLIT}'),"
     " t -> t <> '') AS toks FROM documents"
 )
+_SCORE_Q_DUCK = f"CAST(FLOOR(score * {SCORE_QUANT}.0 + 0.5) AS BIGINT)"
 
-ORACLES = {
-    "bm25_topk_docs": (
-        f"WITH tok AS ({_TOKS_DUCK}),"
+
+def _bm25_ctes(tok_where: str = "", scored_where: str = "") -> str:
+    """The direct-scoring CTE chain ``tok … per`` in DuckDB: the
+    documents ``tok_where`` keeps, tokenized; their corpus stats; the
+    query-term tf and df; each term's score, kept by ``scored_where``
+    after df is counted (a filter narrows candidates, not statistics);
+    and ``per``, each document's hit count and term-ordered score
+    fold."""
+    return (
+        f"tok AS ({_TOKS_DUCK}{tok_where}),"
         " st AS (SELECT CAST(SUM(len(toks)) AS DOUBLE)"
         " / CAST(COUNT(*) AS DOUBLE) AS avgdl,"
         " COUNT(*) AS n_docs FROM tok),"
@@ -956,16 +939,32 @@ ORACLES = {
         " dfs AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),"
         " scored AS (SELECT doc_id, term,"
         f" {_bm25_term_score('tf', 'df', 'dl', 'n_docs')} AS s"
-        " FROM tf JOIN dfs USING (term) CROSS JOIN st),"
+        f" FROM tf JOIN dfs USING (term) CROSS JOIN st{scored_where}),"
         " per AS (SELECT doc_id, COUNT(*) AS n_hit_terms,"
         " list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
         " list(s ORDER BY term)), (acc, v) -> acc + v) AS score"
         " FROM scored GROUP BY doc_id)"
-        " SELECT doc_id, n_hit_terms,"
-        f" CAST(FLOOR(score * {SCORE_QUANT}.0 + 0.5) AS BIGINT) AS score_q"
-        " FROM per ORDER BY score_q DESC, doc_id LIMIT"
-        f" {TOP_K}"
-    ),
+    )
+
+
+def _bm25_oracle(
+    tok_where: str = "", tele: str = "", cols: str = "", scored_where: str = ""
+) -> str:
+    """The fixed query's top-k by direct scoring (:func:`_bm25_ctes`),
+    cross-joined with the one-row telemetry CTE ``tele``
+    (``name AS (...)``), whose ``cols`` follow score_q."""
+    name = tele.split(" ", 1)[0]
+    return (
+        f"WITH {_bm25_ctes(tok_where, scored_where)}"
+        + (f", {tele}" if tele else "")
+        + f" SELECT doc_id, n_hit_terms, {_SCORE_Q_DUCK} AS score_q"
+        + (f", {cols} FROM per CROSS JOIN {name}" if tele else " FROM per")
+        + f" ORDER BY score_q DESC, doc_id LIMIT {TOP_K}"
+    )
+
+
+ORACLES = {
+    "bm25_topk_docs": _bm25_oracle(),
     "fuzzy_name_match_summary": (
         "WITH names AS (SELECT p_name, COUNT(*) AS freq,"
         " split_part(p_name, ' ', -1) AS block FROM part GROUP BY p_name),"
@@ -997,60 +996,18 @@ ORACLES["bm25_index_store"] = ORACLES["bm25_topk_docs"]
 # direct full-corpus scoring (the rebuild) — every merged quantity is
 # an exact integer, so this is the upsert ≡ rebuild proof; n_upserted
 # binds the batch into the checked result
-ORACLES["bm25_index_upsert"] = (
-    f"WITH tok AS ({_TOKS_DUCK}),"
-    " st AS (SELECT CAST(SUM(len(toks)) AS DOUBLE)"
-    " / CAST(COUNT(*) AS DOUBLE) AS avgdl,"
-    " COUNT(*) AS n_docs FROM tok),"
-    " base AS (SELECT doc_id, len(toks) AS dl,"
-    f" unnest(list_filter(toks, t -> t IN ({_terms_in()}))) AS term"
-    " FROM tok),"
-    " tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf FROM base"
-    " GROUP BY doc_id, dl, term),"
-    " dfs AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),"
-    " scored AS (SELECT doc_id, term,"
-    f" {_bm25_term_score('tf', 'df', 'dl', 'n_docs')} AS s"
-    " FROM tf JOIN dfs USING (term) CROSS JOIN st),"
-    " per AS (SELECT doc_id, COUNT(*) AS n_hit_terms,"
-    " list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-    " list(s ORDER BY term)), (acc, v) -> acc + v) AS score"
-    " FROM scored GROUP BY doc_id),"
-    " up AS (SELECT COUNT(*) AS n_upserted FROM documents"
-    f" WHERE doc_id % {DOC_UPSERT_MOD} = {DOC_UPSERT_RES})"
-    " SELECT doc_id, n_hit_terms,"
-    f" CAST(FLOOR(score * {SCORE_QUANT}.0 + 0.5) AS BIGINT) AS score_q,"
-    " up.n_upserted"
-    " FROM per CROSS JOIN up"
-    f" ORDER BY score_q DESC, doc_id LIMIT {TOP_K}"
+ORACLES["bm25_index_upsert"] = _bm25_oracle(
+    tele="up AS (SELECT COUNT(*) AS n_upserted FROM documents"
+    f" WHERE doc_id % {DOC_UPSERT_MOD} = {DOC_UPSERT_RES})",
+    cols="up.n_upserted",
 )
 
 # streaming-upsert semantics: N micro-batch merges from an empty store
 # must reconstruct the exact global index — the oracle is the direct
 # full-corpus scoring with the corpus count bound in
-ORACLES["bm25_stream_upsert_store"] = (
-    f"WITH tok AS ({_TOKS_DUCK}),"
-    " st AS (SELECT CAST(SUM(len(toks)) AS DOUBLE)"
-    " / CAST(COUNT(*) AS DOUBLE) AS avgdl,"
-    " COUNT(*) AS n_docs FROM tok),"
-    " base AS (SELECT doc_id, len(toks) AS dl,"
-    f" unnest(list_filter(toks, t -> t IN ({_terms_in()}))) AS term"
-    " FROM tok),"
-    " tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf FROM base"
-    " GROUP BY doc_id, dl, term),"
-    " dfs AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),"
-    " scored AS (SELECT doc_id, term,"
-    f" {_bm25_term_score('tf', 'df', 'dl', 'n_docs')} AS s"
-    " FROM tf JOIN dfs USING (term) CROSS JOIN st),"
-    " per AS (SELECT doc_id, COUNT(*) AS n_hit_terms,"
-    " list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-    " list(s ORDER BY term)), (acc, v) -> acc + v) AS score"
-    " FROM scored GROUP BY doc_id),"
-    " nd AS (SELECT COUNT(*) AS n_docs_indexed FROM documents)"
-    " SELECT doc_id, n_hit_terms,"
-    f" CAST(FLOOR(score * {SCORE_QUANT}.0 + 0.5) AS BIGINT) AS score_q,"
-    " nd.n_docs_indexed"
-    " FROM per CROSS JOIN nd"
-    f" ORDER BY score_q DESC, doc_id LIMIT {TOP_K}"
+ORACLES["bm25_stream_upsert_store"] = _bm25_oracle(
+    tele="nd AS (SELECT COUNT(*) AS n_docs_indexed FROM documents)",
+    cols="nd.n_docs_indexed",
 )
 
 # vacuum semantics: serve-from-the-surviving-version must equal the
@@ -1061,66 +1018,21 @@ ORACLES["bm25_stream_upsert_store"] = (
 # upsert manifests, keep_last=1 leaves one ⇒ 3 - 1 manifests removed;
 # all three posting segments are pinned by the surviving manifest, so
 # the segment GC removes none.
-ORACLES["bm25_store_vacuum"] = (
-    f"WITH tok AS ({_TOKS_DUCK}),"
-    " st AS (SELECT CAST(SUM(len(toks)) AS DOUBLE)"
-    " / CAST(COUNT(*) AS DOUBLE) AS avgdl,"
-    " COUNT(*) AS n_docs FROM tok),"
-    " base AS (SELECT doc_id, len(toks) AS dl,"
-    f" unnest(list_filter(toks, t -> t IN ({_terms_in()}))) AS term"
-    " FROM tok),"
-    " tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf FROM base"
-    " GROUP BY doc_id, dl, term),"
-    " dfs AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),"
-    " scored AS (SELECT doc_id, term,"
-    f" {_bm25_term_score('tf', 'df', 'dl', 'n_docs')} AS s"
-    " FROM tf JOIN dfs USING (term) CROSS JOIN st),"
-    " per AS (SELECT doc_id, COUNT(*) AS n_hit_terms,"
-    " list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-    " list(s ORDER BY term)), (acc, v) -> acc + v) AS score"
-    " FROM scored GROUP BY doc_id),"
-    " nd AS (SELECT COUNT(*) AS n_docs_indexed FROM documents)"
-    " SELECT doc_id, n_hit_terms,"
-    f" CAST(FLOOR(score * {SCORE_QUANT}.0 + 0.5) AS BIGINT) AS score_q,"
-    " nd.n_docs_indexed,"
-    f" CAST(3 - {store.RETAIN_VERSIONS} AS BIGINT) AS n_versions_purged"
-    " FROM per CROSS JOIN nd"
-    f" ORDER BY score_q DESC, doc_id LIMIT {TOP_K}"
+ORACLES["bm25_store_vacuum"] = _bm25_oracle(
+    tele="nd AS (SELECT COUNT(*) AS n_docs_indexed FROM documents)",
+    cols="nd.n_docs_indexed,"
+    f" CAST(3 - {store.RETAIN_VERSIONS} AS BIGINT) AS n_versions_purged",
 )
 
 # delete semantics: the rebuild-without-the-docs — direct scoring over
 # the SURVIVING documents only, so every decremented quantity (df,
 # n_docs, sum_len → avgdl, idf) must land exactly where a from-scratch
 # index of the survivors would
-_TOKS_SURVIVORS_DUCK = _TOKS_DUCK + (
-    f" WHERE doc_id % {DOC_UPSERT_MOD} <> {DOC_DELETE_RES}"
-)
-
-ORACLES["bm25_index_delete"] = (
-    f"WITH tok AS ({_TOKS_SURVIVORS_DUCK}),"
-    " st AS (SELECT CAST(SUM(len(toks)) AS DOUBLE)"
-    " / CAST(COUNT(*) AS DOUBLE) AS avgdl,"
-    " COUNT(*) AS n_docs FROM tok),"
-    " base AS (SELECT doc_id, len(toks) AS dl,"
-    f" unnest(list_filter(toks, t -> t IN ({_terms_in()}))) AS term"
-    " FROM tok),"
-    " tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf FROM base"
-    " GROUP BY doc_id, dl, term),"
-    " dfs AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),"
-    " scored AS (SELECT doc_id, term,"
-    f" {_bm25_term_score('tf', 'df', 'dl', 'n_docs')} AS s"
-    " FROM tf JOIN dfs USING (term) CROSS JOIN st),"
-    " per AS (SELECT doc_id, COUNT(*) AS n_hit_terms,"
-    " list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-    " list(s ORDER BY term)), (acc, v) -> acc + v) AS score"
-    " FROM scored GROUP BY doc_id),"
-    " up AS (SELECT COUNT(*) AS n_deleted FROM documents"
-    f" WHERE doc_id % {DOC_UPSERT_MOD} = {DOC_DELETE_RES})"
-    " SELECT doc_id, n_hit_terms,"
-    f" CAST(FLOOR(score * {SCORE_QUANT}.0 + 0.5) AS BIGINT) AS score_q,"
-    " up.n_deleted"
-    " FROM per CROSS JOIN up"
-    f" ORDER BY score_q DESC, doc_id LIMIT {TOP_K}"
+ORACLES["bm25_index_delete"] = _bm25_oracle(
+    f" WHERE doc_id % {DOC_UPSERT_MOD} <> {DOC_DELETE_RES}",
+    tele="up AS (SELECT COUNT(*) AS n_deleted FROM documents"
+    f" WHERE doc_id % {DOC_UPSERT_MOD} = {DOC_DELETE_RES})",
+    cols="up.n_deleted",
 )
 
 
@@ -1149,9 +1061,7 @@ def _rrf_oracle() -> str:
         " list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
         " list(s ORDER BY term)), (acc, v) -> acc + v) AS score"
         " FROM scored GROUP BY doc_id),"
-        " bmq AS (SELECT doc_id,"
-        f" CAST(FLOOR(score * {SCORE_QUANT}.0 + 0.5) AS BIGINT)"
-        " AS score_q FROM per),"
+        f" bmq AS (SELECT doc_id, {_SCORE_Q_DUCK} AS score_q FROM per),"
         " bmr AS (SELECT doc_id AS id, ROW_NUMBER() OVER"
         " (ORDER BY score_q DESC, doc_id) AS r_bm25 FROM bmq"
         f" ORDER BY score_q DESC, doc_id LIMIT {RRF_DEPTH}),"
@@ -1190,25 +1100,8 @@ def _ndcg_oracle() -> str:
         f" * {RRF_QUANT}.0 + 0.5) AS BIGINT)"
     )
     return (
-        f"WITH tok AS ({_TOKS_DUCK}),"
-        " st AS (SELECT CAST(SUM(len(toks)) AS DOUBLE)"
-        " / CAST(COUNT(*) AS DOUBLE) AS avgdl,"
-        " COUNT(*) AS n_docs FROM tok),"
-        " base AS (SELECT doc_id, len(toks) AS dl,"
-        f" unnest(list_filter(toks, t -> t IN ({_terms_in()}))) AS term"
-        " FROM tok),"
-        " tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf FROM base"
-        " GROUP BY doc_id, dl, term),"
-        " dfs AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),"
-        " scored AS (SELECT doc_id, term,"
-        f" {_bm25_term_score('tf', 'df', 'dl', 'n_docs')} AS s"
-        " FROM tf JOIN dfs USING (term) CROSS JOIN st),"
-        " per AS (SELECT doc_id, COUNT(*) AS n_hit_terms,"
-        " list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-        " list(s ORDER BY term)), (acc, v) -> acc + v) AS score"
-        " FROM scored GROUP BY doc_id),"
-        " bmq AS (SELECT doc_id, n_hit_terms AS rel,"
-        f" CAST(FLOOR(score * {SCORE_QUANT}.0 + 0.5) AS BIGINT)"
+        f"WITH {_bm25_ctes()},"
+        f" bmq AS (SELECT doc_id, n_hit_terms AS rel, {_SCORE_Q_DUCK}"
         " AS score_q FROM per),"
         " topr AS (SELECT rel, ROW_NUMBER() OVER"
         " (ORDER BY score_q DESC, doc_id) AS rk FROM bmq"
@@ -1231,7 +1124,7 @@ def _ndcg_oracle() -> str:
 ORACLES["bm25_ndcg_eval"] = _ndcg_oracle()
 
 
-# --- positional phrase search (r13) ------------------------------------------
+# --- positional phrase search -------------------------------------------------
 #
 # The retrieval capability the bag-of-words BM25 tier cannot express:
 # "these words, adjacent, in this order".  The index gains POSITIONS —
@@ -1401,17 +1294,11 @@ def _pos_store_postings(
     (or a pinned) version, select only manifest entries whose bucket
     can hold one of ``terms``, read exactly those pairs (with the tb
     IN-filter pushed into the scan for the plan audit)."""
-    import zlib
-
     if v is None:
         v = store._latest_version(spark, path)
-    buckets = sorted(
-        {zlib.crc32(t.encode("utf-8")) % N_TB for t in terms}
-    )
+    buckets = _query_buckets(terms)
     entries = [
-        e
-        for e in store._manifest_entries(spark, path, v)
-        if e[1] in set(buckets)
+        e for e in store._manifest_entries(spark, path, v) if e[1] in buckets
     ]
     return store._read_segments(
         spark, f"{path}/{_POS_ROOT}", entries, _POS_POSTING_SCHEMA
@@ -1434,22 +1321,27 @@ def phrase_index_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters pushed), teardown.  The oracle restates the phrase match
     from the raw text — a green row proves the positional store
     roundtrip and the adjacency chain byte-exactly."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="sgraft_phrase_store_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_phrase_store_", ignore_cleanup_errors=True
+    ) as tmp:
         build_phrase_index(spark, sf_dir, tmp)
-        out = serve_phrase_from_store(spark, tmp).localCheckpoint(
+        return serve_phrase_from_store(spark, tmp).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 QUERIES["phrase_search_topk"] = phrase_search_topk
 QUERIES["phrase_index_store"] = phrase_index_store
+
+
+def _pos_ctes(doc_where: str = "") -> str:
+    """CTEs ``tok`` and ``p``: the positional postings (doc_id, dl,
+    term, pos) of the documents ``doc_where`` keeps, from raw text."""
+    return (
+        f"tok AS ({_TOKS_DUCK}{doc_where}),"
+        " p AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term,"
+        " generate_subscripts(toks, 1) - 1 AS pos FROM tok)"
+    )
 
 
 def _phrase_oracle() -> str:
@@ -1463,11 +1355,7 @@ def _phrase_oracle() -> str:
         f"JOIN w{i} USING (doc_id, p0)" for i in range(1, len(w))
     )
     return (
-        "WITH tok AS (SELECT doc_id, list_filter("
-        "string_split_regex(lower(text), '[^a-z0-9]+'),"
-        " t -> t <> '') AS toks FROM documents),"
-        " p AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term,"
-        " generate_subscripts(toks, 1) - 1 AS pos FROM tok),"
+        f"WITH {_pos_ctes()},"
         f" a AS (SELECT doc_id, dl, pos AS p0 FROM p"
         f" WHERE term = '{w[0]}'),"
         f" {branches},"
@@ -1541,32 +1429,27 @@ def bm25_postings_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (served ranking unchanged); the file-level claims (one pinned file
     per compacted bucket, untouched buckets' pins and files unchanged,
     posting rows preserved) are locked by tests/test_vectorstore.py."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="sgraft_bm25_compact_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_bm25_compact_", ignore_cleanup_errors=True
+    ) as tmp:
         build_bm25_index_v2(spark, sf_dir, tmp)
         batch = _base_docs(spark, sf_dir).filter(_doc_batch_pred())
         compact_bm25_buckets(
             spark, tmp, upsert_bm25_index(spark, tmp, batch)
         )
         nu = batch.agg(F.count(F.lit(1)).alias("n_upserted"))
-        out = (
+        return (
             serve_bm25_v2(spark, tmp)
             .crossJoin(F.broadcast(nu))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 QUERIES["bm25_postings_compact"] = bm25_postings_compact
 ORACLES["bm25_postings_compact"] = ORACLES["bm25_index_upsert"]
 
 
-# --- proximity (NEAR) search (r13) -------------------------------------------
+# --- proximity (NEAR) search --------------------------------------------------
 #
 # The unordered companion to phrase search: "these words within W
 # positions of each other, either order".  The naive formulation is an
@@ -1591,9 +1474,8 @@ def _near_topk(pp: DataFrame) -> DataFrame:
     a = pp.filter(F.col("term") == t0).select(
         "doc_id", "dl", F.col("pos").alias("pa")
     )
-    # F.floor makes the banding sign-safe and explicit (ADVICE r13: a
-    # bare cast truncates toward zero, which only coincides with floor
-    # for the non-negative positions used here)
+    # F.floor makes the banding sign-safe: a bare cast truncates toward
+    # zero, which coincides with floor only for non-negative positions
     b = pp.filter(F.col("term") == t1).select(
         "doc_id",
         F.col("pos").alias("pb"),
@@ -1638,11 +1520,7 @@ QUERIES["near_search_topk"] = near_search_topk
 def _near_oracle() -> str:
     t0, t1 = NEAR_TERMS
     return (
-        "WITH tok AS (SELECT doc_id, list_filter("
-        "string_split_regex(lower(text), '[^a-z0-9]+'),"
-        " t -> t <> '') AS toks FROM documents),"
-        " p AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term,"
-        " generate_subscripts(toks, 1) - 1 AS pos FROM tok),"
+        f"WITH {_pos_ctes()},"
         f" a AS (SELECT doc_id, dl, pos AS pa FROM p"
         f" WHERE term = '{t0}'),"
         f" b AS (SELECT doc_id, pos AS pb FROM p WHERE term = '{t1}'),"
@@ -1684,9 +1562,6 @@ def bm25_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     binds the final published version (a closed-form constant of the
     chain: init 1 + upsert 2 + delete 3 + upsert 4 + compact 5) and the
     surviving doc count read from the FINAL manifest."""
-    import shutil
-    import tempfile
-
     docs = _base_docs(spark, sf_dir)
     b1 = docs.filter(F.col("doc_id") % DOC_UPSERT_MOD == DOC_UPSERT_RES)
     b2 = docs.filter(F.col("doc_id") % DOC_UPSERT_MOD == DOC_UPSERT_RES2)
@@ -1696,8 +1571,9 @@ def bm25_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.join(
         b1.unionByName(b2).select("doc_id"), "doc_id", "left_anti"
     )
-    tmp = tempfile.mkdtemp(prefix="sgraft_bm25_crud_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_bm25_crud_", ignore_cleanup_errors=True
+    ) as tmp:
         _init_bm25_store(base, tmp)
         upsert_bm25_index(spark, tmp, b1)
         delete_from_bm25_index(spark, tmp, dels)
@@ -1715,8 +1591,6 @@ def bm25_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("final_version", F.lit(v).cast("bigint"))
             .localCheckpoint(eager=True),
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -1725,33 +1599,10 @@ QUERIES["bm25_crud_chain"] = bm25_crud_chain
 # the oracle scores the NET corpus directly: every doc except the
 # erased residue class (both ingest batches are back in), with the
 # version constant restated literally from the chain's length
-ORACLES["bm25_crud_chain"] = (
-    f"WITH tok AS (SELECT doc_id,"
-    " list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),"
-    " t -> t <> '') AS toks FROM documents"
-    f" WHERE doc_id % {DOC_UPSERT_MOD} != {DOC_CRUD_DEL_RES}),"
-    " st AS (SELECT CAST(SUM(len(toks)) AS DOUBLE)"
-    " / CAST(COUNT(*) AS DOUBLE) AS avgdl,"
-    " COUNT(*) AS n_docs FROM tok),"
-    " base AS (SELECT doc_id, len(toks) AS dl,"
-    f" unnest(list_filter(toks, t -> t IN ({_terms_in()}))) AS term"
-    " FROM tok),"
-    " tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf FROM base"
-    " GROUP BY doc_id, dl, term),"
-    " dfs AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),"
-    " scored AS (SELECT doc_id, term,"
-    f" {_bm25_term_score('tf', 'df', 'dl', 'n_docs')} AS s"
-    " FROM tf JOIN dfs USING (term) CROSS JOIN st),"
-    " per AS (SELECT doc_id, COUNT(*) AS n_hit_terms,"
-    " list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-    " list(s ORDER BY term)), (acc, v) -> acc + v) AS score"
-    " FROM scored GROUP BY doc_id),"
-    " nd AS (SELECT COUNT(*) AS n_docs_indexed FROM tok)"
-    " SELECT doc_id, n_hit_terms,"
-    f" CAST(FLOOR(score * {SCORE_QUANT}.0 + 0.5) AS BIGINT) AS score_q,"
-    " nd.n_docs_indexed, CAST(5 AS BIGINT) AS final_version"
-    " FROM per CROSS JOIN nd"
-    f" ORDER BY score_q DESC, doc_id LIMIT {TOP_K}"
+ORACLES["bm25_crud_chain"] = _bm25_oracle(
+    f" WHERE doc_id % {DOC_UPSERT_MOD} != {DOC_CRUD_DEL_RES}",
+    tele="nd AS (SELECT COUNT(*) AS n_docs_indexed FROM tok)",
+    cols="nd.n_docs_indexed, CAST(5 AS BIGINT) AS final_version",
 )
 
 
@@ -1770,27 +1621,22 @@ def near_index_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     build once, serve the fixed NEAR query with bucket pruning and
     pushed term predicates, teardown.  Same oracle as the direct row —
     the store roundtrip and the banded join are both proven."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="sgraft_near_store_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_near_store_", ignore_cleanup_errors=True
+    ) as tmp:
         build_phrase_index(spark, sf_dir, tmp)
-        out = serve_near_from_store(spark, tmp).localCheckpoint(
+        return serve_near_from_store(spark, tmp).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 QUERIES["near_index_store"] = near_index_store
 ORACLES["near_index_store"] = _near_oracle()
 
 
-# --- positional-store CRUD + batch serving (r14) ------------------------------
+# --- positional-store CRUD + batch serving ------------------------------------
 #
-# VERDICT r13 #5/#6: the positional (phrase/NEAR) store gains the same
+# The positional (phrase/NEAR) store has the same
 # lifecycle legs as the other three stores — upsert and delete with the
 # affected-term-bucket discipline (here under the manifest pinning, so
 # both are pure copy-on-write) — and a BATCH serving path: production
@@ -1840,24 +1686,19 @@ def phrase_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     store.  The oracle restates phrase and NEAR directly from the FULL
     corpus text — upsert-then-serve ≡ rebuild, for both probe shapes,
     with n_upserted bound in."""
-    import shutil
-    import tempfile
-
     docs = _base_docs(spark, sf_dir)
     batch = docs.filter(_doc_batch_pred())
-    tmp = tempfile.mkdtemp(prefix="sgraft_phrase_upsert_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_phrase_upsert_", ignore_cleanup_errors=True
+    ) as tmp:
         _init_pos_store(docs.filter(~_doc_batch_pred()), tmp)
         upsert_phrase_index(spark, tmp, batch)
         n_up = batch.agg(F.count(F.lit(1)).alias("n_upserted"))
-        out = (
+        return (
             _pos_probes_from_store(spark, tmp)
             .crossJoin(F.broadcast(n_up))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def phrase_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1867,24 +1708,19 @@ def phrase_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-delete store.  The oracle restates phrase and NEAR from the
     SURVIVING documents' raw text — delete-then-serve ≡
     rebuild-without-the-docs, with n_deleted bound in."""
-    import shutil
-    import tempfile
-
     docs = _base_docs(spark, sf_dir)
     dels = docs.filter(F.col("doc_id") % DOC_UPSERT_MOD == DOC_DELETE_RES)
-    tmp = tempfile.mkdtemp(prefix="sgraft_phrase_delete_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_phrase_delete_", ignore_cleanup_errors=True
+    ) as tmp:
         _init_pos_store(docs, tmp)
         delete_from_phrase_index(spark, tmp, dels)
         n_del = dels.agg(F.count(F.lit(1)).alias("n_deleted"))
-        out = (
+        return (
             _pos_probes_from_store(spark, tmp)
             .crossJoin(F.broadcast(n_del))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def serve_phrase_batch_from_store(
@@ -1952,18 +1788,13 @@ def phrase_search_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     build once, answer all PHRASE_BATCH queries in one pass, teardown.
     The oracle restates per-query top-k for every phrase from the raw
     text in one relation."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="sgraft_phrase_batch_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_phrase_batch_", ignore_cleanup_errors=True
+    ) as tmp:
         _init_pos_store(_base_docs(spark, sf_dir), tmp)
-        out = serve_phrase_batch_from_store(spark, tmp).localCheckpoint(
+        return serve_phrase_batch_from_store(spark, tmp).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 QUERIES["phrase_index_upsert"] = phrase_index_upsert
@@ -1986,11 +1817,7 @@ def _pos_probes_oracle(doc_where: str, tele_sql: str, tele_col: str) -> str:
         f"JOIN w{i} USING (doc_id, p0)" for i in range(1, len(w))
     )
     return (
-        "WITH tok AS (SELECT doc_id, list_filter("
-        "string_split_regex(lower(text), '[^a-z0-9]+'),"
-        f" t -> t <> '') AS toks FROM documents{doc_where}),"
-        " p AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term,"
-        " generate_subscripts(toks, 1) - 1 AS pos FROM tok),"
+        f"WITH {_pos_ctes(doc_where)},"
         f" a AS (SELECT doc_id, dl, pos AS p0 FROM p"
         f" WHERE term = '{w[0]}'),"
         f" {branches},"
@@ -2039,11 +1866,7 @@ def _phrase_batch_oracle() -> str:
         for i, t in enumerate(ws)
     )
     return (
-        "WITH tok AS (SELECT doc_id, list_filter("
-        "string_split_regex(lower(text), '[^a-z0-9]+'),"
-        " t -> t <> '') AS toks FROM documents),"
-        " p AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term,"
-        " generate_subscripts(toks, 1) - 1 AS pos FROM tok),"
+        f"WITH {_pos_ctes()},"
         f" q(qid, widx, term) AS (VALUES {vals}),"
         " ql AS (SELECT qid, COUNT(*) AS qlen FROM q GROUP BY qid),"
         " hits AS (SELECT q.qid, p.doc_id, p.dl, q.widx,"
@@ -2088,11 +1911,9 @@ def phrase_stream_upsert_store(
     cross-batch state and position arithmetic is per document, so the
     rows equal the single-pass index's; the output binds
     n_docs_indexed, the distinct documents in the pinned postings."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="sgraft_pos_stream_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_pos_stream_", ignore_cleanup_errors=True
+    ) as tmp:
         feed, init, upsert = _pos_stream(spark, sf_dir)
         path = store.stream_into_store(spark, feed, tmp, init, upsert)
         v = store._latest_version(spark, path)
@@ -2105,14 +1926,11 @@ def phrase_stream_upsert_store(
         nd = pinned.agg(
             F.countDistinct("doc_id").alias("n_docs_indexed")
         )
-        out = (
+        return (
             _pos_probes_from_store(spark, path)
             .crossJoin(F.broadcast(nd))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def phrase_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2123,16 +1941,14 @@ def phrase_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     restates phrase and NEAR from the SURVIVING documents' raw text
     (the batch is back in, the erase set is out), with n_survivors
     bound in."""
-    import shutil
-    import tempfile
-
     docs = _base_docs(spark, sf_dir)
     b1 = docs.filter(_doc_batch_pred())
     dels = docs.filter(
         F.col("doc_id") % DOC_UPSERT_MOD == DOC_CRUD_DEL_RES
     )
-    tmp = tempfile.mkdtemp(prefix="sgraft_pos_crud_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_pos_crud_", ignore_cleanup_errors=True
+    ) as tmp:
         _init_pos_store(docs.filter(~_doc_batch_pred()), tmp)
         upsert_phrase_index(spark, tmp, b1)
         delete_from_phrase_index(spark, tmp, dels)
@@ -2148,8 +1964,6 @@ def phrase_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .crossJoin(F.broadcast(n_surv))
             .localCheckpoint(eager=True),
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
@@ -2169,7 +1983,7 @@ ORACLES["phrase_crud_chain"] = _pos_probes_oracle(
 )
 
 
-# --- batched NEAR + BM25 serving (r15, VERDICT r14 #6) ------------------------
+# --- batched NEAR + BM25 serving ----------------------------------------------
 #
 # The remaining two retrieval modes gain the query-RELATION serving
 # shape `serve_phrase_batch_from_store` proved: production retrieval
@@ -2277,29 +2091,20 @@ def near_search_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     store: build once, answer all NEAR_BATCH pairs in one pass,
     teardown.  The oracle restates per-query top-k for every pair
     from the raw text in one relation."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="sgraft_near_batch_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_near_batch_", ignore_cleanup_errors=True
+    ) as tmp:
         _init_pos_store(_base_docs(spark, sf_dir), tmp)
-        out = serve_near_batch_from_store(spark, tmp).localCheckpoint(
+        return serve_near_batch_from_store(spark, tmp).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def _near_batch_oracle() -> str:
     vals_a = ", ".join(f"({qid}, '{ta}')" for qid, (ta, _) in NEAR_BATCH)
     vals_b = ", ".join(f"({qid}, '{tb}')" for qid, (_, tb) in NEAR_BATCH)
     return (
-        "WITH tok AS (SELECT doc_id, list_filter("
-        "string_split_regex(lower(text), '[^a-z0-9]+'),"
-        " t -> t <> '') AS toks FROM documents),"
-        " p AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term,"
-        " generate_subscripts(toks, 1) - 1 AS pos FROM tok),"
+        f"WITH {_pos_ctes()},"
         f" qa(qid, term) AS (VALUES {vals_a}),"
         f" qb(qid, term) AS (VALUES {vals_b}),"
         " a AS (SELECT qa.qid, p.doc_id, p.dl, p.pos AS pa"
@@ -2371,18 +2176,13 @@ def bm25_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     once over the full corpus, answer all BM25_BATCH queries in one
     pinned scan, teardown.  The oracle restates per-query top-k for
     every term set from the raw text in one relation."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="sgraft_bm25_batch_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_bm25_batch_", ignore_cleanup_errors=True
+    ) as tmp:
         _init_bm25_store(_base_docs(spark, sf_dir), tmp)
-        out = serve_bm25_batch_from_store(spark, tmp).localCheckpoint(
+        return serve_bm25_batch_from_store(spark, tmp).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def _bm25_batch_oracle() -> str:
@@ -2413,8 +2213,7 @@ def _bm25_batch_oracle() -> str:
         " list(s ORDER BY term)), (acc, v) -> acc + v) AS score"
         " FROM scored GROUP BY qid, doc_id),"
         " r AS (SELECT qid, doc_id, n_hit_terms,"
-        f" CAST(FLOOR(score * {SCORE_QUANT}.0 + 0.5) AS BIGINT)"
-        " AS score_q FROM per),"
+        f" {_SCORE_Q_DUCK} AS score_q FROM per),"
         " rr AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid"
         " ORDER BY score_q DESC, doc_id) AS rnk FROM r)"
         " SELECT qid, doc_id, n_hit_terms, score_q,"
@@ -2469,49 +2268,20 @@ def bm25_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     teardown.  The oracle restates direct scoring WITH the filter —
     same global df/avgdl, candidates restricted to the predicate —
     from the raw text."""
-    import shutil
-    import tempfile
-
     docs_meta = load_tables(spark, sf_dir)["documents"].select(
         "doc_id", "lang"
     )
-    tmp = tempfile.mkdtemp(prefix="sgraft_bm25_filtered_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_bm25_filtered_", ignore_cleanup_errors=True
+    ) as tmp:
         _init_bm25_store(_base_docs(spark, sf_dir), tmp)
-        out = serve_bm25_filtered_from_store(
+        return serve_bm25_filtered_from_store(
             spark, tmp, docs_meta
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
-
-
-def _bm25_filtered_oracle() -> str:
-    return (
-        f"WITH tok AS ({_TOKS_DUCK}),"
-        " st AS (SELECT CAST(SUM(len(toks)) AS DOUBLE)"
-        " / CAST(COUNT(*) AS DOUBLE) AS avgdl,"
-        " COUNT(*) AS n_docs FROM tok),"
-        " base AS (SELECT doc_id, len(toks) AS dl,"
-        f" unnest(list_filter(toks, t -> t IN ({_terms_in()}))) AS term"
-        " FROM tok),"
-        " tf AS (SELECT doc_id, dl, term, COUNT(*) AS tf FROM base"
-        " GROUP BY doc_id, dl, term),"
-        " dfs AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),"
-        " scored AS (SELECT doc_id, term,"
-        f" {_bm25_term_score('tf', 'df', 'dl', 'n_docs')} AS s"
-        " FROM tf JOIN dfs USING (term) CROSS JOIN st"
-        " WHERE doc_id IN (SELECT doc_id FROM documents"
-        f" WHERE lang = '{FILTER_LANG}')),"
-        " per AS (SELECT doc_id, COUNT(*) AS n_hit_terms,"
-        " list_reduce(list_prepend(CAST(0.0 AS DOUBLE),"
-        " list(s ORDER BY term)), (acc, v) -> acc + v) AS score"
-        " FROM scored GROUP BY doc_id)"
-        " SELECT doc_id, n_hit_terms,"
-        f" CAST(FLOOR(score * {SCORE_QUANT}.0 + 0.5) AS BIGINT) AS score_q"
-        f" FROM per ORDER BY score_q DESC, doc_id LIMIT {TOP_K}"
-    )
 
 
 QUERIES["bm25_filtered_topk"] = bm25_filtered_topk
-ORACLES["bm25_filtered_topk"] = _bm25_filtered_oracle()
+ORACLES["bm25_filtered_topk"] = _bm25_oracle(
+    scored_where=" WHERE doc_id IN (SELECT doc_id FROM documents"
+    f" WHERE lang = '{FILTER_LANG}')"
+)

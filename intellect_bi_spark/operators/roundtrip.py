@@ -1,8 +1,7 @@
 """Driver-visible certification of the XML and JSONL sources/sinks.
 
-VERDICT r6 item 4: the interchange sources (sources/xmldocs.py,
-sources/jsonl.py) were unit-only — no oracle-shaped driver row. These two
-registry queries close that: each writes a fixture table out through the
+The interchange sources (sources/xmldocs.py, sources/jsonl.py) each get
+an oracle-shaped driver row: each writes a fixture table out through the
 real sink, PLANTS a known number of malformed records into the landing
 directory, reads the directory back through the permissive-quarantine
 scan, and returns a one-row checksum binding ids to content hashes. The
@@ -24,7 +23,6 @@ streamops.events_stream_store).
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,8 +50,9 @@ def xml_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir)["documents"].select(
         "doc_id", "text", "lang", "source"
     )
-    tmp = tempfile.mkdtemp(prefix="sgraft_xml_rt_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_xml_rt_", ignore_cleanup_errors=True
+    ) as tmp:
         path = os.path.join(tmp, "docs_xml")
         write_xml(docs, path, row_tag="doc")
         # a malformed shard: each <doc> element carries an undefined
@@ -90,8 +89,6 @@ def xml_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # one row; checkpoint so the landing dir can be deleted eagerly
         return chk.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def jsonl_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,8 +107,9 @@ def jsonl_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").cast("string").alias("value"),
         "props",
     )
-    tmp = tempfile.mkdtemp(prefix="sgraft_jsonl_rt_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_jsonl_rt_", ignore_cleanup_errors=True
+    ) as tmp:
         path = os.path.join(tmp, "events_jsonl")
         out.write.mode("overwrite").json(path)
         with open(os.path.join(path, "part-zz-corrupt.json"), "w") as fh:
@@ -141,8 +139,6 @@ def jsonl_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("content_binding"),
         )
         return chk.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def orc_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -157,8 +153,9 @@ def orc_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir)["documents"].select(
         "doc_id", "text", "lang", "source"
     )
-    tmp = tempfile.mkdtemp(prefix="sgraft_orc_rt_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_orc_rt_", ignore_cleanup_errors=True
+    ) as tmp:
         path = os.path.join(tmp, "docs_orc")
         write_orc(docs, path)
         back = read_orc(spark, path)
@@ -173,15 +170,13 @@ def orc_roundtrip_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("content_binding"),
         )
         return chk.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _SE_ABSENT = "<absent>"  # sentinel for the pre-evolution rows' new column
 
 
 def schema_evolution_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-EVOLUTION certification (r8): two parquet batches land in
+    """Schema-EVOLUTION certification: two parquet batches land in
     one directory with different schemas — v1 (doc_id, text, lang) for
     even ids, then v2 adds the ``source`` column for odd ids — and the
     scan reads them back with ``mergeSchema``, the production answer to
@@ -192,8 +187,9 @@ def schema_evolution_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle restates the slice rule from the ORIGINAL table — it
     never sees the landing files."""
     docs = load_tables(spark, sf_dir)["documents"]
-    tmp = tempfile.mkdtemp(prefix="sgraft_schevo_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_schevo_", ignore_cleanup_errors=True
+    ) as tmp:
         path = os.path.join(tmp, "docs_evolving")
         docs.filter(F.col("doc_id") % 2 == 0).select(
             "doc_id", "text", "lang"
@@ -219,8 +215,6 @@ def schema_evolution_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("content_binding"),
         )
         return chk.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 QUERIES = {

@@ -10,7 +10,7 @@ cells at query time, ``hll_sketch_estimate`` reads the estimate — so a
 coarser-grain distinct-count query runs off the tiny sketch table.
 
 Verification follows the engine's self-checking-sketch rule
-(relational.approx_distinct_counts, VERDICT r2): sketch internals are
+(relational.approx_distinct_counts): sketch internals are
 engine-specific, so the registry row emits the EXACT values plus
 in-bounds flags comparing the merged-sketch estimate against the exact
 distinct computed in the same query — the flags' oracle is literal 1,
@@ -19,6 +19,8 @@ per-type sketches == sketch of the union) is locked by a unit test.
 """
 
 from __future__ import annotations
+
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,12 +32,91 @@ from ..catalog import load_tables
 # PER DAY: the query emits one in-bounds flag per day, and with hundreds
 # of independent daily flags the JOINT tail at the default lgK=12 (3.7σ
 # → ~2e-4/day) would accumulate to a real flake probability at larger
-# scale factors (ADVICE r7). At 7.3σ the joint risk stays negligible at
+# scale factors. At 7.3σ the joint risk stays negligible at
 # any day count this engine will ever see. The ±3 absolute slack covers
 # tiny groups where a 6% band is below one unit.
 _HLL_LGK = 14
 _REL_BOUND = 0.06
 _ABS_SLACK = 3
+
+
+def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events a user-distinct sketch counts: user and time set."""
+    return load_tables(spark, sf_dir)["events"].filter(
+        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
+    )
+
+
+def _in_bounds(est: str, exact: str):
+    """The sketch self-check: estimate ``est`` within the relative
+    bound, or the absolute slack, of the exact distinct ``exact``."""
+    return F.abs(F.col(est) - F.col(exact)) <= F.greatest(
+        F.col(exact) * F.lit(_REL_BOUND), F.lit(_ABS_SLACK)
+    )
+
+
+def _exact_users(ev: DataFrame) -> DataFrame:
+    return ev.groupBy("event_type").agg(
+        F.countDistinct("user_id").alias("exact_users")
+    )
+
+
+def _checked(
+    served: DataFrame,
+    exact: DataFrame,
+    tele: DataFrame | None = None,
+    *cols: str,
+) -> DataFrame:
+    """A store row's checked result: the served per-type estimates
+    joined to the exact distincts, the in-bounds flag (oracle: literal
+    1) and the ``cols`` of the one-row ``tele``, checkpointed so the
+    store can be deleted before the caller's action."""
+    out = served.join(exact, "event_type")
+    if tele is not None:
+        out = out.crossJoin(F.broadcast(tele))
+    return (
+        out.select(
+            "event_type",
+            "n_events",
+            "exact_users",
+            F.when(_in_bounds("est", "exact_users"), 1)
+            .otherwise(0)
+            .cast("int")
+            .alias("store_in_bounds"),
+            *cols,
+        )
+        .orderBy("event_type")
+        .localCheckpoint(eager=True)
+    )
+
+
+_EV_NOT_NULL = " WHERE user_id IS NOT NULL AND ts IS NOT NULL"
+
+
+def _sketch_oracle(
+    where: str = "", tele: str = "", cols: str = "", src: str = "base"
+) -> str:
+    """A store row's oracle: the exact per-type accounting of the
+    ``src`` rows ``where`` keeps (``base``: the CTE of the events
+    :func:`_events` keeps), the in-bounds flag as literal 1, and the
+    ``cols`` of the one-row CTE ``tele`` (``name AS (...)``)."""
+    ctes = [tele] if tele else []
+    if src == "base":
+        ctes.insert(0, f"base AS (SELECT * FROM events{_EV_NOT_NULL})")
+    name = tele.split(" ", 1)[0]
+    return (
+        (f"WITH {', '.join(ctes)} " if ctes else "")
+        + "SELECT event_type, COUNT(*) AS n_events,"
+        " COUNT(DISTINCT user_id) AS exact_users,"
+        " CAST(1 AS INT) AS store_in_bounds"
+        + (f", {cols}" if cols else "")
+        + f" FROM {src}"
+        + (f", {name}" if tele else "")
+        + where
+        + " GROUP BY event_type"
+        + (f", {cols}" if tele else "")
+        + " ORDER BY event_type"
+    )
 
 
 def user_sketch_rollup(ev: DataFrame) -> DataFrame:
@@ -56,9 +137,7 @@ def sketch_rollup_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     A green row proves the rollup→merge→estimate path lands within the
     sketch's error bound on every day while the exact columns hash-match
     the oracle."""
-    ev = load_tables(spark, sf_dir)["events"].filter(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    )
+    ev = _events(spark, sf_dir)
     daily = (
         user_sketch_rollup(ev)
         .groupBy("day")
@@ -70,22 +149,16 @@ def sketch_rollup_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = ev.groupBy(F.expr("CAST(ts AS DATE)").alias("day")).agg(
         F.countDistinct("user_id").alias("exact_users")
     )
-    in_bounds = (
-        F.abs(F.col("est") - F.col("exact_users"))
-        <= F.greatest(
-            (F.col("exact_users") * F.lit(_REL_BOUND)),
-            F.lit(_ABS_SLACK),
-        )
-    )
     return (
         daily.join(exact, "day")
         .select(
             "day",
             "n_events",
             "exact_users",
-            F.when(in_bounds, 1).otherwise(0).cast("int").alias(
-                "sketch_in_bounds"
-            ),
+            F.when(_in_bounds("est", "exact_users"), 1)
+            .otherwise(0)
+            .cast("int")
+            .alias("sketch_in_bounds"),
         )
         .orderBy("day")
     )
@@ -134,14 +207,10 @@ def build_sketch_rollup_store(
     spark: SparkSession, sf_dir: str, path: str
 ) -> None:
     """One fact scan → the manifest-pinned, day-sorted HLL rollup
-    store (the build half of :func:`sketch_rollup_store`, extracted
-    verbatim so bench.py's ``sketch_rollup_serve_only`` metric can
-    build once untimed and time only the serving path — VERDICT r11
-    #6, the ann/bm25 serve-only discipline)."""
-    ev = load_tables(spark, sf_dir)["events"].filter(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    )
-    _init_sketch_store(ev, path)
+    store (the build half of :func:`sketch_rollup_store`, so bench.py's
+    ``sketch_rollup_serve_only`` metric can build once untimed and time
+    only the serving path, as the ann/bm25 serve-only metrics do)."""
+    _init_sketch_store(_events(spark, sf_dir), path)
 
 
 def serve_sketch_rollup_from_store(
@@ -171,7 +240,7 @@ def serve_sketch_rollup_from_store(
 
 
 def sketch_rollup_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRODUCTION shape of the rollup (r8, VERDICT r7 item 6): the
+    """The PRODUCTION shape of the rollup: the
     per-(day, event_type) HLL sketch table is WRITTEN to parquet
     (segment files sorted by day, sketch bytes as a binary column),
     read BACK from the store, and the per-type distinct-user estimates
@@ -185,42 +254,14 @@ def sketch_rollup_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     The re-read aggregate is localCheckpointed (bounded: one row per
     event type) so the temp store can be deleted before returning —
     same lifecycle discipline as streamops.events_stream_store."""
-    import shutil
-    import tempfile
-
-    ev = load_tables(spark, sf_dir)["events"].filter(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    )
-    tmp = tempfile.mkdtemp(prefix="sgraft_sketch_store_")
-    try:
+    ev = _events(spark, sf_dir)
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_sketch_store_", ignore_cleanup_errors=True
+    ) as tmp:
         build_sketch_rollup_store(spark, sf_dir, tmp)
-        merged = serve_sketch_rollup_from_store(spark, tmp)
-        exact = ev.groupBy("event_type").agg(
-            F.countDistinct("user_id").alias("exact_users")
+        return _checked(
+            serve_sketch_rollup_from_store(spark, tmp), _exact_users(ev)
         )
-        in_bounds = (
-            F.abs(F.col("est") - F.col("exact_users"))
-            <= F.greatest(
-                F.col("exact_users") * F.lit(_REL_BOUND),
-                F.lit(_ABS_SLACK),
-            )
-        )
-        out = (
-            merged.join(exact, "event_type")
-            .select(
-                "event_type",
-                "n_events",
-                "exact_users",
-                F.when(in_bounds, 1).otherwise(0).cast("int").alias(
-                    "store_in_bounds"
-                ),
-            )
-            .orderBy("event_type")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 # KLL rank-error at the default k=200 is ~1.65% (two-sided, 99%
@@ -324,7 +365,7 @@ def sketch_rollup_value_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Heavy hitters (frequent-items sketch) — r8 -------------------------------
+# --- Heavy hitters (frequent-items sketch) ------------------------------------
 
 _HH_K = 20
 _HH_FETCH = 200  # probe window: wide enough that arbitrary tie-breaking
@@ -403,10 +444,8 @@ def theta_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebra, which is why audience-overlap systems store theta sketches.
     Self-checked against the exact per-user flag aggregate in the same
     query (exact columns hash-matched; flags literal 1)."""
-    ev = load_tables(spark, sf_dir)["events"].filter(
-        F.col("user_id").isNotNull()
-        & F.col("ts").isNotNull()
-        & F.col("event_type").isin("click", "purchase")
+    ev = _events(spark, sf_dir).filter(
+        F.col("event_type").isin("click", "purchase")
     )
     daily = ev.groupBy(F.expr("CAST(ts AS DATE)").alias("day")).agg(
         F.expr(
@@ -473,8 +512,8 @@ def _sliding_union_est(daily_sk: DataFrame) -> DataFrame:
     per-day sketches.  The frame is a RANGE over epoch-day numbers, NOT
     a ROWS frame — on a gapped day spine a ROWS frame would silently
     merge the 7 most recent PRESENT days (spanning > 7 calendar days)
-    and disagree with any calendar-defined exact check (review r8
-    finding; locked by test_sketch_sliding_gap)."""
+    and disagree with any calendar-defined exact check (locked by
+    test_sketch_sliding_gap)."""
     from pyspark.sql import Window
 
     w = (
@@ -496,8 +535,7 @@ def sketch_sliding_7d_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch rollups exist: any ad-hoc window over the grain comes from
     the tiny sketch table, never a fact rescan.  Self-checked per the
     self-checking-sketch rule, but aggregated to ONE joint flag
-    (MIN over days) so the per-day tails never stack (ADVICE r7 on the
-    daily flags).
+    (MIN over days) so the per-day tails never stack.
 
     Scale: the fact is scanned once for the daily sketches (map-side
     sketch partials) and once for the exact check (fixture-side audit
@@ -508,9 +546,7 @@ def sketch_sliding_7d_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both sides use the same CALENDAR window (RANGE frame vs BETWEEN),
     so a gapped day spine cannot desynchronize them.
     """
-    ev = load_tables(spark, sf_dir)["events"].filter(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    )
+    ev = _events(spark, sf_dir)
     daily_sk = ev.groupBy(F.expr("CAST(ts AS DATE)").alias("day")).agg(
         F.expr(f"hll_sketch_agg(user_id, {_HLL_LGK})").alias("sk")
     )
@@ -529,15 +565,11 @@ def sketch_sliding_7d_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("d.day").alias("day"))
         .agg(F.countDistinct("u.user_id").alias("exact_7d"))
     )
-    joined = est.join(exact, "day")
-    in_bounds = F.abs(F.col("est") - F.col("exact_7d")) <= F.greatest(
-        F.col("exact_7d") * F.lit(_REL_BOUND), F.lit(_ABS_SLACK)
-    )
-    return joined.agg(
+    return est.join(exact, "day").agg(
         F.count(F.lit(1)).alias("n_days"),
-        F.min(F.when(in_bounds, 1).otherwise(0)).cast("int").alias(
-            "all_in_bounds"
-        ),
+        F.min(F.when(_in_bounds("est", "exact_7d"), 1).otherwise(0))
+        .cast("int")
+        .alias("all_in_bounds"),
         F.sum("exact_7d").alias("sum_exact_7d"),
         F.max("exact_7d").alias("max_exact_7d"),
         F.min("exact_7d").alias("min_exact_7d"),
@@ -674,14 +706,7 @@ ORACLES = {
         " GROUP BY user_id"
         f" ORDER BY n_events DESC, user_id LIMIT {_HH_K}"
     ),
-    "sketch_rollup_store": (
-        "SELECT event_type,"
-        " COUNT(*) AS n_events,"
-        " COUNT(DISTINCT user_id) AS exact_users,"
-        " CAST(1 AS INT) AS store_in_bounds"
-        " FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL"
-        " GROUP BY event_type ORDER BY event_type"
-    ),
+    "sketch_rollup_store": _sketch_oracle(_EV_NOT_NULL, src="events"),
     "theta_audience_overlap": (
         "WITH f AS (SELECT user_id,"
         " MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS hc,"
@@ -735,7 +760,7 @@ ORACLES["cms_user_event_counts"] = (
 )
 
 
-# --- Bloom-filter membership decontamination (r12) ---------------------------
+# --- Bloom-filter membership decontamination ---------------------------------
 #
 # The missing member of the mergeable-summary family (HLL cardinality /
 # KLL quantiles / theta set-algebra / CMS frequencies / Bloom
@@ -839,7 +864,7 @@ def bloom_decontam_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     row certifies the filter build, the probe, and each individual
     false positive.
 
-    Pin lifecycle (optimization r15, guide §5 cache-on-reuse): the
+    Pin lifecycle (cache on reuse): the
     hashed gram relation and the two distinct dictionaries fan into SIX
     independent branches of the one-row confusion output (filter build,
     probe, members semi-join, three counting aggregates) — unpinned,
@@ -999,6 +1024,12 @@ def upsert_sketch_rollup_store(
     )
 
 
+def _batch_day_pred():
+    """The ingest batch of the upsert, vacuum and chain rows:
+    day-of-month % 7 == 3."""
+    return F.dayofmonth(F.expr("CAST(ts AS DATE)")) % 7 == 3
+
+
 def sketch_rollup_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental maintenance for the THIRD store family: the HLL
     rollup is per-(day, type) cells, so an ingest batch of new days
@@ -1017,52 +1048,24 @@ def sketch_rollup_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-checked against the exact distinct over ALL events
     (self-checking-sketch rule: the flag's oracle is literal 1) with
     the batch-day count bound into the row."""
-    import shutil
-    import tempfile
-
-    ev = load_tables(spark, sf_dir)["events"].filter(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    )
-    is_batch_day = F.dayofmonth(F.expr("CAST(ts AS DATE)")) % 7 == 3
-    tmp = tempfile.mkdtemp(prefix="sgraft_sketch_upsert_")
-    try:
-        _init_sketch_store(ev.filter(~is_batch_day), tmp)
-        batch = ev.filter(is_batch_day)
+    ev = _events(spark, sf_dir)
+    batch = ev.filter(_batch_day_pred())
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_sketch_upsert_", ignore_cleanup_errors=True
+    ) as tmp:
+        _init_sketch_store(ev.filter(~_batch_day_pred()), tmp)
         upsert_sketch_rollup_store(batch, tmp)
-        merged = serve_sketch_rollup_from_store(spark, tmp)
-        exact = ev.groupBy("event_type").agg(
-            F.countDistinct("user_id").alias("exact_users")
-        )
         updays = batch.agg(
             F.countDistinct(F.expr("CAST(ts AS DATE)")).alias(
                 "n_upserted_days"
             )
         )
-        in_bounds = (
-            F.abs(F.col("est") - F.col("exact_users"))
-            <= F.greatest(
-                F.col("exact_users") * F.lit(_REL_BOUND),
-                F.lit(_ABS_SLACK),
-            )
+        return _checked(
+            serve_sketch_rollup_from_store(spark, tmp),
+            _exact_users(ev),
+            updays,
+            "n_upserted_days",
         )
-        out = (
-            merged.join(exact, "event_type")
-            .crossJoin(F.broadcast(updays))
-            .select(
-                "event_type",
-                "n_events",
-                "exact_users",
-                F.when(in_bounds, 1).otherwise(0).cast("int").alias(
-                    "store_in_bounds"
-                ),
-                "n_upserted_days",
-            )
-            .orderBy("event_type")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 QUERIES["sketch_rollup_upsert"] = sketch_rollup_upsert
@@ -1070,18 +1073,13 @@ QUERIES["sketch_rollup_upsert"] = sketch_rollup_upsert
 # upsert semantics: appended day cells + serve-time union must equal
 # the direct full-corpus aggregate (the flag oracle is literal 1 per
 # the self-checking-sketch rule; everything else exact)
-ORACLES["sketch_rollup_upsert"] = (
-    "WITH up AS (SELECT COUNT(DISTINCT CAST(ts AS DATE))"
-    " AS n_upserted_days FROM events"
-    " WHERE user_id IS NOT NULL AND ts IS NOT NULL"
-    " AND EXTRACT(day FROM CAST(ts AS DATE)) % 7 = 3)"
-    " SELECT event_type,"
-    " COUNT(*) AS n_events,"
-    " COUNT(DISTINCT user_id) AS exact_users,"
-    " CAST(1 AS INT) AS store_in_bounds,"
-    " up.n_upserted_days"
-    " FROM events, up WHERE user_id IS NOT NULL AND ts IS NOT NULL"
-    " GROUP BY event_type, up.n_upserted_days ORDER BY event_type"
+ORACLES["sketch_rollup_upsert"] = _sketch_oracle(
+    _EV_NOT_NULL,
+    "up AS (SELECT COUNT(DISTINCT CAST(ts AS DATE))"
+    f" AS n_upserted_days FROM events{_EV_NOT_NULL}"
+    " AND EXTRACT(day FROM CAST(ts AS DATE)) % 7 = 3)",
+    "up.n_upserted_days",
+    src="events",
 )
 
 
@@ -1204,15 +1202,11 @@ def sketch_rollup_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     erasure accounting (n_users_deleted, n_days_rewritten) into the
     checked rows — both closed-form restatable, so a green row proves
     the erasure verifiably reached the derived store."""
-    import shutil
-    import tempfile
-
-    ev = load_tables(spark, sf_dir)["events"].filter(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    )
-    tmp = tempfile.mkdtemp(prefix="sgraft_sketch_delete_")
-    try:
-        surv = ev.filter(~_del_users_pred())
+    ev = _events(spark, sf_dir)
+    surv = ev.filter(~_del_users_pred())
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_sketch_delete_", ignore_cleanup_errors=True
+    ) as tmp:
         # the exact self-check depends only on the base fact, so it
         # runs as a concurrent job alongside the store build and erasure
 
@@ -1223,45 +1217,23 @@ def sketch_rollup_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         exact, affected = store._run_staged(
-            lambda: surv.groupBy("event_type")
-            .agg(F.countDistinct("user_id").alias("exact_users"))
-            .localCheckpoint(eager=True),
+            lambda: _exact_users(surv).localCheckpoint(eager=True),
             _build_and_erase,
         )
-        merged = serve_sketch_rollup_from_store(spark, tmp)
-        tele = surv.sparkSession.createDataFrame(
+        tele = spark.createDataFrame(
             [(len(affected),)], "n_days_rewritten bigint"
         ).crossJoin(
             ev.filter(_del_users_pred()).agg(
                 F.countDistinct("user_id").alias("n_users_deleted")
             )
         )
-        in_bounds = (
-            F.abs(F.col("est") - F.col("exact_users"))
-            <= F.greatest(
-                F.col("exact_users") * F.lit(_REL_BOUND),
-                F.lit(_ABS_SLACK),
-            )
+        return _checked(
+            serve_sketch_rollup_from_store(spark, tmp),
+            exact,
+            tele,
+            "n_users_deleted",
+            "n_days_rewritten",
         )
-        out = (
-            merged.join(exact, "event_type")
-            .crossJoin(F.broadcast(tele))
-            .select(
-                "event_type",
-                "n_events",
-                "exact_users",
-                F.when(in_bounds, 1).otherwise(0).cast("int").alias(
-                    "store_in_bounds"
-                ),
-                "n_users_deleted",
-                "n_days_rewritten",
-            )
-            .orderBy("event_type")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 QUERIES["sketch_rollup_delete"] = sketch_rollup_delete
@@ -1270,23 +1242,15 @@ QUERIES["sketch_rollup_delete"] = sketch_rollup_delete
 # aggregate over the SURVIVING events (n_events per type decremented
 # exactly; estimates in bounds vs surviving distincts — literal-1 flag
 # per the self-checking-sketch rule); telemetry closed-form restated
-ORACLES["sketch_rollup_delete"] = (
-    "WITH base AS (SELECT * FROM events"
-    " WHERE user_id IS NOT NULL AND ts IS NOT NULL),"
-    f" tele AS (SELECT (SELECT COUNT(DISTINCT CAST(ts AS DATE)) FROM base"
+ORACLES["sketch_rollup_delete"] = _sketch_oracle(
+    f" WHERE user_id % {DEL_USER_MOD} != {DEL_USER_RES}",
+    "tele AS (SELECT (SELECT COUNT(DISTINCT CAST(ts AS DATE)) FROM base"
     f" WHERE user_id % {DEL_USER_MOD} = {DEL_USER_RES})"
     " AS n_days_rewritten,"
-    f" (SELECT COUNT(DISTINCT user_id) FROM base"
+    " (SELECT COUNT(DISTINCT user_id) FROM base"
     f" WHERE user_id % {DEL_USER_MOD} = {DEL_USER_RES})"
-    " AS n_users_deleted)"
-    " SELECT event_type,"
-    " COUNT(*) AS n_events,"
-    " COUNT(DISTINCT user_id) AS exact_users,"
-    " CAST(1 AS INT) AS store_in_bounds,"
-    " tele.n_users_deleted, tele.n_days_rewritten"
-    f" FROM base, tele WHERE user_id % {DEL_USER_MOD} != {DEL_USER_RES}"
-    " GROUP BY event_type, tele.n_users_deleted, tele.n_days_rewritten"
-    " ORDER BY event_type"
+    " AS n_users_deleted)",
+    "tele.n_users_deleted, tele.n_days_rewritten",
 )
 
 
@@ -1317,51 +1281,24 @@ def sketch_rollup_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form restatable as day counts, so a green row proves the
     compaction merged exactly the overlapping-day entries and changed
     no served result (HLL union associativity)."""
-    import shutil
-    import tempfile
-
-    ev = load_tables(spark, sf_dir)["events"].filter(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    )
-    tmp = tempfile.mkdtemp(prefix="sgraft_sketch_compact_")
-    try:
+    ev = _events(spark, sf_dir)
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_sketch_compact_", ignore_cleanup_errors=True
+    ) as tmp:
         _init_sketch_store(ev.filter(~_sk_user_batch_pred()), tmp)
         upsert_sketch_rollup_store(ev.filter(_sk_user_batch_pred()), tmp)
         n_before, n_after = compact_sketch_store(spark, tmp)
-        merged = serve_sketch_rollup_from_store(spark, tmp)
-        exact = ev.groupBy("event_type").agg(
-            F.countDistinct("user_id").alias("exact_users")
-        )
         tele = spark.createDataFrame(
             [(n_before, n_after)],
             "n_entries_before bigint, n_entries_after bigint",
         )
-        in_bounds = (
-            F.abs(F.col("est") - F.col("exact_users"))
-            <= F.greatest(
-                F.col("exact_users") * F.lit(_REL_BOUND),
-                F.lit(_ABS_SLACK),
-            )
+        return _checked(
+            serve_sketch_rollup_from_store(spark, tmp),
+            _exact_users(ev),
+            tele,
+            "n_entries_before",
+            "n_entries_after",
         )
-        out = (
-            merged.join(exact, "event_type")
-            .crossJoin(F.broadcast(tele))
-            .select(
-                "event_type",
-                "n_events",
-                "exact_users",
-                F.when(in_bounds, 1).otherwise(0).cast("int").alias(
-                    "store_in_bounds"
-                ),
-                "n_entries_before",
-                "n_entries_after",
-            )
-            .orderBy("event_type")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 QUERIES["sketch_rollup_compact"] = sketch_rollup_compact
@@ -1370,24 +1307,16 @@ QUERIES["sketch_rollup_compact"] = sketch_rollup_compact
 # over ALL events (flag literal 1); entries-before = the two slices'
 # day counts summed (each slice's segment pins its own day cells),
 # entries-after = the distinct days
-ORACLES["sketch_rollup_compact"] = (
-    "WITH base AS (SELECT * FROM events"
-    " WHERE user_id IS NOT NULL AND ts IS NOT NULL),"
-    " tele AS (SELECT"
+ORACLES["sketch_rollup_compact"] = _sketch_oracle(
+    "",
+    "tele AS (SELECT"
     " (SELECT COUNT(DISTINCT CAST(ts AS DATE)) FROM base"
     f" WHERE user_id % {_SK_BATCH_MOD} != 0)"
     " + (SELECT COUNT(DISTINCT CAST(ts AS DATE)) FROM base"
     f" WHERE user_id % {_SK_BATCH_MOD} = 0) AS n_entries_before,"
     " (SELECT COUNT(DISTINCT CAST(ts AS DATE)) FROM base)"
-    " AS n_entries_after)"
-    " SELECT event_type,"
-    " COUNT(*) AS n_events,"
-    " COUNT(DISTINCT user_id) AS exact_users,"
-    " CAST(1 AS INT) AS store_in_bounds,"
-    " tele.n_entries_before, tele.n_entries_after"
-    " FROM base, tele"
-    " GROUP BY event_type, tele.n_entries_before, tele.n_entries_after"
-    " ORDER BY event_type"
+    " AS n_entries_after)",
+    "tele.n_entries_before, tele.n_entries_after",
 )
 
 
@@ -1402,54 +1331,25 @@ def sketch_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic in; the file-level claims (old version dirs gone,
     unreferenced segments GC'd, pinned files byte-untouched) are
     locked by tests/test_sketch_upsert.py."""
-    import shutil
-    import tempfile
-
-    ev = load_tables(spark, sf_dir)["events"].filter(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    )
-    is_batch_day = F.dayofmonth(F.expr("CAST(ts AS DATE)")) % 7 == 3
-    tmp = tempfile.mkdtemp(prefix="sgraft_sketch_vacuum_")
-    try:
-        _init_sketch_store(ev.filter(~is_batch_day), tmp)
-        upsert_sketch_rollup_store(ev.filter(is_batch_day), tmp)
+    ev = _events(spark, sf_dir)
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_sketch_vacuum_", ignore_cleanup_errors=True
+    ) as tmp:
+        _init_sketch_store(ev.filter(~_batch_day_pred()), tmp)
+        upsert_sketch_rollup_store(ev.filter(_batch_day_pred()), tmp)
         delete_users_from_sketch_store(spark, tmp, ev, _del_users_pred())
         n_before = len(store._published_versions(spark, tmp))
         vacuum_sketch_store(spark, tmp, keep_last=1)
         n_purged = n_before - len(store._published_versions(spark, tmp))
-        surv = ev.filter(~_del_users_pred())
-        merged = serve_sketch_rollup_from_store(spark, tmp)
-        exact = surv.groupBy("event_type").agg(
-            F.countDistinct("user_id").alias("exact_users")
-        )
         tele = spark.createDataFrame(
             [(n_purged,)], "n_versions_purged bigint"
         )
-        in_bounds = (
-            F.abs(F.col("est") - F.col("exact_users"))
-            <= F.greatest(
-                F.col("exact_users") * F.lit(_REL_BOUND),
-                F.lit(_ABS_SLACK),
-            )
+        return _checked(
+            serve_sketch_rollup_from_store(spark, tmp),
+            _exact_users(ev.filter(~_del_users_pred())),
+            tele,
+            "n_versions_purged",
         )
-        out = (
-            merged.join(exact, "event_type")
-            .crossJoin(F.broadcast(tele))
-            .select(
-                "event_type",
-                "n_events",
-                "exact_users",
-                F.when(in_bounds, 1).otherwise(0).cast("int").alias(
-                    "store_in_bounds"
-                ),
-                "n_versions_purged",
-            )
-            .orderBy("event_type")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 QUERIES["sketch_store_vacuum"] = sketch_store_vacuum
@@ -1457,16 +1357,9 @@ QUERIES["sketch_store_vacuum"] = sketch_store_vacuum
 # vacuum must keep exactly the post-delete state: per-type survivor
 # accounting (flag literal 1), 2 purged versions for the 3-version
 # chain
-ORACLES["sketch_store_vacuum"] = (
-    "WITH base AS (SELECT * FROM events"
-    " WHERE user_id IS NOT NULL AND ts IS NOT NULL)"
-    " SELECT event_type,"
-    " COUNT(*) AS n_events,"
-    " COUNT(DISTINCT user_id) AS exact_users,"
-    " CAST(1 AS INT) AS store_in_bounds,"
-    " CAST(2 AS BIGINT) AS n_versions_purged"
-    f" FROM base WHERE user_id % {DEL_USER_MOD} != {DEL_USER_RES}"
-    " GROUP BY event_type ORDER BY event_type"
+ORACLES["sketch_store_vacuum"] = _sketch_oracle(
+    f" WHERE user_id % {DEL_USER_MOD} != {DEL_USER_RES}",
+    cols="CAST(2 AS BIGINT) AS n_versions_purged",
 )
 
 
@@ -1482,20 +1375,15 @@ def sketch_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_entries_after (the compacted manifest size = distinct survivor
     days), and n_versions_purged (3) into the checked rows — all
     closed-form restatable."""
-    import shutil
-    import tempfile
-
-    ev = load_tables(spark, sf_dir)["events"].filter(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    )
-    is_batch_day = F.dayofmonth(F.expr("CAST(ts AS DATE)")) % 7 == 3
-    tmp = tempfile.mkdtemp(prefix="sgraft_sketch_crud_")
-    try:
-        batch = ev.filter(is_batch_day)
-        surv = ev.filter(~_del_users_pred())
+    ev = _events(spark, sf_dir)
+    batch = ev.filter(_batch_day_pred())
+    surv = ev.filter(~_del_users_pred())
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_sketch_crud_", ignore_cleanup_errors=True
+    ) as tmp:
 
         def _chain() -> tuple[int, int]:
-            _init_sketch_store(ev.filter(~is_batch_day), tmp)
+            _init_sketch_store(ev.filter(~_batch_day_pred()), tmp)
             upsert_sketch_rollup_store(batch, tmp)
             delete_users_from_sketch_store(
                 spark, tmp, ev, _del_users_pred()
@@ -1509,12 +1397,9 @@ def sketch_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the exact self-check depends only on the base fact, so it
         # runs as a concurrent job alongside the mutation chain
         exact, (n_after, n_purged) = store._run_staged(
-            lambda: surv.groupBy("event_type")
-            .agg(F.countDistinct("user_id").alias("exact_users"))
-            .localCheckpoint(eager=True),
+            lambda: _exact_users(surv).localCheckpoint(eager=True),
             _chain,
         )
-        merged = serve_sketch_rollup_from_store(spark, tmp)
         tele = (
             spark.createDataFrame(
                 [(n_after, n_purged)],
@@ -1533,34 +1418,15 @@ def sketch_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         )
-        in_bounds = (
-            F.abs(F.col("est") - F.col("exact_users"))
-            <= F.greatest(
-                F.col("exact_users") * F.lit(_REL_BOUND),
-                F.lit(_ABS_SLACK),
-            )
+        return _checked(
+            serve_sketch_rollup_from_store(spark, tmp),
+            exact,
+            tele,
+            "n_upserted_days",
+            "n_users_deleted",
+            "n_entries_after",
+            "n_versions_purged",
         )
-        out = (
-            merged.join(exact, "event_type")
-            .crossJoin(F.broadcast(tele))
-            .select(
-                "event_type",
-                "n_events",
-                "exact_users",
-                F.when(in_bounds, 1).otherwise(0).cast("int").alias(
-                    "store_in_bounds"
-                ),
-                "n_upserted_days",
-                "n_users_deleted",
-                "n_entries_after",
-                "n_versions_purged",
-            )
-            .orderBy("event_type")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 QUERIES["sketch_crud_chain"] = sketch_crud_chain
@@ -1569,10 +1435,9 @@ QUERIES["sketch_crud_chain"] = sketch_crud_chain
 # upserted days / deleted users restated from the raw fact; compacted
 # manifest size = distinct survivor days; 3 purged versions for the
 # 4-version chain
-ORACLES["sketch_crud_chain"] = (
-    "WITH base AS (SELECT * FROM events"
-    " WHERE user_id IS NOT NULL AND ts IS NOT NULL),"
-    " tele AS (SELECT"
+ORACLES["sketch_crud_chain"] = _sketch_oracle(
+    f" WHERE user_id % {DEL_USER_MOD} != {DEL_USER_RES}",
+    "tele AS (SELECT"
     " (SELECT COUNT(DISTINCT CAST(ts AS DATE)) FROM base"
     " WHERE EXTRACT(day FROM CAST(ts AS DATE)) % 7 = 3)"
     " AS n_upserted_days,"
@@ -1582,17 +1447,9 @@ ORACLES["sketch_crud_chain"] = (
     " (SELECT COUNT(DISTINCT CAST(ts AS DATE)) FROM base"
     f" WHERE user_id % {DEL_USER_MOD} != {DEL_USER_RES})"
     " AS n_entries_after,"
-    " CAST(3 AS BIGINT) AS n_versions_purged)"
-    " SELECT event_type,"
-    " COUNT(*) AS n_events,"
-    " COUNT(DISTINCT user_id) AS exact_users,"
-    " CAST(1 AS INT) AS store_in_bounds,"
-    " tele.n_upserted_days, tele.n_users_deleted,"
-    " tele.n_entries_after, tele.n_versions_purged"
-    f" FROM base, tele WHERE user_id % {DEL_USER_MOD} != {DEL_USER_RES}"
-    " GROUP BY event_type, tele.n_upserted_days, tele.n_users_deleted,"
-    " tele.n_entries_after, tele.n_versions_purged"
-    " ORDER BY event_type"
+    " CAST(3 AS BIGINT) AS n_versions_purged)",
+    "tele.n_upserted_days, tele.n_users_deleted,"
+    " tele.n_entries_after, tele.n_versions_purged",
 )
 
 
@@ -1606,10 +1463,7 @@ ORACLES["sketch_crud_chain"] = (
 
 def _sketch_stream(spark: SparkSession, sf_dir: str) -> tuple:
     """(feed, init, upsert) of the sketch ingest stream."""
-    ev = load_tables(spark, sf_dir)["events"].filter(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    )
-    return ev, _init_sketch_store, upsert_sketch_rollup_store
+    return _events(spark, sf_dir), _init_sketch_store, upsert_sketch_rollup_store
 
 
 def sketch_stream_upsert_store(
@@ -1623,12 +1477,10 @@ def sketch_stream_upsert_store(
     per-type estimates are self-checked against the exact distinct over
     all events; n_days_stored (distinct days the final manifest pins)
     binds the store's layout into the checked rows."""
-    import shutil
-    import tempfile
-
     ev, init, upsert = _sketch_stream(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="sgraft_sketch_stream_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_sketch_stream_", ignore_cleanup_errors=True
+    ) as tmp:
         path = store.stream_into_store(spark, ev, tmp, init, upsert)
         # entries are (seg, day) pairs; partial-day cells from
         # different batches pin the same day
@@ -1643,35 +1495,12 @@ def sketch_stream_upsert_store(
         nd = spark.createDataFrame(
             [(n_days,)], "n_days_stored bigint"
         )
-        merged = serve_sketch_rollup_from_store(spark, path)
-        exact = ev.groupBy("event_type").agg(
-            F.countDistinct("user_id").alias("exact_users")
+        return _checked(
+            serve_sketch_rollup_from_store(spark, path),
+            _exact_users(ev),
+            nd,
+            "n_days_stored",
         )
-        in_bounds = (
-            F.abs(F.col("est") - F.col("exact_users"))
-            <= F.greatest(
-                F.col("exact_users") * F.lit(_REL_BOUND),
-                F.lit(_ABS_SLACK),
-            )
-        )
-        out = (
-            merged.join(exact, "event_type")
-            .crossJoin(F.broadcast(nd))
-            .select(
-                "event_type",
-                "n_events",
-                "exact_users",
-                F.when(in_bounds, 1).otherwise(0).cast("int").alias(
-                    "store_in_bounds"
-                ),
-                "n_days_stored",
-            )
-            .orderBy("event_type")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 QUERIES["sketch_stream_upsert_store"] = sketch_stream_upsert_store
@@ -1680,16 +1509,9 @@ QUERIES["sketch_stream_upsert_store"] = sketch_stream_upsert_store
 # events (the fact reached the store losslessly through the batch
 # chain), estimates in bounds (literal-1 flag), and the day-partition
 # count restated as the distinct event days
-ORACLES["sketch_stream_upsert_store"] = (
-    "WITH base AS (SELECT * FROM events"
-    " WHERE user_id IS NOT NULL AND ts IS NOT NULL),"
-    " nd AS (SELECT COUNT(DISTINCT CAST(ts AS DATE)) AS n_days_stored"
-    " FROM base)"
-    " SELECT event_type,"
-    " COUNT(*) AS n_events,"
-    " COUNT(DISTINCT user_id) AS exact_users,"
-    " CAST(1 AS INT) AS store_in_bounds,"
-    " nd.n_days_stored"
-    " FROM base, nd"
-    " GROUP BY event_type, nd.n_days_stored ORDER BY event_type"
+ORACLES["sketch_stream_upsert_store"] = _sketch_oracle(
+    "",
+    "nd AS (SELECT COUNT(DISTINCT CAST(ts AS DATE)) AS n_days_stored"
+    " FROM base)",
+    "nd.n_days_stored",
 )

@@ -36,9 +36,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
-from ..functions.text import md5_mod_hash_duck, md5_mod_hash_sql
+from ..functions.text import TOKEN_SPLIT, md5_mod_hash_duck, md5_mod_hash_sql
 
-TOKEN_SPLIT = "[^a-z0-9]+"
 SPAN_K = 8  # window width (tokens); a 1-window island = 8 shared tokens
 SPAN_DF_CAP = 64  # windows in more than this many docs are boilerplate
 SPAN_TOP = 15  # top pairs reported
@@ -50,7 +49,7 @@ def _window_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     The scan is repartitioned to full parallelism first: the fixture
     table is one parquet file (1-2 scan partitions), and the per-window
     md5 is this operator's dominant map cost (pipeline._docs_spread
-    rationale; r9 review)."""
+    rationale)."""
     docs = (
         load_tables(spark, sf_dir)["documents"]
         .select("doc_id", "text")
@@ -84,7 +83,7 @@ def dup_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_span_tokens (longest certified shared substring, in tokens).
     Ranked by n_windows DESC with (doc_a, doc_b) tie-break.
 
-    Pin lifecycle (optimization r15, guide §5 cache-on-reuse): the
+    Pin lifecycle (cache on reuse): the
     positioned-window relation feeds the DF-cap aggregate AND both
     sides of the pair join — unpinned, each of the three branches
     re-ran the corpus tokenize + k-gram hash pass (8 parquet scans in

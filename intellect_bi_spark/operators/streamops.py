@@ -13,6 +13,8 @@ textbook SQL equivalent of gap-based session merge.
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -94,7 +96,7 @@ def events_tier_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def events_stream_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end certification of the ``foreachBatch`` serving store
-    (streaming/events.py:stream_daily_store — VERDICT r5 item 4): run the
+    (streaming/events.py:stream_daily_store): run the
     REAL availableNow stream (file source → watermark → tumbling agg →
     per-micro-batch dynamic-partition merge) into a fresh temp store, read
     the store's parquet back, and return its contents. The oracle is the
@@ -104,37 +106,38 @@ def events_stream_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The re-read frame is localCheckpointed (bounded: the daily aggregate)
     so the temp store and checkpoint can be deleted before returning."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="sgraft_stream_store_")
-    q = None
-    try:
-        q = stream_daily_store(
-            spark, sf_dir, out_path=f"{tmp}/store", checkpoint=f"{tmp}/ckpt"
-        )
-        q.awaitTermination(300)
-        if q.isActive:
-            # raise explicitly, never assert (stripped under python -O —
-            # registry.py rule): a timed-out stream must not be read as a
-            # complete store
-            raise TimeoutError("stream_daily_store did not drain in 300 s")
-        store = (
-            spark.read.parquet(f"{tmp}/store")
-            .select("day_start", "event_type", "n_events", "total_value",
-                    F.col("day").cast("date").alias("day"))
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        # stop a still-active query BEFORE deleting its checkpoint/output,
-        # so no zombie micro-batches keep failing in the shared session
-        if q is not None and q.isActive:
-            try:
-                q.stop()
-            except Exception:
-                pass
-        shutil.rmtree(tmp, ignore_errors=True)
-    return store
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_stream_store_", ignore_cleanup_errors=True
+    ) as tmp:
+        q = None
+        try:
+            q = stream_daily_store(
+                spark, sf_dir, out_path=f"{tmp}/store",
+                checkpoint=f"{tmp}/ckpt",
+            )
+            q.awaitTermination(300)
+            if q.isActive:
+                # raise explicitly, never assert (stripped under python
+                # -O — registry.py rule): a timed-out stream must not be
+                # read as a complete store
+                raise TimeoutError(
+                    "stream_daily_store did not drain in 300 s"
+                )
+            return (
+                spark.read.parquet(f"{tmp}/store")
+                .select("day_start", "event_type", "n_events",
+                        "total_value", F.col("day").cast("date").alias("day"))
+                .localCheckpoint(eager=True)
+            )
+        finally:
+            # stop a still-active query BEFORE its checkpoint/output is
+            # deleted, so no zombie micro-batches keep failing in the
+            # shared session
+            if q is not None and q.isActive:
+                try:
+                    q.stop()
+                except Exception:
+                    pass
 
 
 def user_click_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -232,7 +235,7 @@ ORACLES = {
         " AS BIGINT) AS pair_binding"
         " FROM p JOIN c ON c.user_id = p.user_id"
         # the window constant is interpolated from streaming/events.py so
-        # operator and oracle can never silently desync (ADVICE r7)
+        # operator and oracle can never silently desync
         f" AND c.click_ts >= p.purchase_ts - INTERVAL '{ATTRIBUTION_WINDOW}'"
         " AND c.click_ts <= p.purchase_ts"
         " GROUP BY 1 ORDER BY 1"

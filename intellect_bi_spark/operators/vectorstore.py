@@ -52,11 +52,20 @@ the probe's scan is pruned to the probed cells.
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import store
-from .clustering import M_SUB, QUANT, SUBDIM, _pq_codes, _subspace_rows
+from .clustering import (
+    _PQ_CTES,
+    QUANT,
+    SUBDIM,
+    _pq_codes,
+    _pq_ctes,
+    _subspace_rows,
+)
 from .similarity import (
     N_BATCH_QUERIES,
     N_CELLS,
@@ -64,8 +73,10 @@ from .similarity import (
     QUERY_VEC_ID,
     TOP_K,
     _dot,
+    _dot_duck,
     _emb,
     _norm,
+    _norm_duck,
 )
 
 CAND_K = 40  # ADC candidates entering the exact rerank (4× the final k)
@@ -257,19 +268,13 @@ def ann_index_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame is eagerly localCheckpointed (TOP_K rows) so the temp store
     can be deleted before returning (sketches.sketch_rollup_store
     lifecycle)."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="sgraft_ann_index_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_ann_index_", ignore_cleanup_errors=True
+    ) as tmp:
         build_index(spark, sf_dir, tmp)
-        centroids, codebook, codes = read_index_versioned(spark, tmp)
-        out = topk_from_index(
-            centroids, codebook, codes, _emb(spark, sf_dir)
+        return topk_from_index(
+            *read_index_versioned(spark, tmp), _emb(spark, sf_dir)
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def ann_index_store_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -277,19 +282,13 @@ def ann_index_store_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored tables — the serve-many amortization the persisted index
     exists for (the store cost in :func:`ann_index_store` amortizes
     over every query in this batch)."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="sgraft_ann_index_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_ann_index_", ignore_cleanup_errors=True
+    ) as tmp:
         build_index(spark, sf_dir, tmp)
-        centroids, codebook, codes = read_index_versioned(spark, tmp)
-        out = topk_batch_from_index(
-            centroids, codebook, codes, _emb(spark, sf_dir)
+        return topk_batch_from_index(
+            *read_index_versioned(spark, tmp), _emb(spark, sf_dir)
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 # --- incremental index maintenance ------------------------------------------
@@ -539,13 +538,11 @@ def ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     green row proves upsert-then-serve ≡ full-rebuild-then-serve
     exactly (the model is batch-invariant by the reservoir discipline,
     so the rebuild's retraining yields the identical codebook)."""
-    import shutil
-    import tempfile
-
     emb = _emb(spark, sf_dir)
     batch = emb.filter(_upsert_batch_pred())
-    tmp = tempfile.mkdtemp(prefix="sgraft_ann_upsert_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_ann_upsert_", ignore_cleanup_errors=True
+    ) as tmp:
         build_index_frozen(spark, sf_dir, tmp)
         upsert_index(spark, sf_dir, tmp, batch)
         centroids, codebook, codes = read_index_versioned(spark, tmp)
@@ -556,14 +553,11 @@ def ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.countDistinct("cell").alias("n_cells_touched"),
             )
         )
-        out = (
+        return (
             topk_from_index(centroids, codebook, codes, emb)
             .crossJoin(F.broadcast(touched))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def _rewrite_cells(
@@ -624,13 +618,11 @@ def ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction is a pure physical rewrite (served results unchanged);
     the file-level claims (each compacted cell in one file, unaffected
     cells byte-untouched) are locked by tests/test_vectorstore.py."""
-    import shutil
-    import tempfile
-
     emb = _emb(spark, sf_dir)
     batch = emb.filter(_upsert_batch_pred())
-    tmp = tempfile.mkdtemp(prefix="sgraft_ann_compact_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_ann_compact_", ignore_cleanup_errors=True
+    ) as tmp:
         build_index_frozen(spark, sf_dir, tmp)
         upsert_index(spark, sf_dir, tmp, batch)
         centroids = _read_model(spark, tmp, "centroids")
@@ -646,14 +638,11 @@ def ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("cell").alias("n_cells_compacted")
         )
         _, codebook, codes = read_index_versioned(spark, tmp)
-        out = (
+        return (
             topk_from_index(centroids, codebook, codes, emb)
             .crossJoin(F.broadcast(ncc))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 # --- deletion through the index ---------------------------------------------
@@ -749,28 +738,22 @@ def ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     it), every surviving vector encoded, probe → ADC → rerank — so a
     green row proves delete-then-serve ≡ rebuild-without-docs exactly:
     the erasure verifiably REACHED the derived store."""
-    import shutil
-    import tempfile
-
     emb = _emb(spark, sf_dir)
     dels = emb.filter(_delete_pred()).select("vec_id")
-    tmp = tempfile.mkdtemp(prefix="sgraft_ann_delete_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_ann_delete_", ignore_cleanup_errors=True
+    ) as tmp:
         build_index_frozen_full(spark, sf_dir, tmp)
         affected = delete_from_index(spark, tmp, dels)
         tele = dels.agg(
             F.count(F.lit(1)).alias("n_deleted"),
             F.lit(len(affected)).cast("bigint").alias("n_cells_rewritten"),
         )
-        centroids, codebook, codes = read_index_versioned(spark, tmp)
-        out = (
-            topk_from_index(centroids, codebook, codes, emb)
+        return (
+            topk_from_index(*read_index_versioned(spark, tmp), emb)
             .crossJoin(F.broadcast(tele))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 # --- streaming index ingestion -----------------------------------------------
@@ -805,25 +788,20 @@ def ann_stream_upsert_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     depends on batch order, so the top-k served from the composed store
     equals the full rebuild's; the output binds n_vecs_indexed, the
     distinct vectors in the stored codes."""
-    import shutil
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="sgraft_ann_stream_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_ann_stream_", ignore_cleanup_errors=True
+    ) as tmp:
         feed, init, upsert = _ann_stream(spark, sf_dir)
         path = store.stream_into_store(spark, feed, tmp, init, upsert)
         centroids, codebook, codes = read_index_versioned(spark, path)
         nv = codes.select("vec_id").distinct().agg(
             F.count(F.lit(1)).alias("n_vecs_indexed")
         )
-        out = (
+        return (
             topk_from_index(centroids, codebook, codes, _emb(spark, sf_dir))
             .crossJoin(F.broadcast(nv))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def vacuum_ann_store(
@@ -846,57 +824,71 @@ QUERIES = {
 }
 
 
-def _oracle() -> str:
-    """Build + probe + ADC + rerank restated from the base tables (the
-    oracle never sees the store).  Reuses the locked clustering PQ CTEs
-    and the similarity IVF forms verbatim."""
-    from .clustering import _PQ_CTES
-    from .similarity import _dot_duck, _norm_duck
+def _cos_duck(a: str, b: str) -> str:
+    return f"{_dot_duck(a, b)} / ({_norm_duck(a)} * {_norm_duck(b)})"
 
+
+# IVF assignment of every vector to its nearest centroid by cosine (the
+# similarity.py ann_topk_ivf oracle form)
+_IVF_CTES = (
+    "cents AS (SELECT CAST(vec_id - 1 AS INT) AS cell,"
+    " embedding AS c_emb FROM embeddings"
+    f" WHERE vec_id BETWEEN 1 AND {N_CELLS}),"
+    " iscored AS (SELECT e.vec_id, c.cell,"
+    f" {_cos_duck('e.embedding', 'c.c_emb')} AS c_cos"
+    " FROM embeddings e CROSS JOIN cents c),"
+    " assign AS (SELECT vec_id, cell FROM"
+    " (SELECT vec_id, cell, ROW_NUMBER() OVER"
+    " (PARTITION BY vec_id ORDER BY c_cos DESC, cell) AS rn"
+    " FROM iscored) WHERE rn = 1)"
+)
+
+# a candidate's fixed-point ADC distance to query subvectors ``qs``
+# (the clustering.py ann_topk_pq oracle form)
+_ADC_DIST_DUCK = (
+    "CAST(SUM(CAST(FLOOR(list_reduce(list_prepend("
+    " CAST(0.0 AS DOUBLE),"
+    f" list_transform(range(1, {SUBDIM} + 1),"
+    " i -> (qs.qsub[i] - cb.carr[i]) * (qs.qsub[i] - cb.carr[i]))),"
+    f" (acc, v) -> acc + v) * {QUANT}.0 + 0.5) AS BIGINT))"
+    " AS BIGINT) AS dist_q"
+)
+
+
+def _ann_oracle(
+    pq_ctes: str, tele: str = "", cols: str = "", adc_where: str = ""
+) -> str:
+    """Build + probe + ADC + rerank of the fixed query restated from
+    the base tables (the oracle never sees the store): the PQ chain
+    ``pq_ctes``, IVF assignment and probe, ADC over the probed cells'
+    codes less ``adc_where``, CAND_K candidates, exact-cosine rerank.
+    ``tele`` is the body of the one-row CTE ``up``, whose ``cols``
+    follow the cosine."""
     return (
-        f"WITH {_PQ_CTES},"
-        # IVF: assignment + probe (similarity.py ann_topk_ivf oracle form)
-        f" cents AS (SELECT CAST(vec_id - 1 AS INT) AS cell,"
-        f" embedding AS c_emb FROM embeddings"
-        f" WHERE vec_id BETWEEN 1 AND {N_CELLS}),"
-        f" iscored AS (SELECT e.vec_id, c.cell,"
-        f" {_dot_duck('e.embedding', 'c.c_emb')} /"
-        f" ({_norm_duck('e.embedding')} * {_norm_duck('c.c_emb')}) AS c_cos"
-        f" FROM embeddings e CROSS JOIN cents c),"
-        f" assign AS (SELECT vec_id, cell FROM"
-        f" (SELECT vec_id, cell, ROW_NUMBER() OVER"
-        f" (PARTITION BY vec_id ORDER BY c_cos DESC, cell) AS rn"
-        f" FROM iscored) WHERE rn = 1),"
-        f" qv AS (SELECT embedding AS q_emb FROM embeddings"
+        f"WITH {pq_ctes}, {_IVF_CTES},"
+        + (f" up AS ({tele})," if tele else "")
+        + " qv AS (SELECT embedding AS q_emb FROM embeddings"
         f" WHERE vec_id = {QUERY_VEC_ID}),"
-        f" probe AS (SELECT cell FROM cents, qv"
-        f" ORDER BY {_dot_duck('c_emb', 'q_emb')} /"
-        f" ({_norm_duck('c_emb')} * {_norm_duck('q_emb')}) DESC, cell"
+        " probe AS (SELECT cell FROM cents, qv"
+        f" ORDER BY {_cos_duck('c_emb', 'q_emb')} DESC, cell"
         f" LIMIT {N_PROBE}),"
-        # ADC over probed cells (clustering.py ann_topk_pq oracle form)
-        f" qs AS (SELECT m, sub AS qsub FROM sub"
+        " qs AS (SELECT m, sub AS qsub FROM sub"
         f" WHERE vec_id = {QUERY_VEC_ID}),"
-        " adc AS (SELECT c.vec_id,"
-        " CAST(SUM(CAST(FLOOR(list_reduce(list_prepend("
-        " CAST(0.0 AS DOUBLE),"
-        f" list_transform(range(1, {SUBDIM} + 1),"
-        " i -> (qs.qsub[i] - cb.carr[i]) * (qs.qsub[i] - cb.carr[i]))),"
-        f" (acc, v) -> acc + v) * {QUANT}.0 + 0.5) AS BIGINT))"
-        " AS BIGINT) AS dist_q"
+        f" adc AS (SELECT c.vec_id, {_ADC_DIST_DUCK}"
         " FROM codes c JOIN cb ON cb.m = c.m AND cb.cid = c.cid"
         " JOIN qs ON qs.m = c.m"
         " JOIN assign a ON a.vec_id = c.vec_id"
         " WHERE a.cell IN (SELECT cell FROM probe)"
-        f" AND c.vec_id != {QUERY_VEC_ID}"
+        f" AND c.vec_id != {QUERY_VEC_ID}{adc_where}"
         " GROUP BY c.vec_id),"
-        f" cand AS (SELECT vec_id FROM adc"
+        " cand AS (SELECT vec_id FROM adc"
         f" ORDER BY dist_q, vec_id LIMIT {CAND_K})"
-        # exact rerank (similarity.py ann_topk_ivf oracle form)
-        f" SELECT e.vec_id, e.label,"
-        f" {_dot_duck('e.embedding', 'q_emb')} /"
-        f" ({_norm_duck('e.embedding')} * {_norm_duck('q_emb')}) AS cosine"
-        f" FROM embeddings e JOIN cand USING (vec_id), qv"
-        f" ORDER BY cosine DESC, e.vec_id LIMIT {TOP_K}"
+        " SELECT e.vec_id, e.label,"
+        f" {_cos_duck('e.embedding', 'q_emb')} AS cosine"
+        + (f", {cols}" if cols else "")
+        + " FROM embeddings e JOIN cand USING (vec_id), qv"
+        + (", up" if tele else "")
+        + f" ORDER BY cosine DESC, e.vec_id LIMIT {TOP_K}"
     )
 
 
@@ -904,53 +896,30 @@ def _batch_oracle() -> str:
     """The batch run restated from the base tables: per-query probe →
     probed-cell ADC → CAND_K → exact rerank, every per-query stage a
     ROW_NUMBER window (the same tie-breaks as the Spark windows)."""
-    from .clustering import _PQ_CTES
-    from .similarity import _dot_duck, _norm_duck
-
     return (
-        f"WITH {_PQ_CTES},"
-        f" cents AS (SELECT CAST(vec_id - 1 AS INT) AS cell,"
-        f" embedding AS c_emb FROM embeddings"
-        f" WHERE vec_id BETWEEN 1 AND {N_CELLS}),"
-        f" iscored AS (SELECT e.vec_id, c.cell,"
-        f" {_dot_duck('e.embedding', 'c.c_emb')} /"
-        f" ({_norm_duck('e.embedding')} * {_norm_duck('c.c_emb')}) AS c_cos"
-        f" FROM embeddings e CROSS JOIN cents c),"
-        f" assign AS (SELECT vec_id, cell FROM"
-        f" (SELECT vec_id, cell, ROW_NUMBER() OVER"
-        f" (PARTITION BY vec_id ORDER BY c_cos DESC, cell) AS rn"
-        f" FROM iscored) WHERE rn = 1),"
-        f" qb AS (SELECT vec_id AS q_id, embedding AS q_emb"
+        f"WITH {_PQ_CTES}, {_IVF_CTES},"
+        " qb AS (SELECT vec_id AS q_id, embedding AS q_emb"
         f" FROM embeddings WHERE vec_id < {N_BATCH_QUERIES}),"
-        f" probe AS (SELECT q_id, cell FROM"
-        f" (SELECT q.q_id, c.cell, ROW_NUMBER() OVER"
-        f" (PARTITION BY q.q_id ORDER BY"
-        f" {_dot_duck('c.c_emb', 'q.q_emb')} /"
-        f" ({_norm_duck('c.c_emb')} * {_norm_duck('q.q_emb')}) DESC,"
-        f" c.cell) AS rn FROM cents c CROSS JOIN qb q)"
+        " probe AS (SELECT q_id, cell FROM"
+        " (SELECT q.q_id, c.cell, ROW_NUMBER() OVER"
+        f" (PARTITION BY q.q_id ORDER BY {_cos_duck('c.c_emb', 'q.q_emb')}"
+        " DESC, c.cell) AS rn FROM cents c CROSS JOIN qb q)"
         f" WHERE rn <= {N_PROBE}),"
-        f" qs AS (SELECT vec_id AS q_id, m, sub AS qsub FROM sub"
+        " qs AS (SELECT vec_id AS q_id, m, sub AS qsub FROM sub"
         f" WHERE vec_id < {N_BATCH_QUERIES}),"
-        " adc AS (SELECT p.q_id, c.vec_id,"
-        " CAST(SUM(CAST(FLOOR(list_reduce(list_prepend("
-        " CAST(0.0 AS DOUBLE),"
-        f" list_transform(range(1, {SUBDIM} + 1),"
-        " i -> (qs.qsub[i] - cb.carr[i]) * (qs.qsub[i] - cb.carr[i]))),"
-        f" (acc, v) -> acc + v) * {QUANT}.0 + 0.5) AS BIGINT))"
-        " AS BIGINT) AS dist_q"
+        f" adc AS (SELECT p.q_id, c.vec_id, {_ADC_DIST_DUCK}"
         " FROM codes c JOIN assign a ON a.vec_id = c.vec_id"
         " JOIN probe p ON p.cell = a.cell"
         " JOIN cb ON cb.m = c.m AND cb.cid = c.cid"
         " JOIN qs ON qs.q_id = p.q_id AND qs.m = c.m"
         f" WHERE c.vec_id >= {N_BATCH_QUERIES}"
         " GROUP BY p.q_id, c.vec_id),"
-        f" cand AS (SELECT q_id, vec_id FROM"
-        f" (SELECT q_id, vec_id, ROW_NUMBER() OVER"
-        f" (PARTITION BY q_id ORDER BY dist_q, vec_id) AS rn FROM adc)"
+        " cand AS (SELECT q_id, vec_id FROM"
+        " (SELECT q_id, vec_id, ROW_NUMBER() OVER"
+        " (PARTITION BY q_id ORDER BY dist_q, vec_id) AS rn FROM adc)"
         f" WHERE rn <= {CAND_K}),"
         " rr AS (SELECT cand.q_id, e.vec_id, e.label,"
-        f" {_dot_duck('e.embedding', 'q.q_emb')} /"
-        f" ({_norm_duck('e.embedding')} * {_norm_duck('q.q_emb')})"
+        f" {_cos_duck('e.embedding', 'q.q_emb')}"
         " AS cosine FROM cand JOIN embeddings e USING (vec_id)"
         " JOIN qb q ON q.q_id = cand.q_id)"
         " SELECT q_id, vec_id, label, cosine FROM"
@@ -960,162 +929,53 @@ def _batch_oracle() -> str:
     )
 
 
-def _upsert_oracle() -> str:
-    """The FULL-REBUILD restatement of the upserted store: reservoir-
-    trained codebook (batch-invariant, so retraining reproduces the
-    frozen model), every vector encoded, probe → ADC → rerank, plus the
-    upsert telemetry — proving upsert-then-serve ≡ rebuild-then-serve."""
-    from .clustering import _PQ_CTES
-    from .similarity import _dot_duck, _norm_duck
-
-    d1_full = "FROM sub s JOIN seed c ON c.m = s.m),"
-    if _PQ_CTES.count(d1_full) != 1:  # locked-text surgery guard
-        raise AssertionError("PQ CTE shape changed; update _upsert_oracle")
-    pq_reservoir = _PQ_CTES.replace(
-        d1_full,
-        f"FROM sub s JOIN seed c ON c.m = s.m"
-        f" WHERE s.vec_id < {TRAIN_CAP}),",
-    )
-    batch_pred = (
-        f"vec_id % {UPSERT_MOD} = {UPSERT_RES} AND vec_id >= {TRAIN_CAP}"
-    )
-    return (
-        f"WITH {pq_reservoir},"
-        f" cents AS (SELECT CAST(vec_id - 1 AS INT) AS cell,"
-        f" embedding AS c_emb FROM embeddings"
-        f" WHERE vec_id BETWEEN 1 AND {N_CELLS}),"
-        f" iscored AS (SELECT e.vec_id, c.cell,"
-        f" {_dot_duck('e.embedding', 'c.c_emb')} /"
-        f" ({_norm_duck('e.embedding')} * {_norm_duck('c.c_emb')}) AS c_cos"
-        f" FROM embeddings e CROSS JOIN cents c),"
-        f" assign AS (SELECT vec_id, cell FROM"
-        f" (SELECT vec_id, cell, ROW_NUMBER() OVER"
-        f" (PARTITION BY vec_id ORDER BY c_cos DESC, cell) AS rn"
-        f" FROM iscored) WHERE rn = 1),"
-        f" up AS (SELECT COUNT(*) AS n_upserted,"
-        f" COUNT(DISTINCT cell) AS n_cells_touched FROM assign"
-        f" WHERE {batch_pred}),"
-        f" qv AS (SELECT embedding AS q_emb FROM embeddings"
-        f" WHERE vec_id = {QUERY_VEC_ID}),"
-        f" probe AS (SELECT cell FROM cents, qv"
-        f" ORDER BY {_dot_duck('c_emb', 'q_emb')} /"
-        f" ({_norm_duck('c_emb')} * {_norm_duck('q_emb')}) DESC, cell"
-        f" LIMIT {N_PROBE}),"
-        f" qs AS (SELECT m, sub AS qsub FROM sub"
-        f" WHERE vec_id = {QUERY_VEC_ID}),"
-        " adc AS (SELECT c.vec_id,"
-        " CAST(SUM(CAST(FLOOR(list_reduce(list_prepend("
-        " CAST(0.0 AS DOUBLE),"
-        f" list_transform(range(1, {SUBDIM} + 1),"
-        " i -> (qs.qsub[i] - cb.carr[i]) * (qs.qsub[i] - cb.carr[i]))),"
-        f" (acc, v) -> acc + v) * {QUANT}.0 + 0.5) AS BIGINT))"
-        " AS BIGINT) AS dist_q"
-        " FROM codes c JOIN cb ON cb.m = c.m AND cb.cid = c.cid"
-        " JOIN qs ON qs.m = c.m"
-        " JOIN assign a ON a.vec_id = c.vec_id"
-        " WHERE a.cell IN (SELECT cell FROM probe)"
-        f" AND c.vec_id != {QUERY_VEC_ID}"
-        " GROUP BY c.vec_id),"
-        f" cand AS (SELECT vec_id FROM adc"
-        f" ORDER BY dist_q, vec_id LIMIT {CAND_K})"
-        f" SELECT e.vec_id, e.label,"
-        f" {_dot_duck('e.embedding', 'q_emb')} /"
-        f" ({_norm_duck('e.embedding')} * {_norm_duck('q_emb')}) AS cosine,"
-        f" up.n_upserted, up.n_cells_touched"
-        f" FROM embeddings e JOIN cand USING (vec_id), qv, up"
-        f" ORDER BY cosine DESC, e.vec_id LIMIT {TOP_K}"
-    )
-
-
-def _compact_oracle() -> str:
-    """Compaction is a pure physical rewrite, so its oracle IS the
-    upsert oracle with only the telemetry column swapped — proving the
-    served results are unchanged by the rewrite."""
-    o = _upsert_oracle()
-    old_sel = " up.n_upserted, up.n_cells_touched"
-    if o.count(old_sel) != 1:  # text-surgery guard
-        raise AssertionError("upsert oracle shape changed; update compact")
-    return o.replace(old_sel, " up.n_cells_touched AS n_cells_compacted")
-
-
-def _delete_oracle() -> str:
-    """The REBUILD-WITHOUT-THE-DOCS restatement: same frozen reservoir
-    model (the delete set is reservoir-disjoint, so retraining
-    reproduces it), ADC over the surviving vectors only, plus the
-    erasure accounting — proving delete-then-serve ≡
-    rebuild-without-docs."""
-    o = _upsert_oracle()
-    batch_pred = (
-        f"vec_id % {UPSERT_MOD} = {UPSERT_RES} AND vec_id >= {TRAIN_CAP}"
-    )
-    del_pred = (
-        f"vec_id % {DELETE_MOD} = {DELETE_RES} AND vec_id >= {TRAIN_CAP}"
-    )
-    up_cte = (
-        f"up AS (SELECT COUNT(*) AS n_upserted,"
-        f" COUNT(DISTINCT cell) AS n_cells_touched FROM assign"
-        f" WHERE {batch_pred}),"
-    )
-    if o.count(up_cte) != 1:  # locked-text surgery guard
-        raise AssertionError("upsert oracle shape changed; update delete")
-    o = o.replace(
-        up_cte,
-        f"up AS (SELECT COUNT(*) AS n_deleted,"
-        f" COUNT(DISTINCT cell) AS n_cells_rewritten FROM assign"
-        f" WHERE {del_pred}),",
-    )
-    adc_anchor = f" AND c.vec_id != {QUERY_VEC_ID}"
-    if o.count(adc_anchor) != 1:
-        raise AssertionError("ADC filter shape changed; update delete")
-    o = o.replace(
-        adc_anchor,
-        adc_anchor
-        + f" AND NOT (c.vec_id % {DELETE_MOD} = {DELETE_RES}"
-        + f" AND c.vec_id >= {TRAIN_CAP})",
-    )
-    old_sel = " up.n_upserted, up.n_cells_touched"
-    if o.count(old_sel) != 1:
-        raise AssertionError("telemetry select shape changed; update delete")
-    return o.replace(old_sel, " up.n_deleted, up.n_cells_rewritten")
-
-
-def _stream_oracle() -> str:
-    """The full-rebuild restatement of the stream-composed store: the
-    staged feed is the whole corpus, so the rebuild is the reservoir-
-    model encode of EVERY vector — the upsert oracle's serving text
-    with the telemetry swapped to the corpus count."""
-    o = _upsert_oracle()
-    batch_pred = (
-        f"vec_id % {UPSERT_MOD} = {UPSERT_RES} AND vec_id >= {TRAIN_CAP}"
-    )
-    up_cte = (
-        f"up AS (SELECT COUNT(*) AS n_upserted,"
-        f" COUNT(DISTINCT cell) AS n_cells_touched FROM assign"
-        f" WHERE {batch_pred}),"
-    )
-    if o.count(up_cte) != 1:  # locked-text surgery guard
-        raise AssertionError("upsert oracle shape changed; update stream")
-    o = o.replace(
-        up_cte,
-        "up AS (SELECT COUNT(*) AS n_vecs_indexed FROM embeddings),",
-    )
-    old_sel = " up.n_upserted, up.n_cells_touched"
-    if o.count(old_sel) != 1:
-        raise AssertionError("telemetry select shape changed; update stream")
-    return o.replace(old_sel, " up.n_vecs_indexed")
-
+# The mutated stores are restated as REBUILDS: the codebook trained on
+# the reservoir is batch-invariant, so retraining reproduces the frozen
+# model, and every vector the store holds is encoded, probed, scored
+# and reranked from the base tables.
+_RESERVOIR_PQ_CTES = _pq_ctes(f" WHERE s.vec_id < {TRAIN_CAP}")
+_UPSERT_TELE = (
+    "SELECT COUNT(*) AS n_upserted,"
+    " COUNT(DISTINCT cell) AS n_cells_touched FROM assign"
+    f" WHERE vec_id % {UPSERT_MOD} = {UPSERT_RES} AND vec_id >= {TRAIN_CAP}"
+)
 
 ORACLES = {
-    "ann_index_store": _oracle(),
+    "ann_index_store": _ann_oracle(_PQ_CTES),
     "ann_index_store_batch": _batch_oracle(),
-    "ann_index_upsert": _upsert_oracle(),
-    "ann_index_compact": _compact_oracle(),
-    "ann_index_delete": _delete_oracle(),
-    "ann_stream_upsert_store": _stream_oracle(),
+    # upsert-then-serve ≡ rebuild-then-serve
+    "ann_index_upsert": _ann_oracle(
+        _RESERVOIR_PQ_CTES, _UPSERT_TELE, "up.n_upserted, up.n_cells_touched"
+    ),
+    # compaction is a pure physical rewrite: the upsert rebuild, served
+    # unchanged
+    "ann_index_compact": _ann_oracle(
+        _RESERVOIR_PQ_CTES,
+        _UPSERT_TELE,
+        "up.n_cells_touched AS n_cells_compacted",
+    ),
+    # delete-then-serve ≡ rebuild-without-the-docs: the delete set is
+    # reservoir-disjoint, and ADC scores the surviving vectors only
+    "ann_index_delete": _ann_oracle(
+        _RESERVOIR_PQ_CTES,
+        "SELECT COUNT(*) AS n_deleted,"
+        " COUNT(DISTINCT cell) AS n_cells_rewritten FROM assign"
+        f" WHERE vec_id % {DELETE_MOD} = {DELETE_RES}"
+        f" AND vec_id >= {TRAIN_CAP}",
+        "up.n_deleted, up.n_cells_rewritten",
+        f" AND NOT (c.vec_id % {DELETE_MOD} = {DELETE_RES}"
+        f" AND c.vec_id >= {TRAIN_CAP})",
+    ),
+    # the staged feed is the whole corpus: the rebuild of every vector
+    "ann_stream_upsert_store": _ann_oracle(
+        _RESERVOIR_PQ_CTES,
+        "SELECT COUNT(*) AS n_vecs_indexed FROM embeddings",
+        "up.n_vecs_indexed",
+    ),
 }
 
 
-# --- interleaved CRUD chain certification (r13) ------------------------------
+# --- interleaved CRUD chain certification -----------------------------------
 #
 # The ANN twin of retrieval.bm25_crud_chain: one representative
 # production interleaving driven end to end — build the frozen-model
@@ -1130,14 +990,12 @@ ORACLES = {
 
 
 def ann_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     emb = _emb(spark, sf_dir)
     batch = emb.filter(_upsert_batch_pred())
     dels = emb.filter(_delete_pred()).select("vec_id")
-    tmp = tempfile.mkdtemp(prefix="sgraft_ann_crud_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sgraft_ann_crud_", ignore_cleanup_errors=True
+    ) as tmp:
         build_index_frozen(spark, sf_dir, tmp)
         upsert_index(spark, sf_dir, tmp, batch)
         affected_del = delete_from_index(spark, tmp, dels)
@@ -1169,18 +1027,16 @@ def ann_crud_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("final_version", F.lit(v).cast("bigint"))
             .localCheckpoint(eager=True),
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return out
 
 
 QUERIES["ann_crud_chain"] = ann_crud_chain
 # the chain's content equals delete-from-full (upsert batch and delete
-# set are disjoint), so the delete oracle restates it; the r15 manifest
-# upgrade adds the version accounting: init=1, upsert=2, delete=3,
-# compact snapshot=4, vacuum(keep_last=1) retains it → final_version 4.
+# set are disjoint), so the delete oracle restates it, plus the version
+# accounting: init=1, upsert=2, delete=3, compact snapshot=4,
+# vacuum(keep_last=1) retains it → final_version 4.
 ORACLES["ann_crud_chain"] = (
     "SELECT t.*, CAST(4 AS BIGINT) AS final_version FROM ("
-    + _delete_oracle()
+    + ORACLES["ann_index_delete"]
     + ") t"
 )

@@ -177,3 +177,33 @@ def test_publish_steps_and_retry_budget_only_in_store():
     assert refs == {("store.py", name) for name in names} | {
         ("vectorstore.py", "VersionConflict")
     }
+
+
+def test_scratch_stores_are_stdlib_temporary_directories():
+    """Every scratch store lives in a ``tempfile.TemporaryDirectory``,
+    whose exit removes it on every path, so no module hand-rolls the
+    ``mkdtemp`` + ``rmtree`` pair."""
+    sites = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        for fn, call in _calls_by_function(tree):
+            f = call.func
+            callee = f.id if isinstance(f, ast.Name) else getattr(
+                f, "attr", None
+            )
+            if callee in ("mkdtemp", "rmtree"):
+                sites.append((path.name, fn, callee))
+    assert sites == []
+
+
+def test_ann_oracles_are_built_not_edited():
+    """The ANN oracles are composed by ``vectorstore._ann_oracle`` from
+    parameters, so no oracle text is derived by editing another's:
+    ``vectorstore.py`` calls no ``.replace(``."""
+    tree = ast.parse((PACKAGE / "operators" / "vectorstore.py").read_text())
+    edits = [
+        (fn, call.lineno)
+        for fn, call in _calls_by_function(tree)
+        if isinstance(call.func, ast.Attribute) and call.func.attr == "replace"
+    ]
+    assert edits == []
