@@ -479,22 +479,6 @@ ORACLES = {
         f" y_t + ((y_t - y0) / 13) * i"
         f" FROM last_d, seeds, generate_series(1, 30) AS t(i)"
     ),
-    # the applyInPandas twin performs the same IEEE ops on the same decimal
-    # sums, so it shares the closed-form oracle verbatim
-    "forecast_drift_by_region_pandas": sales_cte(
-        f", daily AS (SELECT region, date, {dsum_sql('sales')} AS value"
-        f" FROM sales GROUP BY region, date)"
-        f", ranked AS (SELECT region, date, value, ROW_NUMBER() OVER"
-        f" (PARTITION BY region ORDER BY date DESC) AS rn FROM daily)"
-        f", seeds AS (SELECT region,"
-        f" MAX(CASE WHEN rn = 1 THEN value END) AS y_t,"
-        f" MAX(CASE WHEN rn = 1 THEN date END) AS last_date,"
-        f" MAX(CASE WHEN rn = 14 THEN value END) AS y0"
-        f" FROM ranked GROUP BY region)"
-        f" SELECT region, last_date + CAST(i AS INT) AS date,"
-        f" y_t + ((y_t - y0) / 13) * i AS value"
-        f" FROM seeds, generate_series(1, 14) AS t(i)"
-    ),
     "forecast_linreg_ols": sales_cte(
         f", daily AS (SELECT date, {dsum_sql('sales')} AS value"
         f" FROM sales GROUP BY date)"
@@ -509,20 +493,6 @@ ORACLES = {
         f" FROM fit, generate_series(1, 30) AS t(i)"
     ),
     "forecast_seasonal7_by_region": sales_cte(
-        f", daily AS (SELECT region, date, {dsum_sql('sales')} AS value"
-        f" FROM sales GROUP BY region, date)"
-        f", ranked AS (SELECT region, date, value, ROW_NUMBER() OVER"
-        f" (PARTITION BY region ORDER BY date DESC) AS rn FROM daily)"
-        f", tail7 AS (SELECT region, rn, value FROM ranked WHERE rn <= 7)"
-        f", last_d AS (SELECT region, MAX(date) AS last_date FROM ranked"
-        f" WHERE rn <= 7 GROUP BY region HAVING COUNT(*) >= 7)"
-        f" SELECT l.region, last_date + CAST(i AS INT) AS date, s.value"
-        f" FROM last_d l CROSS JOIN generate_series(1, 14) AS t(i)"
-        f" JOIN tail7 s ON s.region = l.region"
-        f" AND s.rn = 7 - ((i - 1) % 7)"
-    ),
-    # the applyInPandas twin cycles the same values, shared oracle verbatim
-    "forecast_seasonal7_by_region_pandas": sales_cte(
         f", daily AS (SELECT region, date, {dsum_sql('sales')} AS value"
         f" FROM sales GROUP BY region, date)"
         f", ranked AS (SELECT region, date, value, ROW_NUMBER() OVER"
@@ -550,3 +520,12 @@ ORACLES = {
         f" FROM seeds, generate_series(1, 14) AS t(i)"
     ),
 }
+
+# the applyInPandas twins perform the same IEEE ops on the same decimal
+# sums and cycle the same values, so each shares its twin's oracle
+ORACLES["forecast_drift_by_region_pandas"] = ORACLES[
+    "forecast_drift_by_region"
+]
+ORACLES["forecast_seasonal7_by_region_pandas"] = ORACLES[
+    "forecast_seasonal7_by_region"
+]

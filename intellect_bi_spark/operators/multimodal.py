@@ -40,6 +40,12 @@ prefix), the property that matters when a frame is a 2 MB keyframe.
 
 from __future__ import annotations
 
+import bisect
+import io
+import math
+import struct
+import wave
+import zlib
 from collections.abc import Iterator
 from functools import partial
 
@@ -300,9 +306,6 @@ def _wav_samples(doc_id: int) -> "np.ndarray":
 def _wav_bytes(doc_id: int) -> bytes:
     """One real RIFF/WAVE file (16-bit mono PCM) written by the stdlib
     ``wave`` writer from the closed-form samples."""
-    import io
-    import wave
-
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
         w.setnchannels(1)
@@ -318,9 +321,6 @@ def decode_wav(payload: bytes) -> tuple[int, "np.ndarray"]:
     (sample_rate_hz, int16 sample array decoded little-endian from the
     data chunk). A richer codec (ffmpeg/soundfile for FLAC/MP3) slots in
     behind the same ``bytes -> (rate, samples)`` signature."""
-    import io
-    import wave
-
     with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
         if w.getnchannels() != 1 or w.getsampwidth() != 2:
             raise ValueError("expected 16-bit mono PCM")
@@ -445,8 +445,6 @@ def mulaw_expand(codes: "np.ndarray") -> "np.ndarray":
 def _riff_chunk(fourcc: bytes, data: bytes) -> bytes:
     """One RIFF chunk: fourcc + LE size + data, padded to word length
     (the pad byte is NOT counted in the size — RIFF spec)."""
-    import struct
-
     pad = b"\x00" if len(data) % 2 else b""
     return fourcc + struct.pack("<I", len(data)) + data + pad
 
@@ -454,8 +452,6 @@ def _riff_chunk(fourcc: bytes, data: bytes) -> bytes:
 def _riff_wave(fmt: bytes, data: bytes, extra: bytes = b"") -> bytes:
     """A RIFF/WAVE file: the ``fmt`` chunk, the ready-made chunks
     ``extra``, then the ``data`` chunk."""
-    import struct
-
     body = (
         b"WAVE" + _riff_chunk(b"fmt ", fmt) + extra
         + _riff_chunk(b"data", data)
@@ -467,8 +463,6 @@ def _riff_wave_chunks(payload: bytes) -> tuple[bytes, bytes]:
     """The (fmt, data) chunk bodies of a RIFF/WAVE file: validate the
     header, then walk the chunks within the declared size, honoring the
     even-padding rule and skipping unknown chunks."""
-    import struct
-
     b = bytes(payload)
     if b[0:4] != b"RIFF" or b[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE file")
@@ -492,8 +486,6 @@ def _encode_wav_mulaw_bytes(doc_id: int) -> bytes:
     """Hand-built RIFF/WAVE, format tag 7: fmt chunk (16-byte PCM-shaped
     body), an odd-length unknown chunk on odd ids (forces the reader's
     even-padding rule), then the μ-law data chunk."""
-    import struct
-
     rate = _mulaw_rate(doc_id)
     return _riff_wave(
         struct.pack("<HHIIHH", 7, 1, rate, rate, 1, 8),
@@ -510,8 +502,6 @@ def decode_wav_mulaw(payload: bytes) -> tuple[int, "np.ndarray"]:
     fmt tag 7 mono 8-bit, expand the data chunk's codes to linear
     samples.  Same ``bytes -> (rate, samples)`` seam signature as
     :func:`decode_wav`, so the RMS extractor is shared."""
-    import struct
-
     fmt, data = _riff_wave_chunks(payload)
     tag, nch, rate, _brate, _balign, bits = struct.unpack("<HHIIHH", fmt[:16])
     if tag != 7 or nch != 1 or bits != 8:
@@ -617,8 +607,6 @@ def _encode_wav_adpcm_bytes(doc_id: int) -> bytes:
     """RIFF/WAVE, format tag 0x11: extended fmt chunk (cbSize=2 with
     wSamplesPerBlock), one data block = 4-byte state header (predictor
     int16 LE, index uint8, reserved) + low-nibble-first packed codes."""
-    import struct
-
     n = _adpcm_n_samples(doc_id)
     rate = _adpcm_rate(doc_id)
     pred0, idx0 = _adpcm_init_state(doc_id)
@@ -639,8 +627,6 @@ def decode_wav_adpcm(payload: bytes) -> tuple[int, "np.ndarray"]:
     wSamplesPerBlock extension, read the block state header, unpack
     low-first nibbles, replay the adaptive chain.  Same seam signature
     as :func:`decode_wav` / :func:`decode_wav_mulaw`."""
-    import struct
-
     fmt, data = _riff_wave_chunks(payload)
     tag, nch, rate, _br, _ba, bits, cb, spb = struct.unpack(
         "<HHIIHHHH", fmt[:20]
@@ -679,7 +665,6 @@ def decode_wav_adpcm(payload: bytes) -> tuple[int, "np.ndarray"]:
 # decode seam.  Reference analogue: S8 binary-media ingest generalized
 # per charter (etl/index_docs.py:15-32).
 
-import math as _math
 
 _ILT_M = 8  # block length (samples); lap = M/2 pairs per boundary
 _ILT_TAG = 0x1971  # custom WAVE format tag (unassigned range)
@@ -688,16 +673,16 @@ _ILT_SAMPLE_B = 75011
 _ILT_SAMPLE_C = 3
 # rotation angles: TDAC boundary pairs (sine-window angles) + the three
 # in-block butterfly stages; all have sin != 0 (lifting requires it)
-_ILT_TDAC = tuple(_math.pi * (i + 0.5) / 16.0 for i in range(_ILT_M // 2))
+_ILT_TDAC = tuple(math.pi * (i + 0.5) / 16.0 for i in range(_ILT_M // 2))
 _ILT_STAGES = (
-    (1, ((0, 1), (2, 3), (4, 5), (6, 7)), _math.pi / 4.0),
-    (2, ((0, 2), (1, 3), (4, 6), (5, 7)), _math.pi / 8.0),
-    (4, ((0, 4), (1, 5), (2, 6), (3, 7)), 3.0 * _math.pi / 16.0),
+    (1, ((0, 1), (2, 3), (4, 5), (6, 7)), math.pi / 4.0),
+    (2, ((0, 2), (1, 3), (4, 6), (5, 7)), math.pi / 8.0),
+    (4, ((0, 4), (1, 5), (2, 6), (3, 7)), 3.0 * math.pi / 16.0),
 )
 
 
 def _ilt_consts(theta: float) -> tuple[float, float]:
-    return (_math.cos(theta) - 1.0) / _math.sin(theta), _math.sin(theta)
+    return (math.cos(theta) - 1.0) / math.sin(theta), math.sin(theta)
 
 
 def _lift_fwd(a: "np.ndarray", b: "np.ndarray", theta: float):
@@ -778,8 +763,6 @@ def _encode_wav_ilt_bytes(doc_id: int) -> bytes:
     """RIFF/WAVE with the custom ILT format tag: extended fmt chunk
     (cbSize=2, wSamplesPerBlock=n — the ADPCM header convention) and a
     data chunk of int32 LE transform coefficients."""
-    import struct
-
     n = _ilt_n_samples(doc_id)
     rate = _ilt_rate(doc_id)
     coeffs = ilt_forward(_ilt_samples(doc_id))
@@ -797,8 +780,6 @@ def decode_wav_ilt(payload: bytes) -> tuple[int, "np.ndarray"]:
     RIFF/WAVE, require the ILT format tag (mono, 32-bit coefficients,
     wSamplesPerBlock extension), then invert the lifting network.  Same
     seam signature as decode_wav / decode_wav_mulaw / decode_wav_adpcm."""
-    import struct
-
     fmt, data = _riff_wave_chunks(payload)
     tag, nch, rate, _br, _ba, bits, cb, spb = struct.unpack(
         "<HHIIHHHH", fmt[:20]
@@ -1069,9 +1050,6 @@ def _png_pixels(doc_id: int) -> "np.ndarray":
 
 
 def _png_chunk(ctype: bytes, data: bytes) -> bytes:
-    import struct
-    import zlib
-
     return (
         struct.pack(">I", len(data))
         + ctype
@@ -1100,9 +1078,6 @@ def _encode_png_raster(
     numpy pass and the per-row type is gathered by fancy index — no
     Python loop over rows or bytes. Byte-identical to a per-row
     encoder (locked by the decode roundtrip tests)."""
-    import struct
-    import zlib
-
     stride, bpp = w * 3, 3
     raster = raster.astype(np.int64)
     prev = np.zeros_like(raster)
@@ -1147,9 +1122,6 @@ def decode_png(payload: bytes) -> tuple[int, int, "np.ndarray"]:
     non-interlaced only — the shapes this engine synthesizes), zlib
     inflate of the concatenated IDAT stream, and spec §6 row un-filtering
     for all five filter types. Returns (width, height, flat uint8 RGB)."""
-    import struct
-    import zlib
-
     b = bytes(payload)
     if b[:8] != _PNG_SIG:
         raise ValueError("not a PNG")
@@ -1498,8 +1470,6 @@ def _jpeg_encode_block(
 def _jpeg_static_segments() -> tuple[bytes, bytes]:
     """(pre-SOF static segments, post-SOF static segments) — everything
     in the header except the dimension-carrying SOF0, assembled once."""
-    import struct
-
     qt = bytes([_JPEG_QVAL] * 64)
     dqt = b"\x00" + qt + b"\x01" + qt
 
@@ -1538,15 +1508,13 @@ _JPEG_AC_CODES = _huff_encode_table(_JPEG_AC_BITS, _JPEG_AC_VALS)
 _JPEG_PRE_SOF, _JPEG_POST_SOF = _jpeg_static_segments()
 
 
-def _encode_jpeg_bytes(doc_id: int) -> bytes:
+def _jfif_bytes(w: int, h: int, coeffs) -> bytes:
     """Build a genuine baseline JFIF/JPEG: 3 components, 4:4:4, two flat
     quant tables, four DHT tables (DC/AC × luma/chroma ids), one
-    interleaved scan. The luma AC sits at zigzag index 39 = (4,4), 38
-    zeros after the DC — so every block with a nonzero AC exercises TWO
-    ZRL escapes before the coefficient code."""
-    import struct
-
-    w, h = _jpeg_dims(doc_id)
+    interleaved scan; ``coeffs(b)`` gives MCU ``b``'s quantized (luma
+    DC, luma AC, Cb DC, Cr DC). The luma AC sits at zigzag index 39 =
+    (4,4), 38 zeros after the DC — so every block with a nonzero AC
+    exercises TWO ZRL escapes before the coefficient code."""
     n_mcu = (w // 8) * (h // 8)
     sof = (
         struct.pack(">BHHB", 8, h, w, 3)
@@ -1561,13 +1529,12 @@ def _encode_jpeg_bytes(doc_id: int) -> bytes:
         + sof
         + _JPEG_POST_SOF
     )
-    dc_codes, ac_codes = _JPEG_DC_CODES, _JPEG_AC_CODES
     bw = _JpegBitWriter()
     preds = [0, 0, 0]
     zz44 = _ZZ_POS[(4, 4)]
     zeros = [0] * 64
     for b in range(n_mcu):
-        yq0, yq1, cbq, crq = _jpeg_coeffs(doc_id, b)
+        yq0, yq1, cbq, crq = coeffs(b)
         yblk = zeros.copy()
         yblk[0] = yq0
         yblk[zz44] = yq1
@@ -1577,10 +1544,15 @@ def _encode_jpeg_bytes(doc_id: int) -> bytes:
         crblk[0] = crq
         for ci, blk in enumerate((yblk, cbblk, crblk)):
             preds[ci] = _jpeg_encode_block(
-                bw, blk, preds[ci], dc_codes, ac_codes
+                bw, blk, preds[ci], _JPEG_DC_CODES, _JPEG_AC_CODES
             )
     bw.flush()
     return head + bytes(bw.buf) + b"\xff\xd9"
+
+
+def _encode_jpeg_bytes(doc_id: int) -> bytes:
+    w, h = _jpeg_dims(doc_id)
+    return _jfif_bytes(w, h, partial(_jpeg_coeffs, doc_id))
 
 
 class _JpegBitReader:
@@ -1650,8 +1622,6 @@ def _idct_matrix() -> "np.ndarray":
     separable IDCT, not a shortcut tuned to the fixture's coefficients."""
     global _IDCT_M
     if _IDCT_M is None:
-        import math
-
         m = np.empty((64, 64), dtype=np.float64)
         for y in range(8):
             for x in range(8):
@@ -1680,8 +1650,6 @@ def decode_jpeg(payload: bytes) -> tuple[int, int, "np.ndarray"]:
     Returns (width, height, flat interleaved uint8 RGB) — the same seam
     contract as decode_ppm/decode_png, so a libjpeg binding drops in
     without touching the Spark plumbing."""
-    import struct
-
     b = bytes(payload)
     if b[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
@@ -1986,64 +1954,30 @@ def _mjpeg_coeffs(doc_id: int, f: int, b: int) -> tuple[int, int, int, int]:
 
 
 def _mjpeg_frame_bytes(doc_id: int, f: int) -> bytes:
-    """One complete baseline JFIF frame — identical segment layout to
-    :func:`_encode_jpeg_bytes` (shared static DQT/DHT/SOS segments and
-    entropy encoder), with the frame-varying coefficient generator."""
-    import struct
-
+    """One complete baseline JFIF frame: the still-JPEG encoder with the
+    frame-varying coefficient generator."""
     w, h, _ = _mjpeg_geom(doc_id)
-    n_mcu = (w // 8) * (h // 8)
-    sof = (
-        struct.pack(">BHHB", 8, h, w, 3)
-        + bytes([1, 0x11, 0])
-        + bytes([2, 0x11, 1])
-        + bytes([3, 0x11, 1])
-    )
-    head = (
-        _JPEG_PRE_SOF
-        + b"\xff\xc0"
-        + struct.pack(">H", 2 + len(sof))
-        + sof
-        + _JPEG_POST_SOF
-    )
-    bw = _JpegBitWriter()
-    preds = [0, 0, 0]
-    zz44 = _ZZ_POS[(4, 4)]
-    zeros = [0] * 64
-    for b in range(n_mcu):
-        yq0, yq1, cbq, crq = _mjpeg_coeffs(doc_id, f, b)
-        yblk = zeros.copy()
-        yblk[0] = yq0
-        yblk[zz44] = yq1
-        cbblk = zeros.copy()
-        cbblk[0] = cbq
-        crblk = zeros.copy()
-        crblk[0] = crq
-        for ci, blk in enumerate((yblk, cbblk, crblk)):
-            preds[ci] = _jpeg_encode_block(
-                bw, blk, preds[ci], _JPEG_DC_CODES, _JPEG_AC_CODES
-            )
-    bw.flush()
-    return head + bytes(bw.buf) + b"\xff\xd9"
+    return _jfif_bytes(w, h, lambda b: _mjpeg_coeffs(doc_id, f, b))
 
 
 def _riff_list(list_type: bytes, payload: bytes) -> bytes:
     return _riff_chunk(b"LIST", list_type + payload)
 
 
-def _encode_avi_mjpeg_bytes(doc_id: int) -> bytes:
-    """A genuine minimal AVI: hdrl (avih + vids/MJPG strl), movi with one
-    word-aligned '00dc' JPEG chunk per frame, and a keyframe idx1 whose
-    offsets follow the standard convention (relative to the 'movi'
-    fourcc)."""
-    import struct
-
-    w, h, nf = _mjpeg_geom(doc_id)
-    frames = [_mjpeg_frame_bytes(doc_id, f) for f in range(nf)]
+def _avi_bytes(
+    frames: list[bytes], w: int, h: int, fourcc: bytes, fps: int,
+    key_every: int,
+) -> bytes:
+    """A genuine minimal AVI: hdrl (avih + one vids strl with handler
+    ``fourcc``), movi with one word-aligned '00dc' chunk per frame, and
+    an idx1 whose offsets follow the standard convention (relative to
+    the 'movi' fourcc) and whose AVIIF_KEYFRAME (0x10) flag marks every
+    ``key_every``-th frame."""
+    nf = len(frames)
     bufsz = max(len(fr) for fr in frames)
     avih = struct.pack(
         "<14I",
-        1_000_000 // _MJPEG_FPS,  # dwMicroSecPerFrame
+        1_000_000 // fps,  # dwMicroSecPerFrame
         0,  # dwMaxBytesPerSec
         0,  # dwPaddingGranularity
         0x10,  # dwFlags: AVIF_HASINDEX
@@ -2058,12 +1992,12 @@ def _encode_avi_mjpeg_bytes(doc_id: int) -> bytes:
     strh = struct.pack(
         "<4s4sIHHIIIIIIII4h",
         b"vids",
-        b"MJPG",
+        fourcc,
         0,  # dwFlags
         0, 0,  # wPriority, wLanguage
         0,  # dwInitialFrames
         1,  # dwScale
-        _MJPEG_FPS,  # dwRate
+        fps,  # dwRate
         0,  # dwStart
         nf,  # dwLength
         bufsz,  # dwSuggestedBufferSize
@@ -2073,7 +2007,7 @@ def _encode_avi_mjpeg_bytes(doc_id: int) -> bytes:
     )
     strf = struct.pack(
         "<IiiHH4sIiiII",
-        40, w, h, 1, 24, b"MJPG", w * h * 3, 0, 0, 0, 0,
+        40, w, h, 1, 24, fourcc, w * h * 3, 0, 0, 0, 0,
     )
     hdrl = _riff_list(
         b"hdrl",
@@ -2085,15 +2019,24 @@ def _encode_avi_mjpeg_bytes(doc_id: int) -> bytes:
     )
     movi_payload = bytearray()
     idx = bytearray()
-    for fr in frames:
+    for f, fr in enumerate(frames):
         # offset of this chunk's fourcc relative to the 'movi' fourcc:
         # the list-type tag is 4 bytes, chunks follow it
         off = 4 + len(movi_payload)
         movi_payload += _riff_chunk(b"00dc", fr)
-        idx += struct.pack("<4sIII", b"00dc", 0x10, off, len(fr))
+        flags = 0x10 if f % key_every == 0 else 0x00
+        idx += struct.pack("<4sIII", b"00dc", flags, off, len(fr))
     movi = _riff_list(b"movi", bytes(movi_payload))
     body = b"AVI " + hdrl + movi + _riff_chunk(b"idx1", bytes(idx))
     return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+def _encode_avi_mjpeg_bytes(doc_id: int) -> bytes:
+    """The MJPEG AVI: every frame an independent JFIF, so every idx1
+    entry is a keyframe."""
+    w, h, nf = _mjpeg_geom(doc_id)
+    frames = [_mjpeg_frame_bytes(doc_id, f) for f in range(nf)]
+    return _avi_bytes(frames, w, h, b"MJPG", _MJPEG_FPS, 1)
 
 
 def decode_avi_mjpeg(payload: bytes, decode_frame=decode_jpeg):
@@ -2106,8 +2049,6 @@ def decode_avi_mjpeg(payload: bytes, decode_frame=decode_jpeg):
     and the idx1 entry count/ckids against the frame list.  Returns
     (width, height, [(frame_idx, flat uint8 RGB)]) — decode_y4m's exact
     seam contract, so the Y4M feature generator runs unchanged."""
-    import struct
-
     b = bytes(payload)
     if len(b) < 12 or b[:4] != b"RIFF":
         raise ValueError("not a RIFF file")
@@ -2176,8 +2117,6 @@ def decode_avi_mjpeg(payload: bytes, decode_frame=decode_jpeg):
 def _avi_chunks(b: bytes, pos: int, end: int):
     """Word-aligned RIFF chunk iterator (the MJPEG container walk,
     shared by every AVI-carried codec tier — MJPEG and BDV)."""
-    import struct
-
     while pos < end:
         if pos + 8 > end:
             raise ValueError("truncated chunk header")
@@ -2198,8 +2137,6 @@ def _avi_scan(b: bytes):
     'movi' fourcc, and idx_entries is None when the file carries no
     index.  Extracted from the MJPEG walk so the inter-frame BDV tier
     reuses it verbatim."""
-    import struct
-
     if len(b) < 12 or b[:4] != b"RIFF":
         raise ValueError("not a RIFF file")
     (riff_size,) = struct.unpack("<I", b[4:8])
@@ -2278,8 +2215,6 @@ def decode_avi_mjpeg_sampled(
     WITHOUT decoding them) when idx1 is absent.  Returns the
     decode_avi_mjpeg contract with only sampled ordinals present;
     frame_idx remains the stream ordinal."""
-    import struct
-
     b = bytes(payload)
     w, h, nf_declared, movi, idx_entries = _avi_scan(b)
     frames: list[tuple[int, "np.ndarray"]] = []
@@ -2396,8 +2331,6 @@ def _encode_bdv_frame_bytes(
     """One frame's bitstream: I (raw) when prev is None, else P with the
     global motion vector and per-block COPY/DELTA records derived by
     comparing against the motion-shifted previous reconstruction."""
-    import struct
-
     if prev is None:
         return b"I" + cur.tobytes()
     cur3 = cur.reshape(h, w, 3)
@@ -2420,88 +2353,34 @@ def _encode_bdv_frame_bytes(
     return b"".join(out)
 
 
-def _encode_avi_bdv_bytes(doc_id: int) -> bytes:
-    """A genuine minimal AVI carrying the BDV stream: hdrl (avih +
-    vids/BDLT strl), movi with one '00dc' chunk per frame, and an idx1
-    whose AVIIF_KEYFRAME (0x10) flag is set ONLY on I-frames — the
-    keyframe map the sampled decode seeks with."""
-    import struct
-
-    w, h, nf = _bdv_geom(doc_id)
+def _bdv_stream(doc_id: int, geom) -> tuple[int, int, list[bytes]]:
+    """(width, height, per-frame BDV bitstreams) of ``doc_id`` over the
+    fixture geometry ``geom(doc_id) -> (w, h, n_frames)``: an I-frame
+    opens every GOP, phase-1 P-frames carry the GOP's motion vector and
+    phase-2 P-frames zero motion.  Every BDV container carries this
+    stream."""
+    w, h, nf = geom(doc_id)
     frames = [_bdv_frame(doc_id, f, w, h) for f in range(nf)]
     enc = []
-    for f in range(nf):
+    for f, cur in enumerate(frames):
         g, ph = divmod(f, BDV_GOP)
-        if ph == 0:
-            enc.append(_encode_bdv_frame_bytes(frames[f], None, w, h, 0, 0))
-        else:
-            dx, dy = _bdv_motion(doc_id, g) if ph == 1 else (0, 0)
-            enc.append(
-                _encode_bdv_frame_bytes(
-                    frames[f], frames[f - 1], w, h, dx, dy
-                )
-            )
-    bufsz = max(len(e) for e in enc)
-    avih = struct.pack(
-        "<14I",
-        1_000_000 // _BDV_FPS,
-        0,
-        0,
-        0x10,  # dwFlags: AVIF_HASINDEX
-        nf,
-        0,
-        1,
-        bufsz,
-        w,
-        h,
-        0, 0, 0, 0,
-    )
-    strh = struct.pack(
-        "<4s4sIHHIIIIIIII4h",
-        b"vids",
-        b"BDLT",
-        0,
-        0, 0,
-        0,
-        1,
-        _BDV_FPS,
-        0,
-        nf,
-        bufsz,
-        0xFFFFFFFF,
-        0,
-        0, 0, w, h,
-    )
-    strf = struct.pack(
-        "<IiiHH4sIiiII",
-        40, w, h, 1, 24, b"BDLT", w * h * 3, 0, 0, 0, 0,
-    )
-    hdrl = _riff_list(
-        b"hdrl",
-        _riff_chunk(b"avih", avih)
-        + _riff_list(
-            b"strl",
-            _riff_chunk(b"strh", strh) + _riff_chunk(b"strf", strf),
-        ),
-    )
-    movi_payload = bytearray()
-    idx = bytearray()
-    for f, e in enumerate(enc):
-        off = 4 + len(movi_payload)
-        movi_payload += _riff_chunk(b"00dc", e)
-        flags = 0x10 if f % BDV_GOP == 0 else 0x00
-        idx += struct.pack("<4sIII", b"00dc", flags, off, len(e))
-    movi = _riff_list(b"movi", bytes(movi_payload))
-    body = b"AVI " + hdrl + movi + _riff_chunk(b"idx1", bytes(idx))
-    return b"RIFF" + struct.pack("<I", len(body)) + body
+        dx, dy = _bdv_motion(doc_id, g) if ph == 1 else (0, 0)
+        prev = frames[f - 1] if ph else None
+        enc.append(_encode_bdv_frame_bytes(cur, prev, w, h, dx, dy))
+    return w, h, enc
+
+
+def _encode_avi_bdv_bytes(doc_id: int) -> bytes:
+    """The BDV AVI (handler 'BDLT'): AVIIF_KEYFRAME is set ONLY on
+    I-frames — the keyframe map the sampled decode seeks with."""
+    w, h, enc = _bdv_stream(doc_id, _bdv_geom)
+    return _avi_bytes(enc, w, h, b"BDLT", _BDV_FPS, BDV_GOP)
 
 
 def decode_bdv_frame(fb: bytes, w: int, h: int, prev) -> "np.ndarray":
     """Decode one BDV frame bitstream against the previous RECONSTRUCTED
     frame (flattened uint8 RGB, or None).  I-frames ignore prev;
     P-frames require it — a P-frame with no reference fails loudly."""
-    import struct
-
     if not fb:
         raise ValueError("empty BDV frame")
     tag = fb[0:1]
@@ -2573,8 +2452,6 @@ def _anchored_sampled_roll(
     reconstruction when that is closer (no frame decodes twice), so
     per-sampled-frame decode cost is bounded by the GOP length, not the
     stream length.  Returns [(frame_idx, flat uint8 RGB)]."""
-    import bisect
-
     frames = []
     state = None
     pos = -1
@@ -2606,8 +2483,6 @@ def decode_avi_bdv_sampled(
     twice).  Both idx1 offset conventions accepted via _idx1_base.
     Without idx1 there is NO cheap seek for inter-coded video: the
     fallback decodes every frame up to the last sampled ordinal."""
-    import struct
-
     b = bytes(payload)
     w, h, nf_declared, movi, idx_entries = _avi_scan(b)
     frames: list[tuple[int, "np.ndarray"]] = []
@@ -2697,8 +2572,6 @@ def _mb4_geom(doc_id: int) -> tuple[int, int, int]:
 
 
 def _mb4_box(btype: bytes, payload: bytes) -> bytes:
-    import struct
-
     return struct.pack(">I", 8 + len(payload)) + btype + payload
 
 
@@ -2708,20 +2581,72 @@ def _mb4_full(btype: bytes, version: int, flags: int, payload: bytes) -> bytes:
     )
 
 
-def _mb4_encoded_frames(doc_id: int) -> tuple[int, int, list[bytes]]:
-    w, h, nf = _mb4_geom(doc_id)
-    frames = [_bdv_frame(doc_id, f, w, h) for f in range(nf)]
-    enc = []
-    for f in range(nf):
-        g, ph = divmod(f, BDV_GOP)
-        if ph == 0:
-            enc.append(_encode_bdv_frame_bytes(frames[f], None, w, h, 0, 0))
-        else:
-            dx, dy = _bdv_motion(doc_id, g) if ph == 1 else (0, 0)
-            enc.append(
-                _encode_bdv_frame_bytes(frames[f], frames[f - 1], w, h, dx, dy)
-            )
-    return w, h, enc
+def _mp4_moov(
+    w: int, h: int, nf: int, tables: bytes, mvex: bytes = b""
+) -> bytes:
+    """The movie box of a one-track BDV file: mvhd, and a trak whose
+    stbl holds the 'bdv1' sample description followed by ``tables``;
+    ``mvex`` closes the moov.  ``nf`` sets the mvhd/tkhd/mdhd durations;
+    a fragmented file passes 0, since its fragments own the timeline."""
+    dur_mv = nf * _MB4_TIMESCALE // _BDV_FPS
+    matrix = struct.pack(">9i", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
+    mvhd = _mb4_full(
+        b"mvhd",
+        0,
+        0,
+        struct.pack(">IIII", 0, 0, _MB4_TIMESCALE, dur_mv)
+        + struct.pack(">iHH", 0x00010000, 0x0100, 0)
+        + b"\x00" * 8
+        + matrix
+        + b"\x00" * 24
+        + struct.pack(">I", 2),
+    )
+    tkhd = _mb4_full(
+        b"tkhd",
+        0,
+        7,
+        struct.pack(">IIIII", 0, 0, 1, 0, dur_mv)
+        + b"\x00" * 8
+        + struct.pack(">HHHH", 0, 0, 0, 0)
+        + matrix
+        + struct.pack(">II", w << 16, h << 16),
+    )
+    mdhd = _mb4_full(
+        b"mdhd",
+        0,
+        0,
+        struct.pack(">IIII", 0, 0, _BDV_FPS, nf)
+        + struct.pack(">HH", 0x55C4, 0),  # 'und' language
+    )
+    hdlr = _mb4_full(
+        b"hdlr", 0, 0, struct.pack(">I", 0) + b"vide" + b"\x00" * 12 + b"\x00"
+    )
+    vmhd = _mb4_full(b"vmhd", 0, 1, struct.pack(">HHHH", 0, 0, 0, 0))
+    dref = _mb4_full(
+        b"dref", 0, 0, struct.pack(">I", 1) + _mb4_full(b"url ", 0, 1, b"")
+    )
+    dinf = _mb4_box(b"dinf", dref)
+    # VisualSampleEntry 'bdv1' (86 bytes): the sample description
+    # carries the authoritative dims (tkhd's 16.16 pair must agree)
+    entry = (
+        b"\x00" * 6
+        + struct.pack(">H", 1)  # data_reference_index
+        + b"\x00" * 16
+        + struct.pack(">HH", w, h)
+        + struct.pack(">II", 0x00480000, 0x00480000)
+        + struct.pack(">I", 0)
+        + struct.pack(">H", 1)  # frame_count
+        + b"\x00" * 32  # compressorname
+        + struct.pack(">Hh", 24, -1)
+    )
+    stsd = _mb4_full(
+        b"stsd", 0, 0, struct.pack(">I", 1) + _mb4_box(b"bdv1", entry)
+    )
+    stbl = _mb4_box(b"stbl", stsd + tables)
+    minf = _mb4_box(b"minf", vmhd + dinf + stbl)
+    mdia = _mb4_box(b"mdia", mdhd + hdlr + minf)
+    trak = _mb4_box(b"trak", tkhd + mdia)
+    return _mb4_box(b"moov", mvhd + trak + mvex)
 
 
 def _encode_mb4_bytes(doc_id: int) -> bytes:
@@ -2729,9 +2654,7 @@ def _encode_mb4_bytes(doc_id: int) -> bytes:
     byte size is offset-independent, so pass 1 measures it with zeroed
     stco entries and pass 2 fills the absolute mdat offsets — the
     standard progressive ftyp/moov/mdat order)."""
-    import struct
-
-    w, h, enc = _mb4_encoded_frames(doc_id)
+    w, h, enc = _bdv_stream(doc_id, _mb4_geom)
     nf = len(enc)
     # one chunk per GOP: stsc gets a real run-length encoding to walk
     chunk_counts = [
@@ -2752,71 +2675,6 @@ def _encode_mb4_bytes(doc_id: int) -> bytes:
     )
 
     def build_moov(chunk_offsets: list[int]) -> bytes:
-        dur_mv = nf * _MB4_TIMESCALE // _BDV_FPS
-        matrix = struct.pack(
-            ">9i", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000
-        )
-        mvhd = _mb4_full(
-            b"mvhd",
-            0,
-            0,
-            struct.pack(">IIII", 0, 0, _MB4_TIMESCALE, dur_mv)
-            + struct.pack(">iHH", 0x00010000, 0x0100, 0)
-            + b"\x00" * 8
-            + matrix
-            + b"\x00" * 24
-            + struct.pack(">I", 2),
-        )
-        tkhd = _mb4_full(
-            b"tkhd",
-            0,
-            7,
-            struct.pack(">IIIII", 0, 0, 1, 0, dur_mv)
-            + b"\x00" * 8
-            + struct.pack(">HHHH", 0, 0, 0, 0)
-            + matrix
-            + struct.pack(">II", w << 16, h << 16),
-        )
-        mdhd = _mb4_full(
-            b"mdhd",
-            0,
-            0,
-            struct.pack(">IIII", 0, 0, _BDV_FPS, nf)
-            + struct.pack(">HH", 0x55C4, 0),  # 'und' language
-        )
-        hdlr = _mb4_full(
-            b"hdlr",
-            0,
-            0,
-            struct.pack(">I", 0) + b"vide" + b"\x00" * 12 + b"\x00",
-        )
-        vmhd = _mb4_full(b"vmhd", 0, 1, struct.pack(">HHHH", 0, 0, 0, 0))
-        dref = _mb4_full(
-            b"dref",
-            0,
-            0,
-            struct.pack(">I", 1) + _mb4_full(b"url ", 0, 1, b""),
-        )
-        dinf = _mb4_box(b"dinf", dref)
-        # VisualSampleEntry 'bdv1' (86 bytes): the sample description
-        # carries the authoritative dims (tkhd's 16.16 pair must agree)
-        entry = (
-            b"\x00" * 6
-            + struct.pack(">H", 1)  # data_reference_index
-            + b"\x00" * 16
-            + struct.pack(">HH", w, h)
-            + struct.pack(">II", 0x00480000, 0x00480000)
-            + struct.pack(">I", 0)
-            + struct.pack(">H", 1)  # frame_count
-            + b"\x00" * 32  # compressorname
-            + struct.pack(">Hh", 24, -1)
-        )
-        stsd = _mb4_full(
-            b"stsd",
-            0,
-            0,
-            struct.pack(">I", 1) + _mb4_box(b"bdv1", entry),
-        )
         stts = _mb4_full(
             b"stts", 0, 0, struct.pack(">III", 1, nf, 1)
         )
@@ -2858,11 +2716,7 @@ def _encode_mb4_bytes(doc_id: int) -> bytes:
             struct.pack(">I", len(syncs))
             + b"".join(struct.pack(">I", s) for s in syncs),
         )
-        stbl = _mb4_box(b"stbl", stsd + stts + stsc + stsz + stco + stss)
-        minf = _mb4_box(b"minf", vmhd + dinf + stbl)
-        mdia = _mb4_box(b"mdia", mdhd + hdlr + minf)
-        trak = _mb4_box(b"trak", tkhd + mdia)
-        return _mb4_box(b"moov", mvhd + trak)
+        return _mp4_moov(w, h, nf, stts + stsc + stsz + stco + stss)
 
     moov_len = len(build_moov([0] * len(chunk_counts)))
     base = len(ftyp) + moov_len + 8  # + mdat box header
@@ -2875,8 +2729,6 @@ def _encode_mb4_bytes(doc_id: int) -> bytes:
 def _mb4_boxes(b: bytes, pos: int, end: int):
     """Iterate (type, payload_start, payload_end) over a box sequence;
     malformed sizes fail loudly (32-bit sizes only in this subset)."""
-    import struct
-
     while pos < end:
         if pos + 8 > end:
             raise ValueError("truncated box header")
@@ -2902,8 +2754,6 @@ def _mb4_scan(b: bytes):
     sample_sizes, sync_set) with every cross-table consistency rule
     enforced: brand, handler, stsd↔tkhd dims, stts↔stsz↔mdhd counts,
     stsc chunk expansion vs stco, offsets inside mdat."""
-    import struct
-
     top = list(_mb4_boxes(b, 0, len(b)))
     if not top or top[0][0] != b"ftyp":
         raise ValueError("file does not start with ftyp")
@@ -3076,22 +2926,6 @@ def _fmp4_geom(doc_id: int) -> tuple[int, int, int]:
     return 8 + (doc_id % 3) * 4, 4 + (doc_id % 4) * 4, 7 + doc_id % 6
 
 
-def _fmp4_encoded_frames(doc_id: int) -> tuple[int, int, list[bytes]]:
-    w, h, nf = _fmp4_geom(doc_id)
-    frames = [_bdv_frame(doc_id, f, w, h) for f in range(nf)]
-    enc = []
-    for f in range(nf):
-        g, ph = divmod(f, BDV_GOP)
-        if ph == 0:
-            enc.append(_encode_bdv_frame_bytes(frames[f], None, w, h, 0, 0))
-        else:
-            dx, dy = _bdv_motion(doc_id, g) if ph == 1 else (0, 0)
-            enc.append(
-                _encode_bdv_frame_bytes(frames[f], frames[f - 1], w, h, dx, dy)
-            )
-    return w, h, enc
-
-
 def _encode_fmp4_bytes(doc_id: int) -> bytes:
     """A genuine minimal fragmented MP4-family file:
     ftyp | moov(mvhd, trak(... empty stbl), mvex(trex)) |
@@ -3100,87 +2934,27 @@ def _encode_fmp4_bytes(doc_id: int) -> bytes:
     each fragment is self-contained: no absolute file offsets anywhere,
     which is what lets a real muxer emit fragments as the stream
     arrives."""
-    import struct
-
-    w, h, enc = _fmp4_encoded_frames(doc_id)
-    nf = len(enc)
-    gops = [enc[i : i + BDV_GOP] for i in range(0, nf, BDV_GOP)]
+    w, h, enc = _bdv_stream(doc_id, _fmp4_geom)
+    gops = [enc[i : i + BDV_GOP] for i in range(0, len(enc), BDV_GOP)]
 
     ftyp = _mb4_box(
         b"ftyp", b"isom" + struct.pack(">I", 0) + b"isom" + _FMP4_BRAND
     )
-    matrix = struct.pack(
-        ">9i", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000
-    )
-    # fragmented convention: durations in the movie box are 0 — the
-    # fragments own the timeline
-    mvhd = _mb4_full(
-        b"mvhd",
-        0,
-        0,
-        struct.pack(">IIII", 0, 0, _MB4_TIMESCALE, 0)
-        + struct.pack(">iHH", 0x00010000, 0x0100, 0)
-        + b"\x00" * 8
-        + matrix
-        + b"\x00" * 24
-        + struct.pack(">I", 2),
-    )
-    tkhd = _mb4_full(
-        b"tkhd",
-        0,
-        7,
-        struct.pack(">IIIII", 0, 0, 1, 0, 0)
-        + b"\x00" * 8
-        + struct.pack(">HHHH", 0, 0, 0, 0)
-        + matrix
-        + struct.pack(">II", w << 16, h << 16),
-    )
-    mdhd = _mb4_full(
-        b"mdhd",
-        0,
-        0,
-        struct.pack(">IIII", 0, 0, _BDV_FPS, 0)
-        + struct.pack(">HH", 0x55C4, 0),
-    )
-    hdlr = _mb4_full(
-        b"hdlr", 0, 0, struct.pack(">I", 0) + b"vide" + b"\x00" * 12 + b"\x00"
-    )
-    vmhd = _mb4_full(b"vmhd", 0, 1, struct.pack(">HHHH", 0, 0, 0, 0))
-    dref = _mb4_full(
-        b"dref", 0, 0, struct.pack(">I", 1) + _mb4_full(b"url ", 0, 1, b"")
-    )
-    dinf = _mb4_box(b"dinf", dref)
-    entry = (
-        b"\x00" * 6
-        + struct.pack(">H", 1)
-        + b"\x00" * 16
-        + struct.pack(">HH", w, h)
-        + struct.pack(">II", 0x00480000, 0x00480000)
-        + struct.pack(">I", 0)
-        + struct.pack(">H", 1)
-        + b"\x00" * 32
-        + struct.pack(">Hh", 24, -1)
-    )
-    stsd = _mb4_full(
-        b"stsd", 0, 0, struct.pack(">I", 1) + _mb4_box(b"bdv1", entry)
-    )
-    # the fragmented discipline: every fixed table is declared EMPTY
+    # the fragmented discipline: every fixed table is declared EMPTY,
+    # and the movie-box durations are 0
     stts = _mb4_full(b"stts", 0, 0, struct.pack(">I", 0))
     stsc = _mb4_full(b"stsc", 0, 0, struct.pack(">I", 0))
     stsz = _mb4_full(b"stsz", 0, 0, struct.pack(">II", 0, 0))
     stco = _mb4_full(b"stco", 0, 0, struct.pack(">I", 0))
-    stbl = _mb4_box(b"stbl", stsd + stts + stsc + stsz + stco)
-    minf = _mb4_box(b"minf", vmhd + dinf + stbl)
-    mdia = _mb4_box(b"mdia", mdhd + hdlr + minf)
-    trak = _mb4_box(b"trak", tkhd + mdia)
     trex = _mb4_full(
         b"trex",
         0,
         0,
         struct.pack(">IIIII", 1, 1, 1, 0, _FMP4_NONSYNC),
     )
-    mvex = _mb4_box(b"mvex", trex)
-    moov = _mb4_box(b"moov", mvhd + trak + mvex)
+    moov = _mp4_moov(
+        w, h, 0, stts + stsc + stsz + stco, _mb4_box(b"mvex", trex)
+    )
 
     out = [ftyp, moov]
     decode_time = 0
@@ -3226,8 +3000,6 @@ def _fmp4_scan(b: bytes):
     contiguous mfhd sequence numbers, tfdt == samples accumulated so
     far, trun full-coverage of its fragment's mdat, and sync-flagged
     fragment openers."""
-    import struct
-
     top = list(_mb4_boxes(b, 0, len(b)))
     if not top or top[0][0] != b"ftyp":
         raise ValueError("file does not start with ftyp")
@@ -3410,28 +3182,10 @@ def _sts_pids(doc_id: int) -> tuple[int, int]:
     return pmt, pmt + 0x20
 
 
-def _sts_encoded_frames(doc_id: int) -> tuple[int, int, list[bytes]]:
-    w, h, nf = _sts_geom(doc_id)
-    frames = [_bdv_frame(doc_id, f, w, h) for f in range(nf)]
-    enc = []
-    for f in range(nf):
-        g, ph = divmod(f, BDV_GOP)
-        if ph == 0:
-            enc.append(_encode_bdv_frame_bytes(frames[f], None, w, h, 0, 0))
-        else:
-            dx, dy = _bdv_motion(doc_id, g) if ph == 1 else (0, 0)
-            enc.append(
-                _encode_bdv_frame_bytes(frames[f], frames[f - 1], w, h, dx, dy)
-            )
-    return w, h, enc
-
-
 def _ts_packets(pid: int, cc0: int, payload: bytes) -> tuple[list[bytes], int]:
     """Packetize one payload unit onto ``pid`` starting at continuity
     counter ``cc0``: PUSI set on the first packet, adaptation-field
     stuffing pads the final short packet.  Returns (packets, next_cc)."""
-    import struct
-
     out = []
     cc = cc0
     pos = 0
@@ -3461,9 +3215,6 @@ def _sts_section(table_id: int, body: bytes) -> bytes:
     """A PSI-style section: pointer_field | table_id | length | body |
     CRC32 over table_id..body (zlib/IEEE CRC — the subset's documented
     stand-in for the MPEG-2 PSI polynomial)."""
-    import struct
-    import zlib
-
     sec = bytes([table_id]) + struct.pack(">H", len(body)) + body
     return b"\x00" + sec + struct.pack(">I", zlib.crc32(sec) & 0xFFFFFFFF)
 
@@ -3472,9 +3223,7 @@ def _encode_sts_bytes(doc_id: int) -> bytes:
     """A genuine packetized transport stream: PAT, PMT, then one PES
     payload unit per frame, each packetized with continuity counters
     per PID and adaptation-field stuffing."""
-    import struct
-
-    w, h, enc = _sts_encoded_frames(doc_id)
+    w, h, enc = _bdv_stream(doc_id, _sts_geom)
     pmt_pid, video_pid = _sts_pids(doc_id)
     pkts: list[bytes] = []
     pat = _sts_section(0x00, struct.pack(">HH", 1, pmt_pid))
@@ -3540,9 +3289,6 @@ def _ts_depacketize(b: bytes) -> dict:
 
 
 def _sts_parse_section(unit: bytes, want_table: int) -> bytes:
-    import struct
-    import zlib
-
     if unit[0] != 0x00:
         raise ValueError("nonzero PSI pointer field")
     table_id = unit[1]
@@ -3561,8 +3307,6 @@ def _sts_scan(b: bytes):
     with length/sequence accounting.  Returns (w, h, frames_bytes,
     sync_set) — the frame payloads in index order plus the
     keyframe-flag sync set."""
-    import struct
-
     units = _ts_depacketize(b)
     if _TS_PID_PAT not in units:
         raise ValueError("no PAT on PID 0")
@@ -4166,6 +3910,55 @@ _FAMILIES = {
     "video": (_y4m_features_with, _Y4M_FEAT_SCHEMA, _video_checksum),
 }
 
+# family: the DuckDB restatement of its checksum over the full-row
+# oracle ``f`` (audio's rate and length columns vary by codec, so each
+# audio oracle states them through _audio_checksum_duck)
+_CHECKSUM_DUCK = {
+    "image": (
+        " SELECT COUNT(*) AS n_images,"
+        " CAST(SUM(width) AS BIGINT) AS sum_width,"
+        " CAST(SUM(height) AS BIGINT) AS sum_height,"
+        " CAST(SUM(n_pixels) AS BIGINT) AS sum_pixels,"
+        " CAST(SUM(sum_r) AS BIGINT) AS total_r,"
+        " CAST(SUM(sum_g) AS BIGINT) AS total_g,"
+        " CAST(SUM(sum_b) AS BIGINT) AS total_b,"
+        f" CAST(SUM(((doc_id % {P}) * (idx_weighted % {P})) % {P})"
+        " AS BIGINT) AS id_weighted_binding"
+        " FROM f"
+    ),
+    "video": (
+        " SELECT COUNT(*) AS n_frames,"
+        " COUNT(DISTINCT doc_id) AS n_docs,"
+        " CAST(SUM(width) AS BIGINT) AS sum_width,"
+        " CAST(SUM(height) AS BIGINT) AS sum_height,"
+        " CAST(SUM(frame_idx) AS BIGINT) AS sum_frame_idx,"
+        " CAST(SUM(frame_sum) AS BIGINT) AS total_frame_sum,"
+        f" CAST(SUM((((doc_id * 131 + frame_idx) % {P})"
+        f" * (idx_weighted % {P})) % {P}) AS BIGINT)"
+        " AS id_weighted_binding"
+        " FROM f"
+    ),
+}
+
+
+def _audio_checksum_duck(src: str, rate_hz: str, n_samples: str) -> str:
+    """The audio checksum over ``src``'s (doc_id, window_idx, sq_sum)
+    windows; ``rate_hz`` and ``n_samples`` are the header fields' SQL."""
+    return (
+        " SELECT COUNT(*) AS n_windows,"
+        " COUNT(DISTINCT doc_id) AS n_docs,"
+        " CAST(SUM(window_idx) AS BIGINT) AS sum_window_idx,"
+        " CAST(SUM(sq_sum) AS BIGINT) AS total_sq_sum,"
+        f" CAST(SUM({rate_hz}) AS BIGINT) AS sum_rate_hz,"
+        f" CAST(SUM({n_samples}) AS BIGINT) AS sum_n_samples,"
+        f" CAST(SUM(((doc_id % {P}) * (sq_sum % {P})) % {P}) AS BIGINT)"
+        " AS id_weighted_sq_sum,"
+        " sqrt(CAST(SUM(sq_sum) AS DOUBLE) /"
+        f" CAST(COUNT(*) * {_WAV_RMS_WINDOW} AS DOUBLE)) AS rms_overall"
+        f" FROM {src}"
+    )
+
+
 # codec: (bytes_of(doc_id), serving decode, family).  The compressed
 # video containers serve their sparse decoders: only sampled frames,
 # and for the inter-coded streams their GOP prefixes, ever decode.
@@ -4235,6 +4028,15 @@ def _checksum(codec: str):
     return run
 
 
+def _checksum_oracle(codec: str) -> str:
+    """The oracle of ``_checksum(codec)``: its family's checksum over
+    the codec's full-row oracle."""
+    return (
+        f"WITH f AS ({FULLROW_ORACLES[codec + '_feature_rows']})"
+        + _CHECKSUM_DUCK[CODECS[codec][2]]
+    )
+
+
 QUERIES = {
     "multimodal_catalog": multimodal_catalog,
     "image_thumbnails_ppm": image_thumbnails_ppm,
@@ -4300,17 +4102,8 @@ def _adpcm_oracle() -> str:
         " w AS (SELECT doc_id, (i - 1) // 64 AS window_idx,"
         " SUM(pred * pred) AS sq_sum"
         " FROM chain WHERE i >= 1 GROUP BY doc_id, window_idx)"
-        " SELECT COUNT(*) AS n_windows,"
-        " COUNT(DISTINCT doc_id) AS n_docs,"
-        " CAST(SUM(window_idx) AS BIGINT) AS sum_window_idx,"
-        " CAST(SUM(sq_sum) AS BIGINT) AS total_sq_sum,"
-        " CAST(SUM(8000 + (doc_id % 2) * 3025) AS BIGINT) AS sum_rate_hz,"
-        " CAST(SUM(256 + (doc_id % 3) * 64) AS BIGINT) AS sum_n_samples,"
-        f" CAST(SUM(((doc_id % {P}) * (sq_sum % {P})) % {P}) AS BIGINT)"
-        " AS id_weighted_sq_sum,"
-        " sqrt(CAST(SUM(sq_sum) AS DOUBLE) /"
-        f" CAST(COUNT(*) * {_WAV_RMS_WINDOW} AS DOUBLE)) AS rms_overall"
-        " FROM w"
+    ) + _audio_checksum_duck(
+        "w", "8000 + (doc_id % 2) * 3025", "256 + (doc_id % 3) * 64"
     )
 
 # ASCII corpus ⇒ octet/byte ops == length/ascii char ops in the oracles.
@@ -4324,6 +4117,155 @@ _POLY = (
     " list_transform(range(1, {n} + 1),"
     " i -> CAST(ascii(substr({s}, {off} + i, 1)) AS BIGINT))),"
     " (acc, c) -> (acc * 31 + c) % {p})"
+)
+
+# The codec oracles below are composed from these builders.  Each
+# restates its decoded bytes from the fixture's closed-form generators
+# and doc_id geometry, given as literal SQL, and never sees the binary.
+
+
+def _dims_duck(w: str, h: str) -> str:
+    """Opens an image oracle: the per-doc header dims."""
+    return f"WITH dims AS (SELECT doc_id, {w} AS w, {h} AS h FROM documents),"
+
+
+_PPM_DIMS_DUCK = _dims_duck(
+    "8 + CAST(doc_id % 5 AS INT) * 4", "6 + CAST(doc_id % 7 AS INT) * 2"
+)
+
+
+def _image_rows_duck(ctes: str, src: str) -> str:
+    """One row per image over ``src``, the per-byte ``(doc_id, w, h,
+    idx, val)`` relation that ``ctes`` builds: the dims, the exact
+    channel sums and the position-weighted byte binding."""
+    return (
+        ctes
+        + " SELECT doc_id, CAST(ANY_VALUE(w) AS INT) AS width,"
+        " CAST(ANY_VALUE(h) AS INT) AS height,"
+        " CAST(ANY_VALUE(w) * ANY_VALUE(h) AS INT) AS n_pixels,"
+        + "".join(
+            f" CAST(SUM(CASE WHEN idx % 3 = {c} THEN val ELSE 0 END)"
+            f" AS BIGINT) AS sum_{ch},"
+            for c, ch in enumerate("rgb")
+        )
+        + f" CAST(SUM(((idx % {P}) * val) % {P}) AS BIGINT) AS idx_weighted"
+        f" FROM {src} GROUP BY doc_id"
+    )
+
+
+def _raster_rows_duck(dims: str, pix_a: int, pix_b: int) -> str:
+    """Rows of a raw RGB raster whose byte idx is (doc_id·pix_a +
+    idx·pix_b) mod 256 (the PPM and PNG fixtures)."""
+    return _image_rows_duck(
+        dims
+        + " px AS (SELECT doc_id, w, h,"
+        " unnest(range(0, w * h * 3)) AS idx FROM dims),"
+        " v AS (SELECT doc_id, w, h, idx,"
+        f" (doc_id * {pix_a} + idx * {pix_b}) % 256 AS val"
+        " FROM px)",
+        "v",
+    )
+
+
+def _jfif_ctes(keys: str) -> str:
+    """``co``'s quantized coefficients per 8×8 block → exact Y/Cb/Cr
+    planes (the (4,4) AC basis contributes exactly s(x)·s(y)·coef; flat
+    Q=8 cancels the /8 IDCT scale) → JFIF YCbCr→RGB with floor(x+0.5) →
+    the per-byte ``chan`` relation, carrying ``keys``."""
+    return (
+        " pix AS (SELECT *, unnest(range(0, 64)) AS i FROM co),"
+        f" lum AS (SELECT {keys},"
+        " ((b // bw) * 8 + (i // 8)) AS gy,"
+        " ((b % bw) * 8 + (i % 8)) AS gx,"
+        " 128 + yq0"
+        " + (CASE WHEN (i // 8) % 4 IN (0, 3) THEN 1 ELSE -1 END)"
+        " * (CASE WHEN (i % 8) % 4 IN (0, 3) THEN 1 ELSE -1 END) * yq1"
+        " AS yv, cbq, crq FROM pix),"
+        f" rgb AS (SELECT {keys}, gy, gx,"
+        " CAST(floor(yv + 1.402 * crq + 0.5) AS BIGINT) AS r,"
+        " CAST(floor(yv - 0.344136 * cbq - 0.714136 * crq + 0.5)"
+        " AS BIGINT) AS g,"
+        " CAST(floor(yv + 1.772 * cbq + 0.5) AS BIGINT) AS bb FROM lum),"
+        f" chan AS (SELECT {keys},"
+        " (gy * w + gx) * 3 + c AS idx,"
+        " CASE c WHEN 0 THEN r WHEN 1 THEN g ELSE bb END AS val"
+        " FROM rgb CROSS JOIN (SELECT unnest(range(0, 3)) AS c) cs)"
+    )
+
+
+def _sampled_ctes(w: str, h: str, nf: str) -> str:
+    """Opens a video oracle: the per-doc geometry and its sampled
+    frames ``(doc_id, w, h, f)``."""
+    return (
+        f"WITH geom AS (SELECT doc_id, {w} AS w, {h} AS h,"
+        f" {nf} AS nf FROM documents),"
+        " fr AS (SELECT doc_id, w, h, unnest(range(0, nf)) AS f"
+        " FROM geom),"
+        f" sampled AS (SELECT * FROM fr WHERE f % {SAMPLE_EVERY} = 0),"
+    )
+
+
+def _frame_rows_duck(ctes: str, src: str, idx: str = "idx") -> str:
+    """One row per sampled frame over ``src``, the per-byte ``(doc_id,
+    w, h, f, {idx}, val)`` relation that ``ctes`` builds."""
+    return (
+        ctes
+        + " SELECT doc_id, CAST(w AS INT) AS width,"
+        " CAST(h AS INT) AS height, CAST(f AS INT) AS frame_idx,"
+        " CAST(SUM(val) AS BIGINT) AS frame_sum,"
+        f" CAST(SUM((({idx} % {P}) * val) % {P}) AS BIGINT) AS idx_weighted"
+        f" FROM {src} GROUP BY doc_id, w, h, f"
+    )
+
+
+def _bdv_rows_duck(w: str, h: str, nf: str) -> str:
+    """The BDV reference decode over a fixture's geometry: every sampled
+    pixel is the GOP base pattern at the motion-shifted position (phase
+    ≥ 1) plus the constant residual (phase 2), mod 256."""
+    return _frame_rows_duck(
+        _sampled_ctes(w, h, nf)
+        + f" gp AS (SELECT doc_id, w, h, f, f // {BDV_GOP} AS g,"
+        f" f % {BDV_GOP} AS ph FROM sampled),"
+        " mv AS (SELECT *,"
+        " CASE WHEN ph >= 1 THEN (doc_id + g) % 3 - 1 ELSE 0 END AS dx,"
+        " CASE WHEN ph >= 1 THEN (doc_id * 2 + g) % 3 - 1 ELSE 0 END"
+        " AS dy,"
+        " CASE WHEN ph = 2 THEN (doc_id * 5 + g * 9 + 7) % 256"
+        " ELSE 0 END AS r FROM gp),"
+        " pix AS (SELECT doc_id, w, h, f, g, dx, dy, r,"
+        " unnest(range(0, w * h * 3)) AS i FROM mv),"
+        " dec AS (SELECT doc_id, w, h, f, i,"
+        " (doc_id * 17 + g * 71"
+        " + (((((i // (3 * w)) - dy) % h + h) % h) * w"
+        " + ((((i // 3) % w - dx) % w + w) % w)) * 3 * 13"
+        " + (i % 3) * 13 + r) % 256 AS val FROM pix)",
+        "dec",
+        "i",
+    )
+
+
+def _audio_windows_duck(n_mod: int, squares: str) -> str:
+    """Opens an audio oracle: ``f`` holds each of a doc's ``4 + doc_id %
+    n_mod`` windows with ``sq_sum``, the sum of ``squares``, the list of
+    the window's squared samples (``i`` indexes the window)."""
+    return (
+        "WITH wins AS (SELECT doc_id,"
+        f" unnest(range(0, 4 + CAST(doc_id % {n_mod} AS INT))) AS window_idx"
+        " FROM documents),"
+        " f AS (SELECT doc_id, window_idx,"
+        f" list_reduce(list_prepend(CAST(0 AS BIGINT), {squares}),"
+        " (a, c) -> a + c) AS sq_sum FROM wins)"
+    )
+
+
+_WAV_SAMPLE_DUCK = (
+    f"CAST(((doc_id * {_WAV_SAMPLE_A} + (window_idx *"
+    f" {_WAV_RMS_WINDOW} + i) * {_WAV_SAMPLE_B}) % {_WAV_SAMPLE_MOD})"
+    f" - {_WAV_SAMPLE_MOD // 2} AS BIGINT)"
+)
+_MULAW_MAG_DUCK = (
+    f"((((u & 15) * 8) + {_MULAW_BIAS}) *"
+    f" (CAST(1 AS BIGINT) << ((u >> 4) & 7)) - {_MULAW_BIAS})"
 )
 
 # Full-row forms — asserted per-row in
@@ -4372,52 +4314,21 @@ FULLROW_ORACLES = {
     # byte from the closed-form generator v[idx] = (doc_id·7919 + idx·97)
     # mod 256 and the header dims from their doc_id formulas — it never
     # sees the binary.
-    "ppm_feature_rows": (
-        "WITH dims AS (SELECT doc_id,"
-        " 8 + CAST(doc_id % 5 AS INT) * 4 AS w,"
-        " 6 + CAST(doc_id % 7 AS INT) * 2 AS h FROM documents),"
-        " px AS (SELECT doc_id, w, h,"
-        " unnest(range(0, w * h * 3)) AS idx FROM dims),"
-        f" v AS (SELECT doc_id, w, h, idx,"
-        f" (doc_id * {_PPM_PIX_A} + idx * {_PPM_PIX_B}) % 256 AS val"
-        " FROM px)"
-        " SELECT doc_id, CAST(ANY_VALUE(w) AS INT) AS width,"
-        " CAST(ANY_VALUE(h) AS INT) AS height,"
-        " CAST(ANY_VALUE(w) * ANY_VALUE(h) AS INT) AS n_pixels,"
-        " CAST(SUM(CASE WHEN idx % 3 = 0 THEN val ELSE 0 END) AS BIGINT)"
-        " AS sum_r,"
-        " CAST(SUM(CASE WHEN idx % 3 = 1 THEN val ELSE 0 END) AS BIGINT)"
-        " AS sum_g,"
-        " CAST(SUM(CASE WHEN idx % 3 = 2 THEN val ELSE 0 END) AS BIGINT)"
-        " AS sum_b,"
-        f" CAST(SUM(((idx % {P}) * val) % {P}) AS BIGINT) AS idx_weighted"
-        " FROM v GROUP BY doc_id"
+    "ppm_feature_rows": _raster_rows_duck(
+        _PPM_DIMS_DUCK, _PPM_PIX_A, _PPM_PIX_B
     ),
     # PNG oracle: same shape as the PPM one — every decoded raster byte
     # recomputed from v[idx] = (doc_id·7919 + idx·101) mod 256 and the
     # doc_id dim formulas; the DEFLATE/filter/CRC machinery never leaks
     # into the oracle, which is exactly what makes the checksum a proof
     # that the decode inverted it.
-    "png_feature_rows": (
-        "WITH dims AS (SELECT doc_id,"
-        " 8 + CAST(doc_id % 6 AS INT) * 4 AS w,"
-        " 5 + CAST(doc_id % 5 AS INT) * 3 AS h FROM documents),"
-        " px AS (SELECT doc_id, w, h,"
-        " unnest(range(0, w * h * 3)) AS idx FROM dims),"
-        f" v AS (SELECT doc_id, w, h, idx,"
-        f" (doc_id * {_PNG_PIX_A} + idx * {_PNG_PIX_B}) % 256 AS val"
-        " FROM px)"
-        " SELECT doc_id, CAST(ANY_VALUE(w) AS INT) AS width,"
-        " CAST(ANY_VALUE(h) AS INT) AS height,"
-        " CAST(ANY_VALUE(w) * ANY_VALUE(h) AS INT) AS n_pixels,"
-        " CAST(SUM(CASE WHEN idx % 3 = 0 THEN val ELSE 0 END) AS BIGINT)"
-        " AS sum_r,"
-        " CAST(SUM(CASE WHEN idx % 3 = 1 THEN val ELSE 0 END) AS BIGINT)"
-        " AS sum_g,"
-        " CAST(SUM(CASE WHEN idx % 3 = 2 THEN val ELSE 0 END) AS BIGINT)"
-        " AS sum_b,"
-        f" CAST(SUM(((idx % {P}) * val) % {P}) AS BIGINT) AS idx_weighted"
-        " FROM v GROUP BY doc_id"
+    "png_feature_rows": _raster_rows_duck(
+        _dims_duck(
+            "8 + CAST(doc_id % 6 AS INT) * 4",
+            "5 + CAST(doc_id % 5 AS INT) * 3",
+        ),
+        _PNG_PIX_A,
+        _PNG_PIX_B,
     ),
     # frame-fingerprint oracle: every byte of every frame of every video
     # re-derived from the (doc_id % 4, f % 3) class closed form, folded
@@ -4445,238 +4356,92 @@ FULLROW_ORACLES = {
     # closed forms and composed per channel — the LZW/sub-block/screen-
     # descriptor machinery never leaks into the oracle, so the checksum
     # match proves the dictionary decode inverted the encoder.
-    "gif_feature_rows": (
-        "WITH dims AS (SELECT doc_id,"
-        " 10 + CAST(doc_id % 6 AS INT) * 4 AS w,"
-        " 7 + CAST(doc_id % 5 AS INT) * 3 AS h FROM documents),"
-        " px AS (SELECT doc_id, w, h,"
+    "gif_feature_rows": _image_rows_duck(
+        _dims_duck(
+            "10 + CAST(doc_id % 6 AS INT) * 4",
+            "7 + CAST(doc_id % 5 AS INT) * 3",
+        )
+        + " px AS (SELECT doc_id, w, h,"
         " unnest(range(0, w * h)) AS p FROM dims),"
         " ch AS (SELECT doc_id, w, h, p,"
         " unnest(range(0, 3)) AS c FROM px),"
         f" v AS (SELECT doc_id, w, h, p * 3 + c AS idx,"
         f" (((doc_id * {_GIF_PIX_A} + p * {_GIF_PIX_B}) % 256)"
         f" * {_GIF_PAL_I} + c * {_GIF_PAL_C}"
-        f" + doc_id * {_GIF_PAL_D}) % 256 AS val FROM ch)"
-        " SELECT doc_id, CAST(ANY_VALUE(w) AS INT) AS width,"
-        " CAST(ANY_VALUE(h) AS INT) AS height,"
-        " CAST(ANY_VALUE(w) * ANY_VALUE(h) AS INT) AS n_pixels,"
-        " CAST(SUM(CASE WHEN idx % 3 = 0 THEN val ELSE 0 END) AS BIGINT)"
-        " AS sum_r,"
-        " CAST(SUM(CASE WHEN idx % 3 = 1 THEN val ELSE 0 END) AS BIGINT)"
-        " AS sum_g,"
-        " CAST(SUM(CASE WHEN idx % 3 = 2 THEN val ELSE 0 END) AS BIGINT)"
-        " AS sum_b,"
-        f" CAST(SUM(((idx % {P}) * val) % {P}) AS BIGINT) AS idx_weighted"
-        " FROM v GROUP BY doc_id"
+        f" + doc_id * {_GIF_PAL_D}) % 256 AS val FROM ch)",
+        "v",
     ),
     # JPEG oracle: the whole lossy pipeline restated in SQL — closed-form
-    # quantized coefficients per block → exact Y/Cb/Cr planes (the (4,4)
-    # AC basis contributes exactly s(x)·s(y)·coef; flat Q=8 cancels the
-    # /8 IDCT scale) → JFIF YCbCr→RGB with floor(x+0.5). The Huffman/
+    # quantized coefficients per block, then _jfif_ctes. The Huffman/
     # marker/zigzag/IDCT machinery never leaks into the oracle, which is
     # exactly what makes the per-pixel checksum a proof the generic
     # decoder inverted the entropy coding.
-    "jpeg_feature_rows": (
-        "WITH dims AS (SELECT doc_id,"
-        " 16 + CAST(doc_id % 3 AS INT) * 8 AS w,"
-        " 8 + CAST(doc_id % 2 AS INT) * 8 AS h FROM documents),"
-        " blk AS (SELECT doc_id, w, h, w // 8 AS bw,"
+    "jpeg_feature_rows": _image_rows_duck(
+        _dims_duck(
+            "16 + CAST(doc_id % 3 AS INT) * 8",
+            "8 + CAST(doc_id % 2 AS INT) * 8",
+        )
+        + " blk AS (SELECT doc_id, w, h, w // 8 AS bw,"
         " unnest(range(0, (w // 8) * (h // 8))) AS b FROM dims),"
         " co AS (SELECT doc_id, w, h, bw, b,"
-        f" (doc_id * 7919 + b * 97) % 161 - 80 AS yq0,"
-        f" (doc_id * 131 + b * 61) % 25 - 12 AS yq1,"
-        f" (doc_id * 53 + b * 29) % 25 - 12 AS cbq,"
-        f" (doc_id * 89 + b * 41) % 25 - 12 AS crq FROM blk),"
-        " pix AS (SELECT *, unnest(range(0, 64)) AS i FROM co),"
-        " lum AS (SELECT doc_id, w, h,"
-        " ((b // bw) * 8 + (i // 8)) AS gy,"
-        " ((b % bw) * 8 + (i % 8)) AS gx,"
-        " 128 + yq0"
-        " + (CASE WHEN (i // 8) % 4 IN (0, 3) THEN 1 ELSE -1 END)"
-        " * (CASE WHEN (i % 8) % 4 IN (0, 3) THEN 1 ELSE -1 END) * yq1"
-        " AS yv, cbq, crq FROM pix),"
-        " rgb AS (SELECT doc_id, w, h, gy, gx,"
-        " CAST(floor(yv + 1.402 * crq + 0.5) AS BIGINT) AS r,"
-        " CAST(floor(yv - 0.344136 * cbq - 0.714136 * crq + 0.5)"
-        " AS BIGINT) AS g,"
-        " CAST(floor(yv + 1.772 * cbq + 0.5) AS BIGINT) AS bb FROM lum),"
-        " chan AS (SELECT doc_id, w, h,"
-        " (gy * w + gx) * 3 + c AS idx,"
-        " CASE c WHEN 0 THEN r WHEN 1 THEN g ELSE bb END AS val"
-        " FROM rgb CROSS JOIN (SELECT unnest(range(0, 3)) AS c) cs)"
-        " SELECT doc_id, CAST(ANY_VALUE(w) AS INT) AS width,"
-        " CAST(ANY_VALUE(h) AS INT) AS height,"
-        " CAST(ANY_VALUE(w) * ANY_VALUE(h) AS INT) AS n_pixels,"
-        " CAST(SUM(CASE WHEN idx % 3 = 0 THEN val ELSE 0 END) AS BIGINT)"
-        " AS sum_r,"
-        " CAST(SUM(CASE WHEN idx % 3 = 1 THEN val ELSE 0 END) AS BIGINT)"
-        " AS sum_g,"
-        " CAST(SUM(CASE WHEN idx % 3 = 2 THEN val ELSE 0 END) AS BIGINT)"
-        " AS sum_b,"
-        f" CAST(SUM(((idx % {P}) * val) % {P}) AS BIGINT) AS idx_weighted"
-        " FROM chan GROUP BY doc_id"
+        " (doc_id * 7919 + b * 97) % 161 - 80 AS yq0,"
+        " (doc_id * 131 + b * 61) % 25 - 12 AS yq1,"
+        " (doc_id * 53 + b * 29) % 25 - 12 AS cbq,"
+        " (doc_id * 89 + b * 41) % 25 - 12 AS crq FROM blk),"
+        + _jfif_ctes("doc_id, w, h"),
+        "chan",
     ),
     # Y4M oracle: sampled frames and every decoded byte recomputed from
     # v = (doc_id·7919 + f·131071 + idx·97) mod 256 and the doc_id
     # geometry formulas — never sees the container bytes.
-    "y4m_feature_rows": (
-        "WITH geom AS (SELECT doc_id,"
-        " 4 + CAST(doc_id % 4 AS INT) * 2 AS w,"
-        " 4 + CAST(doc_id % 3 AS INT) * 2 AS h,"
-        " 8 + CAST(doc_id % 5 AS INT) * 4 AS nf FROM documents),"
-        " fr AS (SELECT doc_id, w, h, unnest(range(0, nf)) AS f"
-        " FROM geom),"
-        f" sampled AS (SELECT * FROM fr WHERE f % {SAMPLE_EVERY} = 0),"
-        " px AS (SELECT doc_id, w, h, f,"
+    "y4m_feature_rows": _frame_rows_duck(
+        _sampled_ctes(
+            "4 + CAST(doc_id % 4 AS INT) * 2",
+            "4 + CAST(doc_id % 3 AS INT) * 2",
+            "8 + CAST(doc_id % 5 AS INT) * 4",
+        )
+        + " px AS (SELECT doc_id, w, h, f,"
         " unnest(range(0, w * h * 3)) AS idx FROM sampled),"
         f" v AS (SELECT doc_id, w, h, f, idx,"
         f" (doc_id * {_Y4M_PIX_A} + f * {_Y4M_PIX_F}"
-        f" + idx * {_Y4M_PIX_B}) % 256 AS val FROM px)"
-        " SELECT doc_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,"
-        " CAST(f AS INT) AS frame_idx,"
-        " CAST(SUM(val) AS BIGINT) AS frame_sum,"
-        f" CAST(SUM(((idx % {P}) * val) % {P}) AS BIGINT) AS idx_weighted"
-        " FROM v GROUP BY doc_id, w, h, f"
+        f" + idx * {_Y4M_PIX_B}) % 256 AS val FROM px)",
+        "v",
+    ),
+    # The BDV containers (AVI, MB4 box tree, fragmented FV4, packetized
+    # STS) carry the same bitstream, each over its own fixture geometry;
+    # the oracle re-derives every motion-compensated sampled pixel from
+    # the closed-form generators without ever seeing a container byte.
+    "bdv_feature_rows": _bdv_rows_duck(
+        "8 + CAST(doc_id % 3 AS INT) * 4",
+        "4 + CAST(doc_id % 2 AS INT) * 4",
+        "5 + CAST(doc_id % 5 AS INT)",
+    ),
+    "mb4_feature_rows": _bdv_rows_duck(
+        "8 + CAST(doc_id % 4 AS INT) * 4",
+        "4 + CAST(doc_id % 3 AS INT) * 4",
+        "6 + CAST(doc_id % 7 AS INT)",
+    ),
+    "fmp4_feature_rows": _bdv_rows_duck(
+        "8 + CAST(doc_id % 3 AS INT) * 4",
+        "4 + CAST(doc_id % 4 AS INT) * 4",
+        "7 + CAST(doc_id % 6 AS INT)",
+    ),
+    "sts_feature_rows": _bdv_rows_duck(
+        "12 + CAST(doc_id % 2 AS INT) * 4",
+        "4 + CAST(doc_id % 3 AS INT) * 4",
+        "6 + CAST(doc_id % 5 AS INT)",
     ),
     # MJPEG oracle: the jpeg_feature_rows lossy pipeline restated per
-    # SAMPLED frame — frame-varying quantized coefficients → exact
-    # Y/Cb/Cr planes → JFIF conversion with floor(x+0.5).  The RIFF/
+    # SAMPLED frame, with frame-varying quantized coefficients.  The RIFF/
     # avih/idx1 container machinery and the per-frame Huffman stack
     # never leak into the oracle; matching it proves both were inverted.
-    "bdv_feature_rows": (
-        "WITH geom AS (SELECT doc_id,"
-        " 8 + CAST(doc_id % 3 AS INT) * 4 AS w,"
-        " 4 + CAST(doc_id % 2 AS INT) * 4 AS h,"
-        " 5 + CAST(doc_id % 5 AS INT) AS nf FROM documents),"
-        " fr AS (SELECT doc_id, w, h, unnest(range(0, nf)) AS f"
-        " FROM geom),"
-        f" sampled AS (SELECT * FROM fr WHERE f % {SAMPLE_EVERY} = 0),"
-        f" gp AS (SELECT doc_id, w, h, f, f // {BDV_GOP} AS g,"
-        f" f % {BDV_GOP} AS ph FROM sampled),"
-        " mv AS (SELECT *,"
-        " CASE WHEN ph >= 1 THEN (doc_id + g) % 3 - 1 ELSE 0 END AS dx,"
-        " CASE WHEN ph >= 1 THEN (doc_id * 2 + g) % 3 - 1 ELSE 0 END"
-        " AS dy,"
-        " CASE WHEN ph = 2 THEN (doc_id * 5 + g * 9 + 7) % 256"
-        " ELSE 0 END AS r FROM gp),"
-        " pix AS (SELECT doc_id, w, h, f, g, dx, dy, r,"
-        " unnest(range(0, w * h * 3)) AS i FROM mv),"
-        " dec AS (SELECT doc_id, w, h, f, i,"
-        " (doc_id * 17 + g * 71"
-        " + (((((i // (3 * w)) - dy) % h + h) % h) * w"
-        " + ((((i // 3) % w - dx) % w + w) % w)) * 3 * 13"
-        " + (i % 3) * 13 + r) % 256 AS val FROM pix)"
-        " SELECT doc_id, CAST(w AS INT) AS width,"
-        " CAST(h AS INT) AS height, CAST(f AS INT) AS frame_idx,"
-        " CAST(SUM(val) AS BIGINT) AS frame_sum,"
-        f" CAST(SUM(((i % {P}) * val) % {P}) AS BIGINT) AS idx_weighted"
-        " FROM dec GROUP BY doc_id, w, h, f"
-    ),
-    # the MB4 tree carries the same BDV bitstream over its own fixture
-    # geometry — the oracle re-derives every motion-compensated pixel
-    # from the closed-form generators exactly as bdv_feature_rows does
-    "mb4_feature_rows": (
-        "WITH geom AS (SELECT doc_id,"
-        " 8 + CAST(doc_id % 4 AS INT) * 4 AS w,"
-        " 4 + CAST(doc_id % 3 AS INT) * 4 AS h,"
-        " 6 + CAST(doc_id % 7 AS INT) AS nf FROM documents),"
-        " fr AS (SELECT doc_id, w, h, unnest(range(0, nf)) AS f"
-        " FROM geom),"
-        f" sampled AS (SELECT * FROM fr WHERE f % {SAMPLE_EVERY} = 0),"
-        f" gp AS (SELECT doc_id, w, h, f, f // {BDV_GOP} AS g,"
-        f" f % {BDV_GOP} AS ph FROM sampled),"
-        " mv AS (SELECT *,"
-        " CASE WHEN ph >= 1 THEN (doc_id + g) % 3 - 1 ELSE 0 END AS dx,"
-        " CASE WHEN ph >= 1 THEN (doc_id * 2 + g) % 3 - 1 ELSE 0 END"
-        " AS dy,"
-        " CASE WHEN ph = 2 THEN (doc_id * 5 + g * 9 + 7) % 256"
-        " ELSE 0 END AS r FROM gp),"
-        " pix AS (SELECT doc_id, w, h, f, g, dx, dy, r,"
-        " unnest(range(0, w * h * 3)) AS i FROM mv),"
-        " dec AS (SELECT doc_id, w, h, f, i,"
-        " (doc_id * 17 + g * 71"
-        " + (((((i // (3 * w)) - dy) % h + h) % h) * w"
-        " + ((((i // 3) % w - dx) % w + w) % w)) * 3 * 13"
-        " + (i % 3) * 13 + r) % 256 AS val FROM pix)"
-        " SELECT doc_id, CAST(w AS INT) AS width,"
-        " CAST(h AS INT) AS height, CAST(f AS INT) AS frame_idx,"
-        " CAST(SUM(val) AS BIGINT) AS frame_sum,"
-        f" CAST(SUM(((i % {P}) * val) % {P}) AS BIGINT) AS idx_weighted"
-        " FROM dec GROUP BY doc_id, w, h, f"
-    ),
-    # the fragmented container carries the same BDV bitstream over the
-    # FV4 fixture geometry — the oracle re-derives every sampled pixel
-    # from the closed-form generators without ever seeing a moof box
-    "fmp4_feature_rows": (
-        "WITH geom AS (SELECT doc_id,"
-        " 8 + CAST(doc_id % 3 AS INT) * 4 AS w,"
-        " 4 + CAST(doc_id % 4 AS INT) * 4 AS h,"
-        " 7 + CAST(doc_id % 6 AS INT) AS nf FROM documents),"
-        " fr AS (SELECT doc_id, w, h, unnest(range(0, nf)) AS f"
-        " FROM geom),"
-        f" sampled AS (SELECT * FROM fr WHERE f % {SAMPLE_EVERY} = 0),"
-        f" gp AS (SELECT doc_id, w, h, f, f // {BDV_GOP} AS g,"
-        f" f % {BDV_GOP} AS ph FROM sampled),"
-        " mv AS (SELECT *,"
-        " CASE WHEN ph >= 1 THEN (doc_id + g) % 3 - 1 ELSE 0 END AS dx,"
-        " CASE WHEN ph >= 1 THEN (doc_id * 2 + g) % 3 - 1 ELSE 0 END"
-        " AS dy,"
-        " CASE WHEN ph = 2 THEN (doc_id * 5 + g * 9 + 7) % 256"
-        " ELSE 0 END AS r FROM gp),"
-        " pix AS (SELECT doc_id, w, h, f, g, dx, dy, r,"
-        " unnest(range(0, w * h * 3)) AS i FROM mv),"
-        " dec AS (SELECT doc_id, w, h, f, i,"
-        " (doc_id * 17 + g * 71"
-        " + (((((i // (3 * w)) - dy) % h + h) % h) * w"
-        " + ((((i // 3) % w - dx) % w + w) % w)) * 3 * 13"
-        " + (i % 3) * 13 + r) % 256 AS val FROM pix)"
-        " SELECT doc_id, CAST(w AS INT) AS width,"
-        " CAST(h AS INT) AS height, CAST(f AS INT) AS frame_idx,"
-        " CAST(SUM(val) AS BIGINT) AS frame_sum,"
-        f" CAST(SUM(((i % {P}) * val) % {P}) AS BIGINT) AS idx_weighted"
-        " FROM dec GROUP BY doc_id, w, h, f"
-    ),
-    # the packetized transport carries the same BDV bitstream over the
-    # STS fixture geometry — the oracle re-derives every sampled pixel
-    # from the closed-form generators without ever seeing a packet
-    "sts_feature_rows": (
-        "WITH geom AS (SELECT doc_id,"
-        " 12 + CAST(doc_id % 2 AS INT) * 4 AS w,"
-        " 4 + CAST(doc_id % 3 AS INT) * 4 AS h,"
-        " 6 + CAST(doc_id % 5 AS INT) AS nf FROM documents),"
-        " fr AS (SELECT doc_id, w, h, unnest(range(0, nf)) AS f"
-        " FROM geom),"
-        f" sampled AS (SELECT * FROM fr WHERE f % {SAMPLE_EVERY} = 0),"
-        f" gp AS (SELECT doc_id, w, h, f, f // {BDV_GOP} AS g,"
-        f" f % {BDV_GOP} AS ph FROM sampled),"
-        " mv AS (SELECT *,"
-        " CASE WHEN ph >= 1 THEN (doc_id + g) % 3 - 1 ELSE 0 END AS dx,"
-        " CASE WHEN ph >= 1 THEN (doc_id * 2 + g) % 3 - 1 ELSE 0 END"
-        " AS dy,"
-        " CASE WHEN ph = 2 THEN (doc_id * 5 + g * 9 + 7) % 256"
-        " ELSE 0 END AS r FROM gp),"
-        " pix AS (SELECT doc_id, w, h, f, g, dx, dy, r,"
-        " unnest(range(0, w * h * 3)) AS i FROM mv),"
-        " dec AS (SELECT doc_id, w, h, f, i,"
-        " (doc_id * 17 + g * 71"
-        " + (((((i // (3 * w)) - dy) % h + h) % h) * w"
-        " + ((((i // 3) % w - dx) % w + w) % w)) * 3 * 13"
-        " + (i % 3) * 13 + r) % 256 AS val FROM pix)"
-        " SELECT doc_id, CAST(w AS INT) AS width,"
-        " CAST(h AS INT) AS height, CAST(f AS INT) AS frame_idx,"
-        " CAST(SUM(val) AS BIGINT) AS frame_sum,"
-        f" CAST(SUM(((i % {P}) * val) % {P}) AS BIGINT) AS idx_weighted"
-        " FROM dec GROUP BY doc_id, w, h, f"
-    ),
-    "mjpeg_feature_rows": (
-        "WITH geom AS (SELECT doc_id,"
-        " 16 + CAST(doc_id % 3 AS INT) * 8 AS w,"
-        " 8 + CAST(doc_id % 2 AS INT) * 8 AS h,"
-        " 4 + CAST(doc_id % 4 AS INT) AS nf FROM documents),"
-        " fr AS (SELECT doc_id, w, h, unnest(range(0, nf)) AS f"
-        " FROM geom),"
-        f" sampled AS (SELECT * FROM fr WHERE f % {SAMPLE_EVERY} = 0),"
-        " blk AS (SELECT doc_id, w, h, f, w // 8 AS bw,"
+    "mjpeg_feature_rows": _frame_rows_duck(
+        _sampled_ctes(
+            "16 + CAST(doc_id % 3 AS INT) * 8",
+            "8 + CAST(doc_id % 2 AS INT) * 8",
+            "4 + CAST(doc_id % 4 AS INT)",
+        )
+        + " blk AS (SELECT doc_id, w, h, f, w // 8 AS bw,"
         " unnest(range(0, (w // 8) * (h // 8))) AS b FROM sampled),"
         " co AS (SELECT doc_id, w, h, f, bw, b,"
         f" (doc_id * 7919 + f * {_MJPEG_F_Y0} + b * 97) % 161 - 80"
@@ -4685,54 +4450,24 @@ FULLROW_ORACLES = {
         f" (doc_id * 53 + f * {_MJPEG_F_CB} + b * 29) % 25 - 12 AS cbq,"
         f" (doc_id * 89 + f * {_MJPEG_F_CR} + b * 41) % 25 - 12 AS crq"
         " FROM blk),"
-        " pix AS (SELECT *, unnest(range(0, 64)) AS i FROM co),"
-        " lum AS (SELECT doc_id, w, h, f,"
-        " ((b // bw) * 8 + (i // 8)) AS gy,"
-        " ((b % bw) * 8 + (i % 8)) AS gx,"
-        " 128 + yq0"
-        " + (CASE WHEN (i // 8) % 4 IN (0, 3) THEN 1 ELSE -1 END)"
-        " * (CASE WHEN (i % 8) % 4 IN (0, 3) THEN 1 ELSE -1 END) * yq1"
-        " AS yv, cbq, crq FROM pix),"
-        " rgb AS (SELECT doc_id, w, h, f, gy, gx,"
-        " CAST(floor(yv + 1.402 * crq + 0.5) AS BIGINT) AS r,"
-        " CAST(floor(yv - 0.344136 * cbq - 0.714136 * crq + 0.5)"
-        " AS BIGINT) AS g,"
-        " CAST(floor(yv + 1.772 * cbq + 0.5) AS BIGINT) AS bb FROM lum),"
-        " chan AS (SELECT doc_id, w, h, f,"
-        " (gy * w + gx) * 3 + c AS idx,"
-        " CASE c WHEN 0 THEN r WHEN 1 THEN g ELSE bb END AS val"
-        " FROM rgb CROSS JOIN (SELECT unnest(range(0, 3)) AS c) cs)"
-        " SELECT doc_id, CAST(w AS INT) AS width,"
-        " CAST(h AS INT) AS height, CAST(f AS INT) AS frame_idx,"
-        " CAST(SUM(val) AS BIGINT) AS frame_sum,"
-        f" CAST(SUM(((idx % {P}) * val) % {P}) AS BIGINT) AS idx_weighted"
-        " FROM chan GROUP BY doc_id, w, h, f"
+        + _jfif_ctes("doc_id, w, h, f"),
+        "chan",
     ),
     # The WAV oracle never sees the binary: it recomputes every decoded
     # sample from the closed-form generator s[i] = ((doc_id·7919 +
     # i·104729) mod 65536) − 32768 that the encoder wrote into the PCM
     # data chunk, and the header fields from their doc_id formulas.
-    "wav_feature_rows": (
-        "WITH wins AS (SELECT doc_id,"
-        " unnest(range(0, 4 + CAST(doc_id % 7 AS INT))) AS window_idx"
-        " FROM documents),"
-        " f AS (SELECT doc_id, window_idx,"
-        " list_reduce(list_prepend(CAST(0 AS BIGINT),"
-        f" list_transform(range(0, {_WAV_RMS_WINDOW}),"
-        f" i -> CAST(((doc_id * {_WAV_SAMPLE_A} + (window_idx *"
-        f" {_WAV_RMS_WINDOW} + i) * {_WAV_SAMPLE_B}) % {_WAV_SAMPLE_MOD})"
-        f" - {_WAV_SAMPLE_MOD // 2} AS BIGINT)"
-        f" * (CAST(((doc_id * {_WAV_SAMPLE_A} + (window_idx *"
-        f" {_WAV_RMS_WINDOW} + i) * {_WAV_SAMPLE_B}) % {_WAV_SAMPLE_MOD})"
-        f" - {_WAV_SAMPLE_MOD // 2} AS BIGINT)))),"
-        " (a, c) -> a + c) AS sq_sum FROM wins)"
-        " SELECT doc_id,"
-        " CAST(8000 + (doc_id % 3) * 4000 AS INT) AS rate_hz,"
-        " CAST(256 + (doc_id % 7) * 64 AS INT) AS n_samples,"
-        " CAST(window_idx AS INT) AS window_idx, sq_sum,"
-        f" sqrt(CAST(sq_sum AS DOUBLE) / {_WAV_RMS_WINDOW}) AS rms"
-        " FROM f"
-    ),
+    "wav_feature_rows": _audio_windows_duck(
+        7,
+        f"list_transform(range(0, {_WAV_RMS_WINDOW}),"
+        f" i -> {_WAV_SAMPLE_DUCK} * ({_WAV_SAMPLE_DUCK}))",
+    )
+    + " SELECT doc_id,"
+    " CAST(8000 + (doc_id % 3) * 4000 AS INT) AS rate_hz,"
+    " CAST(256 + (doc_id % 7) * 64 AS INT) AS n_samples,"
+    " CAST(window_idx AS INT) AS window_idx, sq_sum,"
+    f" sqrt(CAST(sq_sum AS DOUBLE) / {_WAV_RMS_WINDOW}) AS rms"
+    " FROM f",
 }
 
 ORACLES = {
@@ -4766,41 +4501,15 @@ ORACLES = {
         f" % {P}) AS BIGINT) AS id_weighted_hash_sum"
         " FROM f"
     ),
-    "image_features_ppm": (
-        f"WITH f AS ({FULLROW_ORACLES['ppm_feature_rows']})"
-        " SELECT COUNT(*) AS n_images,"
-        " CAST(SUM(width) AS BIGINT) AS sum_width,"
-        " CAST(SUM(height) AS BIGINT) AS sum_height,"
-        " CAST(SUM(n_pixels) AS BIGINT) AS sum_pixels,"
-        " CAST(SUM(sum_r) AS BIGINT) AS total_r,"
-        " CAST(SUM(sum_g) AS BIGINT) AS total_g,"
-        " CAST(SUM(sum_b) AS BIGINT) AS total_b,"
-        f" CAST(SUM(((doc_id % {P}) * (idx_weighted % {P})) % {P})"
-        " AS BIGINT) AS id_weighted_binding"
-        " FROM f"
-    ),
-    "image_features_png": (
-        f"WITH f AS ({FULLROW_ORACLES['png_feature_rows']})"
-        " SELECT COUNT(*) AS n_images,"
-        " CAST(SUM(width) AS BIGINT) AS sum_width,"
-        " CAST(SUM(height) AS BIGINT) AS sum_height,"
-        " CAST(SUM(n_pixels) AS BIGINT) AS sum_pixels,"
-        " CAST(SUM(sum_r) AS BIGINT) AS total_r,"
-        " CAST(SUM(sum_g) AS BIGINT) AS total_g,"
-        " CAST(SUM(sum_b) AS BIGINT) AS total_b,"
-        f" CAST(SUM(((doc_id % {P}) * (idx_weighted % {P})) % {P})"
-        " AS BIGINT) AS id_weighted_binding"
-        " FROM f"
-    ),
+    "image_features_ppm": _checksum_oracle("ppm"),
+    "image_features_png": _checksum_oracle("png"),
     # thumbnail oracle: every RESAMPLED byte restated — thumb index ti
     # decomposes to (ty, tx, c), the nearest-neighbor source index is
     # ((ty·h div TH)·w + (tx·w div TW))·3 + c, and the byte value comes
     # from the same closed-form generator; integer arithmetic throughout
     "image_thumbnails_ppm": (
-        "WITH dims AS (SELECT doc_id,"
-        " 8 + CAST(doc_id % 5 AS INT) * 4 AS w,"
-        " 6 + CAST(doc_id % 7 AS INT) * 2 AS h FROM documents),"
-        " t AS (SELECT doc_id, w, h,"
+        _PPM_DIMS_DUCK
+        + " t AS (SELECT doc_id, w, h,"
         f" unnest(range(0, {_THUMB_H} * {_THUMB_W} * 3)) AS ti FROM dims),"
         f" v AS (SELECT doc_id, w, h, ti,"
         f" (doc_id * {_PPM_PIX_A} +"
@@ -4835,123 +4544,17 @@ ORACLES = {
         " AS group_binding"
         " FROM g"
     ),
-    "image_features_gif": (
-        f"WITH f AS ({FULLROW_ORACLES['gif_feature_rows']})"
-        " SELECT COUNT(*) AS n_images,"
-        " CAST(SUM(width) AS BIGINT) AS sum_width,"
-        " CAST(SUM(height) AS BIGINT) AS sum_height,"
-        " CAST(SUM(n_pixels) AS BIGINT) AS sum_pixels,"
-        " CAST(SUM(sum_r) AS BIGINT) AS total_r,"
-        " CAST(SUM(sum_g) AS BIGINT) AS total_g,"
-        " CAST(SUM(sum_b) AS BIGINT) AS total_b,"
-        f" CAST(SUM(((doc_id % {P}) * (idx_weighted % {P})) % {P})"
-        " AS BIGINT) AS id_weighted_binding"
-        " FROM f"
-    ),
-    "image_features_jpeg": (
-        f"WITH f AS ({FULLROW_ORACLES['jpeg_feature_rows']})"
-        " SELECT COUNT(*) AS n_images,"
-        " CAST(SUM(width) AS BIGINT) AS sum_width,"
-        " CAST(SUM(height) AS BIGINT) AS sum_height,"
-        " CAST(SUM(n_pixels) AS BIGINT) AS sum_pixels,"
-        " CAST(SUM(sum_r) AS BIGINT) AS total_r,"
-        " CAST(SUM(sum_g) AS BIGINT) AS total_g,"
-        " CAST(SUM(sum_b) AS BIGINT) AS total_b,"
-        f" CAST(SUM(((doc_id % {P}) * (idx_weighted % {P})) % {P})"
-        " AS BIGINT) AS id_weighted_binding"
-        " FROM f"
-    ),
-    "video_frame_sample_y4m": (
-        f"WITH f AS ({FULLROW_ORACLES['y4m_feature_rows']})"
-        " SELECT COUNT(*) AS n_frames,"
-        " COUNT(DISTINCT doc_id) AS n_docs,"
-        " CAST(SUM(width) AS BIGINT) AS sum_width,"
-        " CAST(SUM(height) AS BIGINT) AS sum_height,"
-        " CAST(SUM(frame_idx) AS BIGINT) AS sum_frame_idx,"
-        " CAST(SUM(frame_sum) AS BIGINT) AS total_frame_sum,"
-        f" CAST(SUM((((doc_id * 131 + frame_idx) % {P})"
-        f" * (idx_weighted % {P})) % {P}) AS BIGINT)"
-        " AS id_weighted_binding"
-        " FROM f"
-    ),
-    "video_features_bdv": (
-        f"WITH f AS ({FULLROW_ORACLES['bdv_feature_rows']})"
-        " SELECT COUNT(*) AS n_frames,"
-        " COUNT(DISTINCT doc_id) AS n_docs,"
-        " CAST(SUM(width) AS BIGINT) AS sum_width,"
-        " CAST(SUM(height) AS BIGINT) AS sum_height,"
-        " CAST(SUM(frame_idx) AS BIGINT) AS sum_frame_idx,"
-        " CAST(SUM(frame_sum) AS BIGINT) AS total_frame_sum,"
-        f" CAST(SUM((((doc_id * 131 + frame_idx) % {P})"
-        f" * (idx_weighted % {P})) % {P}) AS BIGINT)"
-        " AS id_weighted_binding"
-        " FROM f"
-    ),
-    "video_features_mb4": (
-        f"WITH f AS ({FULLROW_ORACLES['mb4_feature_rows']})"
-        " SELECT COUNT(*) AS n_frames,"
-        " COUNT(DISTINCT doc_id) AS n_docs,"
-        " CAST(SUM(width) AS BIGINT) AS sum_width,"
-        " CAST(SUM(height) AS BIGINT) AS sum_height,"
-        " CAST(SUM(frame_idx) AS BIGINT) AS sum_frame_idx,"
-        " CAST(SUM(frame_sum) AS BIGINT) AS total_frame_sum,"
-        f" CAST(SUM((((doc_id * 131 + frame_idx) % {P})"
-        f" * (idx_weighted % {P})) % {P}) AS BIGINT)"
-        " AS id_weighted_binding"
-        " FROM f"
-    ),
-    "video_features_fmp4": (
-        f"WITH f AS ({FULLROW_ORACLES['fmp4_feature_rows']})"
-        " SELECT COUNT(*) AS n_frames,"
-        " COUNT(DISTINCT doc_id) AS n_docs,"
-        " CAST(SUM(width) AS BIGINT) AS sum_width,"
-        " CAST(SUM(height) AS BIGINT) AS sum_height,"
-        " CAST(SUM(frame_idx) AS BIGINT) AS sum_frame_idx,"
-        " CAST(SUM(frame_sum) AS BIGINT) AS total_frame_sum,"
-        f" CAST(SUM((((doc_id * 131 + frame_idx) % {P})"
-        f" * (idx_weighted % {P})) % {P}) AS BIGINT)"
-        " AS id_weighted_binding"
-        " FROM f"
-    ),
-    "video_features_sts": (
-        f"WITH f AS ({FULLROW_ORACLES['sts_feature_rows']})"
-        " SELECT COUNT(*) AS n_frames,"
-        " COUNT(DISTINCT doc_id) AS n_docs,"
-        " CAST(SUM(width) AS BIGINT) AS sum_width,"
-        " CAST(SUM(height) AS BIGINT) AS sum_height,"
-        " CAST(SUM(frame_idx) AS BIGINT) AS sum_frame_idx,"
-        " CAST(SUM(frame_sum) AS BIGINT) AS total_frame_sum,"
-        f" CAST(SUM((((doc_id * 131 + frame_idx) % {P})"
-        f" * (idx_weighted % {P})) % {P}) AS BIGINT)"
-        " AS id_weighted_binding"
-        " FROM f"
-    ),
-    "video_features_mjpeg": (
-        f"WITH f AS ({FULLROW_ORACLES['mjpeg_feature_rows']})"
-        " SELECT COUNT(*) AS n_frames,"
-        " COUNT(DISTINCT doc_id) AS n_docs,"
-        " CAST(SUM(width) AS BIGINT) AS sum_width,"
-        " CAST(SUM(height) AS BIGINT) AS sum_height,"
-        " CAST(SUM(frame_idx) AS BIGINT) AS sum_frame_idx,"
-        " CAST(SUM(frame_sum) AS BIGINT) AS total_frame_sum,"
-        f" CAST(SUM((((doc_id * 131 + frame_idx) % {P})"
-        f" * (idx_weighted % {P})) % {P}) AS BIGINT)"
-        " AS id_weighted_binding"
-        " FROM f"
-    ),
+    "image_features_gif": _checksum_oracle("gif"),
+    "image_features_jpeg": _checksum_oracle("jpeg"),
+    "video_frame_sample_y4m": _checksum_oracle("y4m"),
+    "video_features_bdv": _checksum_oracle("bdv"),
+    "video_features_mb4": _checksum_oracle("mb4"),
+    "video_features_fmp4": _checksum_oracle("fmp4"),
+    "video_features_sts": _checksum_oracle("sts"),
+    "video_features_mjpeg": _checksum_oracle("mjpeg"),
     "audio_window_rms": (
         f"WITH w AS ({FULLROW_ORACLES['wav_feature_rows']})"
-        " SELECT COUNT(*) AS n_windows,"
-        " COUNT(DISTINCT doc_id) AS n_docs,"
-        " CAST(SUM(window_idx) AS BIGINT) AS sum_window_idx,"
-        " CAST(SUM(sq_sum) AS BIGINT) AS total_sq_sum,"
-        " CAST(SUM(rate_hz) AS BIGINT) AS sum_rate_hz,"
-        " CAST(SUM(n_samples) AS BIGINT) AS sum_n_samples,"
-        f" CAST(SUM(((doc_id % {P}) * (sq_sum % {P})) % {P}) AS BIGINT)"
-        " AS id_weighted_sq_sum,"
-        " sqrt(CAST(SUM(sq_sum) AS DOUBLE) /"
-        f" CAST(COUNT(*) * {_WAV_RMS_WINDOW} AS DOUBLE)) AS rms_overall"
-        " FROM w"
+        + _audio_checksum_duck("w", "rate_hz", "n_samples")
     ),
     # G.711 μ-law expansion restated in integer SQL: u = 255 − code
     # (the one's complement), t = ((u&15)·8 + 132) << ((u>>4)&7), sample
@@ -4961,58 +4564,29 @@ ORACLES = {
     # of the SQL; the SIGN of the expansion is bound by the
     # all-256-codes G.711 reference-table unit test
     # (tests/test_multimodal_seam.py), the magnitudes by this parity.
-    "audio_features_mulaw": (
-        "WITH wins AS (SELECT doc_id,"
-        " unnest(range(0, 4 + CAST(doc_id % 5 AS INT))) AS window_idx"
-        " FROM documents),"
-        " f AS (SELECT doc_id, window_idx,"
-        " list_reduce(list_prepend(CAST(0 AS BIGINT),"
-        " list_transform("
+    "audio_features_mulaw": _audio_windows_duck(
+        5,
+        "list_transform("
         f" list_transform(range(0, {_WAV_RMS_WINDOW}),"
         f" i -> 255 - ((doc_id * {_MULAW_CODE_A} + (window_idx *"
         f" {_WAV_RMS_WINDOW} + i) * {_MULAW_CODE_B} + {_MULAW_CODE_C})"
         " % 256)),"
-        f" u -> ((((u & 15) * 8) + {_MULAW_BIAS}) *"
-        f" (CAST(1 AS BIGINT) << ((u >> 4) & 7)) - {_MULAW_BIAS})"
-        f" * ((((u & 15) * 8) + {_MULAW_BIAS}) *"
-        f" (CAST(1 AS BIGINT) << ((u >> 4) & 7)) - {_MULAW_BIAS}))),"
-        " (a, c) -> a + c) AS sq_sum FROM wins)"
-        " SELECT COUNT(*) AS n_windows,"
-        " COUNT(DISTINCT doc_id) AS n_docs,"
-        " CAST(SUM(window_idx) AS BIGINT) AS sum_window_idx,"
-        " CAST(SUM(sq_sum) AS BIGINT) AS total_sq_sum,"
-        " CAST(SUM(8000 * (1 + doc_id % 2)) AS BIGINT) AS sum_rate_hz,"
-        " CAST(SUM(256 + (doc_id % 5) * 64) AS BIGINT) AS sum_n_samples,"
-        f" CAST(SUM(((doc_id % {P}) * (sq_sum % {P})) % {P}) AS BIGINT)"
-        " AS id_weighted_sq_sum,"
-        " sqrt(CAST(SUM(sq_sum) AS DOUBLE) /"
-        f" CAST(COUNT(*) * {_WAV_RMS_WINDOW} AS DOUBLE)) AS rms_overall"
-        " FROM f"
+        f" u -> {_MULAW_MAG_DUCK} * {_MULAW_MAG_DUCK})",
+    )
+    + _audio_checksum_duck(
+        "f", "8000 * (1 + doc_id % 2)", "256 + (doc_id % 5) * 64"
     ),
     "audio_features_adpcm": _adpcm_oracle(),
-    "audio_features_ilt": (
-        "WITH wins AS (SELECT doc_id,"
-        " unnest(range(0, 4 + CAST(doc_id % 3 AS INT))) AS window_idx"
-        " FROM documents),"
-        " f AS (SELECT doc_id, window_idx,"
-        " list_reduce(list_prepend(CAST(0 AS BIGINT),"
-        " list_transform("
+    "audio_features_ilt": _audio_windows_duck(
+        3,
+        "list_transform("
         f" list_transform(range(0, {_WAV_RMS_WINDOW}),"
         f" i -> (doc_id * {_ILT_SAMPLE_A} + (window_idx *"
         f" {_WAV_RMS_WINDOW} + i) * {_ILT_SAMPLE_B} + {_ILT_SAMPLE_C})"
         " % 65536 - 32768),"
-        " v -> v * v)),"
-        " (a, c) -> a + c) AS sq_sum FROM wins)"
-        " SELECT COUNT(*) AS n_windows,"
-        " COUNT(DISTINCT doc_id) AS n_docs,"
-        " CAST(SUM(window_idx) AS BIGINT) AS sum_window_idx,"
-        " CAST(SUM(sq_sum) AS BIGINT) AS total_sq_sum,"
-        " CAST(SUM(16000 + (doc_id % 2) * 6050) AS BIGINT) AS sum_rate_hz,"
-        " CAST(SUM(256 + (doc_id % 3) * 64) AS BIGINT) AS sum_n_samples,"
-        f" CAST(SUM(((doc_id % {P}) * (sq_sum % {P})) % {P}) AS BIGINT)"
-        " AS id_weighted_sq_sum,"
-        " sqrt(CAST(SUM(sq_sum) AS DOUBLE) /"
-        f" CAST(COUNT(*) * {_WAV_RMS_WINDOW} AS DOUBLE)) AS rms_overall"
-        " FROM f"
+        " v -> v * v)",
+    )
+    + _audio_checksum_duck(
+        "f", "16000 + (doc_id % 2) * 6050", "256 + (doc_id % 3) * 64"
     ),
 }

@@ -5,6 +5,8 @@ in without touching schema, batching, or the plan."""
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 
 from intellect_bi_spark.functions.text import P
@@ -511,3 +513,33 @@ def test_adpcm_seam_injects_decoder(spark, sf_dir):
     want_sq = int((ramp**2).sum())
     for r in rows:
         assert r["sq_sum"] == want_sq and r["rate_hz"] == 11025
+
+
+# md5 over the concatenated payloads bytes_of(d) for d in 0..39, per codec
+_PAYLOAD_MD5 = {
+    "wav": "5f239f71e399c6d13be659cccaeec2dc",
+    "mulaw": "93a88759096f1fcbd4f673c15c952f62",
+    "adpcm": "7bc5ecc29f04ddfd8237acc8fa481ee1",
+    "ilt": "dd58ab399b46daf13021290ad61d5b49",
+    "ppm": "fb5125d5aa60c344a8cb2aaff3d73ef5",
+    "png": "af9db3a6ad6580c69cca5521bbb8bd07",
+    "jpeg": "8cf5519c8e5064d82e41b8ed13805cef",
+    "gif": "354807e2b6a35fdb734d3820e9f13aaa",
+    "y4m": "9726f65eada6b806df47b3b7a0609bbc",
+    "mjpeg": "5761f31f08f565dd24022db5c7471a88",
+    "bdv": "f156013e74702fff36e5c38e88e30815",
+    "mb4": "604a7a569518ac1bf65df74f511052bc",
+    "fmp4": "19408b0869c45b3e3c65d930039c1e83",
+    "sts": "ae4641a892e16c66c3302ccb65a5bdbf",
+}
+
+
+def test_codec_payloads_are_pinned():
+    """Every encoder's bytes are pinned, so an encoder and its decoder
+    cannot drift together unseen by the roundtrip tests."""
+    assert set(_PAYLOAD_MD5) == set(multimodal.CODECS)
+    for codec, (bytes_of, _, _) in multimodal.CODECS.items():
+        h = hashlib.md5()
+        for d in range(40):
+            h.update(bytes_of(d))
+        assert h.hexdigest() == _PAYLOAD_MD5[codec], codec

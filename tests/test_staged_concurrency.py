@@ -207,3 +207,17 @@ def test_ann_oracles_are_built_not_edited():
         if isinstance(call.func, ast.Attribute) and call.func.attr == "replace"
     ]
     assert edits == []
+
+
+def test_multimodal_imports_are_module_level():
+    """``multimodal.py`` imports its stdlib modules once, at module
+    level: no function body holds an ``import``."""
+    tree = ast.parse((PACKAGE / "operators" / "multimodal.py").read_text())
+    local = [
+        (fn.name, node.lineno)
+        for fn in ast.walk(tree)
+        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+        for node in ast.walk(fn)
+        if isinstance(node, (ast.Import, ast.ImportFrom))
+    ]
+    assert local == []

@@ -1,9 +1,12 @@
-"""Lock the GENERATED SQL text of the store families' oracles: the BM25,
-ANN and sketch oracles are composed by per-family builders
-(retrieval._bm25_oracle, vectorstore._ann_oracle,
-sketches._sketch_oracle), and a change to a builder must not silently
-alter an already-certified oracle.  Each hash is the md5 of the exact
-text the oracle had before the builders existed."""
+"""Lock the GENERATED SQL text of the oracles that builders compose: the
+store families' BM25, ANN and sketch oracles (retrieval._bm25_oracle,
+vectorstore._ann_oracle, sketches._sketch_oracle), the multimodal codec
+oracles and full-row forms (multimodal._checksum_oracle,
+_audio_checksum_duck, _image_rows_duck, _frame_rows_duck,
+_bdv_rows_duck, _jfif_ctes) and the forecast twins that share their
+twin's text.  A change to a builder must not silently alter an
+already-certified oracle.  Each hash is the md5 of the exact text the
+oracle had before the builders existed."""
 
 from __future__ import annotations
 
@@ -12,6 +15,8 @@ import hashlib
 import pytest
 
 from intellect_bi_spark.operators import (
+    forecast,
+    multimodal,
     quality,
     retrieval,
     sketches,
@@ -68,19 +73,73 @@ _ORACLE_MD5 = {
     "sketch_stream_upsert_store": "dfb0c1836bb6348e6beb30fad2930f62",
     # quality
     "erasure_e2e": "5a4a438aadc219b91cf71ae0f3617362",
+    # multimodal
+    "multimodal_catalog": "b9aad469af729f85684a1ed70cb979f2",
+    "image_features_stub": "38c24de55ddf3245bc1b49c95cfc2f54",
+    "video_frame_sample_stub": "79690fd70c5a8374b00b8180ab9ed61d",
+    "image_features_ppm": "e588f35dc5e2fc086c6c7fd349fb44cb",
+    "image_features_png": "db70318b257bc6c3d86e3b050bb6ced6",
+    "image_thumbnails_ppm": "56454b2b7f801c484b3840ad63bf2fa6",
+    "video_frame_dedup_y4m": "e24182ebb5c0a541f060c32f2f3a091d",
+    "image_features_gif": "38ebfb81f947ca72d6850e3afe5bbd50",
+    "image_features_jpeg": "96b52f3517dfcac14f95c616826446f3",
+    "video_frame_sample_y4m": "2d93bc674674dcbb7ee354e2cb587b2d",
+    "video_features_bdv": "89d503ab3a4a39a918e654fcf31534d3",
+    "video_features_mb4": "5fc94271e8327e0a89083cab6244ec68",
+    "video_features_fmp4": "3c5fe78df3e057083505ef19af440e4b",
+    "video_features_sts": "776941294ff17f166e5884fab164eb81",
+    "video_features_mjpeg": "c516227573cdc38e7cd35a1d03ad56c0",
+    "audio_window_rms": "b4f68e520896f8be60c4d19c5b3a3585",
+    "audio_features_mulaw": "0acd6647d66d386f1ee049326d190e44",
+    "audio_features_adpcm": "3e8ddc131deb4afe09d9abc67bc3e8ad",
+    "audio_features_ilt": "d1ca0ca41e263bc482b66c51608296a1",
+    # multimodal full-row forms
+    "catalog_rows": "224f33a5678b4a3f95f4dcfbb6dea554",
+    "image_feature_rows": "6cc79849c9fcda907df2b29d33139cd9",
+    "frame_sample_rows": "a5f8ecac511571be446dbb0302c559b1",
+    "ppm_feature_rows": "277b5f3534fbf16ee5b7d6bb5f73bc62",
+    "png_feature_rows": "2fc7d81311efb86c6dceed1e701fe1c4",
+    "frame_fp_rows": "58b996eef2ec253dfc343cf275ea996c",
+    "gif_feature_rows": "d383f0e7ed8976f5365ae4d039bb93b6",
+    "jpeg_feature_rows": "9efaf0ffbf639a85786810f4ba744c22",
+    "y4m_feature_rows": "6ccc749746eb6d817655ab753723ca54",
+    "bdv_feature_rows": "6d1020c0b63b42b10d805665e0299499",
+    "mb4_feature_rows": "e9438e5d03f93903a6e51bc639774f66",
+    "fmp4_feature_rows": "535b835a14e27045673a584526e49e8b",
+    "sts_feature_rows": "54ae2bd24128e6dcede854c882449a1d",
+    "mjpeg_feature_rows": "dd4e648a1b1236a45c6dda97a6ed5cf2",
+    "wav_feature_rows": "4f90d7bd468118b51a0966dec4759708",
+    # forecast twins (each shares its twin's text)
+    "forecast_drift_by_region_pandas": "3dfda273f7b4d89e7b94e83a85570d89",
+    "forecast_seasonal7_by_region_pandas": "686f8da390003965e2d3d3b2eb96aa9c",
 }
 
-_MODULES = (retrieval, vectorstore, sketches, quality)
+_MODULES = (retrieval, vectorstore, sketches, quality, multimodal, forecast)
+_TWINS = {
+    "forecast_drift_by_region_pandas",
+    "forecast_seasonal7_by_region_pandas",
+}
 
 
 def _oracle_text(name: str) -> str:
+    if name in multimodal.FULLROW_ORACLES:
+        return multimodal.FULLROW_ORACLES[name]
     return next(m.ORACLES[name] for m in _MODULES if name in m.ORACLES)
 
 
 def test_every_store_family_oracle_is_pinned():
-    pinned = {
-        n for m in (retrieval, vectorstore, sketches) for n in m.ORACLES
-    } | {"erasure_e2e"}
+    """Every built oracle is pinned: the store families', the
+    multimodal ones (registry and full-row) and the forecast twins."""
+    pinned = (
+        {
+            n
+            for m in (retrieval, vectorstore, sketches, multimodal)
+            for n in m.ORACLES
+        }
+        | set(multimodal.FULLROW_ORACLES)
+        | {"erasure_e2e"}
+        | _TWINS
+    )
     assert pinned == set(_ORACLE_MD5)
 
 
